@@ -83,7 +83,9 @@ def directed_triple_columns(label, alias1, alias2, type1=None, type2=None):
     """(subj, pred, obj[, subj_type, obj_type]) column list implementing
     the direction swap: an (e2,e1) label swaps the arguments and the
     suffix is stripped from the predicate.  The single implementation
-    both triple-emission paths (discrete and fused) select from."""
+    every triple emitter selects from: the rule pipeline
+    (plans.pipeline), the model path (q_pipeline_triples_model) and the
+    relational join twin (q_triples_rules)."""
     from pyspark.sql import functions as F
 
     rev = label.endswith("(e2,e1)")

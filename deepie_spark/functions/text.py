@@ -171,15 +171,6 @@ def char_poly_hash(text: Column) -> Column:
     )
 
 
-def token_poly_hash(tokens: Column) -> Column:
-    """Same scheme one level up: token hashes combined positionally."""
-    return F.aggregate(
-        tokens,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * BASE + char_poly_hash_str(t)) % MOD,
-    )
-
-
 def char_poly_hash_str(s: Column) -> Column:
     return F.aggregate(
         F.split(s, ""),

@@ -7,12 +7,13 @@ dictionary probe per token (rnnRE.py:77-80) and of its entity-tag parsing
 *last-token-position rule* is preserved: a mention's position is the
 index of its final token (data/readMe.md:31).
 
-Two implementations:
-
-* :func:`detect_mentions` — greedy longest-match over the token stream
-  inside ``mapInPandas`` with the trie broadcast once per executor.
-  No shuffle, no join: the catalog rides the closure, each page is
-  processed where it was read.  This is the scale path (catalog ≪ data).
+* :func:`detect_mentions` — the one matcher on the pipeline path:
+  greedy longest-match over the token stream in an Arrow ``mapInArrow``
+  kernel, the compiled trie riding the task closure.  No shuffle, no
+  join: each page is processed where it was read.  This is the scale
+  path (catalog ≪ data).
+* :func:`greedy_match` — the pure-Python trie walk that defines the
+  semantics; tests hold the kernel to it.
 * :func:`detect_mentions_single` — the single-token special case as a
   pure relational plan (posexplode + broadcast hash join), used for the
   DuckDB-oracle correctness gate.
@@ -20,15 +21,14 @@ Two implementations:
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepie_spark.datagen.catalog import ENTITY_CATALOG, build_alias_trie
-from deepie_spark.functions.text import py_tokenize, tokenize
+from deepie_spark.functions.text import tokenize
 
 MENTION_STRUCT = T.StructType(
     [
@@ -81,152 +81,6 @@ def greedy_match(tokens: list[str], trie: dict) -> list[tuple]:
     return out
 
 
-def compile_matcher(trie: dict):
-    """Compile the trie into the fast matcher used on the hot path:
-    single-token aliases become one dict probe, multi-token aliases a
-    first-token-indexed candidate list tried longest-first — semantics
-    identical to :func:`greedy_match` (parity-tested), ~1.4x faster on
-    real token streams (the python stage is the pipeline's hot loop)."""
-    single: dict = {}
-    multi: dict = {}
-
-    def walk(node, path):
-        for tok, child in node.items():
-            if tok == "$":
-                if len(path) == 1:
-                    single[path[0]] = child
-                else:
-                    multi.setdefault(path[0], []).append((path, child))
-            else:
-                walk(child, path + [tok])
-
-    walk(trie, [])
-    for cands in multi.values():
-        cands.sort(key=lambda c: len(c[0]), reverse=True)
-
-    def match(tokens: list[str]) -> list[tuple]:
-        out = []
-        i, n = 0, len(tokens)
-        while i < n:
-            t = tokens[i]
-            cands = multi.get(t)
-            if cands is not None:
-                matched = False
-                for parts, payload in cands:
-                    L = len(parts)
-                    if i + L <= n and tokens[i : i + L] == parts:
-                        out.append((i, i + L - 1) + payload)
-                        i += L
-                        matched = True
-                        break
-                if matched:
-                    continue
-            p = single.get(t)
-            if p is not None:
-                out.append((i, i) + p)
-            i += 1
-        return out
-
-    return match
-
-
-def compile_batch_matcher(trie: dict):
-    """Batch-vectorized matcher — the sustained-throughput hot path.
-
-    Per-token python dict probes (compile_matcher) are replaced by two
-    C-level hash joins over the whole Arrow batch
-    (``pd.Index.get_indexer``): one against the single-token alias
-    index, one against the multi-token first-token index.  The python
-    loop runs only at multi-candidate hit positions (rare: gazetteer
-    first-tokens are a sliver of a web token stream), with the same
-    greedy-consumption semantics as :func:`greedy_match` /
-    :func:`compile_matcher` (parity-tested):
-
-    * a multi-token match consumes its span — candidate starts inside a
-      consumed span are skipped (``next_free``), singles inside it are
-      masked out (``covered``);
-    * singles never block anything (the scan advances one token after a
-      single hit);
-    * output is in scan order (ascending start).
-    """
-    single: dict = {}
-    multi: dict = {}
-
-    def walk(node, path):
-        for tok, child in node.items():
-            if tok == "$":
-                if len(path) == 1:
-                    single[path[0]] = child
-                else:
-                    multi.setdefault(path[0], []).append((path, child))
-            else:
-                walk(child, path + [tok])
-
-    walk(trie, [])
-    for cands in multi.values():
-        cands.sort(key=lambda c: len(c[0]), reverse=True)
-
-    import numpy as np
-
-    single_index = pd.Index(list(single.keys()))
-    single_payloads = list(single.values())
-    multi_index = pd.Index(list(multi.keys())) if multi else None
-
-    def match_batch(token_lists: list[list[str]]) -> list[list[tuple]]:
-        n_rows = len(token_lists)
-        out: list[list[tuple]] = [[] for _ in range(n_rows)]
-        lens = np.fromiter(
-            (len(t) for t in token_lists), dtype=np.int64, count=n_rows
-        )
-        total = int(lens.sum())
-        if total == 0:
-            return out
-        offsets = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        flat = np.empty(total, dtype=object)
-        for r, toks in enumerate(token_lists):
-            flat[offsets[r] : offsets[r + 1]] = toks
-
-        covered = np.zeros(total, dtype=bool)
-        if multi_index is not None:
-            hit_pos = np.nonzero(multi_index.get_indexer(flat) >= 0)[0]
-            if len(hit_pos):
-                rows = (
-                    np.searchsorted(offsets, hit_pos, side="right") - 1
-                )
-                next_free: dict[int, int] = {}
-                for p_abs, row in zip(hit_pos.tolist(), rows.tolist()):
-                    if p_abs < next_free.get(row, 0):
-                        continue
-                    toks = token_lists[row]
-                    start = p_abs - int(offsets[row])
-                    n = int(lens[row])
-                    for parts, payload in multi[toks[start]]:
-                        L = len(parts)
-                        if start + L <= n and toks[start : start + L] == parts:
-                            out[row].append(
-                                (start, start + L - 1) + payload
-                            )
-                            covered[p_abs : p_abs + L] = True
-                            next_free[row] = p_abs + L
-                            break
-
-        sid = single_index.get_indexer(flat)
-        s_hits = np.nonzero((sid >= 0) & ~covered)[0]
-        if len(s_hits):
-            s_rows = np.searchsorted(offsets, s_hits, side="right") - 1
-            any_multi = bool(covered.any()) or any(out)
-            for p_abs, row in zip(s_hits.tolist(), s_rows.tolist()):
-                i = p_abs - int(offsets[row])
-                out[row].append((i, i) + single_payloads[sid[p_abs]])
-            if any_multi:
-                for row in set(s_rows.tolist()):
-                    out[row].sort(key=lambda m: m[0])
-        return out
-
-    return match_batch
-
-
 #: the ASCII \s class shared by Spark (Java regex), DuckDB (RE2 via
 #: explicit class), and py_tokenize — NOT unicode whitespace, NOT
 #: \x1c-\x1f (see functions.text)
@@ -236,7 +90,7 @@ _WS_PATTERN = "[\t\n\x0b\f\r ]+"
 
 def _split_trie(trie: dict) -> tuple[dict, dict]:
     """trie → (single-token payload dict, first-token→candidates dict,
-    candidates longest-first) — shared by all compiled matchers."""
+    candidates longest-first) — the kernel's compiled form of the trie."""
     single: dict = {}
     multi: dict = {}
 
@@ -269,11 +123,11 @@ def detect_mentions(
     assembled as a ``ListArray<StructArray>`` with ``take`` on prebuilt
     payload arrays.  Python object materialization happens ONLY at
     multi-token candidate windows (a sliver of a web token stream) — the
-    url column passes through untouched, so the per-batch floor of
-    Arrow↔pandas string conversion that dominated the pandas variant is
-    gone.  Greedy-consumption semantics are identical to
-    :func:`greedy_match` (parity-tested): multi spans consume, singles
-    inside a consumed span are masked, output is in scan order.
+    url column passes through untouched, with no per-batch Arrow↔pandas
+    string conversion.  Greedy-consumption semantics are identical to
+    :func:`greedy_match` (property-tested on random tries): multi spans
+    consume, singles inside a consumed span are masked, and each row's
+    mentions are sorted by ``pos`` with distinct positions.
 
     The compiled alias indexes ride the task closure (the catalog is
     tiny); for a large catalog, broadcast them.
@@ -459,29 +313,6 @@ def detect_mentions(
 
     schema = MENTIONS_SCHEMA if include_tokens else MENTIONS_SCHEMA_SLIM
     return pages.select("url", "text").mapInArrow(run, schema)
-
-
-def detect_mentions_pandas(
-    pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
-) -> DataFrame:
-    """The pandas-batch variant of :func:`detect_mentions` — same
-    output, kept as the parity/verification twin of the Arrow-native
-    hot path (and as the reference implementation of the semantics)."""
-    trie = trie or build_alias_trie(ENTITY_CATALOG)
-    match_batch = compile_batch_matcher(trie)
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks_col = [py_tokenize(text) for text in pdf["text"]]
-            men_col = match_batch(toks_col)
-            out = {"url": pdf["url"]}
-            if include_tokens:
-                out["tokens"] = toks_col
-            out["mentions"] = men_col
-            yield pd.DataFrame(out)
-
-    schema = MENTIONS_SCHEMA if include_tokens else MENTIONS_SCHEMA_SLIM
-    return pages.select("url", "text").mapInPandas(run, schema)
 
 
 def detect_mentions_single(pages: DataFrame, catalog: DataFrame) -> DataFrame:

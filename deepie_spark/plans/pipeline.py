@@ -6,13 +6,15 @@ extract → detect mentions → generate pairs → classify → triples.
 Plan shape at scale (the thing the judge grades):
 
 * **extract** — JVM column expressions, whole-stage codegen, zero Python.
-* **mentions** — one Arrow ``mapInPandas`` pass, broadcast trie, no
-  shuffle: each page stays on the executor that scanned it.
-* **pairs** — array combinatorics inside the row, no shuffle.
-* **classify** — rule stub: broadcast hash join on (type1,type2) —
-  13-row build side; model path: ``mapInPandas`` with broadcast weights
-  (deepie_spark.model.infer) — still no shuffle.
-* **triples** — projection + non-NONE filter; the only shuffle in the
+* **mentions** — one Arrow ``mapInArrow`` pass, trie in the task
+  closure, no shuffle: each page stays on the executor that scanned it.
+* **pairs + classify** — one in-row array expression
+  (operators.pairs.mention_pairs with the rule lookup as its label): the
+  13-entry rule table rides a literal map, so there is no join and no
+  shuffle; the model path (``__spark_entry__.q_pipeline_triples_model``)
+  classifies the unlabeled pairs in ``mapInPandas`` with broadcast
+  weights (deepie_spark.model.infer) instead.
+* **triples** — direction-swap projection; the only shuffle in the
   whole pipeline is the final write's ``repartition`` by partition key
   (and any downstream canonicalization).
 
@@ -29,7 +31,6 @@ from deepie_spark.datagen.catalog import (
     RELATION_RULES,
     build_alias_trie,
     directed_triple_columns,
-    relation_rules_df,
 )
 from deepie_spark.functions.text import extract_text
 from deepie_spark.operators.mentions import detect_mentions
@@ -48,53 +49,14 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     return pages.withColumn("text", extract_text(F.col("html")))
 
 
-def classify_pairs_rules(
-    pairs: DataFrame, rules: DataFrame
-) -> DataFrame:
-    """M1 classifier stub: broadcast join (type1,type2) → directed label.
-    Unmatched pairs are NONE (left join + coalesce)."""
-    joined = pairs.join(
-        F.broadcast(rules), on=["type1", "type2"], how="left"
-    )
-    return joined.withColumn(
-        "label", F.coalesce(F.col("label"), F.lit("NONE"))
-    ).withColumn("prob", F.when(F.col("label") != "NONE", 0.9).otherwise(0.1))
-
-
-def triples_from_classified(classified: DataFrame) -> DataFrame:
-    """Stage 6: directed (subj, pred, obj) triples + provenance.
-
-    Direction: labels carry (e1,e2)/(e2,e1); an (e2,e1) label swaps
-    subject and object and the suffix is stripped — the relational form
-    of the reference's directed-label convention (collapseTypes
-    rnnRE.py:642-647 strips, saving() keeps markup order).
-    NONE rows are excluded (score() counts only non-NONE,
-    rnnRE.py:566-573).
-    """
-    c = classified.filter(F.col("label") != "NONE")
-    return c.select(
-        *directed_triple_columns(
-            F.col("label"), F.col("alias1"), F.col("alias2"),
-            F.col("type1"), F.col("type2"),
-        ),
-        F.col("prob"),
-        F.col("url"),
-        F.col("pos1"),
-        F.col("pos2"),
-        part_id_col().alias("part_id"),
-    )
-
-
 def _fused_triples(mentions: DataFrame, max_distance: int) -> DataFrame:
     """Pairs + rule classification + direction in ONE in-row expression.
 
     Classifying before the explode means only surviving (non-NONE)
     pairs are ever materialized as rows — at sf0.1 that is 13.5M narrow
-    rows instead of 39.4M wide ones, and the string-heavy intermediate
-    that dominated memory traffic disappears.  The rule table rides a
-    literal ``create_map`` (the degenerate broadcast), so the stage has
-    no join and no shuffle at all; the trained-expert path keeps the
-    broadcast-weights ``mapInPandas`` shape instead (model.infer).
+    rows instead of 39.4M wide ones.  The rule table rides a literal
+    ``create_map`` (the degenerate broadcast), so the stage has no join
+    and no shuffle at all.
     """
     rule_map = F.create_map(
         *[
@@ -103,55 +65,22 @@ def _fused_triples(mentions: DataFrame, max_distance: int) -> DataFrame:
             for x in (F.lit(f"{t1}@{t2}"), F.lit(lab))
         ]
     )
-    m = F.col("mentions")
 
     def label_of(a, b):
         return F.element_at(
             rule_map, F.concat_ws("@", a["entity_type"], b["entity_type"])
         )
 
-    def labeled(a, b):
-        return F.struct(
-            a["pos"].alias("pos1"),
-            b["pos"].alias("pos2"),
-            a["alias"].alias("alias1"),
-            b["alias"].alias("alias2"),
-            a["entity_type"].alias("type1"),
-            b["entity_type"].alias("type2"),
-            label_of(a, b).alias("label"),
-        )
-
-    # order of operations matters: the cheap pos/distance predicate
-    # prunes the m^2 candidate space first, then the (map-scan) label
-    # predicate drops NONE pairs BEFORE any struct is built — the
-    # string-carrying pair structs exist only for survivors (~3x fewer),
-    # which is the memory-traffic term that dominates at scale.  The
-    # label lookup runs twice per surviving pair (filter + projection);
-    # a map probe is far cheaper than materializing the dropped structs.
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda a: F.transform(
-                F.filter(
-                    m,
-                    lambda b: (a["pos"] < b["pos"])
-                    & ((b["pos"] - a["pos"]) <= max_distance)
-                    & label_of(a, b).isNotNull(),
-                ),
-                lambda b: labeled(a, b),
-            ),
-        )
-    )
-    exploded = mentions.select("url", F.explode(pair_structs).alias("p"))
-    return exploded.select(
+    pairs = mention_pairs(mentions, max_distance, label=label_of)
+    return pairs.select(
         *directed_triple_columns(
-            F.col("p.label"), F.col("p.alias1"), F.col("p.alias2"),
-            F.col("p.type1"), F.col("p.type2"),
+            F.col("label"), F.col("alias1"), F.col("alias2"),
+            F.col("type1"), F.col("type2"),
         ),
         F.lit(0.9).alias("prob"),
-        F.col("url"),
-        F.col("p.pos1").alias("pos1"),
-        F.col("p.pos2").alias("pos2"),
+        "url",
+        "pos1",
+        "pos2",
         part_id_col().alias("part_id"),
     )
 
@@ -160,16 +89,12 @@ def extract_triples(
     spark: SparkSession,
     pages: DataFrame,
     max_distance: int = 10,
-    fused: bool = True,
     trie: dict | None = None,
 ) -> DataFrame:
     """The full M1 pipeline: pages → triples (rule classifier).
 
-    ``fused=True`` (default) classifies inside the pair-generation
-    expression (no join, smallest explode); ``fused=False`` composes the
-    discrete operators (mention_pairs → broadcast-join classify) — both
-    produce identical rows (asserted in tests).  ``trie`` overrides the
-    broadcast alias trie (e.g. the depth-3 DEEP_ENTITY_CATALOG).
+    ``trie`` overrides the alias trie (e.g. the depth-3
+    DEEP_ENTITY_CATALOG).
     """
     # A production pages table arrives in many splits; the local test
     # parquet is a single tiny file, which would serialize the whole
@@ -182,8 +107,4 @@ def extract_triples(
     mentions = detect_mentions(
         extracted, trie if trie is not None else build_alias_trie()
     )
-    if fused:
-        return _fused_triples(mentions, max_distance)
-    pairs = mention_pairs(mentions, max_distance=max_distance)
-    classified = classify_pairs_rules(pairs, relation_rules_df(spark))
-    return triples_from_classified(classified)
+    return _fused_triples(mentions, max_distance)

@@ -67,18 +67,3 @@ def ensure_parallelism(df, target: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver-provided parquet tables and register temp views.
-
-    Returns a dict name -> DataFrame. Column pruning + predicate pushdown
-    reach the parquet scan because these are plain `spark.read.parquet`
-    relations.
-    """
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

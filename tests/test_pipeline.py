@@ -11,9 +11,11 @@ from deepie_spark.datagen.catalog import (
     ENTITY_CATALOG,
     build_alias_trie,
     catalog_df,
+    directed_triple_columns,
     relation_rules_df,
 )
 from deepie_spark.datagen.pages import pages_from_documents
+from deepie_spark.functions.text import py_tokenize
 from deepie_spark.operators.mentions import (
     detect_mentions,
     detect_mentions_single,
@@ -22,11 +24,9 @@ from deepie_spark.operators.mentions import (
 from deepie_spark.operators.pairs import mention_pairs
 from deepie_spark.plans.pipeline import (
     N_PARTS,
-    classify_pairs_rules,
     extract_stage,
     extract_triples,
     part_id_col,
-    triples_from_classified,
 )
 
 
@@ -80,14 +80,12 @@ def test_greedy_match_longest_wins():
 
 
 def test_arrow_mentions_equals_pandas_twin(spark, pages):
-    """The Arrow-native hot path (mapInArrow + pyarrow.compute split/
-    index_in) must reproduce the pandas-batch twin exactly — tokens AND
-    mentions — including adversarial texts: empty, whitespace-only,
+    """The Arrow-native kernel (mapInArrow + pyarrow.compute split/
+    index_in) must reproduce the pure-Python reference — py_tokenize +
+    greedy_match over the same texts as a pandas frame — exactly, tokens
+    AND mentions, including adversarial texts: empty, whitespace-only,
     \\x1c-\\x1f separators, unicode spaces, NULL, alias-dense streams."""
-    from deepie_spark.operators.mentions import (
-        detect_mentions,
-        detect_mentions_pandas,
-    )
+    trie = build_alias_trie()
 
     def snap(df):
         return {
@@ -95,9 +93,16 @@ def test_arrow_mentions_equals_pandas_twin(spark, pages):
             for r in df.collect()
         }
 
-    a = snap(detect_mentions(pages, include_tokens=True))
-    b = snap(detect_mentions_pandas(pages, include_tokens=True))
-    assert a == b
+    def reference(df):
+        out = {}
+        for url, text in df.select("url", "text").toPandas().itertuples(
+            index=False
+        ):
+            toks = py_tokenize(text if text is not None else "")
+            out[url] = (toks, greedy_match(toks, trie))
+        return out
+
+    assert snap(detect_mentions(pages, include_tokens=True)) == reference(pages)
 
     weird = [
         "", "   ", "\x1c\x1d", "a\x1cspark b", "café table scan",
@@ -108,13 +113,7 @@ def test_arrow_mentions_equals_pandas_twin(spark, pages):
         [(f"u{i}", t) for i, t in enumerate(weird)],
         "url string, text string",
     )
-    aw = snap(detect_mentions(wdf, include_tokens=True))
-    bw = snap(
-        detect_mentions_pandas(
-            wdf.fillna({"text": ""}), include_tokens=True
-        )
-    )
-    assert aw == bw
+    assert snap(detect_mentions(wdf, include_tokens=True)) == reference(wdf)
 
 
 def test_mention_position_is_last_token():
@@ -125,9 +124,10 @@ def test_mention_position_is_last_token():
 
 
 def test_trie_pipeline_equals_relational_twin(spark, pages):
-    """With a single-token-only catalog, the mapInPandas trie path and
+    """With a single-token-only catalog, the mapInArrow trie path and
     the posexplode+broadcast-join relational path must emit identical
-    mention sets and identical triples."""
+    mention sets, and extract_triples (in-row pairs + rule-map label)
+    must emit exactly the triples of the relational self-join twin."""
     single_cat = [e for e in ENTITY_CATALOG if " " not in e[1]]
     trie = build_alias_trie(single_cat)
     trie_mentions = (
@@ -142,12 +142,10 @@ def test_trie_pipeline_equals_relational_twin(spark, pages):
     assert rel_mentions.exceptAll(trie_mentions).isEmpty()
 
     # full triple path on the single-token catalog
-    pairs = mention_pairs(detect_mentions(pages, trie), max_distance=10)
-    classified = classify_pairs_rules(pairs, relation_rules_df(spark))
-    t1 = triples_from_classified(classified).select(
-        "subj", "pred", "obj", "url", "pos1", "pos2"
-    )
-    a = rel_mentions_full = detect_mentions_single(pages, catalog_df(spark))
+    cols = ["subj", "pred", "obj", "subj_type", "obj_type", "url", "pos1",
+            "pos2"]
+    t1 = extract_triples(spark, pages, trie=trie).select(cols)
+    a = detect_mentions_single(pages, catalog_df(spark))
     b = a.select(
         "url",
         F.col("pos").alias("pos2"),
@@ -173,12 +171,15 @@ def test_trie_pipeline_equals_relational_twin(spark, pages):
         F.when(rev, F.col("alias2")).otherwise(F.col("alias1")).alias("subj"),
         bare.alias("pred"),
         F.when(rev, F.col("alias1")).otherwise(F.col("alias2")).alias("obj"),
+        F.when(rev, F.col("type2")).otherwise(F.col("type1")).alias("subj_type"),
+        F.when(rev, F.col("type1")).otherwise(F.col("type2")).alias("obj_type"),
         "url",
         "pos1",
         "pos2",
     )
     assert t1.exceptAll(t2).isEmpty()
     assert t2.exceptAll(t1).isEmpty()
+    assert t1.count() > 0
 
 
 def test_pair_generation_distance_and_order(spark):
@@ -199,7 +200,7 @@ def test_pair_generation_distance_and_order(spark):
     # only (a,b) is within distance 10; pairs are pos1 < pos2 ordered
     assert len(got) == 1
     assert got[0]["alias1"] == "a" and got[0]["alias2"] == "b"
-    assert got[0]["distance"] == 3
+    assert got[0]["pos2"] - got[0]["pos1"] == 3
 
 
 def test_none_pairs_never_reach_triples(spark, pages):
@@ -209,10 +210,23 @@ def test_none_pairs_never_reach_triples(spark, pages):
 
 
 def test_fused_equals_composed_pipeline(spark, pages):
-    """The fused in-row classify plan and the discrete-operator plan
-    must emit identical triple rows."""
-    fused = extract_triples(spark, pages, fused=True)
-    composed = extract_triples(spark, pages, fused=False)
+    """The fused in-row classify plan (extract_triples) and a plan
+    composed of discrete operators — unlabeled mention_pairs, then a
+    broadcast join on the rule table — must emit identical triple rows."""
+    fused = extract_triples(spark, pages)
+    mentions = detect_mentions(extract_stage(pages), build_alias_trie())
+    classified = mention_pairs(mentions, max_distance=10).join(
+        F.broadcast(relation_rules_df(spark)), on=["type1", "type2"]
+    )
+    composed = classified.select(
+        *directed_triple_columns(
+            F.col("label"), F.col("alias1"), F.col("alias2"),
+            F.col("type1"), F.col("type2"),
+        ),
+        "url",
+        "pos1",
+        "pos2",
+    )
     cols = ["subj", "pred", "obj", "subj_type", "obj_type", "url",
             "pos1", "pos2"]
     f, c = fused.select(cols), composed.select(cols)
@@ -244,11 +258,18 @@ def test_triple_direction_swap(spark):
         "url string, pos1 int, pos2 int, alias1 string, alias2 string,"
         " type1 string, type2 string, label string, prob double",
     )
+    cols = directed_triple_columns(
+        F.col("label"), F.col("alias1"), F.col("alias2"),
+        F.col("type1"), F.col("type2"),
+    )
     got = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in triples_from_classified(df).collect()
+        (r["subj"], r["pred"], r["obj"], r["subj_type"], r["obj_type"])
+        for r in df.select(*cols).collect()
     }
-    assert got == {("y", "ORG-AFF", "x"), ("x", "ORG-AFF", "y")}
+    assert got == {
+        ("y", "ORG-AFF", "x", "PER", "ORG"),
+        ("x", "ORG-AFF", "y", "PER", "ORG"),
+    }
 
 
 def test_pipeline_part_metrics_partition_invariant(spark):

@@ -5,6 +5,7 @@ that silently degrades a plan fails CI.
 """
 
 import os
+import re
 
 import pytest
 
@@ -61,6 +62,21 @@ def test_pipeline_has_no_shuffle_before_sink(spark, sf_dir):
     # mention detection is the Arrow-native python stage (mapInArrow)
     assert "MapInArrow" in plan or "PythonMapInArrow" in plan
     assert "Join" not in plan  # fused rule lookup, no join operator
+
+
+def test_model_pipeline_has_no_shuffle_or_join(spark, sf_dir):
+    """The model path: Arrow mentions → in-row pairs → batched
+    classify, all narrow — no join, no planner-inserted shuffle, and
+    exactly one Python stage of each kind."""
+    plan = executed(entry.q_pipeline_triples_model(spark, sf_dir))
+    # operator names, one per line; under AQE the tree repeats as
+    # "Initial Plan", so read the final one only
+    final = plan.split("Initial Plan")[0]
+    nodes = re.findall(r"^[\s+\-:*()\d]*(\w+)", final, re.M)
+    assert "ENSURE_REQUIREMENTS" not in plan
+    assert "Join" not in plan
+    assert sum(n in ("MapInArrow", "PythonMapInArrow") for n in nodes) == 1
+    assert nodes.count("MapInPandas") == 1
 
 
 def test_whole_stage_codegen_on_scan_side(spark, sf_dir):

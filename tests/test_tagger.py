@@ -123,10 +123,14 @@ def test_tagger_mentions_feed_pair_generation(spark, trained):
     tagged = detect_mentions_tagger(
         pages, trained["weights"], trained["vocab"]
     )
+    mentions = [m for row in tagged.limit(20).collect() for m in row["mentions"]]
+    assert mentions
+    for m in mentions:
+        # linking resolves these later
+        assert (m["entity_id"], m["subtype"], m["prior"]) == (None,) * 3
     pairs = mention_pairs(tagged, max_distance=10)
     rows = pairs.limit(20).collect()
     assert pairs.count() > 0
     for r in rows:
         assert r["pos1"] < r["pos2"]
-        assert r["entity_id1"] is None  # linking resolves these later
         assert r["type1"] in ("PER", "ORG", "GPE", "LOC", "FAC", "VEH")
