@@ -16,143 +16,24 @@ import os
 import sys
 import time
 
+import __spark_entry__ as entrymod
+
 
 def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-#: round-3+ additions timed SEPARATELY (extra_queries in the JSON) so
+#: the tiers come from the query registry (``@query(tier=...)`` in
+#: __spark_entry__.py).  HEADLINE is FROZEN at the round-4 16-query set;
+#: round-3+ additions are timed SEPARATELY (extra_queries in the JSON) so
 #: headline_queries_total stays comparable round-over-round.
-#: ngram_jaccard moved here in round 4 (verdict item 7): it is the exact
-#: quadratic verification twin of minhash_lsh — the headline should track
-#: scale-path plans, and its 3-4 s cluster-quadratic residual was the
-#: noisiest headline term.  BENCH_r04 headline therefore excludes ~4 s
-#: relative to r1-r3 (documented in BASELINE.md).
-EXTRA = [
-    "ngram_jaccard",
-    "pipeline_triples_deep",
-    "entity_pagerank",
-    "doc_perplexity",
-    "url_normalize",
-    "benchmark_contamination",
-    "dedup_canonical",
-    "sketch_cardinality",
-    "sketch_quantiles",
-    "tagger_gazetteer_gate",
-    "set_ops_sources",
-    "source_lang_rollup",
-    "source_lang_cube",
-    "lang_pivot",
-    "doc_quartiles",
-    "event_funnel",
-    "doc_zscore",
-    "latest_event",
-    "doc_chunks",
-    "events_hourly_dense",
-    "weighted_sample",
-    "dedup_incremental",
-    "gopher_quality",
-    "dup_ngram_rate",
-    "kmeans_embeddings",
-    "entity_cooccur_pmi",
-    "triple_degree_hist",
-    "triangle_stats",
-    "neighbor_jaccard",
-    "bm25_topk",
-    "robust_outliers",
-    "containment_pairs",
-    "events_moving_avg",
-    "user_retention",
-    "fuzzy_alias_match",
-    "quality_correlation",
-    "lang_confusion",
-    "term_cosine",
-    "snapshot_diff",
-    "entity_bfs",
-    "paragraph_dedup",
-    "mixture_plan",
-    "table_profile",
-    "oov_rate",
-    "kg_negatives",
-    "entity_ppr",
-    "corpus_yield_funnel",
-    # round-4 additions
-    "winnow_fingerprints",
-    "user_scd2",
-    "dsir_weights",
-    "entity_hits",
-    "sorted_neighborhood",
-    "bpe_vocab",
-    "error_window_global",
-    "bloom_prejoin",
-    "media_frames",
-    "edge_reciprocity",
-    "mixture_allocation",
-    "prefix_jaccard",
-    "embedding_pca",
-    "events_zorder",
-    "heavy_hitters",
-    "predicate_profile",
-    "scd2_lookup",
-    # round-5 additions (headline stays FROZEN at the r4 16-query set)
-    "bpe_encode",
-    "semantic_dedup",
-    "inverted_postings",
-    "phrase_search",
-    "kcore",
-    "link_graph",
-    "random_walks",
-    "triple_confidence",
-    "events_asof",
-    "entity_communities",
-    "predicate_inverses",
-    "rule_mining",
-    "skipgram_pairs",
-    "event_transitions",
-    "ktruss",
-    "entity_closeness",
-    "anchor_text",
-    "predicate_domain_range",
-    "entity_cards",
-    "entity_salience",
-    "term_keyness",
-    "skipgram_pmi",
-    "graph_assortativity",
-    "boilerplate_rate",
-    "embedding_quantize",
-    "entity_mis",
-    "html_density",
-    "alias_resolve",
-    "source_reliability",
-    "entity_scc",
-    "event_concurrency",
-    "entity_sssp",
-    "entity_coloring",
-    "entity_msf",
-    "entity_slink",
-    "readability",
-    "entity_stress",
-    "vocab_growth",
-]
-
-HEADLINE = [
-    "pipeline_triples",
-    "pipeline_triples_model",
-    "triples_rules",
-    "vocab_df",
-    "first_encounter_ids",
-    "mentions_single",
-    "pair_distance_hist",
-    "dedup_exact",
-    "minhash_lsh",
-    "simhash",
-    "ann_topk",
-    "doc_fingerprint",
-    "quality_scores",
-    "tpch_pricing",
-    "top_orders_per_cust",
-    "events_hourly",
-]
+#: ngram_jaccard moved to EXTRA in round 4 (verdict item 7): it is the
+#: exact quadratic verification twin of minhash_lsh — the headline should
+#: track scale-path plans, and its 3-4 s cluster-quadratic residual was
+#: the noisiest headline term.  BENCH_r04 headline therefore excludes
+#: ~4 s relative to r1-r3 (documented in BASELINE.md).
+HEADLINE = entrymod.tier("headline")
+EXTRA = entrymod.tier("extra")
 
 
 def _skew_leg(spark, docs, cores: int, tmp: str) -> dict:
@@ -237,7 +118,6 @@ def _skew_leg(spark, docs, cores: int, tmp: str) -> dict:
 
 def run_bench(sf_dir: str, cores: int) -> dict:
     from deepie_spark.session import get_spark
-    import __spark_entry__ as entrymod
 
     spark = get_spark("bench", cores=cores, shuffle_partitions=cores)
     qs = entrymod.queries()
@@ -308,7 +188,8 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     # the timed window ~6.5 s at local[32]: at 40 reps (~3.4 s, round
     # 1/2) the per-run fixed overhead was still ~25% of the window and
     # the reported number under-stated steady-state throughput by ~35%
-    # (measured, scripts/sustained_probe.py).
+    # (measured with a one-off corpus-size/file-layout probe, since
+    # deleted).
     #
     # The replicated corpus is MATERIALIZED to parquet once, untimed:
     # profiling showed the in-plan crossJoin synthesis was ~2.3 s of
@@ -336,8 +217,8 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     pages_dir = os.path.join(tmp, "pages.parquet")
     # file count sets effective scan parallelism (1 row group per small
     # file; byte-range splits beyond a row-group start read nothing):
-    # 3x cores → three EXACT waves of `cores` tasks.  Measured on this
-    # host (scripts/sustained_probe.py, 120 reps, local[32], best-of-3):
+    # 3x cores → three EXACT waves of `cores` tasks.  Measured with
+    # the same probe (120 reps, local[32], best-of-3):
     # 96 files = 2.52M triples/s, 64 = 2.42M, 128 = 2.02M — the 4-wave
     # 128-file layout of round 2 paid per-task overhead without adding
     # balance, and was the main reason BENCH_r02 undershot BASELINE.md.

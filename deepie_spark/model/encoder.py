@@ -26,13 +26,6 @@ from __future__ import annotations
 
 import numpy as np
 
-#: channels produced by the encoder, in reference naming
-SCALAR_CHANNELS = (
-    "word", "gov", "dist1", "dist2", "type", "subtype", "order",
-    "constit1", "constit2", "preter", "prepreter",
-)
-
-
 def norm(w: str) -> str:
     """Reference ' '.join(w.split('_')) (rnnRE.py:74-75)."""
     return " ".join(w.split("_"))

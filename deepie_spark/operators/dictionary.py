@@ -28,10 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-#: coordinate columns that define the global first-encounter order
-ORDER_COLS = ("file_order", "line_no")
-
-
 def normalize_word(col: Column) -> Column:
     """Reference ``' '.join(word.split('_'))`` (rnnRE.py:74-75 /
     rnn_process_onlyExtra.py:79-95): every underscore becomes exactly one

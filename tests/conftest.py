@@ -19,7 +19,8 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("deepie_spark_tests", cores=8, shuffle_partitions=8)
+    # cores: $SPARK_GRAFT_CPUS, else every local core (get_spark's default)
+    s = get_spark("deepie_spark_tests", shuffle_partitions=8)
     yield s
 
 

@@ -1,0 +1,111 @@
+"""The query registry in __spark_entry__.py: one decorated block per
+query, from which queries(), oracle_sql() and bench.py's tiers derive.
+
+Spark-free: importing the entry file builds no SparkSession.
+"""
+
+import pytest
+
+import __spark_entry__ as entry
+
+ROWS_ONLY = {"mentions_tagged", "embedding_pca", "pipeline_triples"}
+
+#: frozen since round 4 (bench.py's headline_queries_total)
+HEADLINE = {
+    "pipeline_triples", "pipeline_triples_model", "triples_rules",
+    "vocab_df", "first_encounter_ids", "mentions_single",
+    "pair_distance_hist", "dedup_exact", "minhash_lsh", "simhash",
+    "ann_topk", "doc_fingerprint", "quality_scores", "tpch_pricing",
+    "top_orders_per_cust", "events_hourly",
+}
+
+#: bench.py's separately timed set (round-3 to round-5 additions)
+EXTRA = {
+    "ngram_jaccard", "pipeline_triples_deep", "entity_pagerank",
+    "doc_perplexity", "url_normalize", "benchmark_contamination",
+    "dedup_canonical", "sketch_cardinality", "sketch_quantiles",
+    "tagger_gazetteer_gate", "set_ops_sources", "source_lang_rollup",
+    "source_lang_cube", "lang_pivot", "doc_quartiles", "event_funnel",
+    "doc_zscore", "latest_event", "doc_chunks", "events_hourly_dense",
+    "weighted_sample", "dedup_incremental", "gopher_quality",
+    "dup_ngram_rate", "kmeans_embeddings", "entity_cooccur_pmi",
+    "triple_degree_hist", "triangle_stats", "neighbor_jaccard",
+    "bm25_topk", "robust_outliers", "containment_pairs",
+    "events_moving_avg", "user_retention", "fuzzy_alias_match",
+    "quality_correlation", "lang_confusion", "term_cosine",
+    "snapshot_diff", "entity_bfs", "paragraph_dedup", "mixture_plan",
+    "table_profile", "oov_rate", "kg_negatives", "entity_ppr",
+    "corpus_yield_funnel", "winnow_fingerprints", "user_scd2",
+    "dsir_weights", "entity_hits", "sorted_neighborhood", "bpe_vocab",
+    "error_window_global", "bloom_prejoin", "media_frames",
+    "edge_reciprocity", "mixture_allocation", "prefix_jaccard",
+    "embedding_pca", "events_zorder", "heavy_hitters",
+    "predicate_profile", "scd2_lookup", "bpe_encode", "semantic_dedup",
+    "inverted_postings", "phrase_search", "kcore", "link_graph",
+    "random_walks", "triple_confidence", "events_asof",
+    "entity_communities", "predicate_inverses", "rule_mining",
+    "skipgram_pairs", "event_transitions", "ktruss", "entity_closeness",
+    "anchor_text", "predicate_domain_range", "entity_cards",
+    "entity_salience", "term_keyness", "skipgram_pmi",
+    "graph_assortativity", "boilerplate_rate", "embedding_quantize",
+    "entity_mis", "html_density", "alias_resolve", "source_reliability",
+    "entity_scc", "event_concurrency", "entity_sssp", "entity_coloring",
+    "entity_msf", "entity_slink", "readability", "entity_stress",
+    "vocab_growth",
+}
+
+
+def test_names_unique_and_match_builders():
+    names = list(entry.queries())
+    assert len(names) == len(set(names)) == len(entry.REGISTRY)
+    for name, q in entry.REGISTRY.items():
+        assert q.build.__name__ == f"q_{name}"
+        assert getattr(entry, f"q_{name}") is q.build
+
+
+def test_registering_a_duplicate_raises():
+    def q_vocab_df(spark, sf_dir):
+        raise AssertionError("never built")
+
+    before = dict(entry.REGISTRY)
+    with pytest.raises(ValueError, match="already registered"):
+        entry.query(oracle=None)(q_vocab_df)
+    assert entry.REGISTRY == before
+
+
+def test_oracle_is_required():
+    with pytest.raises(TypeError):
+        entry.query()  # a forgotten oracle never means rows-only
+    with pytest.raises(ValueError, match="unknown tier"):
+        entry.query(oracle=None, tier="nightly")
+
+
+def test_rows_only_queries_are_exactly_the_declared_three():
+    for q in entry.REGISTRY.values():
+        assert q.oracle is None or isinstance(q.oracle, str) or callable(q.oracle)
+    rows_only = {n for n, q in entry.REGISTRY.items() if q.oracle is None}
+    assert rows_only == ROWS_ONLY
+
+
+def test_oracle_sql_keys_are_the_queries_with_oracles():
+    oracles = entry.oracle_sql()
+    assert set(oracles) == set(entry.REGISTRY) - ROWS_ONLY
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+
+
+def test_gate_first_leads_queries():
+    assert len(entry.GATE_FIRST) == len(set(entry.GATE_FIRST)) == 50
+    assert set(entry.GATE_FIRST) <= set(entry.REGISTRY)
+    names = list(entry.queries())
+    assert names[:50] == list(entry.GATE_FIRST)
+    rest = [n for n in entry.REGISTRY if n not in entry.GATE_FIRST]
+    assert names[50:] == rest
+
+
+def test_bench_tiers():
+    assert set(entry.tier("headline")) == HEADLINE
+    assert set(entry.tier("extra")) == EXTRA
+    assert len(HEADLINE) == 16 and len(EXTRA) == 102
+    assert entry.tier("headline") == [
+        n for n, q in entry.REGISTRY.items() if q.tier == "headline"
+    ]
