@@ -36,6 +36,14 @@ HEADLINE = entrymod.tier("headline")
 EXTRA = entrymod.tier("extra")
 
 
+def _noop(df) -> None:
+    """The pipeline sink: Spark's ``noop`` writer forces every output
+    column.  Under ``count()`` Catalyst prunes the triple projection,
+    the ``part_id`` xxhash64 included, so a counted run skips part of
+    the work."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _skew_leg(spark, docs, cores: int, tmp: str) -> dict:
     """Zipf-hot-key join under naive / AQE-skew-split / salted plans.
 
@@ -128,22 +136,32 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     # where cold start is noise against hours of scan time
     spark.range(1000).selectExpr("sum(id)").collect()
     if "pipeline_triples" in qs:
-        qs["pipeline_triples"](spark, sf_dir).count()
-        qs["pipeline_triples"](spark, sf_dir).count()
-    def _time_query(fn, runs: int = 2) -> tuple[list[float], int]:
+        _noop(qs["pipeline_triples"](spark, sf_dir))
+        _noop(qs["pipeline_triples"](spark, sf_dir))
+    def _time_query(name: str, runs: int = 2) -> tuple[list[float], int]:
         # the host shows ~30% run-to-run noise (neighbor bursts reach
         # +56%); callers pick the statistic.  If samples disagree by
         # >35% the window is noisy — take one more so a single burst
-        # can't dominate the recorded number.
+        # can't dominate the recorded number.  The pipeline is timed
+        # into the noop sink and its rows counted once, untimed.
+        def run() -> int | None:
+            df = qs[name](spark, sf_dir)
+            if name != "pipeline_triples":
+                return df.count()
+            _noop(df)
+            return None
+
         times, n = [], 0
         for _ in range(runs):
             t0 = time.time()
-            n = fn().count()
+            n = run()
             times.append(time.time() - t0)
         if max(times) > 1.35 * min(times):
             t0 = time.time()
-            fn().count()
+            run()
             times.append(time.time() - t0)
+        if n is None:
+            n = qs[name](spark, sf_dir).count()
         return times, n
 
     def _median(xs: list[float]) -> float:
@@ -160,7 +178,7 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     for name in HEADLINE:
         if name not in qs:
             continue
-        times, n = _time_query(lambda: qs[name](spark, sf_dir), runs=3)
+        times, n = _time_query(name, runs=3)
         per_query[name] = round(_median(times), 3)
         spread_lo[name] = round(min(times), 3)
         spread_hi[name] = round(max(times), 3)
@@ -176,7 +194,7 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     for name in EXTRA:
         if name not in qs:
             continue
-        times, n = _time_query(lambda: qs[name](spark, sf_dir))
+        times, n = _time_query(name)
         extra_q[name] = round(min(times), 3)
         extra_rows[name] = n
         log(f"extra {name}: {n} rows in {extra_q[name]}s")
@@ -226,14 +244,15 @@ def run_bench(sf_dir: str, cores: int) -> dict:
         "overwrite"
     ).parquet(pages_dir)
     pages = spark.read.parquet(pages_dir)
-    sustained_triples = extract_triples(spark, pages).count()  # warm
+    sustained_triples = extract_triples(spark, pages).count()  # untimed
+    _noop(extract_triples(spark, pages))  # warm
     # best-of-3: the shared-VM host shows ~30% run-to-run noise; the
     # minimum is the honest steady-state estimate (noise only adds
     # time).  All samples are recorded so the artifact shows dispersion.
     samples = []
     for _ in range(3):
         t0 = time.time()
-        extract_triples(spark, pages).count()
+        _noop(extract_triples(spark, pages))
         samples.append(round(time.time() - t0, 3))
     best = min(samples)
     sustained_tps = round(sustained_triples / best, 1)

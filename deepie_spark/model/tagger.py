@@ -129,8 +129,10 @@ def tag_tokens(
 
 
 #: same struct shape as operators.mentions.MENTION_STRUCT so the tagger
-#: output drops into mention_pairs unchanged; entity_id/subtype/prior
-#: are unresolved at detection time (linking fills them) → null
+#: output drops into mention_pairs unchanged; decode_spans emits each
+#: row's mentions left to right with distinct positions, the sort order
+#: mention_pairs requires; entity_id/subtype/prior are unresolved at
+#: detection time (linking fills them) → null
 TAGGED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),

@@ -11,7 +11,8 @@ index of its final token (data/readMe.md:31).
   greedy longest-match over the token stream in an Arrow ``mapInArrow``
   kernel, the compiled trie riding the task closure.  No shuffle, no
   join: each page is processed where it was read.  This is the scale
-  path (catalog ≪ data).
+  path (catalog ≪ data).  Its trie walk, :func:`trie_matcher`, is also
+  the front half of ``operators.pairs.detect_mention_pairs``.
 * :func:`greedy_match` — the pure-Python trie walk that defines the
   semantics; tests hold the kernel to it.
 * :func:`detect_mentions_single` — the single-token special case as a
@@ -110,6 +111,138 @@ def _split_trie(trie: dict) -> tuple[dict, dict]:
     return single, multi
 
 
+def trie_matcher(trie: dict):
+    """Compile a trie into the Arrow kernel's matcher: ``(match, payload)``.
+
+    ``payload`` is a ``StructArray`` of the aliases' ``(entity_id,
+    alias, entity_type, subtype, prior)``, one per alias.  ``match(text)``
+    takes a string column and returns ``(toks, rows, starts, ends,
+    pidx)``: the token lists, and per mention its row, first and last
+    token index and payload index, as int64 arrays sorted by
+    ``(row, start)``.  Greedy-consumption semantics are those of
+    :func:`greedy_match`, so each row's mentions have distinct,
+    increasing positions.  The one trie walk behind
+    :func:`detect_mentions` and ``operators.pairs.detect_mention_pairs``.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    single, multi = _split_trie(trie)
+    skeys = list(single)
+    payloads = [single[k] for k in skeys]
+    multi_cands: dict[str, list] = {}
+    for first, cands in multi.items():
+        lst = []
+        for parts, pay in cands:
+            lst.append((parts, len(payloads)))
+            payloads.append(pay)
+        multi_cands[first] = lst
+    svals = pa.array(skeys, pa.string())
+    mvals = pa.array(list(multi_cands.keys()), pa.string())
+    payload = pa.StructArray.from_arrays(
+        [
+            pa.array([p[0] for p in payloads], pa.int64()),
+            pa.array([p[1] for p in payloads], pa.string()),
+            pa.array([p[2] for p in payloads], pa.string()),
+            pa.array([p[3] for p in payloads], pa.string()),
+            pa.array([p[4] for p in payloads], pa.float64()),
+        ],
+        names=["entity_id", "alias", "entity_type", "subtype", "prior"],
+    )
+    have_multi = bool(multi_cands)
+
+    def match(text: pa.Array):
+        import pyarrow.compute as pc
+
+        n_rows = len(text)
+        trimmed = pc.utf8_trim(pc.fill_null(text, ""), _WS_CHARS)
+        toks = pc.split_pattern_regex(trimmed, _WS_PATTERN)
+        flat = toks.values
+        offsets = np.asarray(toks.offsets)
+        # whitespace-only rows split to [""] where py_tokenize gives
+        # []: drop the lone empty token and close the offset gap
+        empty_rows = np.asarray(pc.equal(trimmed, "")).nonzero()[0]
+        if len(empty_rows):
+            keep = np.ones(len(flat), dtype=bool)
+            keep[offsets[empty_rows]] = False
+            flat = flat.filter(pa.array(keep))
+            counts = np.diff(offsets).astype(np.int64)
+            counts[empty_rows] -= 1
+            offsets = np.zeros(n_rows + 1, dtype=np.int32)
+            np.cumsum(counts, out=offsets[1:])
+            toks = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), flat)
+
+        total = len(flat)
+        empty = np.zeros(0, np.int64)
+        rows_parts = [empty]
+        starts_parts = [empty]
+        ends_parts = [empty]
+        pidx_parts = [empty]
+        covered = None
+        if have_multi and total:
+            mhit = np.asarray(
+                pc.is_valid(pc.index_in(flat, value_set=mvals))
+            ).nonzero()[0]
+            if len(mhit):
+                covered = np.zeros(total, dtype=bool)
+                hrows = np.searchsorted(offsets, mhit, side="right") - 1
+                m_rows, m_starts, m_ends, m_pidx = [], [], [], []
+                next_free: dict[int, int] = {}
+                # python strings only for the candidate windows —
+                # never the full token stream
+                firsts = flat.take(pa.array(mhit)).to_pylist()
+                for p_abs, row, ftok in zip(mhit.tolist(), hrows.tolist(), firsts):
+                    if p_abs < next_free.get(row, 0):
+                        continue
+                    start = p_abs - int(offsets[row])
+                    end_row = int(offsets[row + 1])
+                    for parts, pid in multi_cands[ftok]:
+                        L = len(parts)
+                        if (
+                            p_abs + L <= end_row
+                            and flat[p_abs : p_abs + L].to_pylist() == parts
+                        ):
+                            m_rows.append(row)
+                            m_starts.append(start)
+                            m_ends.append(start + L - 1)
+                            m_pidx.append(pid)
+                            covered[p_abs : p_abs + L] = True
+                            next_free[row] = p_abs + L
+                            break
+                rows_parts.append(np.array(m_rows, np.int64))
+                starts_parts.append(np.array(m_starts, np.int64))
+                ends_parts.append(np.array(m_ends, np.int64))
+                pidx_parts.append(np.array(m_pidx, np.int64))
+
+        if total:
+            sid = pc.index_in(flat, value_set=svals)
+            s_mask = np.asarray(pc.is_valid(sid))
+            if covered is not None:
+                s_mask &= ~covered
+            s_hits = s_mask.nonzero()[0]
+            s_rows = np.searchsorted(offsets, s_hits, side="right") - 1
+            s_starts = (s_hits - offsets[s_rows]).astype(np.int64)
+            rows_parts.append(s_rows.astype(np.int64))
+            starts_parts.append(s_starts)
+            ends_parts.append(s_starts)
+            pidx_parts.append(
+                np.asarray(pc.fill_null(sid, -1), dtype=np.int64)[s_hits]
+            )
+
+        rows = np.concatenate(rows_parts)
+        starts = np.concatenate(starts_parts)
+        order = np.lexsort((starts, rows))
+        return (
+            toks,
+            rows[order],
+            starts[order],
+            np.concatenate(ends_parts)[order],
+            np.concatenate(pidx_parts)[order],
+        )
+
+    return match, payload
+
+
 def detect_mentions(
     pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
 ) -> DataFrame:
@@ -135,38 +268,9 @@ def detect_mentions(
     import numpy as np
     import pyarrow as pa
 
-    trie = trie or build_alias_trie(ENTITY_CATALOG)
-    single, multi = _split_trie(trie)
-    skeys = list(single)
-    payloads = [single[k] for k in skeys]
-    multi_cands: dict[str, list] = {}
-    for first, cands in multi.items():
-        lst = []
-        for parts, payload in cands:
-            lst.append((parts, len(payloads)))
-            payloads.append(payload)
-        multi_cands[first] = lst
-    svals = pa.array(skeys, pa.string())
-    mvals = pa.array(list(multi_cands.keys()), pa.string())
-    pay_eid = pa.array([p[0] for p in payloads], pa.int64())
-    pay_alias = pa.array([p[1] for p in payloads], pa.string())
-    pay_type = pa.array([p[2] for p in payloads], pa.string())
-    pay_sub = pa.array([p[3] for p in payloads], pa.string())
-    pay_prior = pa.array([p[4] for p in payloads], pa.float64())
-    have_multi = bool(multi_cands)
-
+    match, payload = trie_matcher(trie or build_alias_trie(ENTITY_CATALOG))
     mention_type = pa.list_(
-        pa.struct(
-            [
-                ("start", pa.int32()),
-                ("pos", pa.int32()),
-                ("entity_id", pa.int64()),
-                ("alias", pa.string()),
-                ("entity_type", pa.string()),
-                ("subtype", pa.string()),
-                ("prior", pa.float64()),
-            ]
-        )
+        pa.struct([("start", pa.int32()), ("pos", pa.int32()), *payload.type])
     )
     fields = [("url", pa.string())]
     if include_tokens:
@@ -175,137 +279,20 @@ def detect_mentions(
     out_schema = pa.schema(fields)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         for rb in batches:
-            n_rows = rb.num_rows
-            text = rb.column(rb.schema.get_field_index("text"))
-            trimmed = pc.utf8_trim(pc.fill_null(text, ""), _WS_CHARS)
-            toks = pc.split_pattern_regex(trimmed, _WS_PATTERN)
-            flat = toks.values
-            offsets = np.asarray(toks.offsets)
-            # whitespace-only rows split to [""] where py_tokenize gives
-            # []: drop the lone empty token and close the offset gap
-            empty_rows = np.asarray(pc.equal(trimmed, "")).nonzero()[0]
-            if len(empty_rows):
-                keep = np.ones(len(flat), dtype=bool)
-                keep[offsets[empty_rows]] = False
-                flat = flat.filter(pa.array(keep))
-                counts = np.diff(offsets).astype(np.int64)
-                counts[empty_rows] -= 1
-                offsets = np.zeros(n_rows + 1, dtype=np.int32)
-                np.cumsum(counts, out=offsets[1:])
-                toks = pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), flat
-                )
-                offsets = np.asarray(offsets)
-
-            total = len(flat)
-            rows_parts: list[np.ndarray] = []
-            starts_parts: list[np.ndarray] = []
-            ends_parts: list[np.ndarray] = []
-            pidx_parts: list[np.ndarray] = []
-            covered = None
-            if have_multi and total:
-                mhit = np.asarray(
-                    pc.is_valid(pc.index_in(flat, value_set=mvals))
-                ).nonzero()[0]
-                if len(mhit):
-                    covered = np.zeros(total, dtype=bool)
-                    hrows = (
-                        np.searchsorted(offsets, mhit, side="right") - 1
-                    )
-                    m_rows, m_starts, m_ends, m_pidx = [], [], [], []
-                    next_free: dict[int, int] = {}
-                    # python strings only for the candidate windows —
-                    # never the full token stream
-                    firsts = flat.take(pa.array(mhit)).to_pylist()
-                    for p_abs, row, ftok in zip(
-                        mhit.tolist(), hrows.tolist(), firsts
-                    ):
-                        if p_abs < next_free.get(row, 0):
-                            continue
-                        start = p_abs - int(offsets[row])
-                        end_row = int(offsets[row + 1])
-                        for parts, pid in multi_cands[ftok]:
-                            L = len(parts)
-                            if (
-                                p_abs + L <= end_row
-                                and flat[p_abs : p_abs + L].to_pylist()
-                                == parts
-                            ):
-                                m_rows.append(row)
-                                m_starts.append(start)
-                                m_ends.append(start + L - 1)
-                                m_pidx.append(pid)
-                                covered[p_abs : p_abs + L] = True
-                                next_free[row] = p_abs + L
-                                break
-                    if m_rows:
-                        rows_parts.append(np.array(m_rows, np.int64))
-                        starts_parts.append(np.array(m_starts, np.int64))
-                        ends_parts.append(np.array(m_ends, np.int64))
-                        pidx_parts.append(np.array(m_pidx, np.int64))
-
-            if total:
-                sid = pc.index_in(flat, value_set=svals)
-                s_mask = np.asarray(pc.is_valid(sid))
-                if covered is not None:
-                    s_mask &= ~covered
-                s_hits = s_mask.nonzero()[0]
-                if len(s_hits):
-                    s_rows = (
-                        np.searchsorted(offsets, s_hits, side="right") - 1
-                    )
-                    sidx = np.asarray(
-                        pc.fill_null(sid, -1), dtype=np.int64
-                    )[s_hits]
-                    s_starts = s_hits - offsets[s_rows]
-                    rows_parts.append(s_rows.astype(np.int64))
-                    starts_parts.append(s_starts.astype(np.int64))
-                    ends_parts.append(s_starts.astype(np.int64))
-                    pidx_parts.append(sidx)
-
-            if rows_parts:
-                rows_all = np.concatenate(rows_parts)
-                starts_all = np.concatenate(starts_parts)
-                ends_all = np.concatenate(ends_parts)
-                pidx_all = np.concatenate(pidx_parts)
-                order = np.lexsort((starts_all, rows_all))
-                rows_all = rows_all[order]
-                starts_all = starts_all[order]
-                ends_all = ends_all[order]
-                take = pa.array(pidx_all[order], pa.int64())
-                struct = pa.StructArray.from_arrays(
-                    [
-                        pa.array(starts_all.astype(np.int32), pa.int32()),
-                        pa.array(ends_all.astype(np.int32), pa.int32()),
-                        pay_eid.take(take),
-                        pay_alias.take(take),
-                        pay_type.take(take),
-                        pay_sub.take(take),
-                        pay_prior.take(take),
-                    ],
-                    names=[
-                        "start", "pos", "entity_id", "alias",
-                        "entity_type", "subtype", "prior",
-                    ],
-                )
-                m_counts = np.bincount(rows_all, minlength=n_rows)
-                m_offsets = np.zeros(n_rows + 1, dtype=np.int32)
-                np.cumsum(m_counts, out=m_offsets[1:])
-                mentions = pa.ListArray.from_arrays(
-                    pa.array(m_offsets, pa.int32()), struct
-                )
-            else:
-                mentions = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.zeros(n_rows + 1, dtype=np.int32), pa.int32()
-                    ),
-                    pa.array([], mention_type.value_type),
-                )
-
-            cols = [rb.column(rb.schema.get_field_index("url"))]
+            toks, rows, starts, ends, pidx = match(rb.column("text"))
+            struct = pa.StructArray.from_arrays(
+                [
+                    pa.array(starts.astype(np.int32)),
+                    pa.array(ends.astype(np.int32)),
+                    *payload.take(pa.array(pidx)).flatten(),
+                ],
+                fields=list(mention_type.value_type),
+            )
+            m_offsets = np.zeros(rb.num_rows + 1, dtype=np.int32)
+            np.cumsum(np.bincount(rows, minlength=rb.num_rows), out=m_offsets[1:])
+            mentions = pa.ListArray.from_arrays(pa.array(m_offsets), struct)
+            cols = [rb.column("url")]
             if include_tokens:
                 cols.append(toks)
             cols.append(mentions)

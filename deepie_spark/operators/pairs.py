@@ -1,27 +1,151 @@
-"""Within-page mention-pair generation (north-star stage 3).
+"""Within-page mention-pair generation and rule labelling (north-star stage 3).
 
 The reference's unit of work is a pre-built (e1, e2) pair per record; the
-pipeline must *generate* those pairs from detected mentions.  Pairing is
-shuffle-free: mentions arrive as an array per page, and ordered pairs are
-produced with nested array ``filter`` + ``transform`` + ``flatten`` — the
-data never leaves its partition.  The P5 distance predicate
-(|pos2 − pos1| ≤ maximumDistance, rnn_process_onlyExtra.py:10,59-61)
-prunes the quadratic blowup; at 100 TB this bound is what keeps hot
-(mention-dense) pages from dominating task time.
+pipeline must *generate* those pairs from detected mentions.  A pair is
+two mentions of one page at most ``max_distance`` tokens apart
+(|pos2 − pos1| ≤ maximumDistance, rnn_process_onlyExtra.py:10,59-61);
+at 100 TB this bound is what keeps hot (mention-dense) pages from
+dominating task time.
+
+Pairing is numpy inside an Arrow ``mapInArrow`` kernel, shuffle-free:
+
+* :func:`pair_index` — the one pairing core.  A row's mentions are
+  sorted by ``pos`` with distinct positions, so the candidates of the
+  n-th mention are only mentions n+1 … n+``max_distance``: a banded
+  scan over shifted arrays, not the m² candidate space.
+* :func:`label_table` — a rule table as direct addressing: a type code
+  per entity type indexes a ``(K+1)²`` label array; no string key, no
+  hash probe (PAPERS, "Analyzing Vectorized Hash Tables Across CPU
+  Architectures", VLDB 2023, on small dense key domains).
+* :func:`detect_mention_pairs` — text → labelled pairs in the mentions
+  kernel itself (operators.mentions.trie_matcher), the pipeline path:
+  the mention arrays never leave Python, and no interpreted JVM
+  higher-order function or ``explode`` runs per candidate.
+* :func:`mention_pairs` — the same core over existing mention arrays
+  (e.g. the tagger's), and the composed reference the fused path is
+  tested against.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from deepie_spark.operators.mentions import trie_matcher
+
+
+def pair_index(row, pos, max_distance: int):
+    """Mentions sorted by ``(row, pos)`` → ``(i, j)``: every ordered pair
+    of one row with ``pos[i] < pos[j] ≤ pos[i] + max_distance``, in
+    ``(i, j)`` order — the order ``explode`` over per-row pair arrays
+    gives.
+
+    Raises ``ValueError`` unless each row's mentions are sorted by
+    ``pos`` with distinct positions.  That convention is what bounds
+    the scan: positions are distinct integers, so a partner of mention
+    n sits at most ``max_distance`` slots to its right, and the partners
+    of n are exactly n+1 … n+c[n] for a per-mention count c.
+    """
+    import numpy as np
+
+    row = np.asarray(row, np.int64)
+    pos = np.asarray(pos, np.int64)
+    if np.any(row[1:] < row[:-1]) or np.any(
+        (row[1:] == row[:-1]) & (pos[1:] <= pos[:-1])
+    ):
+        raise ValueError(
+            "mentions must be sorted by pos with distinct positions per row"
+        )
+    n = len(pos)
+    count = np.zeros(n, np.int64)
+    for d in range(1, max_distance + 1):
+        ok = (row[d:] == row[:-d]) & (pos[d:] - pos[:-d] <= max_distance)
+        if not ok.any():
+            break  # no partner at distance d in the slots ⇒ none beyond
+        count[: n - d] += ok
+    i = np.repeat(np.arange(n), count)
+    first = np.cumsum(count) - count  # each mention's first output slot
+    j = i + 1 + np.arange(len(i)) - np.repeat(first, count)
+    return i, j
+
+
+def label_table(rules: dict[tuple[str, str], str]):
+    """``{(type1, type2): label}`` → ``(types, labels, table)``.
+
+    ``types`` lists the K entity types the rules name; code ``k + 1``
+    stands for ``types[k]`` and code 0 for a null type or one no rule
+    names.  ``table[c1, c2]`` indexes ``labels``, or is -1 where no rule
+    applies (the pair is NONE).
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    types = sorted({t for pair in rules for t in pair})
+    labels = sorted(set(rules.values()))
+    table = np.full((len(types) + 1,) * 2, -1, np.int64)
+    for (t1, t2), lab in rules.items():
+        table[types.index(t1) + 1, types.index(t2) + 1] = labels.index(lab)
+    return pa.array(types, pa.string()), pa.array(labels, pa.string()), table
+
+
+def type_codes(entity_type, types):
+    """Entity-type strings → ``label_table`` codes (0: null or unknown)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    found = pc.index_in(entity_type, value_set=types)
+    return np.asarray(pc.fill_null(found, -1), np.int64) + 1
+
+
+def _pair_kernel(max_distance: int, rules):
+    """The per-batch pair emitter both operators share, and its Spark
+    schema: ``emit(url, row, pos, ref, values)`` → one ``RecordBatch``
+    of pairs.  Mention k has its row, its position and ``ref[k]``, an
+    index into ``values`` (a struct array with ``alias`` and
+    ``entity_type``).  With ``rules``, pairs no rule labels are dropped
+    and the rest carry ``label``."""
+    import numpy as np
+    import pyarrow as pa
+
+    schema = (
+        "url string, pos1 int, pos2 int, alias1 string, alias2 string,"
+        " type1 string, type2 string" + ("" if rules is None else ", label string")
+    )
+    names = [col.split()[0] for col in schema.split(",")]
+    if rules is not None:
+        types, labels, table = label_table(rules)
+
+    def emit(url, row, pos, ref, values):
+        i, j = pair_index(row, pos, max_distance)
+        a, b = ref[i], ref[j]
+        alias, etype = values.field("alias"), values.field("entity_type")
+        if rules is not None:
+            codes = type_codes(etype, types)
+            lab = table[codes[a], codes[b]]
+            keep = lab >= 0
+            i, j, a, b, lab = i[keep], j[keep], a[keep], b[keep], lab[keep]
+        a, b = pa.array(a), pa.array(b)
+        cols = [
+            url.take(pa.array(row[i])),
+            pa.array(pos[i].astype(np.int32)),
+            pa.array(pos[j].astype(np.int32)),
+            alias.take(a),
+            alias.take(b),
+            etype.take(a),
+            etype.take(b),
+        ]
+        if rules is not None:
+            cols.append(labels.take(pa.array(lab)))
+        return pa.RecordBatch.from_arrays(cols, names=names)
+
+    return emit, schema
 
 
 def mention_pairs(
     mentions: DataFrame,
     max_distance: int = 10,
-    label: Callable[[Column, Column], Column] | None = None,
+    rules: dict[tuple[str, str], str] | None = None,
 ) -> DataFrame:
     """(url, mentions[], …) → one row per ordered mention pair:
     ``(url, pos1, pos2, alias1, alias2, type1, type2[, label])``.
@@ -32,41 +156,60 @@ def mention_pairs(
     mirroring the reference's directed-label convention rather than
     emitting mirrored pairs.
 
-    ``label(a, b)`` — a column expression over two mention structs — is
-    an in-row classifier: pairs it maps to null are dropped, and the
-    survivors carry it as ``label``.  Order of operations matters: the
-    cheap pos/distance predicate prunes the m² candidate space first,
-    then the label predicate, and only then is a pair struct built, so
-    the string-carrying structs exist only for survivors.  The label is
-    evaluated twice per surviving pair (filter + projection); a lookup is
-    far cheaper than materializing the dropped structs.
+    ``rules`` (``{(type1, type2): label}``, e.g. RELATION_RULES) labels
+    each pair from the direct-addressed :func:`label_table`; pairs no
+    rule names are dropped.  Each row's mention array must be sorted by
+    ``pos`` with distinct, non-null positions (what both mention
+    detectors emit); otherwise the task fails with ``ValueError``.
     """
-    m = F.col("mentions")
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def keep(a, b):
-        cond = (a["pos"] < b["pos"]) & ((b["pos"] - a["pos"]) <= max_distance)
-        return cond if label is None else cond & label(a, b).isNotNull()
+    emit, schema = _pair_kernel(max_distance, rules)
 
-    def pair(a, b):
-        fields = [
-            a["pos"].alias("pos1"),
-            b["pos"].alias("pos2"),
-            a["alias"].alias("alias1"),
-            b["alias"].alias("alias2"),
-            a["entity_type"].alias("type1"),
-            b["entity_type"].alias("type2"),
-        ]
-        if label is not None:
-            fields.append(label(a, b).alias("label"))
-        return F.struct(*fields)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            lists = rb.column("mentions")
+            values = lists.flatten()
+            pos = values.field("pos")
+            if values.null_count or pos.null_count:
+                raise ValueError("mention arrays must not hold null positions")
+            yield emit(
+                rb.column("url"),
+                np.asarray(pc.list_parent_indices(lists)),
+                np.asarray(pos),
+                np.arange(len(values)),
+                values,
+            )
 
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda a: F.transform(
-                F.filter(m, lambda b: keep(a, b)), lambda b: pair(a, b)
-            ),
-        )
-    )
-    exploded = mentions.select("url", F.explode(pair_structs).alias("p"))
-    return exploded.select("url", "p.*")
+    return mentions.select("url", "mentions").mapInArrow(run, schema)
+
+
+def detect_mention_pairs(
+    pages: DataFrame,
+    trie: dict,
+    max_distance: int = 10,
+    rules: dict[tuple[str, str], str] | None = None,
+) -> DataFrame:
+    """pages(url, text, …) → the pairs :func:`mention_pairs` would give
+    over ``detect_mentions(pages, trie)``, in one ``mapInArrow`` pass.
+
+    The kernel matches the text with the same compiled trie
+    (operators.mentions.trie_matcher), whose mentions come out sorted,
+    and pairs and labels them in place: a mention is its payload index,
+    so a pair's aliases and types are ``take``s on the catalog's payload
+    and its label one lookup in the label table by the payload's type
+    code.
+    """
+    import pyarrow as pa
+
+    match, payload = trie_matcher(trie)
+    emit, schema = _pair_kernel(max_distance, rules)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            _, rows, _, pos, pidx = match(rb.column("text"))
+            yield emit(rb.column("url"), rows, pos, pidx, payload)
+
+    return pages.select("url", "text").mapInArrow(run, schema)

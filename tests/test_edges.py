@@ -31,6 +31,24 @@ def test_mention_pairs_empty_and_single(spark):
     assert mention_pairs(df).count() == 0  # no ordered pair exists
 
 
+def test_mention_pairs_rejects_unsorted_mentions(spark):
+    """The banded pair scan relies on pos-sorted mention arrays with
+    distinct positions; an array that breaks the convention fails the
+    task instead of silently losing pairs."""
+    rows = [
+        (
+            "u",
+            [
+                (5, 5, 1, "a", "PER", "NOM", 0.5),
+                (1, 1, 2, "b", "ORG", "NOM", 0.5),
+            ],
+        )
+    ]
+    df = spark.createDataFrame(rows, MENTIONS_SCHEMA_SLIM)
+    with pytest.raises(Exception, match="sorted by pos"):
+        mention_pairs(df).collect()
+
+
 def test_scorer_empty_dataframe(spark):
     df = spark.createDataFrame([], "pred int, gold int")
     p, r, f1 = precision_recall_f1(df)

@@ -210,9 +210,11 @@ def test_none_pairs_never_reach_triples(spark, pages):
 
 
 def test_fused_equals_composed_pipeline(spark, pages):
-    """The fused in-row classify plan (extract_triples) and a plan
-    composed of discrete operators — unlabeled mention_pairs, then a
-    broadcast join on the rule table — must emit identical triple rows."""
+    """The fused plan (extract_triples: mentions, pairs and the
+    direct-addressed rule labels in one kernel) and a plan composed of
+    discrete operators — detect_mentions, unlabeled mention_pairs, then
+    a broadcast join on the rule table, the independent reference for
+    the label table — must emit identical triple rows."""
     fused = extract_triples(spark, pages)
     mentions = detect_mentions(extract_stage(pages), build_alias_trie())
     classified = mention_pairs(mentions, max_distance=10).join(

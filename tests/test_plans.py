@@ -45,7 +45,9 @@ def test_regional_revenue_broadcasts_dimensions(spark, sf_dir):
 def test_pipeline_has_no_shuffle_before_sink(spark, sf_dir):
     """The fused flagship plan: one input rebalance at most, then
     narrow stages only — no Exchange between mention detection and the
-    triple projection."""
+    triple projection — and mentions, pairs and rule labels in ONE
+    Arrow kernel: no interpreted higher-order-function pair path and
+    no ``explode`` (Generate) may come back."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     from deepie_spark.datagen.pages import pages_from_documents
     from deepie_spark.plans.pipeline import extract_triples
@@ -59,8 +61,10 @@ def test_pipeline_has_no_shuffle_before_sink(spark, sf_dir):
     # counts rather than absolutes)
     assert "ENSURE_REQUIREMENTS" not in plan
     assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM") > 0
-    # mention detection is the Arrow-native python stage (mapInArrow)
-    assert "MapInArrow" in plan or "PythonMapInArrow" in plan
+    final = plan.split("Initial Plan")[0]
+    nodes = re.findall(r"^[\s+\-:*()\d]*(\w+)", final, re.M)
+    assert sum(n in ("MapInArrow", "PythonMapInArrow") for n in nodes) == 1
+    assert "Generate" not in nodes
     assert "Join" not in plan  # fused rule lookup, no join operator
 
 

@@ -154,3 +154,67 @@ def test_matchers_agree_on_random_deep_tries(spark):
             assert got[i] == greedy_match(toks, trie), (catalog, toks)
             pos = [m[1] for m in got[i]]
             assert pos == sorted(set(pos)), (catalog, toks)
+
+
+def _brute_pairs(batch, max_distance, rules):
+    """The O(m²) reference: per row, every (a, b) with pos_a < pos_b ≤
+    pos_a + max_distance, a-major; with its rule label (None = NONE)."""
+    out, base = [], 0
+    for mentions in batch:
+        for a, (pa_, ta) in enumerate(mentions):
+            for b, (pb, tb) in enumerate(mentions):
+                if pa_ < pb <= pa_ + max_distance:
+                    out.append((base + a, base + b, rules.get((ta, tb))))
+        base += len(mentions)
+    return out
+
+
+def test_pair_index_and_label_table_match_brute_force():
+    """pair_index plus the direct-addressed label table equal the O(m²)
+    Python reference on seeded random batches: empty and single-mention
+    rows, gaps of exactly max_distance and max_distance + 1,
+    max_distance 0 and 1, null types and types no rule names."""
+    import pyarrow as pa
+
+    from deepie_spark.datagen.catalog import RELATION_RULES
+    from deepie_spark.operators.pairs import label_table, pair_index, type_codes
+
+    types, labels, table = label_table(RELATION_RULES)
+    type_pool = ["PER", "ORG", "GPE", "FAC", "VEH", "LOC", "XYZ", None]
+    rng = np.random.default_rng(20261017)
+    for max_distance in (0, 1, 2, 3, 10):
+        gaps = [1, 2, max(max_distance, 1), max_distance + 1, max_distance + 7]
+        for _ in range(40):
+            batch = []
+            for _ in range(rng.integers(0, 12)):
+                n = int(rng.choice([0, 1, 2, 5, 20]))
+                pos = np.cumsum(rng.choice(gaps, n)) + rng.integers(0, 3)
+                batch.append(
+                    [(int(p), type_pool[rng.integers(len(type_pool))]) for p in pos]
+                )
+            flat = [m for mentions in batch for m in mentions]
+            row = np.repeat(np.arange(len(batch)), [len(m) for m in batch])
+            pos = np.array([p for p, _ in flat], np.int64)
+            i, j = pair_index(row, pos, max_distance)
+            codes = type_codes(pa.array([t for _, t in flat], pa.string()), types)
+            lab = table[codes[i], codes[j]]
+            got = [
+                (a, b, labels[k].as_py() if k >= 0 else None)
+                for a, b, k in zip(i.tolist(), j.tolist(), lab.tolist())
+            ]
+            assert got == _brute_pairs(batch, max_distance, RELATION_RULES), (
+                max_distance, batch,
+            )
+
+
+def test_pair_index_rejects_unsorted_or_tied_positions():
+    import pytest
+
+    from deepie_spark.operators.pairs import pair_index
+
+    for row, pos in (([0, 0, 0], [1, 5, 3]), ([0, 0], [4, 4]), ([1, 0], [0, 1])):
+        with pytest.raises(ValueError, match="sorted"):
+            pair_index(np.array(row), np.array(pos), 10)
+    # a new row may restart at any position
+    i, j = pair_index(np.array([0, 0, 1, 1]), np.array([3, 9, 0, 2]), 10)
+    assert list(zip(i.tolist(), j.tolist())) == [(0, 1), (2, 3)]

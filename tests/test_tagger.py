@@ -116,14 +116,20 @@ def test_distributed_tagger_matches_golden_and_gazetteer(spark, trained):
 
 def test_tagger_mentions_feed_pair_generation(spark, trained):
     """Tagger output drops into the standard pair generator unchanged
-    (same mention-struct shape; unresolved link fields are null)."""
+    (same mention-struct shape; unresolved link fields are null; each
+    row's mentions sorted by pos with distinct positions, which the
+    banded pair scan requires)."""
     from deepie_spark.operators.pairs import mention_pairs
 
     pages = pages_from_documents(trained["docs"]).limit(100)
     tagged = detect_mentions_tagger(
         pages, trained["weights"], trained["vocab"]
     )
-    mentions = [m for row in tagged.limit(20).collect() for m in row["mentions"]]
+    rows = tagged.collect()
+    for row in rows:
+        pos = [m["pos"] for m in row["mentions"]]
+        assert pos == sorted(set(pos)), row["url"]
+    mentions = [m for row in rows[:20] for m in row["mentions"]]
     assert mentions
     for m in mentions:
         # linking resolves these later
