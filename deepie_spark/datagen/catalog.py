@@ -84,8 +84,10 @@ def directed_triple_columns(label, alias1, alias2, type1=None, type2=None):
     the direction swap: an (e2,e1) label swaps the arguments and the
     suffix is stripped from the predicate.  The single implementation
     every triple emitter selects from: the rule pipeline
-    (plans.pipeline), the model path (q_pipeline_triples_model) and the
-    relational join twin (q_triples_rules)."""
+    (plans.pipeline), the model path (q_pipeline_triples_model), the
+    classifier's predictions (model.infer.triples_from_predictions) and
+    the relational join twin (q_triples_rules).  The DuckDB oracles'
+    twin is ``__spark_entry__._RULE_TRIPLES_SQL``."""
     from pyspark.sql import functions as F
 
     rev = label.endswith("(e2,e1)")

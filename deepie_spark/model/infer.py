@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepie_spark.datagen.catalog import directed_triple_columns
 from deepie_spark.model.encoder import (
     binary_feature_rows,
     encode_batch,
@@ -367,18 +368,15 @@ def classify_type_pairs(
 def triples_from_predictions(preds: DataFrame) -> DataFrame:
     """Predictions → directed (subj, pred, obj) triples, NONE excluded.
 
-    Direction from the (e2,e1) suffix as in plans.pipeline; subject/
-    object are the entity head tokens (last-token rule positions)."""
+    Direction from the (e2,e1) suffix as in plans.pipeline
+    (catalog.directed_triple_columns); subject/object are the entity
+    head tokens (last-token rule positions)."""
     t = preds.filter(F.col("pred") != "NONE")
-    rev = F.col("pred").endswith("(e2,e1)")
-    bare = F.regexp_replace(F.col("pred"), "\\(e[12],e[21]\\)$", "")
     return t.select(
-        F.when(rev, F.col("obj")).otherwise(F.col("subj")).alias("subj"),
-        bare.alias("pred"),
-        F.when(rev, F.col("subj")).otherwise(F.col("obj")).alias("obj"),
-        F.col("prob"),
-        F.col("corpus"),
-        F.col("rel_id"),
-        F.col("pos1"),
-        F.col("pos2"),
+        *directed_triple_columns(F.col("pred"), F.col("subj"), F.col("obj")),
+        "prob",
+        "corpus",
+        "rel_id",
+        "pos1",
+        "pos2",
     )

@@ -5,7 +5,10 @@ pipeline must *generate* those pairs from detected mentions.  A pair is
 two mentions of one page at most ``max_distance`` tokens apart
 (|pos2 − pos1| ≤ maximumDistance, rnn_process_onlyExtra.py:10,59-61);
 at 100 TB this bound is what keeps hot (mention-dense) pages from
-dominating task time.
+dominating task time.  :data:`MAX_DISTANCE` is that window: the default
+of every pair generator here and of plans.pipeline.extract_triples, and
+the bound the relational twins and DuckDB oracles in
+``__spark_entry__`` are built from.
 
 Pairing is numpy inside an Arrow ``mapInArrow`` kernel, shuffle-free:
 
@@ -33,6 +36,9 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 
 from deepie_spark.operators.mentions import trie_matcher
+
+#: the pair window in tokens (the reference's maximumDistance)
+MAX_DISTANCE = 10
 
 
 def pair_index(row, pos, max_distance: int):
@@ -144,7 +150,7 @@ def _pair_kernel(max_distance: int, rules):
 
 def mention_pairs(
     mentions: DataFrame,
-    max_distance: int = 10,
+    max_distance: int = MAX_DISTANCE,
     rules: dict[tuple[str, str], str] | None = None,
 ) -> DataFrame:
     """(url, mentions[], …) → one row per ordered mention pair:
@@ -189,7 +195,7 @@ def mention_pairs(
 def detect_mention_pairs(
     pages: DataFrame,
     trie: dict,
-    max_distance: int = 10,
+    max_distance: int = MAX_DISTANCE,
     rules: dict[tuple[str, str], str] | None = None,
 ) -> DataFrame:
     """pages(url, text, …) → the pairs :func:`mention_pairs` would give

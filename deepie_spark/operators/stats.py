@@ -3670,12 +3670,21 @@ def anderson_darling_2sample(
     mann_whitney_u rule), so D, the denominator and lⱼ are exact
     longs.  The per-j rational term is one pinned IEEE chain
     quantized to 2²⁰ fixed point, making the Σⱼ an ORDER-FREE exact
-    integer sum (the link_prediction rule) — no sorted fold.  The
-    tail-weighting denominator vanishes at the last distinct value
-    (2B = 2N) — that j contributes 0 in the continuous formula and
-    is excluded exactly.  Cumulative counts ride prefix_sum_in_order
-    twice (no single-partition window).  A² ≫ 1 rejects "same
-    distribution"; its null mean is 1.
+    integer sum (the link_prediction rule) — no sorted fold.
+
+    Values excluded: the quadrupled denominator is
+    den4 = 2Bⱼ(2N−2Bⱼ) − N·lⱼ = 4·xⱼ·yⱼ + lⱼ·(xⱼ+yⱼ), with xⱼ and yⱼ
+    the pooled counts strictly below and strictly above value j, so it
+    is never negative and the ``den4 > 0`` filter drops exactly the
+    values with xⱼ = yⱼ = 0.  That happens only when the pooled sample
+    holds ONE distinct value: it is dropped, ``n_values`` is 0 and A²
+    is NULL.  Every other value keeps its term, however heavily tied
+    (one carrying more than 3N/4 of the pooled mass included), and so
+    does the last distinct value (2B = 2N − l there, not 2N).
+
+    Cumulative counts ride prefix_sum_in_order twice (no
+    single-partition window).  A² ≫ 1 rejects "same distribution"; its
+    null mean is 1.
     """
     base = df.select(
         F.col(group_col).alias("g"),

@@ -36,7 +36,7 @@ from deepie_spark.datagen.catalog import (
     directed_triple_columns,
 )
 from deepie_spark.functions.text import extract_text
-from deepie_spark.operators.pairs import detect_mention_pairs
+from deepie_spark.operators.pairs import MAX_DISTANCE, detect_mention_pairs
 
 N_PARTS = 64  # lineage/resume bucket count (hash of url)
 
@@ -78,7 +78,7 @@ def _fused_triples(pages: DataFrame, trie: dict, max_distance: int) -> DataFrame
 def extract_triples(
     spark: SparkSession,
     pages: DataFrame,
-    max_distance: int = 10,
+    max_distance: int = MAX_DISTANCE,
     trie: dict | None = None,
 ) -> DataFrame:
     """The full M1 pipeline: pages → triples (rule classifier).

@@ -21,11 +21,13 @@ import sys
 
 
 def main(argv=None) -> int:
+    from deepie_spark.operators.pairs import MAX_DISTANCE
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True, help="pages parquet dir")
     ap.add_argument("--out", required=True, help="triples output dir")
     ap.add_argument("--manifest", required=True, help="lineage manifest dir")
-    ap.add_argument("--max-distance", type=int, default=10)
+    ap.add_argument("--max-distance", type=int, default=MAX_DISTANCE)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession

@@ -130,3 +130,30 @@ def test_tagger_empty_text(spark):
     ).collect()}
     assert got["u1"] == []
     assert len(got["u2"]) >= 1
+
+
+def test_triples_from_predictions_direction_swap(spark):
+    """Classifier predictions → triples: an (e2,e1) label swaps subject
+    and object, the direction suffix is stripped from the predicate,
+    NONE rows are dropped and the provenance columns pass through."""
+    from deepie_spark.model.infer import PRED_SCHEMA, triples_from_predictions
+
+    preds = spark.createDataFrame(
+        [
+            ("r1", "c", "x", "ORG-AFF(e1,e2)", 0.9, 1, 4, "ann", "acme", 0),
+            ("r2", "c", "x", "ORG-AFF(e2,e1)", 0.8, 2, 7, "acme", "bob", 1),
+            ("r3", "c", "x", "PER-SOC", 0.7, 3, 5, "ann", "bob", 2),
+            ("r4", "c", "x", "NONE", 0.6, 0, 9, "ann", "zed", 3),
+        ],
+        PRED_SCHEMA,
+    )
+    out = triples_from_predictions(preds)
+    assert out.columns == [
+        "subj", "pred", "obj", "prob", "corpus", "rel_id", "pos1", "pos2"
+    ]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [
+        ("ann", "ORG-AFF", "acme", 0.9, "c", "r1", 1, 4),
+        ("ann", "PER-SOC", "bob", 0.7, "c", "r3", 3, 5),
+        ("bob", "ORG-AFF", "acme", 0.8, "c", "r2", 2, 7),  # swapped
+    ]

@@ -4,6 +4,9 @@ query, from which queries(), oracle_sql() and bench.py's tiers derive.
 Spark-free: importing the entry file builds no SparkSession.
 """
 
+import inspect
+import re
+
 import pytest
 
 import __spark_entry__ as entry
@@ -109,3 +112,21 @@ def test_bench_tiers():
     assert entry.tier("headline") == [
         n for n, q in entry.REGISTRY.items() if q.tier == "headline"
     ]
+
+
+def test_rule_triples_declared_once():
+    """Oracles select the rule-triple relation from the shared fragment's
+    ``rt``: the rules table, the pair self-join and the direction swap
+    are written once, and the pair window is MAX_DISTANCE, not a
+    literal."""
+    src = inspect.getsource(entry)
+    frag = entry._RULE_TRIPLES_SQL
+    rules = "rules(type1, type2, label) AS (VALUES"
+    assert src.count(rules) == 1 and rules in frag
+    # pair_distance_hist histograms the unlabelled pairs: no rules
+    join = "JOIN mentions b"
+    assert src.count(join) == 2 and join in frag
+    assert join in entry._oracle("pair_distance_hist")
+    swap = "LIKE '%(e2,e1)'"
+    assert src.count(swap) == 1 and swap in frag
+    assert re.findall(r'pos[12]?"?\)?\s*<=\s*\d', src) == []

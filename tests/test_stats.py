@@ -2230,21 +2230,15 @@ def test_cluster_ch_sklearn_style_twin(spark):
     assert abs(r.ch - ch) / ch < 1e-6
 
 
-def test_anderson_darling_2sample_python_twin(spark):
+def _anderson_darling_twin(a, b):
+    """Python twin of the Scholz-Stephens midrank formula:
+    (sfp_a, sfp_b, a2, n_values)."""
     import math
 
-    from deepie_spark.operators.stats import anderson_darling_2sample
-
-    a = [1, 2, 2, 3, 5, 8, 9, 9, 12]
-    b = [2, 3, 3, 4, 6, 10, 11, 14, 14, 20]
-    rows = [("a", v) for v in a] + [("b", v) for v in b]
-    df = spark.createDataFrame(rows, ["g", "v"])
-    r = anderson_darling_2sample(df, "g", "v", "a", "b").collect()[0]
-    # python twin of the Scholz-Stephens midrank formula
     vals = sorted(set(a + b))
     N, na, nb = len(a) + len(b), len(a), len(b)
     cum = cuma = 0
-    sa = sb = 0
+    sa = sb = n_values = 0
     for v in vals:
         l = (a + b).count(v)
         la = a.count(v)
@@ -2256,6 +2250,7 @@ def test_anderson_darling_2sample_python_twin(spark):
         den4 = b2 * (2 * N - b2) - N * l
         if den4 <= 0:
             continue
+        n_values += 1
         for m2, ni, acc in ((ma2, na, "a"), (mb2, nb, "b")):
             d = N * m2 - ni * b2
             t = float(l) * float(d) * float(d) / (
@@ -2267,9 +2262,43 @@ def test_anderson_darling_2sample_python_twin(spark):
             else:
                 sb += fp
     a2 = ((N - 1) / N) * ((sa / na + sb / nb) / 1048576.0)
+    return sa, sb, a2, n_values
+
+
+def _anderson_darling(spark, a, b):
+    from deepie_spark.operators.stats import anderson_darling_2sample
+
+    rows = [("a", v) for v in a] + [("b", v) for v in b]
+    df = spark.createDataFrame(rows, "g string, v long")
+    return anderson_darling_2sample(df, "g", "v", "a", "b").collect()[0]
+
+
+def test_anderson_darling_2sample_python_twin(spark):
+    a = [1, 2, 2, 3, 5, 8, 9, 9, 12]
+    b = [2, 3, 3, 4, 6, 10, 11, 14, 14, 20]
+    r = _anderson_darling(spark, a, b)
+    sa, sb, a2, _ = _anderson_darling_twin(a, b)
+    N, na, nb = len(a) + len(b), len(a), len(b)
     assert r.n_total == N and r.n_a == na and r.n_b == nb
     assert r.sfp_a == sa and r.sfp_b == sb
     assert abs(r.a2 - a2) < 1e-6
+
+
+def test_anderson_darling_heavy_tie_is_kept(spark):
+    """The den4 > 0 filter drops a value only when the pooled sample has
+    a single distinct value: a value carrying more than 3N/4 of the
+    pooled mass, and the last distinct value, keep their terms."""
+    a = [7] * 9 + [1, 3]
+    b = [7] * 8 + [9, 2]
+    assert 4 * (a + b).count(7) > 3 * len(a + b)
+    r = _anderson_darling(spark, a, b)
+    sa, sb, a2, n_values = _anderson_darling_twin(a, b)
+    assert r.n_values == n_values == len(set(a + b)) == 5
+    assert r.sfp_a == sa and r.sfp_b == sb
+    assert abs(r.a2 - a2) < 1e-6
+
+    one = _anderson_darling(spark, [7, 7], [7])  # one distinct value
+    assert one.n_values == 0 and one.a2 is None
 
 
 def test_anderson_darling_shift_detects(spark):
