@@ -6,7 +6,9 @@ per python worker (iterator form amortizes it across Arrow batches —
 SURVEY.md §2.10), and each batch is classified with the numpy zoo.
 This is the Spark re-expression of ``predict()`` (rnnRE.py:512-562):
 the reference pads corpora to batch multiples and recycles head rows
-(:516-523); Arrow batches need no such padding.
+(:516-523); Arrow batches need no such padding.  The one-feature
+type-pair expert needs no per-row pass: it is compiled to a rule dict
+(:func:`compile_type_pair_expert`).
 """
 
 from __future__ import annotations
@@ -320,49 +322,33 @@ def classify_mentions_neural(
     return mentions.select(_NEURAL_COLS).mapInPandas(run, PRED_SCHEMA)
 
 
-PAIR_PRED_SCHEMA = (
-    "doc_id long, pos1 long, pos2 long, alias1 string, alias2 string,"
-    " type1 string, type2 string, label string, prob double"
-)
-
-
-def classify_type_pairs(
-    pairs: DataFrame,
+def compile_type_pair_expert(
     weights: dict[str, np.ndarray],
     label_names: list[str],
     feat_ids: dict[str, int],
-) -> DataFrame:
-    """Model-path pair classification: the trained log-linear expert
-    (M18) applied batched in ``mapInPandas`` with broadcast weights —
-    the same plan shape as the full relation classifier, on the
-    ``TYPE1@TYPE2`` feature family (reference field 3 / parseLine
-    rnn_process_onlyExtra.py:339-340)."""
-    bc = pairs.sparkSession.sparkContext.broadcast(
-        {"W": weights["W"], "b": weights["b"], "labels": label_names,
-         "fid": feat_ids}
-    )
+) -> dict[tuple[str, str], str]:
+    """The type-pair expert compiled to ``{(type1, type2): label}``, the
+    rule dict operators.pairs.label_table addresses.
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = bc.value
-        labels = np.array(v["labels"])
-        # one-feature-per-row special case of M18: logits = W[fid] + b,
-        # fully vectorized (no per-row python) — general sparse rows go
-        # through sparse_loglinear_logits
-        for pdf in batches:
-            keys = (pdf["type1"] + "@" + pdf["type2"]).map(v["fid"])
-            fids = keys.to_numpy(dtype=np.int64, na_value=-1)
-            logits = np.where(
-                (fids >= 0)[:, None], v["W"][fids], 0.0
-            ) + v["b"]
-            p = softmax(logits, axis=1)
-            ids = p.argmax(axis=1)
-            yield pdf.assign(
-                label=labels[ids],
-                prob=p[np.arange(len(ids)), ids],
-            )
-
-    cols = ["doc_id", "pos1", "pos2", "alias1", "alias2", "type1", "type2"]
-    return pairs.select(cols).mapInPandas(run, PAIR_PRED_SCHEMA)
+    The expert is M18 on the ``TYPE1@TYPE2`` feature family (reference
+    field 3 / parseLine rnn_process_onlyExtra.py:339-340), one feature
+    per pair, so its forward pass (``W[fid] + b`` → softmax → argmax)
+    depends on the type pair alone: it runs here once per feature id,
+    and the pairs it labels ``NONE`` are left out.  A pair whose type is
+    null or named by no feature id gets the bias-only row ``b``, which
+    the label table treats as no label; raises ``ValueError`` unless
+    ``b`` alone predicts ``NONE``.
+    """
+    W, b = weights["W"], weights["b"]
+    if label_names[int(softmax(b[None, :], axis=1).argmax())] != "NONE":
+        raise ValueError("the bias-only row must predict NONE")
+    feats, fids = zip(*feat_ids.items())
+    ids = softmax(W[list(fids)] + b, axis=1).argmax(axis=1)
+    return {
+        tuple(f.split("@")): label_names[i]
+        for f, i in zip(feats, ids.tolist())
+        if label_names[i] != "NONE"
+    }
 
 
 def triples_from_predictions(preds: DataFrame) -> DataFrame:

@@ -162,9 +162,11 @@ def mention_pairs(
     mirroring the reference's directed-label convention rather than
     emitting mirrored pairs.
 
-    ``rules`` (``{(type1, type2): label}``, e.g. RELATION_RULES) labels
-    each pair from the direct-addressed :func:`label_table`; pairs no
-    rule names are dropped.  Each row's mention array must be sorted by
+    ``rules`` (``{(type1, type2): label}``: RELATION_RULES, or the
+    trained type-pair expert compiled by
+    model.infer.compile_type_pair_expert) labels each pair from the
+    direct-addressed :func:`label_table`; pairs no rule names are
+    dropped.  Each row's mention array must be sorted by
     ``pos`` with distinct, non-null positions (what both mention
     detectors emit); otherwise the task fails with ``ValueError``.
     """
@@ -206,7 +208,9 @@ def detect_mention_pairs(
     and pairs and labels them in place: a mention is its payload index,
     so a pair's aliases and types are ``take``s on the catalog's payload
     and its label one lookup in the label table by the payload's type
-    code.
+    code.  ``rules`` is RELATION_RULES on the rule pipeline and the
+    compiled type-pair expert on the model path, as in
+    :func:`mention_pairs`.
     """
     import pyarrow as pa
 

@@ -98,7 +98,8 @@ def compact_partitioned_sink(
         df.join(F.broadcast(buckets), "part_id")
         .select("part_id", bucket, *data_cols)
         .repartition(F.col("part_id"), F.col("bucket"))
-        .sortWithinPartitions(*sort_cols)
+        # part_id leads, or the partitioned writer re-sorts by it alone
+        .sortWithinPartitions("part_id", *sort_cols)
         .drop("bucket")
     )
     side = out_dir.rstrip("/") + ".compact_tmp"

@@ -13,9 +13,10 @@ Plan shape at scale (the thing the judge grades):
   numpy scan and labels each pair by direct addressing on entity-type
   codes, so only rule-labelled pairs ever reach the JVM, already as
   rows: no join, no ``explode``.  The model path
-  (``__spark_entry__.q_pipeline_triples_model``) takes the unlabeled
-  pairs of the same kernel and classifies them in ``mapInPandas`` with
-  broadcast weights (deepie_spark.model.infer) instead.
+  (``__spark_entry__.q_pipeline_triples_model``) runs the same kernel
+  with the trained type-pair expert compiled to a rule dict
+  (deepie_spark.model.infer.compile_type_pair_expert) in place of the
+  rule table.
 * **triples** — direction-swap projection plus ``part_id``, JVM
   codegen; the only shuffle in the whole pipeline is the final write's
   ``repartition`` by partition key (and any downstream

@@ -76,8 +76,8 @@ def write_triples_with_manifest(
     """Materialize triples partitioned by part_id + append manifest rows.
 
     One shuffle (repartition by part_id) so each output partition is a
-    single task's write — at scale this is also where AQE coalescing and
-    a sort-within-partitions for downstream locality would slot in.
+    single task's write; every file written is in ``(subj, pred, obj)``
+    order, for downstream locality.
 
     The manifest counts come from the footers of the files this call
     wrote (before/after file-set diff, so concurrent history in an
@@ -89,7 +89,9 @@ def write_triples_with_manifest(
     before = _part_files(out_dir)
     (
         triples.repartition("part_id")
-        .sortWithinPartitions("subj", "pred", "obj")
+        # part_id leads: the partitioned writer needs its input grouped
+        # by it and would otherwise re-sort, losing the triple order
+        .sortWithinPartitions("part_id", "subj", "pred", "obj")
         .write.mode("append")
         .partitionBy("part_id")
         .parquet(out_dir)

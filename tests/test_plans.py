@@ -69,9 +69,9 @@ def test_pipeline_has_no_shuffle_before_sink(spark, sf_dir):
 
 
 def test_model_pipeline_has_no_shuffle_or_join(spark, sf_dir):
-    """The model path: Arrow mentions → in-row pairs → batched
-    classify, all narrow — no join, no planner-inserted shuffle, and
-    exactly one Python stage of each kind."""
+    """The model path: Arrow mentions → pairs → compiled-expert labels
+    in one kernel, all narrow — no join, no planner-inserted shuffle, no
+    explode, and exactly one Python stage: the mapInArrow."""
     plan = executed(entry.q_pipeline_triples_model(spark, sf_dir))
     # operator names, one per line; under AQE the tree repeats as
     # "Initial Plan", so read the final one only
@@ -80,7 +80,8 @@ def test_model_pipeline_has_no_shuffle_or_join(spark, sf_dir):
     assert "ENSURE_REQUIREMENTS" not in plan
     assert "Join" not in plan
     assert sum(n in ("MapInArrow", "PythonMapInArrow") for n in nodes) == 1
-    assert nodes.count("MapInPandas") == 1
+    assert "MapInPandas" not in nodes
+    assert "Generate" not in nodes
 
 
 def test_whole_stage_codegen_on_scan_side(spark, sf_dir):

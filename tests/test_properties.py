@@ -207,6 +207,60 @@ def test_pair_index_and_label_table_match_brute_force():
             )
 
 
+def test_compiled_type_pair_expert_equals_forward_pass():
+    """The compiled type-pair expert, addressed through label_table,
+    labels every (K+1)² type-code pair as the expert's vectorized per-row
+    forward pass does: null, an unknown type (XYZ) and a feature type no
+    pair of which gets a label (LOC) all land on code 0.  A bias that
+    alone predicts a label is rejected."""
+    import pandas as pd
+    import pyarrow as pa
+    import pytest
+
+    from deepie_spark.model.infer import compile_type_pair_expert
+    from deepie_spark.model.train import train_type_pair_expert
+    from deepie_spark.model.zoo import softmax
+    from deepie_spark.operators.pairs import label_table, type_codes
+
+    weights, label_names, fid = train_type_pair_expert()
+
+    def forward(type1, type2):
+        # one TYPE1@TYPE2 feature per row; no feature id ⇒ bias-only row
+        keys = pd.Series(type1, dtype=object) + "@" + pd.Series(
+            type2, dtype=object
+        )
+        fids = keys.map(fid).to_numpy(dtype=np.int64, na_value=-1)
+        logits = np.where(
+            (fids >= 0)[:, None], weights["W"][fids], 0.0
+        ) + weights["b"]
+        return np.array(label_names)[softmax(logits, axis=1).argmax(axis=1)]
+
+    types, labels, table = label_table(
+        compile_type_pair_expert(weights, label_names, fid)
+    )
+    feature_types = sorted({t for f in fid for t in f.split("@")})
+    pool = types.to_pylist() + [None, "XYZ"] + [
+        t for t in feature_types if t not in types.to_pylist()
+    ]
+    assert "LOC" in pool[len(types) + 2 :]
+    type1 = [a for a in pool for _ in pool]
+    type2 = [b for _ in pool for b in pool]
+    c1 = type_codes(pa.array(type1, pa.string()), types)
+    c2 = type_codes(pa.array(type2, pa.string()), types)
+    assert {(a, b) for a, b in zip(c1.tolist(), c2.tolist())} == {
+        (a, b) for a in range(len(types) + 1) for b in range(len(types) + 1)
+    }
+    assert "NONE" not in labels.to_pylist()
+    lab = table[c1, c2]
+    compiled = np.where(lab >= 0, np.array(labels.to_pylist())[lab], "NONE")
+    assert compiled.tolist() == forward(type1, type2).tolist()
+
+    doctored = dict(weights, b=weights["b"].copy())
+    doctored["b"][label_names.index("PER-SOC")] += 100.0
+    with pytest.raises(ValueError, match="NONE"):
+        compile_type_pair_expert(doctored, label_names, fid)
+
+
 def test_pair_index_rejects_unsorted_or_tied_positions():
     import pytest
 

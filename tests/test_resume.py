@@ -197,6 +197,44 @@ def test_compaction_reduces_files_preserves_rows(spark, pages, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == want
 
 
+def _files_out_of_order(out_dir):
+    """Written parquet files whose rows are not in (subj, pred, obj) order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(out_dir, "part_id=*", "*.parquet"))
+    assert files
+    bad = []
+    for f in files:
+        t = pq.read_table(f, columns=["subj", "pred", "obj"]).to_pydict()
+        keys = list(zip(t["subj"], t["pred"], t["obj"]))
+        if keys != sorted(keys):
+            bad.append(f)
+    return bad
+
+
+def test_written_files_keep_triple_order(spark, pages, tmp_path):
+    """Every file the production write and the compaction leave behind
+    is in (subj, pred, obj) order: the sort the partitioned writer would
+    otherwise redo by part_id alone is led by part_id."""
+    from deepie_spark.plans.compact import (
+        _partition_bytes,
+        compact_partitioned_sink,
+    )
+
+    out = str(tmp_path / "triples")
+    write_triples_with_manifest(
+        extract_triples(spark, pages.drop("part_id")), out,
+        str(tmp_path / "manifest"),
+    )
+    assert _files_out_of_order(out) == []
+    # several files per partition: the writer's maxRecordsPerFile split
+    target = min(_partition_bytes(out).values()) // 2 + 1
+    compact_partitioned_sink(spark, out, target_bytes=target)
+    assert _files_out_of_order(out) == []
+
+
 def test_iceberg_writeto_spec_matches_fallback_layout(
     spark, pages, tmp_path, monkeypatch
 ):
