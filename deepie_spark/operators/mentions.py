@@ -12,7 +12,8 @@ index of its final token (data/readMe.md:31).
   kernel, the compiled trie riding the task closure.  No shuffle, no
   join: each page is processed where it was read.  This is the scale
   path (catalog ≪ data).  Its trie walk, :func:`trie_matcher`, is also
-  the front half of ``operators.pairs.detect_mention_pairs``.
+  the front half of ``operators.pairs.detect_mention_pairs``: one
+  numpy walk over int-coded tokens for every alias length.
 * :func:`greedy_match` — the pure-Python trie walk that defines the
   semantics; tests hold the kernel to it.
 * :func:`detect_mentions_single` — the single-token special case as a
@@ -40,14 +41,6 @@ MENTION_STRUCT = T.StructType(
         T.StructField("entity_type", T.StringType()),
         T.StructField("subtype", T.StringType()),
         T.StructField("prior", T.DoubleType()),
-    ]
-)
-
-MENTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("mentions", T.ArrayType(MENTION_STRUCT)),
     ]
 )
 
@@ -82,33 +75,24 @@ def greedy_match(tokens: list[str], trie: dict) -> list[tuple]:
     return out
 
 
-#: the ASCII \s class shared by Spark (Java regex), DuckDB (RE2 via
-#: explicit class), and py_tokenize — NOT unicode whitespace, NOT
-#: \x1c-\x1f (see functions.text)
-_WS_CHARS = "\t\n\x0b\f\r "
-_WS_PATTERN = "[\t\n\x0b\f\r ]+"
+def tokenize_arrow(text):
+    """A string column → ``(flat, offsets)``: every row's tokens in one
+    flat string array, row r's at ``offsets[r]:offsets[r + 1]`` (int64).
 
+    The kernels' tokenizer: Arrow's ASCII whitespace is the \\s class
+    shared by Spark (Java regex), DuckDB (RE2 via explicit class) and
+    py_tokenize — NOT unicode whitespace, NOT \\x1c-\\x1f (see
+    functions.text) — so trim and split on it give the tokens of
+    :func:`py_tokenize` on all input, NULL and blank rows giving none."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-def _split_trie(trie: dict) -> tuple[dict, dict]:
-    """trie → (single-token payload dict, first-token→candidates dict,
-    candidates longest-first) — the kernel's compiled form of the trie."""
-    single: dict = {}
-    multi: dict = {}
-
-    def walk(node, path):
-        for tok, child in node.items():
-            if tok == "$":
-                if len(path) == 1:
-                    single[path[0]] = child
-                else:
-                    multi.setdefault(path[0], []).append((path, child))
-            else:
-                walk(child, path + [tok])
-
-    walk(trie, [])
-    for cands in multi.values():
-        cands.sort(key=lambda c: len(c[0]), reverse=True)
-    return single, multi
+    trimmed = pc.ascii_trim_whitespace(text)
+    # an empty row would split to [""]: make it NULL, which splits to []
+    toks = pc.ascii_split_whitespace(
+        pc.if_else(pc.equal(trimmed, ""), None, trimmed)
+    )
+    return toks.values, np.asarray(toks.offsets, np.int64)
 
 
 def trie_matcher(trie: dict):
@@ -116,29 +100,53 @@ def trie_matcher(trie: dict):
 
     ``payload`` is a ``StructArray`` of the aliases' ``(entity_id,
     alias, entity_type, subtype, prior)``, one per alias.  ``match(text)``
-    takes a string column and returns ``(toks, rows, starts, ends,
-    pidx)``: the token lists, and per mention its row, first and last
-    token index and payload index, as int64 arrays sorted by
-    ``(row, start)``.  Greedy-consumption semantics are those of
-    :func:`greedy_match`, so each row's mentions have distinct,
-    increasing positions.  The one trie walk behind
-    :func:`detect_mentions` and ``operators.pairs.detect_mention_pairs``.
+    takes a string column and returns ``(rows, starts, ends, pidx)``:
+    per mention its row, first and last token index and payload index,
+    as int64 arrays sorted by ``(row, start)``.  Greedy-consumption
+    semantics are those of :func:`greedy_match`, so each row's mentions
+    have distinct, increasing positions.
+
+    The trie compiles to int arrays: its nodes are numbered (root 0),
+    an edge is the sorted int64 key ``node * V + code`` (V tokens in the
+    trie's vocabulary) beside its child, and a terminal node holds its
+    payload index.  Per batch the token stream is coded once with
+    ``index_in``; then every start advances one token per step, all in
+    lockstep — the root step by direct indexing, each deeper one by one
+    ``searchsorted`` — while its state has children, and keeps the
+    deepest terminal it passes.  Any alias length, 1 included, is the
+    same walk, and only hits that overlap an earlier one become Python
+    objects (:func:`_greedy_keep`).  Int keys over a small dense domain:
+    PAPERS, "Analyzing Vectorized Hash Tables Across CPU Architectures".
     """
     import numpy as np
     import pyarrow as pa
 
-    single, multi = _split_trie(trie)
-    skeys = list(single)
-    payloads = [single[k] for k in skeys]
-    multi_cands: dict[str, list] = {}
-    for first, cands in multi.items():
-        lst = []
-        for parts, pay in cands:
-            lst.append((parts, len(payloads)))
-            payloads.append(pay)
-        multi_cands[first] = lst
-    svals = pa.array(skeys, pa.string())
-    mvals = pa.array(list(multi_cands.keys()), pa.string())
+    code: dict[str, int] = {}
+    parent, tcode, term, payloads = [], [], [-1], []
+    stack = [(trie, 0)]
+    while stack:
+        node, nid = stack.pop()
+        for tok, sub in node.items():
+            if tok == "$":
+                term[nid] = len(payloads)
+                payloads.append(sub)
+            else:  # edge k leads to node k + 1
+                parent.append(nid)
+                tcode.append(code.setdefault(tok, len(code)))
+                stack.append((sub, len(term)))
+                term.append(-1)
+    V = max(1, len(code))
+    parent, tcode = np.array(parent, np.int64), np.array(tcode, np.int64)
+    child = np.arange(1, len(term), dtype=np.int64)
+    root = np.full(V, -1, np.int64)
+    root[tcode[parent == 0]] = child[parent == 0]
+    keys = parent * V + tcode
+    order = np.argsort(keys)
+    keys, child = keys[order], child[order]
+    term = np.array(term, np.int64)
+    kids = np.zeros(len(term), dtype=bool)
+    kids[parent] = True
+    vocab = pa.array(list(code), pa.string())
     payload = pa.StructArray.from_arrays(
         [
             pa.array([p[0] for p in payloads], pa.int64()),
@@ -149,121 +157,101 @@ def trie_matcher(trie: dict):
         ],
         names=["entity_id", "alias", "entity_type", "subtype", "prior"],
     )
-    have_multi = bool(multi_cands)
 
     def match(text: pa.Array):
         import pyarrow.compute as pc
 
-        n_rows = len(text)
-        trimmed = pc.utf8_trim(pc.fill_null(text, ""), _WS_CHARS)
-        toks = pc.split_pattern_regex(trimmed, _WS_PATTERN)
-        flat = toks.values
-        offsets = np.asarray(toks.offsets)
-        # whitespace-only rows split to [""] where py_tokenize gives
-        # []: drop the lone empty token and close the offset gap
-        empty_rows = np.asarray(pc.equal(trimmed, "")).nonzero()[0]
-        if len(empty_rows):
-            keep = np.ones(len(flat), dtype=bool)
-            keep[offsets[empty_rows]] = False
-            flat = flat.filter(pa.array(keep))
-            counts = np.diff(offsets).astype(np.int64)
-            counts[empty_rows] -= 1
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
-            np.cumsum(counts, out=offsets[1:])
-            toks = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), flat)
-
-        total = len(flat)
-        empty = np.zeros(0, np.int64)
-        rows_parts = [empty]
-        starts_parts = [empty]
-        ends_parts = [empty]
-        pidx_parts = [empty]
-        covered = None
-        if have_multi and total:
-            mhit = np.asarray(
-                pc.is_valid(pc.index_in(flat, value_set=mvals))
-            ).nonzero()[0]
-            if len(mhit):
-                covered = np.zeros(total, dtype=bool)
-                hrows = np.searchsorted(offsets, mhit, side="right") - 1
-                m_rows, m_starts, m_ends, m_pidx = [], [], [], []
-                next_free: dict[int, int] = {}
-                # python strings only for the candidate windows —
-                # never the full token stream
-                firsts = flat.take(pa.array(mhit)).to_pylist()
-                for p_abs, row, ftok in zip(mhit.tolist(), hrows.tolist(), firsts):
-                    if p_abs < next_free.get(row, 0):
-                        continue
-                    start = p_abs - int(offsets[row])
-                    end_row = int(offsets[row + 1])
-                    for parts, pid in multi_cands[ftok]:
-                        L = len(parts)
-                        if (
-                            p_abs + L <= end_row
-                            and flat[p_abs : p_abs + L].to_pylist() == parts
-                        ):
-                            m_rows.append(row)
-                            m_starts.append(start)
-                            m_ends.append(start + L - 1)
-                            m_pidx.append(pid)
-                            covered[p_abs : p_abs + L] = True
-                            next_free[row] = p_abs + L
-                            break
-                rows_parts.append(np.array(m_rows, np.int64))
-                starts_parts.append(np.array(m_starts, np.int64))
-                ends_parts.append(np.array(m_ends, np.int64))
-                pidx_parts.append(np.array(m_pidx, np.int64))
-
-        if total:
-            sid = pc.index_in(flat, value_set=svals)
-            s_mask = np.asarray(pc.is_valid(sid))
-            if covered is not None:
-                s_mask &= ~covered
-            s_hits = s_mask.nonzero()[0]
-            s_rows = np.searchsorted(offsets, s_hits, side="right") - 1
-            s_starts = (s_hits - offsets[s_rows]).astype(np.int64)
-            rows_parts.append(s_rows.astype(np.int64))
-            starts_parts.append(s_starts)
-            ends_parts.append(s_starts)
-            pidx_parts.append(
-                np.asarray(pc.fill_null(sid, -1), dtype=np.int64)[s_hits]
-            )
-
-        rows = np.concatenate(rows_parts)
-        starts = np.concatenate(starts_parts)
-        order = np.lexsort((starts, rows))
-        return (
-            toks,
-            rows[order],
-            starts[order],
-            np.concatenate(ends_parts)[order],
-            np.concatenate(pidx_parts)[order],
+        flat, offsets = tokenize_arrow(text)
+        codes = np.asarray(
+            pc.fill_null(pc.index_in(flat, value_set=vocab), -1), np.int64
         )
+        row_of = np.repeat(np.arange(len(text)), np.diff(offsets))
+        # the root step: every token with a root edge starts a walk
+        starts = np.flatnonzero(codes >= 0)
+        state = root[codes[starts]]
+        starts, state = starts[state >= 0], state[state >= 0]
+        stop = offsets[row_of[starts] + 1]  # a walk ends with its row
+        best = term[state]  # deepest terminal payload, -1 = none yet
+        end = starts + 1  # … and its exclusive end
+        live = np.flatnonzero(kids[state])
+        state = state[live]
+        depth = 1
+        while len(live):
+            at = starts[live] + depth
+            ok = at < stop[live]
+            live, state, at = live[ok], state[ok], at[ok]
+            c = codes[at]
+            key = state * V + c
+            e = np.minimum(np.searchsorted(keys, key), len(keys) - 1)
+            ok = (c >= 0) & (keys[e] == key)
+            live, state, at = live[ok], child[e[ok]], at[ok]
+            t = term[state]
+            hit = t >= 0
+            best[live[hit]] = t[hit]
+            end[live[hit]] = at[hit] + 1
+            ok = kids[state]
+            live, state = live[ok], state[ok]
+            depth += 1
+
+        hit = best >= 0
+        starts, end, best = starts[hit], end[hit], best[hit]
+        keep = _greedy_keep(starts, end)
+        starts, end, best = starts[keep], end[keep], best[keep]
+        rows = row_of[starts]
+        first = offsets[rows]
+        return rows, starts - first, end - first - 1, best
 
     return match, payload
 
 
-def detect_mentions(
-    pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
-) -> DataFrame:
-    """pages(url, text, …) → (url[, tokens], mentions[]) via broadcast trie.
+def _greedy_keep(starts, ends):
+    """Hits sorted by start, ``[start, end)`` each → the mask of those a
+    left-to-right greedy scan keeps: a hit is taken unless it starts
+    inside the last taken one.  A hit starting at or past the end of
+    every earlier hit is taken in bulk; only the overlapping rest is
+    decided one by one, each from the last bulk hit before it."""
+    import numpy as np
 
-    Arrow-native hot path (``mapInArrow`` + ``pyarrow.compute``): the
-    text column is tokenized by a C-side regex split over the exact
-    ASCII \\s class (bit-identical to :func:`py_tokenize` on ALL input —
-    property-tested), single-token aliases match via one ``index_in``
-    hash join over the flattened token stream, and the mention column is
-    assembled as a ``ListArray<StructArray>`` with ``take`` on prebuilt
-    payload arrays.  Python object materialization happens ONLY at
-    multi-token candidate windows (a sliver of a web token stream) — the
-    url column passes through untouched, with no per-batch Arrow↔pandas
-    string conversion.  Greedy-consumption semantics are identical to
-    :func:`greedy_match` (property-tested on random tries): multi spans
-    consume, singles inside a consumed span are masked, and each row's
-    mentions are sorted by ``pos`` with distinct positions.
+    n = len(starts)
+    reach = np.maximum.accumulate(ends)
+    keep = np.ones(n, dtype=bool)
+    keep[1:] = starts[1:] >= reach[:-1]
+    rest = np.flatnonzero(~keep)
+    if len(rest):
+        head = np.maximum.accumulate(np.where(keep, np.arange(n), 0))[rest]
+        last, free = -1, 0
+        for k, h, s, e, head_end in zip(
+            rest.tolist(),
+            head.tolist(),
+            starts[rest].tolist(),
+            ends[rest].tolist(),
+            ends[head].tolist(),
+        ):
+            if h != last:
+                last, free = h, head_end
+            if s >= free:
+                keep[k] = True
+                free = e
+    return keep
 
-    The compiled alias indexes ride the task closure (the catalog is
-    tiny); for a large catalog, broadcast them.
+
+def detect_mentions(pages: DataFrame, trie: dict | None = None) -> DataFrame:
+    """pages(url, text, …) → (url, mentions[]) via broadcast trie.
+
+    Arrow-native hot path (``mapInArrow`` + ``pyarrow.compute`` +
+    numpy): the text column is tokenized by :func:`tokenize_arrow`
+    (bit-identical to :func:`py_tokenize` on ALL input — property-
+    tested), :func:`trie_matcher` walks every alias length at once over
+    the int-coded token stream, and the mention column is assembled as
+    a ``ListArray<StructArray>`` with ``take`` on prebuilt payload
+    arrays.  No Python object is made per token, and the url column
+    passes through untouched, with no per-batch Arrow↔pandas string
+    conversion.  Greedy-consumption semantics are identical to
+    :func:`greedy_match` (property-tested on random tries), so each
+    row's mentions are sorted by ``pos`` with distinct positions.
+
+    The compiled trie rides the task closure (the catalog is tiny); for
+    a large catalog, broadcast it.
     """
     import numpy as np
     import pyarrow as pa
@@ -272,15 +260,11 @@ def detect_mentions(
     mention_type = pa.list_(
         pa.struct([("start", pa.int32()), ("pos", pa.int32()), *payload.type])
     )
-    fields = [("url", pa.string())]
-    if include_tokens:
-        fields.append(("tokens", pa.list_(pa.string())))
-    fields.append(("mentions", mention_type))
-    out_schema = pa.schema(fields)
+    out_schema = pa.schema([("url", pa.string()), ("mentions", mention_type)])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            toks, rows, starts, ends, pidx = match(rb.column("text"))
+            rows, starts, ends, pidx = match(rb.column("text"))
             struct = pa.StructArray.from_arrays(
                 [
                     pa.array(starts.astype(np.int32)),
@@ -292,14 +276,11 @@ def detect_mentions(
             m_offsets = np.zeros(rb.num_rows + 1, dtype=np.int32)
             np.cumsum(np.bincount(rows, minlength=rb.num_rows), out=m_offsets[1:])
             mentions = pa.ListArray.from_arrays(pa.array(m_offsets), struct)
-            cols = [rb.column("url")]
-            if include_tokens:
-                cols.append(toks)
-            cols.append(mentions)
-            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("url"), mentions], schema=out_schema
+            )
 
-    schema = MENTIONS_SCHEMA if include_tokens else MENTIONS_SCHEMA_SLIM
-    return pages.select("url", "text").mapInArrow(run, schema)
+    return pages.select("url", "text").mapInArrow(run, MENTIONS_SCHEMA_SLIM)
 
 
 def detect_mentions_single(pages: DataFrame, catalog: DataFrame) -> DataFrame:

@@ -21,7 +21,8 @@ Pairing is numpy inside an Arrow ``mapInArrow`` kernel, shuffle-free:
   hash probe (PAPERS, "Analyzing Vectorized Hash Tables Across CPU
   Architectures", VLDB 2023, on small dense key domains).
 * :func:`detect_mention_pairs` — text → labelled pairs in the mentions
-  kernel itself (operators.mentions.trie_matcher), the pipeline path:
+  kernel itself (operators.mentions.trie_matcher, one int-coded trie
+  walk for every alias length), the pipeline path:
   the mention arrays never leave Python, and no interpreted JVM
   higher-order function or ``explode`` runs per candidate.
 * :func:`mention_pairs` — the same core over existing mention arrays
@@ -203,9 +204,10 @@ def detect_mention_pairs(
     """pages(url, text, …) → the pairs :func:`mention_pairs` would give
     over ``detect_mentions(pages, trie)``, in one ``mapInArrow`` pass.
 
-    The kernel matches the text with the same compiled trie
-    (operators.mentions.trie_matcher), whose mentions come out sorted,
-    and pairs and labels them in place: a mention is its payload index,
+    The kernel matches the text with the same compiled trie walk
+    (operators.mentions.trie_matcher: the token stream coded once, every
+    alias length walked in lockstep), whose mentions come out in ``(row,
+    start)`` order, and pairs and labels them in place: a mention is its payload index,
     so a pair's aliases and types are ``take``s on the catalog's payload
     and its label one lookup in the label table by the payload's type
     code.  ``rules`` is RELATION_RULES on the rule pipeline and the
@@ -219,7 +221,7 @@ def detect_mention_pairs(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            _, rows, _, pos, pidx = match(rb.column("text"))
+            rows, _, pos, pidx = match(rb.column("text"))
             yield emit(rb.column("url"), rows, pos, pidx, payload)
 
     return pages.select("url", "text").mapInArrow(run, schema)

@@ -40,19 +40,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deepie_spark.plans.resume import part_files
+
 
 def _partition_bytes(out_dir: str) -> dict[int, int]:
     """{part_id: total file bytes} from the directory listing only."""
     sizes: dict[int, int] = {}
-    for d in os.listdir(out_dir):
-        if not d.startswith("part_id="):
-            continue
-        pid = int(d.split("=", 1)[1])
-        total = 0
-        for f in os.listdir(os.path.join(out_dir, d)):
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(out_dir, d, f))
-        sizes[pid] = total
+    for f, pid in part_files(out_dir).items():
+        sizes[pid] = sizes.get(pid, 0) + os.path.getsize(f)
     return sizes
 
 
@@ -69,13 +64,7 @@ def compact_partitioned_sink(
     import pyarrow.parquet as pq
 
     sizes = _partition_bytes(out_dir)
-    files = [
-        os.path.join(out_dir, d, f)
-        for d in os.listdir(out_dir)
-        if d.startswith("part_id=")
-        for f in os.listdir(os.path.join(out_dir, d))
-        if f.endswith(".parquet")
-    ]
+    files = part_files(out_dir)
     files_before = len(files)
     # footer metadata only — the data is never read to plan the rewrite
     total_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
@@ -113,15 +102,8 @@ def compact_partitioned_sink(
     shutil.rmtree(old, ignore_errors=True)
     os.rename(out_dir, old)
     os.rename(side, out_dir)
-    files_after = sum(
-        1
-        for d in os.listdir(out_dir)
-        if d.startswith("part_id=")
-        for f in os.listdir(os.path.join(out_dir, d))
-        if f.endswith(".parquet")
-    )
     return {
         "files_before": files_before,
-        "files_after": files_after,
+        "files_after": len(part_files(out_dir)),
         "parts": len(sizes),
     }

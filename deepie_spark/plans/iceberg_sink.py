@@ -21,7 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from deepie_spark.plans.resume import write_triples_with_manifest
+from deepie_spark.plans.resume import (
+    sorted_for_write,
+    write_triples_with_manifest,
+)
 
 ICEBERG_CATALOG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
@@ -49,7 +52,8 @@ def write_triples_table(
     """
     if iceberg_available(spark):
         (
-            triples.writeTo(table)
+            sorted_for_write(triples)
+            .writeTo(table)
             .using("iceberg")
             .partitionedBy("part_id")
             .createOrReplace()

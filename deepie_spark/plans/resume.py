@@ -48,11 +48,27 @@ def pending(df: DataFrame, done: DataFrame) -> DataFrame:
     return df.join(F.broadcast(done), "part_id", "left_anti")
 
 
-def _part_files(out_dir: str) -> set[str]:
-    return set(glob.glob(os.path.join(out_dir, "part_id=*", "*.parquet")))
+def part_files(out_dir: str) -> dict[str, int]:
+    """``{path: part_id}`` of every parquet file in the sink's
+    ``part_id=*`` directories — the listing the write, its manifest and
+    the compaction all plan from."""
+    return {
+        f: int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        for f in glob.glob(os.path.join(out_dir, "part_id=*", "*.parquet"))
+    }
 
 
-def _footer_counts(files: set[str]) -> dict[int, int]:
+def sorted_for_write(triples: DataFrame) -> DataFrame:
+    """One shuffle by ``part_id``, each task's rows in ``(subj, pred,
+    obj)`` order.  ``part_id`` leads the sort: a partitioned writer needs
+    its input grouped by it and would otherwise re-sort, losing the
+    triple order."""
+    return triples.repartition("part_id").sortWithinPartitions(
+        "part_id", "subj", "pred", "obj"
+    )
+
+
+def _footer_counts(files: dict[str, int]) -> dict[int, int]:
     """Exact per-bucket row counts from parquet footer metadata only —
     no data pages are read and the triples plan is never re-executed.
     On Iceberg the same numbers come from the snapshot's manifest
@@ -61,8 +77,7 @@ def _footer_counts(files: set[str]) -> dict[int, int]:
     import pyarrow.parquet as pq
 
     counts: dict[int, int] = {}
-    for f in files:
-        pid = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+    for f, pid in files.items():
         counts[pid] = counts.get(pid, 0) + pq.ParquetFile(f).metadata.num_rows
     return counts
 
@@ -86,17 +101,16 @@ def write_triples_with_manifest(
     """
     spark = triples.sparkSession
     t0 = time.time()
-    before = _part_files(out_dir)
+    before = part_files(out_dir)
     (
-        triples.repartition("part_id")
-        # part_id leads: the partitioned writer needs its input grouped
-        # by it and would otherwise re-sort, losing the triple order
-        .sortWithinPartitions("part_id", "subj", "pred", "obj")
+        sorted_for_write(triples)
         .write.mode("append")
         .partitionBy("part_id")
         .parquet(out_dir)
     )
-    counts = _footer_counts(_part_files(out_dir) - before)
+    counts = _footer_counts(
+        {f: p for f, p in part_files(out_dir).items() if f not in before}
+    )
     t1 = time.time()
     rows = [
         (pid, stage, None, None, None, n, t0, t1, "done")

@@ -72,7 +72,7 @@ def _pdf_rows(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    spark = get_spark("oracle_check", cores=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -20,6 +20,7 @@ from deepie_spark.operators.mentions import (
     detect_mentions,
     detect_mentions_single,
     greedy_match,
+    tokenize_arrow,
 )
 from deepie_spark.operators.pairs import mention_pairs
 from deepie_spark.plans.pipeline import (
@@ -80,40 +81,55 @@ def test_greedy_match_longest_wins():
 
 
 def test_arrow_mentions_equals_pandas_twin(spark, pages):
-    """The Arrow-native kernel (mapInArrow + pyarrow.compute split/
-    index_in) must reproduce the pure-Python reference — py_tokenize +
-    greedy_match over the same texts as a pandas frame — exactly, tokens
-    AND mentions, including adversarial texts: empty, whitespace-only,
-    \\x1c-\\x1f separators, unicode spaces, NULL, alias-dense streams."""
-    trie = build_alias_trie()
+    """The Arrow-native kernel must reproduce the pure-Python reference
+    — py_tokenize + greedy_match over the same texts as a pandas frame —
+    exactly: tokens (tokenize_arrow, the kernel's tokenizer) AND
+    mentions (detect_mentions), including adversarial texts: empty,
+    whitespace-only, \\x1c-\\x1f separators, unicode spaces, NULL,
+    alias-dense streams, and overlapping hits where greedy consumption
+    decides the result."""
+    import pyarrow as pa
 
-    def snap(df):
-        return {
-            r["url"]: (r["tokens"], [tuple(m) for m in r["mentions"]])
-            for r in df.collect()
-        }
-
-    def reference(df):
-        out = {}
-        for url, text in df.select("url", "text").toPandas().itertuples(
+    def check(df, trie):
+        urls, texts = zip(*df.select("url", "text").toPandas().itertuples(
             index=False
-        ):
-            toks = py_tokenize(text if text is not None else "")
-            out[url] = (toks, greedy_match(toks, trie))
-        return out
+        ))
+        want = [py_tokenize(t if t is not None else "") for t in texts]
+        flat, offsets = tokenize_arrow(pa.array(texts, pa.string()))
+        assert [
+            flat[a:b].to_pylist() for a, b in zip(offsets[:-1], offsets[1:])
+        ] == want
+        got = {
+            r["url"]: [tuple(m) for m in r["mentions"]]
+            for r in detect_mentions(df, trie).collect()
+        }
+        assert got == {u: greedy_match(t, trie) for u, t in zip(urls, want)}
 
-    assert snap(detect_mentions(pages, include_tokens=True)) == reference(pages)
+    def frame(texts):
+        return spark.createDataFrame(
+            [(f"u{i}", t) for i, t in enumerate(texts)],
+            "url string, text string",
+        )
 
-    weird = [
+    check(pages, build_alias_trie())
+    check(frame([
         "", "   ", "\x1c\x1d", "a\x1cspark b", "café table scan",
         "nbsp spark", "spark", "hash join hash join",
         "  lead trail  ", None, "table scan table scan table",
-    ]
-    wdf = spark.createDataFrame(
-        [(f"u{i}", t) for i, t in enumerate(weird)],
-        "url string, text string",
+    ]), build_alias_trie())
+
+    aliases = ["a b", "b c", "c d", "b c d e", "d", "x", "y", "x y z"]
+    overlap = build_alias_trie(
+        [(i, a, "PER", "NOM", 0.5) for i, a in enumerate(aliases)]
     )
-    assert snap(detect_mentions(wdf, include_tokens=True)) == reference(wdf)
+    check(frame([
+        "a b c",  # `a b` consumes the first token of `b c`
+        "x y z",  # `y` nested inside the longer `x y z`
+        "a b c d",  # chain `a b`, `b c`, `c d`: the middle one is lost
+        "a b c d e",  # the longest hit, `b c d e`, starts inside `a b`
+        "b c d q",  # the walk passes `b c` and fails at `q`
+        "x y q",  # … and `x y z` fails after the terminal `x`
+    ]), overlap)
 
 
 def test_mention_position_is_last_token():

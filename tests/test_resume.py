@@ -243,7 +243,11 @@ def test_iceberg_writeto_spec_matches_fallback_layout(
     layout.  The writeTo branch is driven for real up to the V2 writer
     call chain (recorded via a writeTo stub + a forced availability
     probe); the fallback branch physically writes.  Both must partition
-    by the same column: part_id."""
+    by the same column: part_id.  The writeTo branch also writes the
+    triples in the fallback's order: its DataFrame is sorted by
+    (part_id, subj, pred, obj) within partitions."""
+    import re
+
     from pyspark.sql import SparkSession
 
     from deepie_spark.plans import iceberg_sink
@@ -253,7 +257,8 @@ def test_iceberg_writeto_spec_matches_fallback_layout(
     recorded = {}
 
     class RecWriter:
-        def __init__(self, table):
+        def __init__(self, df, table):
+            recorded["df"] = df
             recorded["table"] = table
             recorded["calls"] = []
 
@@ -272,7 +277,7 @@ def test_iceberg_writeto_spec_matches_fallback_layout(
     # patch the CONCRETE class (pyspark 4 routes classic DataFrames
     # through a subclass whose writeTo overrides the base)
     monkeypatch.setattr(
-        type(triples), "writeTo", lambda self, t: RecWriter(t)
+        type(triples), "writeTo", lambda self, t: RecWriter(self, t)
     )
 
     class FakeReader:
@@ -289,6 +294,12 @@ def test_iceberg_writeto_spec_matches_fallback_layout(
     assert ("using", "iceberg") in recorded["calls"]
     assert recorded["calls"][-1] == ("createOrReplace",)
     (part_cols,) = [c[1] for c in recorded["calls"] if c[0] == "partitionedBy"]
+    plan = recorded["df"]._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(
+        r"Sort \[part_id#\d+ ASC NULLS FIRST, subj#\d+ ASC NULLS FIRST, "
+        r"pred#\d+ ASC NULLS FIRST, obj#\d+ ASC NULLS FIRST\], false",
+        plan,
+    ), plan
 
     # fallback branch: physically writes, directory layout is the spec
     monkeypatch.setattr(iceberg_sink, "iceberg_available", lambda s: False)
