@@ -207,10 +207,10 @@ def detect_mention_pairs(
     The kernel matches the text with the same compiled trie walk
     (operators.mentions.trie_matcher: the token stream coded once, every
     alias length walked in lockstep), whose mentions come out in ``(row,
-    start)`` order, and pairs and labels them in place: a mention is its payload index,
-    so a pair's aliases and types are ``take``s on the catalog's payload
-    and its label one lookup in the label table by the payload's type
-    code.  ``rules`` is RELATION_RULES on the rule pipeline and the
+    start)`` order, and pairs and labels them in place: a mention is its
+    payload index, so a pair's aliases and types are ``take``s on the
+    catalog's payload and its label one lookup in the label table by the
+    payload's type code.  ``rules`` is RELATION_RULES on the rule pipeline and the
     compiled type-pair expert on the model path, as in
     :func:`mention_pairs`.
     """
