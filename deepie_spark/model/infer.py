@@ -1,13 +1,17 @@
-"""Distributed batched model inference (north-star stage 5).
+"""Log-linear inference, the type-pair expert, and triple emission
+(north-star stage 5).
 
+:func:`classify_mentions` runs the sparse log-linear expert (M18) in
 ``mapInPandas`` over the parsed relation-mention DataFrame: weights and
 dictionaries ride a ``SparkContext.broadcast`` handle, deserialized once
 per python worker (iterator form amortizes it across Arrow batches —
-SURVEY.md §2.10), and each batch is classified with the numpy zoo.
-This is the Spark re-expression of ``predict()`` (rnnRE.py:512-562):
-the reference pads corpora to batch multiples and recycles head rows
-(:516-523); Arrow batches need no such padding.  The one-feature
-type-pair expert needs no per-row pass: it is compiled to a rule dict
+SURVEY.md §2.10).  This is the Spark re-expression of ``predict()``
+(rnnRE.py:512-562): the reference pads corpora to batch multiples and
+recycles head rows (:516-523); Arrow batches need no such padding.
+Every neural model runs through ``model.menu`` (``menu_forward`` /
+``classify_mentions_menu``), which shares :data:`PRED_SCHEMA` and
+:func:`triples_from_predictions`.  The one-feature type-pair expert
+needs no per-row pass: it is compiled to a rule dict
 (:func:`compile_type_pair_expert`).
 """
 
@@ -21,21 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepie_spark.datagen.catalog import directed_triple_columns
-from deepie_spark.model.encoder import (
-    binary_feature_rows,
-    encode_batch,
-    encode_dep_record,
-)
-from deepie_spark.model.zoo import (
-    bidirectional,
-    conv_maxpool,
-    embed_concat,
-    head_pool,
-    rnn_gru,
-    softmax,
-    softmax_classifier,
-    sparse_loglinear_logits,
-)
+from deepie_spark.model.encoder import binary_feature_rows
+from deepie_spark.model.zoo import softmax, sparse_loglinear_logits
 
 PRED_SCHEMA = (
     "rel_id string, corpus string, gold string, pred string,"
@@ -109,217 +100,6 @@ def classify_mentions(
         "pos2", "line_no",
     ]
     return mentions.select(cols).mapInPandas(run, PRED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# neural path: M1 embed-concat → M7 multi-window CNN or M4/M5/M10 biGRU-head
-# → M17 softmax, batched per Arrow batch with every table broadcast
-
-#: channels fed to the neural input, in concat order (reference
-#: expected_features1 defaults, evaluate.py:59-83: word + relative
-#: positions + entity type/subtype as embedding channels)
-NEURAL_CHANNELS = ("word", "dist1", "dist2", "type", "subtype")
-
-
-def init_neural_weights(
-    dict_sizes: dict[str, int],
-    num_position: int,
-    word_dim: int = 32,
-    feat_dim: int = 8,
-    hidden: int = 24,
-    windows: tuple[int, ...] = (2, 3),
-    maps: int = 16,
-    n_classes: int = 2,
-    model: str = "convolute",
-    seed: int = 8989,
-) -> dict[str, np.ndarray]:
-    """Seeded random init of every table/filter the forward pass needs.
-
-    Mirrors the reference's init scheme: uniform(-0.25, 0.25) embedding
-    tables with row 0 zeroed as the pad vector
-    (rnn_process_onlyExtra.py:687-733, :567), small-uniform conv/dense
-    weights.  The same dict drives both the distributed path and the
-    golden generator, which is what makes the parity test exact.
-    """
-    rng = np.random.RandomState(seed)
-
-    def table(n, d):
-        t = rng.uniform(-0.25, 0.25, (n, d)).astype(np.float32)
-        t[0] = 0.0
-        return t
-
-    dims = {
-        "word": word_dim, "dist1": feat_dim, "dist2": feat_dim,
-        "type": feat_dim, "subtype": feat_dim,
-    }
-    sizes = {
-        "word": dict_sizes["word"] + 1,
-        "dist1": num_position + 1,
-        "dist2": num_position + 1,
-        "type": dict_sizes["type"] + 1,
-        "subtype": dict_sizes["subtype"] + 1,
-    }
-    w: dict[str, np.ndarray] = {
-        f"T_{ch}": table(sizes[ch], dims[ch]) for ch in NEURAL_CHANNELS
-    }
-    in_dim = sum(dims.values())
-    if model == "convolute":
-        for win in windows:
-            w[f"conv_W{win}"] = rng.uniform(
-                -0.1, 0.1, (maps, win, in_dim)
-            ).astype(np.float32)
-            w[f"conv_b{win}"] = np.zeros(maps, dtype=np.float32)
-        feat_out = maps * len(windows)
-    elif model == "gruHead":
-        def gru_params():
-            return [
-                rng.uniform(-0.1, 0.1, (in_dim, 2 * hidden)).astype(np.float32),
-                np.zeros(2 * hidden, dtype=np.float32),
-                rng.uniform(-0.1, 0.1, (hidden, 2 * hidden)).astype(np.float32),
-                rng.uniform(-0.1, 0.1, (in_dim, hidden)).astype(np.float32),
-                rng.uniform(-0.1, 0.1, (hidden, hidden)).astype(np.float32),
-                np.zeros(hidden, dtype=np.float32),
-            ]
-        for side in ("fwd", "bwd"):
-            for i, p in enumerate(gru_params()):
-                w[f"gru_{side}_{i}"] = p
-        feat_out = 4 * hidden  # biGRU(2h) × two heads
-    else:
-        raise ValueError(f"unknown neural model {model!r}")
-    w["cls_W"] = rng.uniform(-0.1, 0.1, (feat_out, n_classes)).astype(
-        np.float32
-    )
-    w["cls_b"] = np.zeros(n_classes, dtype=np.float32)
-    w["_model"] = np.array(model)
-    w["_windows"] = np.array(windows)
-    return w
-
-
-def neural_forward(
-    records: list[dict],
-    dicts: dict[str, dict[str, int]],
-    weights: dict[str, np.ndarray],
-    m_len: int,
-    num_position: int,
-    seq: str = "surface",
-) -> tuple[np.ndarray, np.ndarray]:
-    """Shared forward pass (driver golden AND executor UDF run this):
-    encode → M1 embed-concat → M7 conv-pool or M5+M10 biGRU-head → M17.
-    ``seq`` is the reference's sequence-rep dispatch (F3,
-    generateDataInstance rnnRE.py:374-387): ``surface`` encodes the
-    sentence (F1), ``dep`` the dependency path (F2, head positions at
-    the path ends).  Returns (pred ids, probability matrix)."""
-    if seq == "surface":
-        enc = encode_batch(records, dicts, m_len, num_position)
-        pos1 = np.array([r["pos1"] for r in records])
-        pos2 = np.array([r["pos2"] for r in records])
-    elif seq == "dep":
-        encs = [
-            encode_dep_record(r, dicts, m_len, num_position)
-            for r in records
-        ]
-        enc = {k: np.stack([e[k] for e in encs]) for k in encs[0]}
-        pos1 = np.zeros(len(records), dtype=np.int64)
-        pos2 = np.array(
-            [len(r["dep_tokens"]) - 1 for r in records], dtype=np.int64
-        )
-    else:
-        raise ValueError(f"unknown sequence rep {seq!r}")
-    x = embed_concat(
-        [enc[ch] for ch in NEURAL_CHANNELS],
-        [weights[f"T_{ch}"] for ch in NEURAL_CHANNELS],
-    )
-    model = str(weights["_model"])
-    if model == "convolute":
-        feats = np.concatenate(
-            [
-                conv_maxpool(
-                    x, weights[f"conv_W{w}"], weights[f"conv_b{w}"]
-                )
-                for w in weights["_windows"].tolist()
-            ],
-            axis=1,
-        )
-    else:
-        fwd = [weights[f"gru_fwd_{i}"] for i in range(6)]
-        bwd = [weights[f"gru_bwd_{i}"] for i in range(6)]
-        h = bidirectional(x, tuple(fwd), tuple(bwd), cell=rnn_gru)
-        feats = head_pool(h, pos1, pos2)
-    p = softmax_classifier(feats, weights["cls_W"], weights["cls_b"])
-    return p.argmax(axis=1), p
-
-
-_NEURAL_COLS = [
-    "rel_id", "corpus", "label", "tokens", "governors", "cons1", "cons2",
-    "preter", "prepreter", "dep_idx", "dep_tokens", "grammar", "type1",
-    "subtype1", "type2", "subtype2", "pos1", "pos2", "line_no",
-]
-
-
-def classify_mentions_neural(
-    mentions: DataFrame,
-    weights: dict[str, np.ndarray],
-    dicts: dict[str, dict[str, int]],
-    label_names: list[str],
-    m_len: int,
-    num_position: int,
-    seq: str = "surface",
-) -> DataFrame:
-    """North-star stage 5, neural flavor: the full embed→CNN/biGRU→
-    softmax forward pass runs batched inside ``mapInPandas``; weight
-    tables and dictionaries ride one broadcast, deserialized once per
-    worker.  The Spark re-expression of ``predict()`` (rnnRE.py:512-562)
-    with real model semantics (M1+M7 / M4+M5+M10 + M17 + M20)."""
-    spark = mentions.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {"w": weights, "dicts": dicts, "labels": label_names,
-         "m_len": m_len, "num_position": num_position, "seq": seq}
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = bc.value
-        labels = v["labels"]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            records = [
-                {
-                    "tokens": list(r.tokens),
-                    "governors": list(r.governors),
-                    "cons1": list(r.cons1),
-                    "cons2": list(r.cons2),
-                    "preter": list(r.preter),
-                    "prepreter": list(r.prepreter),
-                    "dep_idx": list(r.dep_idx),
-                    "dep_tokens": list(r.dep_tokens),
-                    "grammar": [list(g) for g in r.grammar],
-                    "type1": r.type1, "subtype1": r.subtype1,
-                    "type2": r.type2, "subtype2": r.subtype2,
-                    "pos1": int(r.pos1), "pos2": int(r.pos2),
-                }
-                for r in pdf.itertuples()
-            ]
-            pred_ids, p = neural_forward(
-                records, v["dicts"], v["w"], v["m_len"],
-                v["num_position"], v["seq"],
-            )
-            probs = p[np.arange(len(pred_ids)), pred_ids]
-            yield pd.DataFrame(
-                {
-                    "rel_id": pdf["rel_id"],
-                    "corpus": pdf["corpus"],
-                    "gold": pdf["label"],
-                    "pred": [labels[i] for i in pred_ids],
-                    "prob": probs.astype(float),
-                    "pos1": pdf["pos1"],
-                    "pos2": pdf["pos2"],
-                    "subj": [r["tokens"][r["pos1"]] for r in records],
-                    "obj": [r["tokens"][r["pos2"]] for r in records],
-                    "line_no": pdf["line_no"],
-                }
-            )
-
-    return mentions.select(_NEURAL_COLS).mapInPandas(run, PRED_SCHEMA)
 
 
 def compile_type_pair_expert(

@@ -15,6 +15,10 @@ on the driver (``make_spec``), a flat numpy weight dict
 (``init_menu_weights``), and one batched forward (``menu_forward``) that
 runs identically on the driver (golden) and inside ``mapInPandas``
 (``classify_mentions_menu``) — the parity contract of the engine.
+``_COMPONENTS`` is the engine's one table from model name to graph, and
+``menu_forward`` its one neural forward: ``model.train_neural`` trains
+the weights of a ``convolute`` or ``rnnHead`` spec in place, and the
+same spec and weights run here at inference.
 
 Channel families:
 
@@ -50,6 +54,7 @@ from deepie_spark.model.encoder import (
     encode_dep_record,
     one_hot_channel,
 )
+from deepie_spark.model.infer import PRED_SCHEMA
 from deepie_spark.model.zoo import (
     bidirectional,
     bidirectional_outer,
@@ -267,7 +272,9 @@ def _fam_num_position(spec: dict, f: dict) -> int:
     )
 
 
-def _fam_widths(spec: dict, f: dict) -> dict[str, int]:
+def family_widths(spec: dict, f: dict) -> dict[str, int]:
+    """Mode-1 widths of a family's channels; the dist widths follow its
+    sequence rep."""
     w = dict(spec["widths"])
     np_ = _fam_num_position(spec, f)
     w["dist1"] = np_
@@ -279,7 +286,7 @@ def family_in_dim(spec: dict, f: dict) -> int:
     """dimIn of a channel family (rnnReModels.py:583-605); under
     ``outer`` the rep is word ⊗ rest, so dimIn becomes
     (dimIn − d_word) · d_word (rnnReModels.py:605-614)."""
-    widths = _fam_widths(spec, f)
+    widths = family_widths(spec, f)
     dim = 0
     for ch in CHANNELS:
         m = f["modes"].get(ch, -1)
@@ -547,7 +554,7 @@ def _family_x(
     rnnReModels.py:140-162; same channel order — the reference's
     features OrderedDict minus 'word')."""
     fam = f["fam"]
-    widths = _fam_widths(spec, f)
+    widths = family_widths(spec, f)
     outer = bool(spec.get("outer"))
     xs, wb = [], None
     for ch in CHANNELS:
@@ -796,12 +803,6 @@ def menu_forward(
 
 # ---------------------------------------------------------------------------
 # distributed wrapper
-
-PRED_SCHEMA = (
-    "rel_id string, corpus string, gold string, pred string,"
-    " prob double, pos1 int, pos2 int, subj string, obj string,"
-    " line_no long"
-)
 
 _MENU_COLS = [
     "rel_id", "corpus", "label", "tokens", "governors", "cons1", "cons2",

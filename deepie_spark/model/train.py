@@ -15,9 +15,51 @@ numpy path, which is what makes the triple P/R gate exact.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 
 from deepie_spark.model.zoo import softmax, sparse_loglinear_logits
+
+
+def _sgd_epochs(
+    bin_rows: np.ndarray,
+    labels: np.ndarray,
+    n_classes: int,
+    n_features: int,
+    epochs: int,
+    lr: float,
+    batch: int,
+    seed: int,
+    l2: float,
+) -> Iterator[dict[str, np.ndarray]]:
+    """Seeded minibatch SGD on mean NLL.  Yields the ``{"W", "b"}``
+    weight dict at init and again after every epoch; each epoch updates
+    it in place."""
+    rng = np.random.RandomState(seed)
+    w = {
+        "W": 0.01 * rng.randn(n_features, n_classes),
+        "b": np.zeros(n_classes),
+    }
+    W, b = w["W"], w["b"]
+    yield w
+    n = len(labels)
+    for _ in range(epochs):
+        perm = rng.permutation(n)
+        for s in range(0, n, batch):
+            idx = perm[s : s + batch]
+            rows = bin_rows[idx]
+            y = labels[idx]
+            p = softmax(sparse_loglinear_logits(rows, W, b), axis=1)
+            p[np.arange(len(y)), y] -= 1.0
+            p /= len(y)
+            b -= lr * p.sum(axis=0)
+            for r, g in zip(rows, p):
+                k = int(r[0])
+                if k > 0:
+                    ids = r[1 : k + 1]
+                    W[ids] -= lr * (g + l2 * W[ids])
+        yield w
 
 
 def train_loglinear(
@@ -32,27 +74,10 @@ def train_loglinear(
     l2: float = 1e-4,
 ) -> dict[str, np.ndarray]:
     """bin_rows: (n, 1+maxlen) [count, ids…, -1]; labels: (n,) ids."""
-    rng = np.random.RandomState(seed)
-    W = 0.01 * rng.randn(n_features, n_classes)
-    b = np.zeros(n_classes)
-    n = len(labels)
-    for _ in range(epochs):
-        perm = rng.permutation(n)
-        for s in range(0, n, batch):
-            idx = perm[s : s + batch]
-            rows = bin_rows[idx]
-            y = labels[idx]
-            logits = sparse_loglinear_logits(rows, W, b)
-            p = softmax(logits, axis=1)
-            p[np.arange(len(y)), y] -= 1.0
-            p /= len(y)
-            b -= lr * p.sum(axis=0)
-            for r, g in zip(rows, p):
-                k = int(r[0])
-                if k > 0:
-                    ids = r[1 : k + 1]
-                    W[ids] -= lr * (g + l2 * W[ids])
-    return {"W": W, "b": b}
+    *_, w = _sgd_epochs(
+        bin_rows, labels, n_classes, n_features, epochs, lr, batch, seed, l2
+    )
+    return w
 
 
 def predict_loglinear(
@@ -81,36 +106,22 @@ def train_loglinear_best_epoch(
     """A9 model selection: per-epoch validation scoring, snapshot the
     weights of the best-valid-F1 epoch (reference epoch loop
     rnnRE.py:904,970-994).  Returns (best weights, per-epoch history)."""
-    rng = np.random.RandomState(seed)
-    W = 0.01 * rng.randn(n_features, n_classes)
-    b = np.zeros(n_classes)
-    n = len(labels)
-    best = {"W": W.copy(), "b": b.copy()}
+    it = _sgd_epochs(
+        bin_rows, labels, n_classes, n_features, epochs, lr, batch, seed, l2
+    )
+    w = next(it)
+    best = {"W": w["W"].copy(), "b": w["b"].copy()}
     best_f1 = -1.0
     history = []
-    for epoch in range(epochs):
-        perm = rng.permutation(n)
-        for s in range(0, n, batch):
-            idx = perm[s : s + batch]
-            rows = bin_rows[idx]
-            y = labels[idx]
-            p = softmax(sparse_loglinear_logits(rows, W, b), axis=1)
-            p[np.arange(len(y)), y] -= 1.0
-            p /= len(y)
-            b -= lr * p.sum(axis=0)
-            for r, g in zip(rows, p):
-                k = int(r[0])
-                if k > 0:
-                    ids = r[1 : k + 1]
-                    W[ids] -= lr * (g + l2 * W[ids])
-        vpred, _ = predict_loglinear(valid_rows, {"W": W, "b": b})
+    for epoch, w in enumerate(it):
+        vpred, _ = predict_loglinear(valid_rows, w)
         vp, vr, vf1 = score_py(vpred, valid_labels)
         history.append(
             {"epoch": epoch, "valid_p": vp, "valid_r": vr, "valid_f1": vf1}
         )
         if vf1 > best_f1:
             best_f1 = vf1
-            best = {"W": W.copy(), "b": b.copy()}
+            best = {"W": w["W"].copy(), "b": w["b"].copy()}
     return best, history
 
 

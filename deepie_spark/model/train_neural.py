@@ -1,4 +1,4 @@
-"""Driver-side neural training (M21) for the flagship models.
+"""Driver-side neural training (M21) of model-menu weights.
 
 The reference trains every model with Theano autodiff + ``adadelta``
 (rnnReModels.py:38-57), per-column max-norm projection of the *updated*
@@ -8,48 +8,83 @@ gradient clipping), and an embedding pad-row reset after every update
 (``setZero`` :715-723).  Loss is mean NLL (``buildFunctions`` :676-682).
 
 Here the gradients are hand-derived numpy backprop for the two flagship
-forward graphs of ``model.infer.neural_forward`` — ``convolute``
-(embed-concat → multi-window valid conv + tanh + max-pool → softmax) and
-``gruHead`` (embed-concat → biGRU → head-pool → softmax) — verified
-against numerical gradients in tests, and the optimizer reproduces the
-reference's adadelta/max-norm/pad-reset semantics exactly.  Training is
-a one-time driver-side step (SURVEY.md §2.6): the produced weights are
-broadcast to executors by ``classify_mentions_neural``; gradient descent
-itself has no distributed leg (at 10^12 documents the *inference* is the
-scaled stage, the classifier fits on one box).
+graphs of ``model.menu`` — one ``f1`` family of ``convolute``
+(embed-concat → multi-window valid conv + tanh + max-pool → softmax) or
+``rnnHead`` (embed-concat → biGRU → head-pool → softmax) on the surface
+sequence, with no MLP and no ``outer`` — verified against numerical
+gradients in tests, and the optimizer reproduces the reference's
+adadelta/max-norm/pad-reset semantics exactly.  The trainer reads and
+updates the same spec and weight dict (``make_spec`` /
+``init_menu_weights``) that ``menu_forward`` runs, so the trained
+weights go straight to ``classify_mentions_menu``.  Training is a
+one-time driver-side step (SURVEY.md §2.6): gradient descent itself has
+no distributed leg (at 10^12 documents the *inference* is the scaled
+stage, the classifier fits on one box).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from deepie_spark.model.encoder import encode_batch
-from deepie_spark.model.infer import NEURAL_CHANNELS
+from deepie_spark.model.encoder import encode_batch, one_hot_channel
+from deepie_spark.model.menu import CHANNELS, family_widths
 from deepie_spark.model.zoo import sigmoid, softmax
 
 # ---------------------------------------------------------------------------
-# forward passes with caches (mirrors model.infer.neural_forward exactly;
-# parity with the inference path is asserted in tests)
+# forward passes with caches (the menu_forward graph in float64; parity
+# with it is asserted in tests)
 
 
-def _embed_forward(records, dicts, weights, m_len, num_position):
-    enc = encode_batch(records, dicts, m_len, num_position)
-    ids = {ch: enc[ch] for ch in NEURAL_CHANNELS}
-    x = np.concatenate(
-        [weights[f"T_{ch}"][ids[ch]] for ch in NEURAL_CHANNELS], axis=2
-    )
-    return x.astype(np.float32), ids, enc
-
-
-def _embed_backward(dx, ids, weights, grads):
-    off = 0
-    for ch in NEURAL_CHANNELS:
-        dim = weights[f"T_{ch}"].shape[1]
-        g = grads.setdefault(
-            f"T_{ch}", np.zeros_like(weights[f"T_{ch}"], dtype=np.float64)
+def _trained_family(spec: dict) -> dict:
+    """The spec's one trainable family; ``ValueError`` for any other
+    spec."""
+    fams = spec["families"]
+    if (
+        spec["kind"] != "main"
+        or len(fams) != 1
+        or fams[0]["component"] not in ("convolute", "rnnHead")
+        or fams[0]["seq"] != "surface"
+        or spec["multilayer1"]
+        or spec["outer"]
+    ):
+        raise ValueError(
+            f"cannot train {spec['model']!r}: training covers one f1"
+            " family of convolute or rnnHead on surface, with no MLP and"
+            " no outer"
         )
-        np.add.at(g, ids[ch], dx[:, :, off : off + dim])
-        off += dim
+    return fams[0]
+
+
+def _embed_forward(enc, weights, spec, f):
+    """The family's input rep (menu ``_family_x``) in float64, plus the
+    ``(table, ids, offset)`` slots of its embedding channels."""
+    fam = f["fam"]
+    widths = family_widths(spec, f)
+    parts, slots, off = [], [], 0
+    for ch in CHANNELS:
+        m = f["modes"].get(ch, -1)
+        if m < 0:
+            continue
+        if m == 0:
+            key = f"{fam}_T_word" if ch in ("word", "gov") else f"{fam}_T_{ch}"
+            part = weights[key][enc[ch]]
+            slots.append((key, enc[ch], off))
+        elif ch == "grammar":
+            part = enc["grammar"]
+        else:
+            part = one_hot_channel(enc[ch], widths[ch])
+        parts.append(part.astype(np.float64))
+        off += part.shape[2]
+    return np.concatenate(parts, axis=2), slots
+
+
+def _embed_backward(dx, slots, weights, grads):
+    for key, ids, off in slots:
+        g = grads.setdefault(
+            key, np.zeros_like(weights[key], dtype=np.float64)
+        )
+        dim = g.shape[1]
+        np.add.at(g, ids, dx[:, :, off : off + dim])
 
 
 def _conv_forward(x, W, b):
@@ -144,45 +179,48 @@ def _gru_backward(dh, x, params, caches):
 
 
 def forward_backward(
-    records, dicts, weights, labels, m_len, num_position,
-    dropout: float = 0.0, drop_rng=None, dropout_mask=None,
+    records, dicts, weights, spec, labels, drop_rng=None, dropout_mask=None,
 ):
-    """Mean-NLL loss + full gradient dict for convolute / gruHead.
+    """Mean-NLL loss + full gradient dict for a ``convolute`` or
+    ``rnnHead`` menu spec (``ValueError`` for any other spec).
 
-    Returns (loss, grads, p) — with ``dropout == 0`` p is the same
-    probability matrix ``neural_forward`` produces (parity asserted in
+    Returns (loss, grads, p) — with ``spec["dropout"] == 0`` p is the
+    probability matrix ``menu_forward`` produces (parity asserted in
     tests).
 
-    ``dropout > 0`` reproduces the reference's training path
+    ``spec["dropout"] > 0`` reproduces the reference's training path
     (mainModel rnnReModels.py:729-770): a binomial keep-mask
     (``_dropout_from_layer`` :89-99, keep prob 1−p) is applied to the
     POOLED representation, the train softmax and the NLL run on the
     masked branch (buildFunctions :675-685), and gradients flow only
     through it.  The clean inference branch scales the classifier
-    weights by (1−p) instead (:768; menu.py applies the same scaling
-    at inference).  ``dropout_mask`` pins the mask (for gradcheck);
-    otherwise it is drawn from ``drop_rng``."""
-    model = str(weights["_model"])
-    x, ids, _enc = _embed_forward(
-        records, dicts, weights, m_len, num_position
-    )
-    x64 = x.astype(np.float64)
+    weights by (1−p) instead (:768), which ``menu_forward`` does from
+    the same ``spec["dropout"]``.  ``dropout_mask`` pins the mask (for
+    gradcheck); otherwise it is drawn from ``drop_rng``."""
+    f = _trained_family(spec)
+    fam = f["fam"]
+    enc = encode_batch(records, dicts, spec["m_len"], spec["num_position"])
+    x64, slots = _embed_forward(enc, weights, spec, f)
     B = len(records)
     grads: dict[str, np.ndarray] = {}
-    if model == "convolute":
+    if f["component"] == "convolute":
         caches = {}
         feats_parts = []
-        for win in weights["_windows"].tolist():
+        for win in spec["windows"]:
             pooled, cache = _conv_forward(
-                x64, weights[f"conv_W{win}"].astype(np.float64),
-                weights[f"conv_b{win}"].astype(np.float64),
+                x64, weights[f"{fam}_pconv_W{win}"].astype(np.float64),
+                weights[f"{fam}_pconv_b{win}"].astype(np.float64),
             )
             caches[win] = cache
             feats_parts.append(pooled)
         feats = np.concatenate(feats_parts, axis=1)
-    elif model == "gruHead":
-        fwd = [weights[f"gru_fwd_{i}"].astype(np.float64) for i in range(6)]
-        bwd = [weights[f"gru_bwd_{i}"].astype(np.float64) for i in range(6)]
+    else:
+        fwd = [
+            weights[f"{fam}_gru_fwd_{i}"].astype(np.float64) for i in range(6)
+        ]
+        bwd = [
+            weights[f"{fam}_gru_bwd_{i}"].astype(np.float64) for i in range(6)
+        ]
         h_f, cache_f = _gru_forward(x64, fwd)
         h_b_rev, cache_b = _gru_forward(x64[:, ::-1], bwd)
         h_b = h_b_rev[:, ::-1]
@@ -191,19 +229,17 @@ def forward_backward(
         pos2 = np.array([r["pos2"] for r in records])
         bi = np.arange(B)
         feats = np.concatenate([h[bi, pos1], h[bi, pos2]], axis=1)
-    else:
-        raise ValueError(f"training not implemented for {model!r}")
 
     mask = None
-    if dropout > 0.0:
-        if dropout_mask is not None:
-            mask = np.asarray(dropout_mask, dtype=np.float64)
-        else:
-            if drop_rng is None:
-                raise ValueError("dropout > 0 needs drop_rng or a mask")
-            mask = drop_rng.binomial(
-                1, 1.0 - dropout, size=feats.shape
-            ).astype(np.float64)
+    if dropout_mask is not None:
+        mask = np.asarray(dropout_mask, dtype=np.float64)
+    elif spec["dropout"] > 0.0:
+        if drop_rng is None:
+            raise ValueError("dropout > 0 needs drop_rng or a mask")
+        mask = drop_rng.binomial(
+            1, 1.0 - spec["dropout"], size=feats.shape
+        ).astype(np.float64)
+    if mask is not None:
         feats = feats * mask
 
     W = weights["cls_W"].astype(np.float64)
@@ -221,16 +257,16 @@ def forward_backward(
     if mask is not None:
         dfeats = dfeats * mask  # dropped units carry no gradient
 
-    if model == "convolute":
+    if f["component"] == "convolute":
         dx = np.zeros_like(x64)
         off = 0
-        for win in weights["_windows"].tolist():
-            maps = weights[f"conv_W{win}"].shape[0]
+        for win in spec["windows"]:
+            maps = weights[f"{fam}_pconv_W{win}"].shape[0]
             dW, db, dxw = _conv_backward(
                 dfeats[:, off : off + maps], caches[win], x64.shape
             )
-            grads[f"conv_W{win}"] = dW
-            grads[f"conv_b{win}"] = db
+            grads[f"{fam}_pconv_W{win}"] = dW
+            grads[f"{fam}_pconv_b{win}"] = db
             dx += dxw
             off += maps
     else:
@@ -246,11 +282,11 @@ def forward_backward(
         )
         dx = dx_f + dx_b_rev[:, ::-1]
         for i, g in enumerate(g_f):
-            grads[f"gru_fwd_{i}"] = g
+            grads[f"{fam}_gru_fwd_{i}"] = g
         for i, g in enumerate(g_b):
-            grads[f"gru_bwd_{i}"] = g
+            grads[f"{fam}_gru_bwd_{i}"] = g
 
-    _embed_backward(dx, ids, weights, grads)
+    _embed_backward(dx, slots, weights, grads)
     return loss, grads, p
 
 
@@ -265,8 +301,21 @@ def adadelta_state(weights) -> dict:
             "u2": np.zeros_like(v, dtype=np.float64),
         }
         for k, v in weights.items()
-        if not k.startswith("_")
     }
+
+
+def _store(w: np.ndarray, name: str, new: np.ndarray, norm_lim: float):
+    """Write an updated parameter back in place: the reference's
+    post-update column max-norm (clipGradient rnnReModels.py:74-85, 2-D
+    params other than the word table) and the embedding pad-row reset
+    (setZero :715-723)."""
+    if norm_lim > 0 and new.ndim == 2 and not name.endswith("_T_word"):
+        col = np.sqrt((new ** 2).sum(axis=0))
+        desired = np.clip(col, 0, np.sqrt(norm_lim))
+        new = new * (desired / (1e-7 + col))
+    w[...] = new.astype(w.dtype)
+    if "_T_" in name:
+        w[0] = 0.0  # pad row stays the zero vector
 
 
 def adadelta_step(
@@ -277,29 +326,15 @@ def adadelta_step(
     eps: float = 1e-6,
     norm_lim: float = 9.0,
 ) -> None:
-    """One in-place adadelta update (rnnReModels.py:38-57) with the
-    reference's post-update column max-norm (:74-85: applied to the
-    UPDATED 2-D params, skipping word tables / 'multi' layers) and the
-    embedding pad-row reset (:715-723)."""
+    """One in-place adadelta update (rnnReModels.py:38-57), then
+    :func:`_store`'s max-norm and pad-row reset."""
     for name, g in grads.items():
-        w = weights[name]
         st = state[name]
         st["g2"] = rho * st["g2"] + (1.0 - rho) * g * g
         ud = -np.sqrt(st["u2"] + eps) / np.sqrt(st["g2"] + eps) * g
         st["u2"] = rho * st["u2"] + (1.0 - rho) * ud * ud
-        new = w.astype(np.float64) + ud
-        if (
-            norm_lim > 0
-            and new.ndim == 2
-            and not name.startswith("T_word")
-            and "multi" not in name
-        ):
-            col = np.sqrt((new ** 2).sum(axis=0))
-            desired = np.clip(col, 0, np.sqrt(norm_lim))
-            new = new * (desired / (1e-7 + col))
-        w[...] = new.astype(w.dtype)
-        if name.startswith("T_"):
-            w[0] = 0.0  # pad row stays the zero vector
+        w = weights[name]
+        _store(w, name, w.astype(np.float64) + ud, norm_lim)
 
 
 def sgd_step(
@@ -309,48 +344,35 @@ def sgd_step(
     norm_lim: float = 9.0,
 ) -> None:
     """One in-place SGD update (sgd rnnReModels.py:58-71): p −= lr·g,
-    then the same post-update column max-norm and pad-row reset as
-    adadelta (clipGradient :74-85, setZero :715-723)."""
+    then :func:`_store`'s max-norm and pad-row reset."""
     for name, g in grads.items():
         w = weights[name]
-        new = w.astype(np.float64) - lr * g
-        if (
-            norm_lim > 0
-            and new.ndim == 2
-            and not name.startswith("T_word")
-            and "multi" not in name
-        ):
-            col = np.sqrt((new ** 2).sum(axis=0))
-            desired = np.clip(col, 0, np.sqrt(norm_lim))
-            new = new * (desired / (1e-7 + col))
-        w[...] = new.astype(w.dtype)
-        if name.startswith("T_"):
-            w[0] = 0.0
+        _store(w, name, w.astype(np.float64) - lr * g, norm_lim)
 
 
 def train_neural(
     records: list[dict],
     dicts: dict[str, dict[str, int]],
     weights: dict[str, np.ndarray],
+    spec: dict,
     labels: np.ndarray,
-    m_len: int,
-    num_position: int,
     epochs: int = 30,
     batch: int = 50,
     norm_lim: float = 9.0,
     seed: int = 3435,
-    dropout: float = 0.0,
     optimizer: str = "adadelta",
     lr: float = 0.01,
     decay: bool = False,
 ) -> list[float]:
-    """Mini-batch training in place; returns per-epoch mean loss.
+    """Mini-batch training of ``spec``'s menu weights in place; returns
+    per-epoch mean loss.  ``ValueError`` for a spec
+    :func:`forward_backward` cannot train.
 
     Batch size 50 and the seeded shuffle mirror the reference protocol
-    (evaluate.py:111, rnnRE.py:855-866).  ``dropout`` applies the
-    reference's binomial keep-mask to the pooled representation during
-    training (default 0.5 in the reference, evaluate.py:107; the
-    inference path compensates with (1−p) weight scaling).  The mask
+    (evaluate.py:111, rnnRE.py:855-866).  ``spec["dropout"]`` applies
+    the reference's binomial keep-mask to the pooled representation
+    during training (default 0.5 in the reference, evaluate.py:107;
+    ``menu_forward`` compensates with (1−p) weight scaling).  The mask
     RNG is seeded like the reference's (RandomState(3435) →
     srng seeded randint(999999), rnnReModels.py:89-90,533).
 
@@ -363,6 +385,7 @@ def train_neural(
     here: decay bookkeeping runs but does not alter adadelta steps.
     Best epoch = lowest training loss so far (this driver-side trainer
     has no held-out fold; the reference tracks best valid F1)."""
+    _trained_family(spec)
     rng = np.random.RandomState(seed)
     drop_rng = np.random.RandomState(
         np.random.RandomState(seed).randint(999999)
@@ -379,8 +402,7 @@ def train_neural(
             idx = perm[s : s + batch]
             recs = [records[i] for i in idx]
             loss, grads, _ = forward_backward(
-                recs, dicts, weights, labels[idx], m_len, num_position,
-                dropout=dropout, drop_rng=drop_rng,
+                recs, dicts, weights, spec, labels[idx], drop_rng=drop_rng,
             )
             if optimizer == "sgd":
                 sgd_step(weights, grads, clr, norm_lim=norm_lim)

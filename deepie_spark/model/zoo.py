@@ -1,9 +1,12 @@
-"""Numpy forward-pass model zoo (reference operators M1–M20).
+"""Numpy forward-pass building blocks (reference operators M1–M18).
 
 The reference compiles these as Theano graph ops (rnnReModels.py); in the
-Spark engine they run as batched numpy inside Arrow UDFs
-(deepie_spark.model.infer) with weights broadcast — inference only
-(training is a one-time driver-side step, SURVEY.md §2.6 M21).
+Spark engine they run as batched numpy inside Arrow UDFs with weights
+broadcast.  ``model.menu`` composes them into every model of the
+reference's menu (its ``_COMPONENTS`` table is the one name → graph
+dispatch), and ``model.infer`` runs the sparse log-linear expert.
+Training is a one-time driver-side step (``model.train_neural``,
+SURVEY.md §2.6 M21).
 
 Every function is a *new* numpy implementation of the cited semantics;
 shapes follow the engine convention (batch, time, dim) throughout (the
@@ -168,34 +171,12 @@ def conv_maxpool(
     return out.max(axis=1)
 
 
-def multi_window_conv(
-    x: np.ndarray, filters: list[tuple[np.ndarray, np.ndarray]], pool: bool
-) -> np.ndarray:
-    """convContext / convContextLs (rnnReModels.py:431-441,478-489):
-    concat over window sizes; pooled → (b, sum maps), else (b,t,sum)."""
-    fn = conv_maxpool if pool else conv_same_tanh
-    outs = [fn(x, W, b_) for W, b_ in filters]
-    return np.concatenate(outs, axis=-1)
-
-
 # ---------------------------------------------------------------------------
-# M8/M9 — MLP, dropout scaling
+# M8 — MLP layer
 
 def hidden_layer(x: np.ndarray, W: np.ndarray, b_: np.ndarray) -> np.ndarray:
     """M8: sigmoid dense layer (HiddenLayer rnnReModels.py:493-505)."""
     return sigmoid(x @ W + b_)
-
-
-def mlp(x: np.ndarray, layers: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
-    for W, b_ in layers:
-        x = hidden_layer(x, W, b_)
-    return x
-
-
-def dropout_scale(W: np.ndarray, p: float) -> np.ndarray:
-    """M9 inference path: inverted-dropout weight scaling (1-p)·W
-    (rnnReModels.py:768,1075).  No RNG at inference."""
-    return (1.0 - p) * W
 
 
 # ---------------------------------------------------------------------------
@@ -269,14 +250,7 @@ def dynamic_pool3(
 
 
 # ---------------------------------------------------------------------------
-# M17–M20 — classifiers / decoding
-
-def softmax_classifier(
-    feats: np.ndarray, W: np.ndarray, b_: np.ndarray
-) -> np.ndarray:
-    """M17: p(y|x) = softmax(f·W + b) (mainModel rnnReModels.py:729-770)."""
-    return softmax(feats @ W + b_)
-
+# M18 — sparse log-linear logits
 
 def sparse_loglinear_logits(
     bin_rows: np.ndarray, W: np.ndarray, b_: np.ndarray
@@ -290,84 +264,3 @@ def sparse_loglinear_logits(
         if k > 0:
             out[i] += W[row[1 : k + 1]].sum(axis=0)
     return out
-
-
-def product_of_experts(*logits: np.ndarray) -> np.ndarray:
-    """M19: p ∝ exp(sum of expert logits), renormalized (hybridModel
-    rnnReModels.py:1049-1146)."""
-    return softmax(np.sum(logits, axis=0), axis=-1)
-
-
-def argmax_decode(p: np.ndarray) -> np.ndarray:
-    """M20: y_pred = argmax(p_y_given_x) (rnnReModels.py:687)."""
-    return p.argmax(axis=-1)
-
-
-# ---------------------------------------------------------------------------
-# M16 — CNN→RNN / RNN→CNN stacks
-
-def alternate_head(
-    x: np.ndarray,
-    conv_filters: list[tuple[np.ndarray, np.ndarray]],
-    gru_fwd: tuple,
-    gru_bwd: tuple,
-    pos1: np.ndarray,
-    pos2: np.ndarray,
-) -> np.ndarray:
-    """M16 'alternateHead' shape: same-length conv → biGRU → head pool
-    (rnnReModels.py:1148-1215)."""
-    h = multi_window_conv(x, conv_filters, pool=False)
-    h = bidirectional(h, gru_fwd, gru_bwd, cell=rnn_gru)
-    return head_pool(h, pos1, pos2)
-
-
-def alternate_max(
-    x: np.ndarray,
-    conv_filters: list[tuple[np.ndarray, np.ndarray]],
-    gru_fwd: tuple,
-    gru_bwd: tuple,
-) -> np.ndarray:
-    """M16 'alternateMax': conv → biGRU → max-over-time
-    (rnnReModels.py:1217-1277)."""
-    h = multi_window_conv(x, conv_filters, pool=False)
-    h = bidirectional(h, gru_fwd, gru_bwd, cell=rnn_gru)
-    return max_pool(h)
-
-
-def alternate_conv(
-    x: np.ndarray,
-    gru_fwd: tuple,
-    gru_bwd: tuple,
-    conv_filters: list[tuple[np.ndarray, np.ndarray]],
-) -> np.ndarray:
-    """M16 'alternateConv': biGRU → conv + max-pool-over-time
-    (rnnReModels.py:1279-1313)."""
-    h = bidirectional(x, gru_fwd, gru_bwd, cell=rnn_gru)
-    return multi_window_conv(h, conv_filters, pool=True)
-
-
-#: §2.10 string-driven dispatch — the engine's answer to the reference's
-#: ``eval(model_name)`` menu (rnnRE.py:874-885, evaluate.py:56): pooling
-#: heads and stacks addressable by reference name.
-MODEL_REGISTRY = {
-    "rnnHeadIn": head_pool,
-    "rnnMaxIn": max_pool,
-    "rnnSum": mean_pool,
-    "rnnSumDep": masked_sum_pool,
-    "rnnAtt": attention_pool,
-    "dynamicPooling": dynamic_pool3,
-    "alternateHead": alternate_head,
-    "alternateMax": alternate_max,
-    "alternateConv": alternate_conv,
-    "convolute": conv_maxpool,
-    "mainModel": softmax_classifier,
-    "MultiNN": sparse_loglinear_logits,
-    "hybridModel": product_of_experts,
-}
-
-
-def resolve_model(name: str):
-    """Named lookup with the reference's fail-fast semantics."""
-    if name not in MODEL_REGISTRY:
-        raise KeyError(f"unknown model: {name!r}")
-    return MODEL_REGISTRY[name]

@@ -258,6 +258,58 @@ def boilerplate_stats(
     )
 
 
+def _binned_counts(
+    df: DataFrame, group_col: str, value_col: str, n_bins: int, width: int
+) -> DataFrame:
+    """The fixed-width bin counts :func:`psi_drift` and
+    :func:`hellinger_drift` share: one row per group with its bin
+    counts ``a0..a{n_bins-1}``, the corpus-wide counts ``t0..``, and the
+    group and rest totals ``n_a``/``n_b`` — all exact longs.
+
+    ``bin = min(n_bins−1, value div width)`` by integer DIV: a double
+    divide rounds past 2^53 and can put a value one bin high."""
+    if n_bins < 2:
+        raise ValueError("n_bins must be >= 2")
+    value = "`" + value_col.replace("`", "``") + "`"
+    b = df.select(
+        F.col(group_col).alias("g"),
+        F.least(
+            F.lit(n_bins - 1),
+            F.expr(f"CAST({value} AS BIGINT) div {int(width)}"),
+        ).alias("bin"),
+    )
+    ct = b.groupBy("g", "bin").agg(F.count(F.lit(1)).alias("cnt"))
+    per_g = ct.groupBy("g").agg(
+        *[
+            F.coalesce(
+                F.max(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
+            )
+            .cast("long")
+            .alias(f"a{i}")
+            for i in range(n_bins)
+        ]
+    )
+    glob = ct.groupBy().agg(
+        *[
+            F.coalesce(
+                F.sum(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
+            )
+            .cast("long")
+            .alias(f"t{i}")
+            for i in range(n_bins)
+        ]
+    )
+    j = per_g.crossJoin(F.broadcast(glob))
+    n_a = F.col("a0")
+    n_t = F.col("t0")
+    for i in range(1, n_bins):
+        n_a = n_a + F.col(f"a{i}")
+        n_t = n_t + F.col(f"t{i}")
+    return j.withColumn("n_a", n_a.cast("long")).withColumn(
+        "n_b", (n_t - n_a).cast("long")
+    )
+
+
 def psi_drift(
     df: DataFrame,
     group_col: str,
@@ -291,45 +343,7 @@ def psi_drift(
     joins keyed on data values, no window, map-side combinable
     everywhere.
     """
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    b = df.select(
-        F.col(group_col).alias("g"),
-        F.least(
-            F.lit(n_bins - 1),
-            (F.col(value_col).cast("long") / F.lit(width)).cast("long"),
-        ).alias("bin"),
-    )
-    ct = b.groupBy("g", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    per_g = ct.groupBy("g").agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"a{i}")
-            for i in range(n_bins)
-        ]
-    )
-    glob = ct.groupBy().agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"t{i}")
-            for i in range(n_bins)
-        ]
-    )
-    j = per_g.crossJoin(F.broadcast(glob))
-    n_a = F.col("a0")
-    n_t = F.col("t0")
-    for i in range(1, n_bins):
-        n_a = n_a + F.col(f"a{i}")
-        n_t = n_t + F.col(f"t{i}")
-    j = j.withColumn("n_a", n_a.cast("long")).withColumn(
-        "n_b", (n_t - n_a).cast("long")
-    )
+    j = _binned_counts(df, group_col, value_col, n_bins, width)
     k = F.lit(n_bins)
     psi = None
     for i in range(n_bins):
@@ -813,45 +827,7 @@ def hellinger_drift(
     per-group conditional pivot, one broadcast 1-row global bin
     row; no data-keyed joins, no window.
     """
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    b = df.select(
-        F.col(group_col).alias("g"),
-        F.least(
-            F.lit(n_bins - 1),
-            (F.col(value_col).cast("long") / F.lit(width)).cast("long"),
-        ).alias("bin"),
-    )
-    ct = b.groupBy("g", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    per_g = ct.groupBy("g").agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"a{i}")
-            for i in range(n_bins)
-        ]
-    )
-    glob = ct.groupBy().agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("bin") == i, F.col("cnt"))), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"t{i}")
-            for i in range(n_bins)
-        ]
-    )
-    j = per_g.crossJoin(F.broadcast(glob))
-    n_a = F.col("a0")
-    n_t = F.col("t0")
-    for i in range(1, n_bins):
-        n_a = n_a + F.col(f"a{i}")
-        n_t = n_t + F.col(f"t{i}")
-    j = j.withColumn("n_a", n_a.cast("long")).withColumn(
-        "n_b", (n_t - n_a).cast("long")
-    )
+    j = _binned_counts(df, group_col, value_col, n_bins, width)
     bc_sum = None
     tv_num = None
     for i in range(n_bins):

@@ -2,7 +2,13 @@
 
 Runs every ``queries()`` entry at sf0.01 on Spark, runs the matching
 ``oracle_sql()`` on DuckDB over the same parquet, and compares
-row count / column names / order-insensitive value hash.
+row count / column names / order-insensitive value hash.  Prints one
+JSON object per query (``name``, ``status``, ``spark_rows``,
+``oracle_rows``, ``cols_equal``, ``hash_equal``, ``spark_sec``,
+``oracle_sec``, plus ``error`` or a diff sample when the check fails),
+then a final ``FAILURES: [...]`` or ``FAILURES: none`` line.
+
+    python scripts/check_oracle.py [query ...]
 
 Both sides go through **pandas** on purpose — the driver's gate does —
 so dtype-level divergence shows up locally too: DuckDB HUGEINT (any
@@ -15,6 +21,7 @@ props_json_stats / media_features).
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import sys
@@ -71,69 +78,79 @@ def _pdf_rows(pdf: pd.DataFrame) -> list[tuple]:
     return [tuple(r) for r in pdf.itertuples(index=False, name=None)]
 
 
+def _check(name, fn, oracle, spark, con, sf_dir) -> dict:
+    """One query against its oracle → the result object ``main`` prints.
+
+    ``spark_sec`` times the Spark build and collect, ``oracle_sec`` the
+    DuckDB run; neither includes the hashing."""
+    res = {
+        "name": name, "status": "OK", "spark_rows": None,
+        "oracle_rows": None, "cols_equal": None, "hash_equal": None,
+        "spark_sec": None, "oracle_sec": None,
+    }
+    t0 = time.perf_counter()
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = _pdf_rows(sdf.toPandas())
+    except Exception as e:
+        return {**res, "status": "SPARK ERROR", "error": str(e)[:200]}
+    res["spark_sec"] = round(time.perf_counter() - t0, 3)
+    res["spark_rows"] = len(srows)
+    if oracle is None:
+        try:
+            value_hash(srows, scols)  # driver canonicalizes rows-only too
+        except TypeError as e:
+            return {**res, "status": "CANON ERROR", "error": str(e)}
+        return {**res, "status": "ROWS-ONLY"}
+    t0 = time.perf_counter()
+    try:
+        opdf = con.execute(oracle).df()
+        ocols = list(opdf.columns)
+        orows = _pdf_rows(opdf)
+    except Exception as e:
+        return {**res, "status": "ORACLE ERROR", "error": str(e)[:200]}
+    res["oracle_sec"] = round(time.perf_counter() - t0, 3)
+    res["oracle_rows"] = len(orows)
+    ok_c = sorted(scols) == sorted(ocols)
+    res["cols_equal"] = ok_c
+    try:
+        ok_v = ok_c and value_hash(srows, scols) == value_hash(orows, ocols)
+    except TypeError as e:
+        return {**res, "status": "CANON ERROR", "error": str(e)}
+    res["hash_equal"] = ok_v
+    if len(srows) == len(orows) and ok_v:
+        return res
+    res["status"] = "MISMATCH"
+    if not ok_c:
+        res["spark_cols"], res["oracle_cols"] = scols, ocols
+    else:
+        order = sorted(range(len(scols)), key=lambda i: scols[i])
+        sset = {tuple(norm_cell(r[i]) for i in order) for r in srows}
+        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
+        oset = {tuple(norm_cell(r[i]) for i in oorder) for r in orows}
+        res["spark_only"] = list(sset - oset)[:3]
+        res["oracle_only"] = list(oset - sset)[:3]
+    return res
+
+
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
+    """Print one JSON object per checked query, then ``FAILURES: ...``."""
     spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in qs.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = _pdf_rows(sdf.toPandas())
-        except Exception as e:
-            print(f"{name:24s} SPARK ERROR: {str(e)[:200]}")
+        res = _check(name, fn, oracles.get(name), spark, con, sf_dir)
+        print(json.dumps(res), flush=True)
+        if res["status"] not in ("OK", "ROWS-ONLY"):
             failures.append(name)
-            continue
-        if name not in oracles:
-            try:
-                h = value_hash(srows, scols)  # driver canonicalizes
-            except TypeError as e:            # rows-only entries too
-                print(f"{name:24s} CANON ERROR: {e}")
-                failures.append(name)
-                continue
-            print(f"{name:24s} rows-only: {len(srows)} rows "
-                  f"({time.time()-t0:.1f}s)")
-            continue
-        try:
-            opdf = con.execute(oracles[name]).df()
-            ocols = list(opdf.columns)
-            orows = _pdf_rows(opdf)
-        except Exception as e:
-            print(f"{name:24s} ORACLE ERROR: {e}")
-            failures.append(name)
-            continue
-        try:
-            ok_n = len(srows) == len(orows)
-            ok_c = sorted(scols) == sorted(ocols)
-            ok_v = ok_c and value_hash(srows, scols) == value_hash(orows, ocols)
-        except TypeError as e:
-            print(f"{name:24s} CANON ERROR: {e}")
-            failures.append(name)
-            continue
-        status = "OK" if (ok_n and ok_c and ok_v) else "MISMATCH"
-        print(
-            f"{name:24s} {status}  rows {len(srows)}/{len(orows)} "
-            f"cols={'=' if ok_c else f'{scols} vs {ocols}'} "
-            f"hash={'=' if ok_v else 'DIFF'} ({time.time()-t0:.1f}s)"
-        )
-        if status != "OK":
-            failures.append(name)
-            if ok_c and not ok_v:
-                order = sorted(range(len(scols)), key=lambda i: scols[i])
-                sset = {tuple(norm_cell(r[i]) for i in order) for r in srows}
-                oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                oset = {tuple(norm_cell(r[i]) for i in oorder) for r in orows}
-                print("   spark-only:", list(sset - oset)[:3])
-                print("   oracle-only:", list(oset - sset)[:3])
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

@@ -611,6 +611,24 @@ def test_hellinger_drift_identical_halves_and_bounds(spark):
         assert got[s].tv_num == 0
 
 
+def test_drift_bins_by_integer_div_past_2_53(spark):
+    """bin = value div width in exact longs: 2^56−1 over width 2^55 is
+    bin 1.  A double divide rounds 2^56−1 up to 2^56 and bins it 2,
+    beside the exact 2^56 of the other group."""
+    from deepie_spark.operators.curation import hellinger_drift, psi_drift
+
+    rows = [("a", 2**56 - 1), ("b", 2**56)]
+    df = spark.createDataFrame(rows, "source string, n_chars long")
+    hel = {r.source: r for r in
+           hellinger_drift(df, "source", "n_chars", 4, 2**55).collect()}
+    for s in ("a", "b"):
+        assert hel[s].bc == 0.0  # disjoint bins 1 and 2
+        assert hel[s].hellinger == 1.0
+    psi = {r.source: r.psi for r in
+           psi_drift(df, "source", "n_chars", 4, 2**55).collect()}
+    assert psi["a"] > 0 and psi["b"] > 0
+
+
 def test_hellinger_drift_disjoint_is_maximal(spark):
     from deepie_spark.operators.curation import hellinger_drift
 

@@ -3,12 +3,15 @@
 Two layers:
 
 * driver-level: every menu component builds, runs, and yields a valid
-  probability simplex on the reference fixture records — with embedding
-  (mode 0) AND one-hot (mode 1) channels, surface AND dep sequences,
-  channel family 2, ensembles, hybrid expert products;
+  probability simplex on seeded synthetic records
+  (tests/synthetic_records.py); embedding (mode 0) AND one-hot (mode 1)
+  channels, surface AND dep sequences, channel family 2, ensembles and
+  hybrid expert products run on the reference fixture records;
 * distributed parity: ``classify_mentions_menu`` (mapInPandas, broadcast
-  weights+spec) reproduces the driver golden ``menu_forward`` bitwise
-  for the representative shapes the judge called out (rnnAtt,
+  weights+spec) reproduces the driver golden ``menu_forward`` bitwise —
+  on a DataFrame built from the synthetic records, and on the reference
+  corpus for the flagship ``convolute``/``rnnHead`` on both sequence
+  reps and the representative shapes the judge called out (rnnAtt,
   dynamicPooling, rnnSumDep, combo, ensemble, hybrid+kernel, MultiNN).
 """
 
@@ -26,13 +29,20 @@ from deepie_spark.model.menu import (
     menu_forward,
 )
 from deepie_spark.sources.tsv_corpus import (
+    MENTION_SCHEMA,
     main_corpus_records,
     parse_line,
     read_corpus,
 )
 from deepie_spark.operators.dictionary import build_reference_dictionaries
 from tests.conftest import REFERENCE_DATA
+from tests.synthetic_records import model_inputs, synthetic_records
 from tests.test_parser import all_lines
+
+
+@pytest.fixture(scope="module")
+def synth():
+    return model_inputs(*synthetic_records())
 
 
 @pytest.fixture(scope="module")
@@ -47,24 +57,7 @@ def setup(spark):
         for c, _, line in all_lines()
         if c in ("bn_nw", "bc0", "bc1", "cts", "wl")
     ]
-    m_len = max(len(r["tokens"]) for r in records)
-    m_dep_len = max(len(r["dep_tokens"]) for r in records)
-    bin_feats = sorted({f for r in records for f in r["bin_feats"]})
-    bin_dict = {f: i for i, f in enumerate(bin_feats)}
-    label_names = [None] * len(dicts["label"])
-    for k, v in dicts["label"].items():
-        label_names[v] = k
-    return {
-        "mentions": mentions,
-        "dicts": dicts,
-        "records": records,
-        "m_len": m_len,
-        "m_dep_len": m_dep_len,
-        "num_position": 2 * m_len + 2,
-        "num_dep_position": 2 * m_dep_len + 2,
-        "bin_dict": bin_dict,
-        "labels": label_names,
-    }
+    return {**model_inputs(records, dicts), "mentions": mentions}
 
 
 def _spec(setup, model, **kw):
@@ -101,17 +94,19 @@ ONEHOT_MODES = {
 
 
 @pytest.mark.parametrize("comp", sorted(_COMPONENTS))
-def test_every_component_runs(setup, comp):
+def test_every_component_runs(synth, comp):
     """The full single-model menu: valid simplex, deterministic init."""
-    spec = _spec(setup, comp, modes1=BASE_MODES)
+    spec = _spec(synth, comp, modes1=BASE_MODES)
     w1 = init_menu_weights(spec)
     w2 = init_menu_weights(spec)
     assert sorted(w1) == sorted(w2)
     assert all(np.array_equal(w1[k], w2[k]) for k in w1)
+    # pad row stays zero in every embedding table
+    assert not any(v[0].any() for k, v in w1.items() if "_T_" in k)
     ids, p = menu_forward(
-        setup["records"][:8], setup["dicts"], w1, spec
+        synth["records"][:8], synth["dicts"], w1, spec
     )
-    assert p.shape == (8, len(setup["labels"]))
+    assert p.shape == (8, len(synth["labels"]))
     assert np.allclose(p.sum(axis=1), 1.0, atol=1e-5)
     assert ids.shape == (8,)
 
@@ -229,7 +224,21 @@ def test_outer_representation_semantics(setup):
     assert np.allclose(got, want, atol=1e-6)
 
 
+COMBO_DEP = dict(
+    seq=("surface", "dep"), modes1=BASE_MODES,
+    modes2={"grammar": 1, "dist1": 1, "dist2": 1}, multilayer1=[10],
+)
+HYBRID_KERNEL = dict(
+    modes1=BASE_MODES, multilayer2=[10], kernel_score=True, kernel_fill=True,
+)
+
 DISTRIBUTED_CASES = [
+    # the flagship single-family models on both sequence reps (rnnHead
+    # is the biGRU + head-pool graph)
+    ("convolute", dict(modes1=BASE_MODES)),
+    ("rnnHead", dict(modes1=BASE_MODES)),
+    ("convolute", dict(modes1=BASE_MODES, seq=("dep", "dep"))),
+    ("rnnHead", dict(modes1=BASE_MODES, seq=("dep", "dep"))),
     ("rnnAtt", dict(modes1=BASE_MODES)),
     ("rnnSumDep", dict(modes1=BASE_MODES)),
     # outer=True representation mode ('outer' evaluate.py:54-55,
@@ -238,47 +247,63 @@ DISTRIBUTED_CASES = [
     # outer-combined biGRU encoder (gruBiDirectOuter rnnReModels.py:362)
     ("rnnHeadOuter", dict(modes1=BASE_MODES)),
     ("dynamicPooling", dict(modes1=BASE_MODES, multilayer1=[12])),
-    ("rnnHead-convolute", dict(
-        seq=("surface", "dep"), modes1=BASE_MODES,
-        modes2={"grammar": 1, "dist1": 1, "dist2": 1}, multilayer1=[10],
-    )),
+    ("rnnHead-convolute", COMBO_DEP),
     ("rnnHead_convolute", dict(modes1=BASE_MODES, ensemble_binary=True)),
-    ("#rnnHead", dict(
-        modes1=BASE_MODES, multilayer2=[10],
-        kernel_score=True, kernel_fill=True,
-    )),
+    ("#rnnHead", HYBRID_KERNEL),
     ("#MultiNN", dict(multilayer1=[10], use_head_emb=True)),
 ]
 
 
-@pytest.mark.parametrize(
-    "model,kw", DISTRIBUTED_CASES, ids=[m for m, _ in DISTRIBUTED_CASES]
-)
-def test_distributed_menu_matches_golden(spark, setup, model, kw):
-    spec = _spec(setup, model, **kw)
+def _assert_distributed_matches_golden(s, mentions, model, kw):
+    spec = _spec(s, model, **kw)
     weights = init_menu_weights(spec)
     gold_ids, gold_p = menu_forward(
-        setup["records"], setup["dicts"], weights, spec,
-        setup["bin_dict"],
+        s["records"], s["dicts"], weights, spec, s["bin_dict"],
     )
     gold = {
         (r["corpus"], r["rel_id"]): (int(i), float(p[i]))
-        for r, i, p in zip(setup["records"], gold_ids, gold_p)
+        for r, i, p in zip(s["records"], gold_ids, gold_p)
     }
     preds = classify_mentions_menu(
-        main_corpus_records(setup["mentions"]),
-        weights,
-        setup["dicts"],
-        spec,
-        setup["labels"],
-        setup["bin_dict"],
+        mentions, weights, s["dicts"], spec, s["labels"], s["bin_dict"],
     ).collect()
-    assert len(preds) == 50
-    lid = {l: i for i, l in enumerate(setup["labels"])}
+    assert len(preds) == len(s["records"])
+    lid = {l: i for i, l in enumerate(s["labels"])}
     for r in preds:
         want_id, want_prob = gold[(r["corpus"], r["rel_id"])]
         assert lid[r["pred"]] == want_id, (model, r["corpus"], r["rel_id"])
         assert r["prob"] == pytest.approx(want_prob, abs=1e-6)
+
+
+@pytest.mark.parametrize(
+    "model,kw",
+    DISTRIBUTED_CASES,
+    ids=[
+        m + ("@dep" if kw.get("seq", ("surface",))[0] == "dep" else "")
+        for m, kw in DISTRIBUTED_CASES
+    ],
+)
+def test_distributed_menu_matches_golden(spark, setup, model, kw):
+    _assert_distributed_matches_golden(
+        setup, main_corpus_records(setup["mentions"]), model, kw
+    )
+
+
+@pytest.mark.parametrize(
+    "model,kw",
+    [("rnnHead-convolute", COMBO_DEP), ("#rnnHead", HYBRID_KERNEL)],
+    ids=["rnnHead-convolute", "#rnnHead"],
+)
+def test_distributed_menu_on_created_dataframe(spark, synth, model, kw):
+    """The same parity on a DataFrame built with ``createDataFrame`` in
+    the parsed-corpus schema: the dep path, binary features and kernel
+    scores all cross the Arrow boundary."""
+    rows = [
+        {**r, "file_order": 0, "line_no": i}
+        for i, r in enumerate(synth["records"])
+    ]
+    mentions = spark.createDataFrame(rows, MENTION_SCHEMA)
+    _assert_distributed_matches_golden(synth, mentions, model, kw)
 
 
 def test_dropout_scaling_at_inference(setup):

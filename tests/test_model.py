@@ -1,19 +1,33 @@
-"""Model-zoo (M1–M20) and trainer tests.
+"""Model-zoo (M1–M18), menu-composition and log-linear trainer tests.
 
 Each kernel is checked against an independent naive implementation
 (explicit loops) on small random inputs — the zoo's vectorized numpy must
 reproduce the cited recurrence/convolution semantics, not merely run.
+The multi-window conv, CNN/RNN stacks, MLP chain, dropout scaling,
+softmax classifier, argmax, expert product and name dispatch are
+checked as ``model.menu`` composes them, against the same zoo kernels
+chained by hand (forward passes on seeded synthetic records).
 """
 
 import numpy as np
 import pytest
 
 from deepie_spark.model import zoo
+from deepie_spark.model.menu import (
+    _COMPONENTS,
+    _family_encode,
+    _family_x,
+    component_features,
+    init_menu_weights,
+    make_spec,
+    menu_forward,
+)
 from deepie_spark.model.train import (
     predict_loglinear,
     score_py,
     train_loglinear,
 )
+from tests.synthetic_records import model_inputs, synthetic_records
 
 RNG = np.random.RandomState(1234)
 
@@ -131,26 +145,105 @@ def test_conv_maxpool_matches_naive(window):
     assert np.allclose(got, want)
 
 
+def _menu_spec(model, **kw):
+    """A small hand-sized spec: word (3) + dist1 (2) → in_dim 5."""
+    sizes = {
+        "word": 9, "type": 3, "subtype": 3, "constit": 3, "preter": 3,
+        "prepreter": 3, "deprel": 3, "label": 3,
+    }
+    kw.setdefault("windows", (2, 3))
+    return make_spec(
+        model, sizes, num_position=12, num_dep_position=8, m_len=9,
+        m_dep_len=5, n_classes=4, modes1={"dist1": 0}, word_dim=3,
+        feat_dim=2, nh=(5, 5), maps=4, **kw,
+    )
+
+
+def _features(spec, w, x, pos1=None, pos2=None):
+    b = x.shape[0]
+    pos1 = np.zeros(b, int) if pos1 is None else pos1
+    pos2 = np.zeros(b, int) if pos2 is None else pos2
+    return component_features(
+        spec["families"][0], x, w, spec, pos1, pos2, np.ones(x.shape[:2])
+    )
+
+
+def _filters(w, prefix, windows):
+    return [(w[f"f1_{prefix}_W{k}"], w[f"f1_{prefix}_b{k}"]) for k in windows]
+
+
 def test_multi_window_conv_concat():
-    x = rand(2, 9, 3)
-    filters = [(rand(4, w, 3), rand(4)) for w in (2, 3, 4, 5)]
-    pooled = zoo.multi_window_conv(x, filters, pool=True)
+    """convContext / convContextLs (rnnReModels.py:431-441,478-489):
+    one conv per window size, concatenated — max-pooled for
+    ``convolute``, same-length (then mean-pooled) for ``convoluteSum``."""
+    x = rand(2, 9, 5)
+    windows = (2, 3, 4, 5)
+    spec = _menu_spec("convolute", windows=windows)
+    w = init_menu_weights(spec)
+    pooled = _features(spec, w, x)
     assert pooled.shape == (2, 16)
-    seq = zoo.multi_window_conv(x, filters, pool=False)
+    want = np.concatenate(
+        [zoo.conv_maxpool(x, W, b) for W, b in _filters(w, "pconv", windows)],
+        axis=1,
+    )
+    assert np.allclose(pooled, want)
+    spec = _menu_spec("convoluteSum", windows=windows)
+    w = init_menu_weights(spec)
+    seq = np.concatenate(
+        [zoo.conv_same_tanh(x, W, b)
+         for W, b in _filters(w, "pconv", windows)],
+        axis=2,
+    )
     assert seq.shape == (2, 9, 16)
+    assert np.allclose(_features(spec, w, x), seq.mean(axis=1))
 
 
 # ---------------------------------------------------------------------------
 # M8–M15
 
-def test_mlp_and_dropout_scale():
-    x = rand(3, 4)
-    layers = [(rand(4, 6), rand(6)), (rand(6, 2), rand(2))]
-    out = zoo.mlp(x, layers)
-    assert out.shape == (3, 2)
-    assert ((out > 0) & (out < 1)).all()  # sigmoid range
-    W = rand(4, 4)
-    assert np.allclose(zoo.dropout_scale(W, 0.25), 0.75 * W)
+@pytest.fixture(scope="module")
+def synth():
+    s = model_inputs(*synthetic_records())
+    s["dict_sizes"] = {k: max(d.values()) for k, d in s["dicts"].items()}
+    return s
+
+
+def _synth_forward(s, model, **kw):
+    """(spec, weights, per-family features, menu_forward output) on the
+    first 6 synthetic records."""
+    spec = make_spec(
+        model, s["dict_sizes"], s["num_position"], s["num_dep_position"],
+        s["m_len"], s["m_dep_len"], len(s["labels"]),
+        modes1={"dist1": 0, "dist2": 0, "type": 0}, word_dim=4,
+        feat_dim=3, nh=(5, 5), maps=3, **kw,
+    )
+    w = init_menu_weights(spec)
+    recs = s["records"][:6]
+    feats = []
+    for f in spec["families"]:
+        enc, pos1, pos2 = _family_encode(recs, s["dicts"], spec, f)
+        x = _family_x(enc, w, spec, f)
+        feats.append(
+            component_features(f, x, w, spec, pos1, pos2, enc["iidep"])
+        )
+    return spec, w, feats, menu_forward(recs, s["dicts"], w, spec)
+
+
+def test_mlp_and_dropout_scale(synth):
+    """M8 sigmoid MLP chain (multilayerNN1) and M9 inference-side
+    dropout: only the classifier weights are scaled, by (1-p)
+    (rnnReModels.py:768)."""
+    spec, w, (feats,), (_, p) = _synth_forward(
+        synth, "rnnMax", multilayer1=[6, 3], dropout=0.25
+    )
+    h = zoo.hidden_layer(feats, w["mlp1_W0"], w["mlp1_b0"])
+    h = zoo.hidden_layer(h, w["mlp1_W1"], w["mlp1_b1"])
+    assert h.shape == (6, 3)
+    assert ((h > 0) & (h < 1)).all()  # sigmoid range
+    want = zoo.softmax(h @ (0.75 * w["cls_W"]) + w["cls_b"], axis=1)
+    assert np.allclose(p, want, atol=1e-6)
+    unscaled = zoo.softmax(h @ w["cls_W"] + w["cls_b"], axis=1)
+    assert not np.allclose(p, unscaled)
 
 
 def test_pooling_heads():
@@ -201,11 +294,14 @@ def test_dynamic_pool3_segments():
 # ---------------------------------------------------------------------------
 # M17–M20
 
-def test_softmax_classifier_and_argmax():
-    f, W, b = rand(4, 3), rand(3, 5), rand(5)
-    p = zoo.softmax_classifier(f, W, b)
+def test_softmax_classifier_and_argmax(synth):
+    """M17 p(y|x) = softmax(f·W + b) and M20 argmax decoding
+    (mainModel rnnReModels.py:687,729-770)."""
+    _, w, (feats,), (ids, p) = _synth_forward(synth, "convolute")
+    logits = feats @ w["cls_W"] + w["cls_b"]
+    assert np.allclose(p, zoo.softmax(logits, axis=1), atol=1e-6)
     assert np.allclose(p.sum(axis=1), 1.0)
-    assert np.allclose(zoo.argmax_decode(p), (f @ W + b).argmax(axis=1))
+    assert np.array_equal(ids, logits.argmax(axis=1))
 
 
 def test_sparse_loglinear_logits():
@@ -223,11 +319,15 @@ def test_sparse_loglinear_logits():
     assert np.allclose(out[2], W[0] + W[2] + W[5] + b)
 
 
-def test_product_of_experts():
-    l1, l2 = rand(3, 4), rand(3, 4)
-    p = zoo.product_of_experts(l1, l2)
-    assert np.allclose(p, zoo.softmax(l1 + l2, axis=-1))
+def test_product_of_experts(synth):
+    """M19: an ``a_b`` ensemble's p ∝ exp(sum of expert logits),
+    renormalized (ensembleModel rnnReModels.py:938-1048)."""
+    _, w, (f1, fs), (ids, p) = _synth_forward(synth, "rnnHead_convolute")
+    l1 = f1 @ w["f1_exp_W"] + w["f1_exp_b"]
+    l2 = fs @ w["fs_exp_W"] + w["fs_exp_b"]
+    assert np.allclose(p, zoo.softmax(l1 + l2, axis=-1), atol=1e-6)
     assert np.allclose(p.sum(axis=1), 1.0)
+    assert np.array_equal(ids, (l1 + l2).argmax(axis=1))
 
 
 # ---------------------------------------------------------------------------
@@ -248,34 +348,71 @@ def test_train_loglinear_fits_separable_data():
 
 
 def test_alternate_stacks_shapes_and_composition():
-    b, t, d = 2, 7, 3
-    x = rand(b, t, d)
-    filters = [(rand(4, w, d), rand(4)) for w in (2, 3)]  # 8 maps total
-    hid = 5
-    def gru_params(in_dim):
-        return (
-            rand(in_dim, 2 * hid), rand(2 * hid), rand(hid, 2 * hid),
-            rand(in_dim, hid), rand(hid, hid), rand(hid),
-        )
-    gf, gb = gru_params(8), gru_params(8)
+    """M16 CNN→RNN / RNN→CNN stacks (rnnReModels.py:1148-1313), each
+    equal to its stages chained by hand."""
+    b, hid = 2, 5
+    x = rand(b, 7, 5)
     pos1, pos2 = np.array([0, 3]), np.array([6, 5])
-    out = zoo.alternate_head(x, filters, gf, gb, pos1, pos2)
+
+    def gru(w, prefix):
+        return [
+            tuple(w[f"f1_{prefix}_{side}_{i}"] for i in range(6))
+            for side in ("fwd", "bwd")
+        ]
+
+    spec = _menu_spec("alternateHead")
+    w = init_menu_weights(spec)
+    out = _features(spec, w, x, pos1, pos2)
     assert out.shape == (b, 4 * hid)  # biGRU(2h) heads concat
-    # composition check: equals manual stage chaining
-    h = zoo.multi_window_conv(x, filters, pool=False)
-    h = zoo.bidirectional(h, gf, gb, cell=zoo.rnn_gru)
+    h = np.concatenate(
+        [zoo.conv_same_tanh(x, W, bb)
+         for W, bb in _filters(w, "conv", (2, 3))],
+        axis=2,
+    )  # 8 maps total
+    h = zoo.bidirectional(h, *gru(w, "gru"), cell=zoo.rnn_gru)
     assert np.allclose(out, zoo.head_pool(h, pos1, pos2))
-    assert zoo.alternate_max(x, filters, gf, gb).shape == (b, 2 * hid)
-    gf3, gb3 = gru_params(d), gru_params(d)
-    filters10 = [(rand(6, w, 2 * hid), rand(6)) for w in (2, 3, 4)]
-    assert zoo.alternate_conv(x, gf3, gb3, filters10).shape == (b, 18)
+
+    spec = _menu_spec("alternateMax")
+    assert np.allclose(_features(spec, w, x), zoo.max_pool(h))
+
+    spec = _menu_spec("alternateConv", windows=(2, 3, 4))
+    w = init_menu_weights(spec)
+    out = _features(spec, w, x)
+    assert out.shape == (b, 12)
+    h = zoo.bidirectional(x, *gru(w, "gru"), cell=zoo.rnn_gru)
+    want = np.concatenate(
+        [zoo.conv_maxpool(h, W, bb)
+         for W, bb in _filters(w, "pconv", (2, 3, 4))],
+        axis=1,
+    )
+    assert np.allclose(out, want)
 
 
 def test_model_registry_dispatch():
-    assert zoo.resolve_model("rnnMaxIn") is zoo.max_pool
-    assert zoo.resolve_model("alternateHead") is zoo.alternate_head
-    with pytest.raises(KeyError, match="unknown model"):
-        zoo.resolve_model("notAModel")
+    """The reference's ``eval(model_name)`` menu (rnnRE.py:874-885):
+    model strings resolve through ``model.menu``'s one component table;
+    unknown names fail fast."""
+    spec = _menu_spec("alternateHead")
+    assert spec["kind"] == "main"
+    assert [f["component"] for f in spec["families"]] == ["alternateHead"]
+    assert _COMPONENTS["alternateHead"] == ("convThenGruBi", "head")
+    assert _COMPONENTS["rnnMax"] == ("gruBi", "max")
+    kinds = {
+        "rnnHead-convolute": ("main", ["f1", "f2"]),
+        "rnnHead_convolute": ("ensemble", ["f1", "fs"]),
+        "#rnnHead": ("hybrid", ["f1"]),
+        "#MultiNN": ("multinn", []),
+        "dynamicPooling": ("dynpool", ["f1"]),
+    }
+    for model, (kind, fams) in kinds.items():
+        spec = _menu_spec(model)
+        assert (spec["kind"], [f["fam"] for f in spec["families"]]) == (
+            kind, fams
+        ), model
+    with pytest.raises(KeyError, match="unknown model component"):
+        _menu_spec("notAModel")
+    with pytest.raises(KeyError, match="unknown model component"):
+        _menu_spec("rnnHead-notAModel")
 
 
 def test_score_py_reference_semantics():
