@@ -16,9 +16,12 @@ on the driver (``make_spec``), a flat numpy weight dict
 runs identically on the driver (golden) and inside ``mapInPandas``
 (``classify_mentions_menu``) — the parity contract of the engine.
 ``_COMPONENTS`` is the engine's one table from model name to graph, and
-``menu_forward`` its one neural forward: ``model.train_neural`` trains
-the weights of a ``convolute`` or ``rnnHead`` spec in place, and the
-same spec and weights run here at inference.
+``menu_forward`` its one forward, neural and log-linear alike:
+``model.train_neural`` trains the weights of a ``convolute`` or
+``rnnHead`` spec in place, ``model.train`` trains the log-linear expert
+as a ``#MultiNN`` weight dict (``bin_W``, ``bin_b``), and the same spec
+and weights run here at inference.  ``classify_mentions_menu`` is the
+engine's one ``mapInPandas`` relation classifier.
 
 Channel families:
 
@@ -822,7 +825,12 @@ def classify_mentions_menu(
 ) -> DataFrame:
     """Distributed inference for ANY menu spec: one broadcast carries
     weights+spec+dicts, deserialized once per python worker; each Arrow
-    batch runs the same ``menu_forward`` as the driver golden."""
+    batch runs the same ``menu_forward`` as the driver golden.
+
+    This is the engine's one ``mapInPandas`` relation classifier and the
+    Spark re-expression of ``predict()`` (rnnRE.py:512-562): the
+    reference pads corpora to batch multiples and recycles head rows
+    (:516-523); Arrow batches need no such padding."""
     spark = mentions.sparkSession
     bc = spark.sparkContext.broadcast(
         {"w": weights, "dicts": dicts, "spec": spec,

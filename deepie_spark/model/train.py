@@ -8,9 +8,12 @@ ids] + b, softmax (rnnReModels.py:772-833) — with plain seeded SGD on
 NLL, matching the reference's training protocol shape (epochs over
 shuffled minibatches, best-valid-F1 selection, rnnRE.py:907-1000).
 
-The produced weights are broadcast to executors by model.infer; the
-golden generator (tests) applies the *same* weights through the same
-numpy path, which is what makes the triple P/R gate exact.
+The weights carry the menu's MultiNN names (``bin_W``, ``bin_b``), so a
+trained expert is a ``model.menu`` ``#MultiNN`` weight dict as it
+stands: ``classify_mentions_menu`` broadcasts it to executors, and the
+golden generator (tests) applies the *same* weights through
+:func:`predict_loglinear`, the same numpy arithmetic, which is what
+makes the triple P/R gate exact.
 """
 
 from __future__ import annotations
@@ -33,15 +36,15 @@ def _sgd_epochs(
     seed: int,
     l2: float,
 ) -> Iterator[dict[str, np.ndarray]]:
-    """Seeded minibatch SGD on mean NLL.  Yields the ``{"W", "b"}``
+    """Seeded minibatch SGD on mean NLL.  Yields the ``{"bin_W", "bin_b"}``
     weight dict at init and again after every epoch; each epoch updates
     it in place."""
     rng = np.random.RandomState(seed)
     w = {
-        "W": 0.01 * rng.randn(n_features, n_classes),
-        "b": np.zeros(n_classes),
+        "bin_W": 0.01 * rng.randn(n_features, n_classes),
+        "bin_b": np.zeros(n_classes),
     }
-    W, b = w["W"], w["b"]
+    W, b = w["bin_W"], w["bin_b"]
     yield w
     n = len(labels)
     for _ in range(epochs):
@@ -85,7 +88,8 @@ def predict_loglinear(
 ) -> tuple[np.ndarray, np.ndarray]:
     """→ (pred ids, probability matrix); M18 + M20."""
     p = softmax(
-        sparse_loglinear_logits(bin_rows, weights["W"], weights["b"]), axis=1
+        sparse_loglinear_logits(bin_rows, weights["bin_W"], weights["bin_b"]),
+        axis=1,
     )
     return p.argmax(axis=1), p
 
@@ -110,7 +114,7 @@ def train_loglinear_best_epoch(
         bin_rows, labels, n_classes, n_features, epochs, lr, batch, seed, l2
     )
     w = next(it)
-    best = {"W": w["W"].copy(), "b": w["b"].copy()}
+    best = {k: v.copy() for k, v in w.items()}
     best_f1 = -1.0
     history = []
     for epoch, w in enumerate(it):
@@ -121,7 +125,7 @@ def train_loglinear_best_epoch(
         )
         if vf1 > best_f1:
             best_f1 = vf1
-            best = {"W": w["W"].copy(), "b": w["b"].copy()}
+            best = {k: v.copy() for k, v in w.items()}
     return best, history
 
 

@@ -1,11 +1,12 @@
-"""Numpy forward-pass building blocks (reference operators M1–M18).
+"""Numpy forward-pass building blocks (reference operators M2–M18).
 
 The reference compiles these as Theano graph ops (rnnReModels.py); in the
 Spark engine they run as batched numpy inside Arrow UDFs with weights
 broadcast.  ``model.menu`` composes them into every model of the
 reference's menu (its ``_COMPONENTS`` table is the one name → graph
-dispatch), and ``model.infer`` runs the sparse log-linear expert.
-Training is a one-time driver-side step (``model.train_neural``,
+dispatch), the sparse log-linear expert (``#MultiNN``) included.
+Training is a one-time driver-side step (``model.train`` for the
+log-linear expert, ``model.train_neural`` for the neural models,
 SURVEY.md §2.6 M21).
 
 Every function is a *new* numpy implementation of the cited semantics;
@@ -30,19 +31,8 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# M1/M2 — embedding lookup + concatenation / outer product
-
-def embed_concat(
-    channel_ids: list[np.ndarray], tables: list[np.ndarray]
-) -> np.ndarray:
-    """M1: gather each channel's embedding rows and concat on the feature
-    axis (getConcatenation rnnReModels.py:115-138).  ``channel_ids[c]``
-    is (batch, time) int; ``tables[c]`` is (vocab, dim_c); row 0 is the
-    zero pad vector (rnn_process_onlyExtra.py:567)."""
-    return np.concatenate(
-        [tab[ids] for ids, tab in zip(channel_ids, tables)], axis=2
-    )
-
+# M2 — outer product (the M1 embedding gather and concat is
+# model.menu._family_x)
 
 def outer_rep(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """M2: token-wise outer product, flattened (getOuter

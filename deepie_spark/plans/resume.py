@@ -21,14 +21,26 @@ from __future__ import annotations
 import glob
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = (
-    "part_id int, stage string, n_pages long, n_mentions long,"
-    " n_pairs long, n_triples long, t_start double, t_end double,"
-    " status string"
+#: the ``_done`` manifest's rows, one per completed bucket
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int32()),
+        ("stage", pa.string()),
+        ("n_pages", pa.int64()),
+        ("n_mentions", pa.int64()),
+        ("n_pairs", pa.int64()),
+        ("n_triples", pa.int64()),
+        ("t_start", pa.float64()),
+        ("t_end", pa.float64()),
+        ("status", pa.string()),
+    ]
 )
 
 
@@ -74,8 +86,6 @@ def _footer_counts(files: dict[str, int]) -> dict[int, int]:
     On Iceberg the same numbers come from the snapshot's manifest
     statistics; on a remote store this listing is a metadata-service
     call, the same O(files) cost Iceberg's commit itself pays."""
-    import pyarrow.parquet as pq
-
     counts: dict[int, int] = {}
     for f, pid in files.items():
         counts[pid] = counts.get(pid, 0) + pq.ParquetFile(f).metadata.num_rows
@@ -97,9 +107,9 @@ def write_triples_with_manifest(
     The manifest counts come from the footers of the files this call
     wrote (before/after file-set diff, so concurrent history in an
     append dir is excluded): the triples plan — the most expensive job
-    in the system — executes exactly once.
+    in the system — executes exactly once, and the manifest rows are
+    written on the driver without a second Spark job.
     """
-    spark = triples.sparkSession
     t0 = time.time()
     before = part_files(out_dir)
     (
@@ -111,15 +121,31 @@ def write_triples_with_manifest(
     counts = _footer_counts(
         {f: p for f, p in part_files(out_dir).items() if f not in before}
     )
-    t1 = time.time()
+    _append_manifest(manifest_dir, stage, counts, t0, time.time())
+    return {"parts": len(counts), "n_triples": sum(counts.values())}
+
+
+def _append_manifest(
+    manifest_dir: str, stage: str, counts: dict[int, int],
+    t_start: float, t_end: float,
+) -> None:
+    """One ``done`` row per bucket, appended to the manifest as one
+    uniquely named parquet file in ``MANIFEST_SCHEMA``, written by pyarrow
+    on the driver: the rows are already here, so no Spark job runs.  A
+    write with no buckets still appends a 0-row file, so the manifest
+    directory always reads back.  The file is written under a
+    ``_``-prefixed name, which Spark's reader skips, then renamed into
+    place, so a reader never sees a partial file."""
     rows = [
-        (pid, stage, None, None, None, n, t0, t1, "done")
+        {"part_id": pid, "stage": stage, "n_triples": n,
+         "t_start": t_start, "t_end": t_end, "status": "done"}
         for pid, n in sorted(counts.items())
     ]
-    spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-        manifest_dir
-    )
-    return {"parts": len(rows), "n_triples": sum(counts.values())}
+    os.makedirs(manifest_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(manifest_dir, f"_{name}")
+    pq.write_table(pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(manifest_dir, name))
 
 
 def resume_run(

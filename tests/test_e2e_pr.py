@@ -8,20 +8,25 @@ log-linear expert (M18, trained with the reference's protocol shape:
 seeded shuffled minibatches), argmax decode (M20), directed-triple
 emission (S7/P10 relational form).  The distributed Spark pipeline runs
 the SAME stages through its own operators (read_corpus → dictionary
-operators → mapInPandas inference) and must reproduce the golden triples
-at P/R ≥ 0.95 (BASELINE.json: "triple P/R≥0.95 vs reference DeepIE
-outputs ... python -m pytest -x -q").  Weights are shared; numpy row-wise
-ops are batch-invariant, so the match is exact (P = R = 1.0).
+operators → the expert as menu ``#MultiNN`` in ``classify_mentions_menu``)
+and must reproduce the golden triples at P/R ≥ 0.95 (BASELINE.json:
+"triple P/R≥0.95 vs reference DeepIE outputs ... python -m pytest -x
+-q").  Weights are shared; numpy row-wise ops are batch-invariant, so
+the match is exact (P = R = 1.0).
+
+The reference-fixture gate needs the DeepIE fixtures at
+``tests.conftest.REFERENCE_DATA``; its ``test_synthetic_*`` twin runs
+the same gate on 200 seeded synthetic records
+(tests/synthetic_records.py), with the distributed side on a
+``createDataFrame`` in the parsed-corpus schema.
 """
 
 import numpy as np
 import pytest
 
 from deepie_spark.model.encoder import binary_feature_rows
-from deepie_spark.model.infer import (
-    classify_mentions,
-    triples_from_predictions,
-)
+from deepie_spark.model.infer import triples_from_predictions
+from deepie_spark.model.menu import classify_mentions_menu, make_spec
 from deepie_spark.model.train import predict_loglinear, train_loglinear
 from deepie_spark.operators.dictionary import (
     binary_feature_dictionary,
@@ -30,15 +35,84 @@ from deepie_spark.operators.dictionary import (
 from deepie_spark.operators.scorer import precision_recall_f1
 from deepie_spark.sources.tsv_corpus import (
     MAIN_CORPORA,
+    MENTION_SCHEMA,
     main_corpus_records,
     parse_line,
     read_corpus,
 )
 from tests.conftest import REFERENCE_DATA
+from tests.synthetic_records import model_inputs, synthetic_records
 from tests.test_parser import all_lines
 
 TRAIN_CORPUS = "bn_nw"  # fold='all' protocol: train=bn_nw (rnnRE.py:888-899)
 CUTOFF = 2              # evaluate.py:112 default
+
+
+def golden_predictions(records, weights, bin_dict, max_bin, label_names):
+    """Sequential M18 + M20 + directed-triple emission:
+    ``{"preds": {(corpus, rel_id): (label, prob)}, "triples": {(subj,
+    pred, obj, corpus, rel_id)}}``."""
+    rows = binary_feature_rows(records, bin_dict, max_bin)
+    pred_ids, p = predict_loglinear(rows, weights)
+    preds = {}
+    triples = set()
+    for r, pid, probs in zip(records, pred_ids, p):
+        name = label_names[pid]
+        preds[(r["corpus"], r["rel_id"])] = (name, float(probs[pid]))
+        if name == "NONE":
+            continue
+        subj, obj = r["tokens"][r["pos1"]], r["tokens"][r["pos2"]]
+        if name.endswith("(e2,e1)"):
+            subj, obj = obj, subj
+        bare = name.split("(")[0] if name.endswith(("(e1,e2)", "(e2,e1)")) else name
+        triples.add((subj, bare, obj, r["corpus"], r["rel_id"]))
+    return {"preds": preds, "triples": triples}
+
+
+def classify_loglinear(
+    mentions, weights, dicts, label_names, bin_dict, max_bin
+):
+    """The distributed side: the trained expert's weight dict runs as
+    menu ``#MultiNN`` in ``classify_mentions_menu``.  ``#MultiNN`` has
+    no channel family, so the sequence sizes are never read."""
+    spec = make_spec(
+        "#MultiNN",
+        {k: max(d.values()) for k, d in dicts.items()},
+        num_position=0,
+        num_dep_position=0,
+        m_len=0,
+        m_dep_len=0,
+        n_classes=len(label_names),
+        bin_dim=len(bin_dict),
+        max_bin=max_bin,
+    )
+    return classify_mentions_menu(
+        mentions, weights, dicts, spec, label_names, bin_dict
+    )
+
+
+def assert_pr_gate(preds, want):
+    """BASELINE.json gate: triple P/R ≥ 0.95 vs the golden generator."""
+    got = {
+        (r["subj"], r["pred"], r["obj"], r["corpus"], r["rel_id"])
+        for r in triples_from_predictions(preds).collect()
+    }
+    assert want, "golden generator must emit triples"
+    inter = len(got & want)
+    precision = inter / len(got) if got else 0.0
+    recall = inter / len(want)
+    assert precision >= 0.95, f"P={precision} got={len(got)} ∩={inter}"
+    assert recall >= 0.95, f"R={recall} want={len(want)} ∩={inter}"
+
+
+def assert_predictions_match(preds, want):
+    """Per record: the golden label and its probability."""
+    rows = preds.collect()
+    assert len(rows) == len(want)
+    for r in rows:
+        label, prob = want[(r["corpus"], r["rel_id"])]
+        assert r["pred"] == label, (r["corpus"], r["rel_id"])
+        assert r["prob"] == pytest.approx(prob, rel=1e-12, abs=0)
 
 
 @pytest.fixture(scope="module")
@@ -90,29 +164,13 @@ def golden():
 
     # golden predictions + triples over the 5 main corpora
     main = [r for r in records if r["corpus"] in MAIN_CORPORA]
-    main_rows = binary_feature_rows(main, bin_dict, max_bin)
-    pred_ids, _ = predict_loglinear(main_rows, weights)
-    preds = {}
-    triples = set()
-    for r, pid in zip(main, pred_ids):
-        name = label_names[pid]
-        preds[(r["corpus"], r["rel_id"])] = name
-        if name == "NONE":
-            continue
-        subj, obj = r["tokens"][r["pos1"]], r["tokens"][r["pos2"]]
-        if name.endswith("(e2,e1)"):
-            subj, obj = obj, subj
-        bare = name.split("(")[0] if name.endswith(("(e1,e2)", "(e2,e1)")) else name
-        triples.add((subj, bare, obj, r["corpus"], r["rel_id"]))
-
     return {
         "label_names": label_names,
         "label_dict": label_dict,
         "bin_dict": bin_dict,
         "max_bin": max_bin,
         "weights": weights,
-        "preds": preds,
-        "triples": triples,
+        **golden_predictions(main, weights, bin_dict, max_bin, label_names),
     }
 
 
@@ -126,14 +184,18 @@ def spark_run(spark, golden):
         mentions, cutoff=CUTOFF, train_corpora=[TRAIN_CORPUS]
     )
     spark_bin = {r["value"]: r["id"] for r in bin_df.collect()}
-    label_df = build_reference_dictionaries(mentions)["label"]
-    spark_labels = {r["value"]: r["id"] for r in label_df.collect()}
+    dicts = {
+        name: {r["value"]: r["id"] for r in df.collect()}
+        for name, df in build_reference_dictionaries(mentions).items()
+    }
+    spark_labels = dicts["label"]
 
-    preds = classify_mentions(
+    preds = classify_loglinear(
         main_corpus_records(mentions),
         golden["weights"],
-        spark_bin,
+        dicts,
         golden["label_names"],
+        spark_bin,
         golden["max_bin"],
     ).cache()
     return {
@@ -150,26 +212,13 @@ def test_distributed_dicts_match_golden(golden, spark_run):
 
 
 def test_per_record_predictions_match_golden(golden, spark_run):
-    rows = spark_run["preds"].collect()
-    assert len(rows) == len(golden["preds"]) == 50
-    for r in rows:
-        want = golden["preds"][(r["corpus"], r["rel_id"])]
-        assert r["pred"] == want, (r["corpus"], r["rel_id"])
+    assert len(golden["preds"]) == 50
+    assert_predictions_match(spark_run["preds"], golden["preds"])
 
 
 def test_triple_pr_gate(golden, spark_run):
     """BASELINE.json gate: triple P/R ≥ 0.95 vs the golden generator."""
-    got = {
-        (r["subj"], r["pred"], r["obj"], r["corpus"], r["rel_id"])
-        for r in triples_from_predictions(spark_run["preds"]).collect()
-    }
-    want = golden["triples"]
-    assert want, "golden generator must emit triples"
-    inter = len(got & want)
-    precision = inter / len(got) if got else 0.0
-    recall = inter / len(want)
-    assert precision >= 0.95, f"P={precision} got={len(got)} ∩={inter}"
-    assert recall >= 0.95, f"R={recall} want={len(want)} ∩={inter}"
+    assert_pr_gate(spark_run["preds"], golden["triples"])
 
 
 def test_train_corpus_learnability(golden, spark_run):
@@ -186,3 +235,46 @@ def test_train_corpus_learnability(golden, spark_run):
     )
     p, r, f1 = precision_recall_f1(scored)
     assert f1 > 0.0
+
+
+# ---------------------------------------------------------------------------
+# the same gate on seeded synthetic records (no reference corpus needed)
+
+
+@pytest.fixture(scope="module")
+def synthetic_run(spark):
+    """Golden and distributed sides over 200 seeded synthetic records:
+    the expert trains on them all; the distributed side reads a
+    ``createDataFrame`` in the parsed-corpus schema."""
+    s = model_inputs(*synthetic_records(n=200, seed=3))
+    max_bin = max(len(r["bin_feats"]) for r in s["records"])
+    weights = train_loglinear(
+        binary_feature_rows(s["records"], s["bin_dict"], max_bin),
+        s["y"], len(s["labels"]), len(s["bin_dict"]),
+    )
+    mentions = spark.createDataFrame(
+        [{**r, "file_order": 0, "line_no": i}
+         for i, r in enumerate(s["records"])],
+        MENTION_SCHEMA,
+    )
+    spark_preds = classify_loglinear(
+        mentions, weights, s["dicts"], s["labels"], s["bin_dict"], max_bin
+    ).cache()
+    return {
+        "spark_preds": spark_preds,
+        **golden_predictions(
+            s["records"], weights, s["bin_dict"], max_bin, s["labels"]
+        ),
+    }
+
+
+def test_synthetic_per_record_predictions_match_golden(synthetic_run):
+    assert len(synthetic_run["preds"]) == 200
+    assert_predictions_match(
+        synthetic_run["spark_preds"], synthetic_run["preds"]
+    )
+
+
+def test_synthetic_triple_pr_gate(synthetic_run):
+    """The BASELINE.json P/R ≥ 0.95 gate on the synthetic records."""
+    assert_pr_gate(synthetic_run["spark_preds"], synthetic_run["triples"])

@@ -3,10 +3,11 @@
 Each kernel is checked against an independent naive implementation
 (explicit loops) on small random inputs — the zoo's vectorized numpy must
 reproduce the cited recurrence/convolution semantics, not merely run.
-The multi-window conv, CNN/RNN stacks, MLP chain, dropout scaling,
-softmax classifier, argmax, expert product and name dispatch are
-checked as ``model.menu`` composes them, against the same zoo kernels
-chained by hand (forward passes on seeded synthetic records).
+The embedding gather, multi-window conv, CNN/RNN stacks, MLP chain,
+dropout scaling, softmax classifier, argmax, expert product and name
+dispatch are checked as ``model.menu`` composes them, against the
+weight tables and the same zoo kernels chained by hand (forward passes
+on seeded synthetic records).
 """
 
 import numpy as np
@@ -40,16 +41,22 @@ def rand(*shape, scale=0.5):
 # M1/M2
 
 def test_embed_concat_gather_and_pad_row():
-    W1 = rand(5, 3)
-    W1[0] = 0.0  # pad row
-    W2 = rand(4, 2)
-    W2[0] = 0.0
+    """M1 as ``model.menu._family_x`` runs it on a two-embedding-channel
+    spec (word, dist1): each channel gathers its own table's rows, the
+    channels concat on the feature axis, and the pad id 0 is an all-zero
+    position."""
+    spec = _menu_spec("convolute")
+    w = init_menu_weights(spec)
     ids1 = np.array([[1, 2, 0], [3, 0, 0]])
     ids2 = np.array([[2, 1, 0], [1, 0, 0]])
-    out = zoo.embed_concat([ids1, ids2], [W1, W2])
+    out = _family_x(
+        {"word": ids1, "dist1": ids2}, w, spec, spec["families"][0]
+    )
     assert out.shape == (2, 3, 5)
-    assert np.allclose(out[0, 0, :3], W1[1])
-    assert np.allclose(out[0, 0, 3:], W2[2])
+    assert np.allclose(out[0, 0, :3], w["f1_T_word"][1])
+    assert np.allclose(out[0, 0, 3:], w["f1_T_dist1"][2])
+    assert np.allclose(out[1, 0, :3], w["f1_T_word"][3])
+    assert np.allclose(out[1, 0, 3:], w["f1_T_dist1"][1])
     assert np.allclose(out[0, 2], 0.0)  # pad position is all-zero
 
 

@@ -231,8 +231,8 @@ def test_compiled_type_pair_expert_equals_forward_pass():
         )
         fids = keys.map(fid).to_numpy(dtype=np.int64, na_value=-1)
         logits = np.where(
-            (fids >= 0)[:, None], weights["W"][fids], 0.0
-        ) + weights["b"]
+            (fids >= 0)[:, None], weights["bin_W"][fids], 0.0
+        ) + weights["bin_b"]
         return np.array(label_names)[softmax(logits, axis=1).argmax(axis=1)]
 
     types, labels, table = label_table(
@@ -255,8 +255,8 @@ def test_compiled_type_pair_expert_equals_forward_pass():
     compiled = np.where(lab >= 0, np.array(labels.to_pylist())[lab], "NONE")
     assert compiled.tolist() == forward(type1, type2).tolist()
 
-    doctored = dict(weights, b=weights["b"].copy())
-    doctored["b"][label_names.index("PER-SOC")] += 100.0
+    doctored = dict(weights, bin_b=weights["bin_b"].copy())
+    doctored["bin_b"][label_names.index("PER-SOC")] += 100.0
     with pytest.raises(ValueError, match="NONE"):
         compile_type_pair_expert(doctored, label_names, fid)
 

@@ -1,15 +1,20 @@
 """The query registry in __spark_entry__.py: one decorated block per
 query, from which queries(), oracle_sql() and bench.py's tiers derive.
 
-Spark-free: importing the entry file builds no SparkSession.
+Spark-free: importing the entry file builds no SparkSession.  The
+one-declaration guards also scan the ``deepie_spark`` package source.
 """
 
+import ast
+import glob
 import inspect
+import os
 import re
 
 import pytest
 
 import __spark_entry__ as entry
+import deepie_spark
 
 ROWS_ONLY = {"mentions_tagged", "embedding_pca", "pipeline_triples"}
 
@@ -130,3 +135,32 @@ def test_rule_triples_declared_once():
     swap = "LIKE '%(e2,e1)'"
     assert src.count(swap) == 1 and swap in frag
     assert re.findall(r'pos[12]?"?\)?\s*<=\s*\d', src) == []
+
+
+def test_pred_schema_frames_come_from_the_menu_only():
+    """``model.menu.classify_mentions_menu`` is the one relation
+    classifier: no other function of the package passes ``PRED_SCHEMA``
+    to a call (``mapInPandas``, ``createDataFrame``, …), and the schema
+    string is declared once, in ``model.infer``."""
+    root = os.path.dirname(deepie_spark.__file__)
+    head = "rel_id string, corpus string, gold string, pred string,"
+    users, decls = [], []
+    paths = glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
+    for path in sorted(paths):
+        rel = os.path.relpath(path, root)
+        with open(path) as f:
+            src = f.read()
+        decls += [rel] * src.count(head)
+        for stmt in ast.parse(src).body:
+            owner = getattr(stmt, "name", "<module>")
+            for node in ast.walk(stmt):
+                if not isinstance(node, ast.Call):
+                    continue
+                args = [*node.args, *(k.value for k in node.keywords)]
+                if any(
+                    getattr(a, "id", getattr(a, "attr", None)) == "PRED_SCHEMA"
+                    for a in args
+                ):
+                    users.append((rel, owner))
+    assert users == [("model/menu.py", "classify_mentions_menu")]
+    assert decls == ["model/infer.py"]

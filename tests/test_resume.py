@@ -76,6 +76,38 @@ def test_manifest_write_runs_plan_once(spark, pages, tmp_path):
     assert acc.value == n
 
 
+def test_manifest_of_an_empty_write(spark, tmp_path):
+    """A write that produced no triples appends a 0-row manifest file in
+    the manifest schema: the directory reads back (no bucket done), and a
+    later write appends beside it."""
+    out, man = str(tmp_path / "t"), str(tmp_path / "m")
+    empty = spark.createDataFrame(
+        [], "subj string, pred string, obj string, part_id int"
+    )
+    assert write_triples_with_manifest(empty, out, man) == {
+        "parts": 0, "n_triples": 0,
+    }
+    m = spark.read.parquet(man)
+    assert m.count() == 0
+    assert m.schema.simpleString() == (
+        "struct<part_id:int,stage:string,n_pages:bigint,n_mentions:bigint,"
+        "n_pairs:bigint,n_triples:bigint,t_start:double,t_end:double,"
+        "status:string>"
+    )
+    assert done_part_ids(spark, man).count() == 0
+    one = spark.createDataFrame(
+        [("s", "p", "o", 3)], "subj string, pred string, obj string,"
+        " part_id int"
+    )
+    assert write_triples_with_manifest(one, out, man, stage="again") == {
+        "parts": 1, "n_triples": 1,
+    }
+    (r,) = spark.read.parquet(man).collect()
+    assert (r.part_id, r.stage, r.n_triples, r.status) == (3, "again", 1, "done")
+    assert r.n_pages is None and r.t_start <= r.t_end
+    assert [r.part_id for r in done_part_ids(spark, man).collect()] == [3]
+
+
 def test_iceberg_sink_gating_and_fallback(spark, pages, tmp_path):
     """No Iceberg jar in this container: the probe must say so, the
     fallback must produce the parquet+manifest layout, and the missing-

@@ -47,13 +47,16 @@ def test_best_epoch_training_tracks_validation():
 
 
 def test_weight_save_load_roundtrip(tmp_path):
-    w = {"W": np.random.RandomState(0).randn(5, 3), "b": np.zeros(3)}
+    w = {
+        "bin_W": np.random.RandomState(0).randn(5, 3),
+        "bin_b": np.zeros(3),
+    }
     path = str(tmp_path / "weights.npz")
     save_weights(w, path)
     got = load_weights(path)
-    assert set(got) == {"W", "b"}
-    assert np.array_equal(got["W"], w["W"])
-    assert np.array_equal(got["b"], w["b"])
+    assert set(got) == {"bin_W", "bin_b"}
+    assert np.array_equal(got["bin_W"], w["bin_W"])
+    assert np.array_equal(got["bin_b"], w["bin_b"])
 
 
 def test_collapse_labels_column(spark):
