@@ -1,218 +1,217 @@
-"""Feature encoding (F1/F5/F6): parsed records → model input channels.
+"""Feature encoding (F1/F2/F5/F6): relation-mention Arrow batches →
+model input channels.
 
-Re-expresses ``_generatePartialDataInstance`` (rnnRE.py:31-210) and
-``getBinaryVector`` (rnnRE.py:484-510) as batched numpy over Arrow
-record batches — the per-token Python loops of the reference become
-array ops; the *values* are reproduced exactly:
-
-* scalar channels (feature mode 0): word id, governor id,
-  dist1/dist2 = numPosition//2 + i − pos + 1, type/subtype/order ids
-  only at the two head positions (1 = 'Other' elsewhere), constit1/2,
-  preter, prepreter ids;
-* ``grammar`` multi-hot over dep relations (rnnRE.py:83-85);
-* ``iidep`` ∈ {0,1} in-dep-path indicator (rnnRE.py:87-94), and its
-  ``indep`` id twin (2 if on path else 1);
-* zero padding to ``mLen`` on every channel (rnnRE.py:180-207) — id 0
-  is the pad row of every embedding table;
-* the ``order`` channel (F6): at inference the gold-label path is a
-  leak (SURVEY.md §7.4.2) — we always use the override semantics
-  ``rev['order']`` with default 0 (rnnRE.py:37-41);
-* out-of-vocabulary words hard-fail like the reference's
-  'unrecognized features' exit (rnnRE.py:77-80) — J1 is an inner
-  dictionary probe, not a lossy lookup.
+Re-expresses ``_generatePartialDataInstance`` (rnnRE.py:31-210), its
+dependency-path twin (:212-372) and ``getBinaryVector`` (:484-510) as
+one columnar encoder over a ``RecordBatch`` in ``MENTION_SCHEMA``'s
+Spark-Arrow form (a ``mapInArrow`` kernel's input, or
+:func:`records_batch` of parsed records): one ``index_in`` dictionary
+lookup per channel, every ``(B, mLen[, k])`` channel scattered from the
+list offsets.  The values are the reference's, quirks included (cited
+where encoded); the ``order`` channel (F6) never reads the gold label
+at inference (SURVEY.md §7.4.2).  An unknown value raises ``KeyError``
+naming it, like the reference's 'unrecognized features' exit
+(rnnRE.py:77-80).  A flattened gather would read a malformed row's
+neighbour, so a malformed row raises ``ValueError``: a null list, a
+list of the wrong length, a head or ``dep_idx`` entry outside its row,
+a row longer than ``mLen``, more known features than ``max_bin``.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_schema
 
-def norm(w: str) -> str:
-    """Reference ' '.join(w.split('_')) (rnnRE.py:74-75)."""
-    return " ".join(w.split("_"))
+from deepie_spark.sources.tsv_corpus import MENTION_SCHEMA
+
+#: ``MENTION_SCHEMA`` in the Arrow form Spark hands a ``mapInArrow``
+#: kernel
+ARROW_SCHEMA = to_arrow_schema(MENTION_SCHEMA)
+
+#: the dictionary each id channel looks its values up in
+CHANNEL_DICT = {
+    "word": "word", "gov": "word", "type": "type", "subtype": "subtype",
+    "constit1": "constit", "constit2": "constit", "preter": "preter",
+    "prepreter": "prepreter", "grammar": "deprel",
+}
+
+#: the columns each channel reads beside its sequence (``tokens``,
+#: ``pos1``, ``pos2`` on the surface; ``tokens``, ``dep_idx``,
+#: ``dep_tokens`` on the dependency path)
+CHANNEL_COLUMNS = {
+    "word": (), "dist1": (), "dist2": (), "order": (),
+    "type": ("type1", "type2"), "subtype": ("subtype1", "subtype2"),
+    "constit1": ("cons1",), "constit2": ("cons2",), "preter": ("preter",),
+    "prepreter": ("prepreter",), "grammar": ("grammar",),
+    "gov": ("governors",), "indep": ("dep_idx",), "iidep": ("dep_idx",),
+}
 
 
-def encode_record(
-    rec: dict,
+def records_batch(records: list[dict]) -> pa.RecordBatch:
+    """Parsed records (``sources.tsv_corpus.parse_line`` dicts) → one
+    batch in :data:`ARROW_SCHEMA`; a key a record lacks is null."""
+    return pa.RecordBatch.from_pylist(records, schema=ARROW_SCHEMA)
+
+
+def encoded_columns(channels, dep: bool = False) -> set[str]:
+    """The columns :func:`encode_channels` reads for ``channels``."""
+    seq = ("dep_idx", "dep_tokens") if dep else ("pos1", "pos2")
+    return {"tokens", *seq, *(c for ch in channels
+                              for c in CHANNEL_COLUMNS[ch])}
+
+
+def _flat(arr: pa.Array, name: str) -> tuple[pa.Array, np.ndarray]:
+    """A list (or map) array as its values and 0-based offsets, the
+    values cut to the array's own rows (a sliced batch keeps its
+    neighbours' values in the child array)."""
+    if arr.null_count:
+        raise ValueError(f"null {name} list")
+    off = np.asarray(arr.offsets, np.int64)
+    return arr.values.slice(off[0], off[-1] - off[0]), off - off[0]
+
+
+def _ints(arr: pa.Array, name: str) -> np.ndarray:
+    if arr.null_count:
+        raise ValueError(f"null {name}")
+    return np.asarray(arr, np.int64)
+
+
+def _ids(values: pa.Array, d: dict[str, int], what: str) -> np.ndarray:
+    """One ``index_in`` lookup of ``values`` in ``d`` → int64 ids."""
+    idx = pc.index_in(values, value_set=pa.array(list(d), pa.string()))
+    if idx.null_count:
+        bad = values.filter(idx.is_null())[0].as_py()
+        raise KeyError(f"unrecognized {what} {bad!r}")
+    return np.fromiter(d.values(), np.int64, len(d))[np.asarray(idx)]
+
+
+def _words(values: pa.Array, d: dict[str, int]) -> np.ndarray:
+    """Word ids of ``' '.join(w.split('_'))`` (rnnRE.py:74-75)."""
+    return _ids(pc.replace_substring(values, "_", " "), d, "word")
+
+
+def _path(batch: pa.RecordBatch, n_tok: np.ndarray):
+    """``dep_idx`` as (offsets, owner row, token index in that row)."""
+    path, off = _flat(batch.column("dep_idx"), "dep_idx")
+    row = np.repeat(np.arange(batch.num_rows), np.diff(off))
+    at = _ints(path, "dep_idx entry")
+    if ((at < 0) | (at >= n_tok[row])).any():
+        raise ValueError("dep_idx entry outside its row")
+    return off, row, at
+
+
+def _heads(batch: pa.RecordBatch, n: np.ndarray):
+    """(pos1, pos2), each checked to lie in ``[0, n)`` of its row."""
+    heads = [_ints(batch.column(p), p) for p in ("pos1", "pos2")]
+    if any(((pos < 0) | (pos >= n)).any() for pos in heads):
+        raise ValueError("head position outside its row")
+    return heads
+
+
+def head_tokens(batch: pa.RecordBatch) -> tuple[pa.Array, pa.Array]:
+    """Every row's entity head tokens ``tokens[pos1]``, ``tokens[pos2]``."""
+    toks, off = _flat(batch.column("tokens"), "tokens")
+    pos1, pos2 = _heads(batch, np.diff(off))
+    return toks.take(off[:-1] + pos1), toks.take(off[:-1] + pos2)
+
+
+def encode_channels(
+    batch: pa.RecordBatch,
     dicts: dict[str, dict[str, int]],
     m_len: int,
     num_position: int,
+    channels=tuple(CHANNEL_COLUMNS),
+    dep: bool = False,
     order_override: int = 0,
 ) -> dict[str, np.ndarray]:
-    """One record → channel arrays (scalar/id mode, features=0).
+    """A batch → ``channels`` as ``(B, m_len[, k])`` arrays (scalar/id
+    mode, features=0), plus the head positions ``pos1``/``pos2``.
 
-    ``rec`` uses the parsed-table schema (sources.tsv_corpus): string
-    arrays + pos1/pos2 + type/subtype strings.
-    """
-    words = [norm(w) for w in rec["tokens"]]
-    govs = [norm(g) for g in rec["governors"]]
-    n = len(words)
-    if n > m_len:
-        raise ValueError("record longer than mLen")
-    wd = dicts["word"]
-    try:
-        x = [wd[w] for w in words]
-        gov = [wd[g] for g in govs]
-    except KeyError as e:  # rnnRE.py:172-174 'unrecognized features'
-        raise KeyError(f"unrecognized word {e}") from e
-    cons1 = [dicts["constit"][c] for c in rec["cons1"]]
-    cons2 = [dicts["constit"][c] for c in rec["cons2"]]
-    preter = [dicts["preter"][p] for p in rec["preter"]]
-    prepreter = [dicts["prepreter"][p] for p in rec["prepreter"]]
-    ty1 = dicts["type"][rec["type1"]]
-    ty2 = dicts["type"][rec["type2"]]
-    sty1 = dicts["subtype"][rec["subtype1"]]
-    sty2 = dicts["subtype"][rec["subtype2"]]
-    pos1, pos2 = rec["pos1"], rec["pos2"]
-    dep_set = set(rec["dep_idx"])
-    order_id = order_override  # F6: never the gold label at inference
+    ``dep=False`` encodes the surface sequence (``tokens``, heads
+    ``pos1``/``pos2``); ``dep=True`` the dependency path: sequence
+    ``dep_tokens``, token-aligned features gathered through ``dep_idx``,
+    heads at the path ends (dep_pos1=0, dep_pos2=len-1,
+    rnn_process_onlyExtra.py:489).  Only the columns of
+    :func:`encoded_columns` are read."""
+    b = np.arange(batch.num_rows)
+    toks, tok_off = _flat(batch.column("tokens"), "tokens")
+    n_tok = np.diff(tok_off)
+    if dep:
+        off, row, src = _path(batch, n_tok)
+        src += tok_off[row]
+        n = np.diff(off)
+        words, w_off = _flat(batch.column("dep_tokens"), "dep_tokens")
+        if not np.array_equal(np.diff(w_off), n):
+            raise ValueError("dep_idx length differs from dep_tokens")
+        if (n < 1).any():
+            raise ValueError("empty dep path")
+        pos1, pos2 = np.zeros(len(b), np.int64), n - 1
+    else:
+        n, off, words = n_tok, tok_off, toks
+        row = np.repeat(b, n)
+        pos1, pos2 = _heads(batch, n)
+    if (n > m_len).any():
+        raise ValueError("dep path longer than mDepLen" if dep
+                         else "record longer than mLen")
+    col = np.arange(len(row)) - off[row]
+    want = set(channels)
 
-    center = num_position // 2
-    i = np.arange(n)
-    dist1 = center + i - pos1 + 1
-    dist2 = center + i - pos2 + 1
+    def grid(values, dtype=np.int32) -> np.ndarray:
+        out = np.zeros((len(b), m_len), dtype)  # zero pad, rnnRE.py:180-207
+        out[row, col] = values
+        return out
 
-    type_ch = np.ones(n, dtype=np.int32)
-    subtype_ch = np.ones(n, dtype=np.int32)
-    order_ch = np.full(n, 3, dtype=np.int32)
+    def aligned(name: str) -> pa.Array:
+        """A token-aligned list's values at the sequence positions."""
+        values, v_off = _flat(batch.column(name), name)
+        if not np.array_equal(np.diff(v_off), n_tok):
+            raise ValueError(f"{name} length differs from tokens")
+        return values.take(src) if dep else values
+
+    enc = {"pos1": pos1, "pos2": pos2}
+    if "word" in want:
+        enc["word"] = grid(_words(words, dicts["word"]))
+    if "gov" in want:
+        enc["gov"] = grid(_words(aligned("governors"), dicts["word"]))
+    center = num_position // 2  # dist = center + i - pos + 1, rnnRE.py:109
+    for ch, pos in (("dist1", pos1), ("dist2", pos2)):
+        if ch in want:
+            enc[ch] = grid(center + col - pos[row] + 1)
     # pos2 assigned first, pos1 second: the reference's if/elif makes
     # pos1 win when pos1 == pos2 (rnnRE.py:132-156)
-    type_ch[pos2], subtype_ch[pos2] = ty2, sty2
-    order_ch[pos2] = 2 - order_id
-    type_ch[pos1], subtype_ch[pos1] = ty1, sty1
-    order_ch[pos1] = order_id + 1
-
-    iidep = np.array([1 if j in dep_set else 0 for j in range(n)], np.int32)
-    indep = iidep + 1
-
-    # multi-hot width = numDeprel = deprel table rows - 1 = len(dict):
-    # ids 1..len map to columns 0..len-1 (graFet[gid-1], rnnRE.py:83-85)
-    n_deprel = len(dicts["deprel"])
-    grammar = np.zeros((m_len, n_deprel), dtype=np.float32)
-    for j, gs in enumerate(rec["grammar"]):
-        for g in gs:
-            grammar[j, dicts["deprel"][g] - 1] = 1.0
-
-    def pad(a, fill=0):
-        out = np.zeros(m_len, dtype=np.int32)
-        out[:n] = a
-        return out
-
-    return {
-        "word": pad(x),
-        "gov": pad(gov),
-        "dist1": pad(dist1),
-        "dist2": pad(dist2),
-        "type": pad(type_ch),
-        "subtype": pad(subtype_ch),
-        "order": pad(order_ch),
-        "constit1": pad(cons1),
-        "constit2": pad(cons2),
-        "preter": pad(preter),
-        "prepreter": pad(prepreter),
-        "indep": pad(indep),
-        "iidep": pad(iidep).astype(np.float32),
-        "grammar": grammar,
-    }
-
-
-def encode_dep_record(
-    rec: dict,
-    dicts: dict[str, dict[str, int]],
-    m_dep_len: int,
-    num_dep_position: int,
-    order_override: int = 0,
-) -> dict[str, np.ndarray]:
-    """F2: the same channel family over the dependency path
-    (dep_generatePartialDataInstance rnnRE.py:212-372).
-
-    The sequence is the dep-path tokens; token-aligned features are
-    gathered through ``dep_idx`` (retrieveDepFeatures
-    rnn_process_onlyExtra.py:474-489), head positions are the path ends
-    (dep_pos1=0, dep_pos2=len-1, :489).  Reference quirks reproduced
-    exactly: the scalar ``indep`` channel is 0 at every path position
-    (rnnRE.py:269-271) and ``iidep`` is 1 everywhere on the path.
-    """
-    dep = rec["dep_idx"]
-    words = [norm(w) for w in rec["dep_tokens"]]
-    govs = [norm(rec["governors"][i]) for i in dep]
-    n = len(words)
-    if n > m_dep_len:
-        raise ValueError("dep path longer than mDepLen")
-    wd = dicts["word"]
-    try:  # rnnRE.py:336-338 'unrecognized dep features' fail-fast
-        x = [wd[w] for w in words]
-        gov = [wd[g] for g in govs]
-        cons1 = [dicts["constit"][rec["cons1"][i]] for i in dep]
-        cons2 = [dicts["constit"][rec["cons2"][i]] for i in dep]
-        preter = [dicts["preter"][rec["preter"][i]] for i in dep]
-        prepreter = [dicts["prepreter"][rec["prepreter"][i]] for i in dep]
-        ty1 = dicts["type"][rec["type1"]]
-        ty2 = dicts["type"][rec["type2"]]
-        sty1 = dicts["subtype"][rec["subtype1"]]
-        sty2 = dicts["subtype"][rec["subtype2"]]
-    except KeyError as e:
-        raise KeyError(f"unrecognized dep features {e}") from e
-    pos1, pos2 = 0, n - 1
-    order_id = order_override
-
-    center = num_dep_position // 2
-    i = np.arange(n)
-    dist1 = center + i - pos1 + 1
-    dist2 = center + i - pos2 + 1
-
-    type_ch = np.ones(n, dtype=np.int32)
-    subtype_ch = np.ones(n, dtype=np.int32)
-    order_ch = np.full(n, 3, dtype=np.int32)
-    # pos2 first, pos1 second: pos1 wins on a length-1 path (if/elif)
-    type_ch[pos2], subtype_ch[pos2] = ty2, sty2
-    order_ch[pos2] = 2 - order_id
-    type_ch[pos1], subtype_ch[pos1] = ty1, sty1
-    order_ch[pos1] = order_id + 1
-
-    n_deprel = len(dicts["deprel"])
-    grammar = np.zeros((m_dep_len, n_deprel), dtype=np.float32)
-    for j, src in enumerate(dep):
-        for g in rec["grammar"][src]:
-            grammar[j, dicts["deprel"][g] - 1] = 1.0
-
-    def pad(a):
-        out = np.zeros(m_dep_len, dtype=np.int32)
-        out[:n] = a
-        return out
-
-    iidep = np.zeros(m_dep_len, dtype=np.float32)
-    iidep[:n] = 1.0
-    return {
-        "word": pad(x),
-        "gov": pad(gov),
-        "dist1": pad(dist1),
-        "dist2": pad(dist2),
-        "type": pad(type_ch),
-        "subtype": pad(subtype_ch),
-        "order": pad(order_ch),
-        "constit1": pad(cons1),
-        "constit2": pad(cons2),
-        "preter": pad(preter),
-        "prepreter": pad(prepreter),
-        "indep": np.zeros(m_dep_len, dtype=np.int32),  # rnnRE.py:269-271
-        "iidep": iidep,
-        "grammar": grammar,
-    }
-
-
-def encode_batch(
-    records: list[dict],
-    dicts: dict[str, dict[str, int]],
-    m_len: int,
-    num_position: int,
-) -> dict[str, np.ndarray]:
-    """Stack per-record channels into (batch, mLen[, k]) tensors —
-    the Arrow-batch analog of make_data's columnarization
-    (rnnRE.py:425-438, 844-851)."""
-    encs = [encode_record(r, dicts, m_len, num_position) for r in records]
-    return {
-        k: np.stack([e[k] for e in encs]) for k in encs[0]
-    }
+    for ch in want & {"type", "subtype"}:
+        c1, c2 = CHANNEL_COLUMNS[ch]
+        enc[ch] = grid(1)
+        enc[ch][b, pos2] = _ids(batch.column(c2), dicts[ch], ch)
+        enc[ch][b, pos1] = _ids(batch.column(c1), dicts[ch], ch)
+    if "order" in want:
+        enc["order"] = grid(3)
+        enc["order"][b, pos2] = 2 - order_override
+        enc["order"][b, pos1] = order_override + 1
+    for ch in want & {"constit1", "constit2", "preter", "prepreter"}:
+        d = CHANNEL_DICT[ch]
+        enc[ch] = grid(_ids(aligned(CHANNEL_COLUMNS[ch][0]), dicts[d], d))
+    if want & {"indep", "iidep"}:
+        if dep:  # rnnRE.py:269-271
+            iidep = grid(1)
+        else:
+            iidep = np.zeros((len(b), m_len), np.int32)  # rnnRE.py:87-94
+            iidep[_path(batch, n_tok)[1:]] = 1
+        enc["indep"] = grid(0 if dep else iidep[row, col] + 1)
+        enc["iidep"] = iidep.astype(np.float32)
+    if "grammar" in want:
+        # multi-hot width = numDeprel = deprel table rows - 1 = len(dict):
+        # ids 1..len map to columns 0..len-1 (graFet[gid-1], rnnRE.py:83-85)
+        rels, r_off = _flat(aligned("grammar"), "grammar token")
+        owner = np.repeat(np.arange(len(row)), np.diff(r_off))
+        ids = _ids(rels, dicts["deprel"], "deprel")
+        enc["grammar"] = np.zeros(
+            (len(b), m_len, len(dicts["deprel"])), np.float32
+        )
+        enc["grammar"][row[owner], col[owner], ids - 1] = 1.0
+    return enc
 
 
 def one_hot_channel(ids: np.ndarray, width: int) -> np.ndarray:
@@ -234,15 +233,56 @@ def one_hot_channel(ids: np.ndarray, width: int) -> np.ndarray:
 
 
 def binary_feature_rows(
-    records: list[dict], bin_dict: dict[str, int], max_len: int
+    batch: pa.RecordBatch, bin_dict: dict[str, int], max_len: int
 ) -> np.ndarray:
-    """F5: feature strings → [count, id1, …, -1 pad] int rows
+    """F5: ``bin_feats`` strings → [count, id1, …, -1 pad] int rows
     (convertBinaryFeatures/getBinaryVector rnnRE.py:484-510).
     Unknown features (below cutoff / unseen) are skipped."""
-    out = np.full((len(records), max_len + 1), -1, dtype=np.int64)
-    for i, rec in enumerate(records):
-        ids = [bin_dict[f] for f in rec["bin_feats"] if f in bin_dict]
-        out[i, 0] = len(ids)
-        if ids:
-            out[i, 1 : len(ids) + 1] = ids
+    feats, off = _flat(batch.column("bin_feats"), "bin_feats")
+    idx = pc.index_in(feats, value_set=pa.array(list(bin_dict), pa.string()))
+    row = np.repeat(np.arange(batch.num_rows), np.diff(off))
+    row = row[np.asarray(idx.is_valid())]
+    ids = np.fromiter(bin_dict.values(), np.int64, len(bin_dict))
+    count = np.bincount(row, minlength=batch.num_rows)
+    if (count > max_len).any():
+        raise ValueError("more known binary features than max_bin")
+    out = np.full((batch.num_rows, max_len + 1), -1, dtype=np.int64)
+    out[:, 0] = count
+    rank = np.arange(len(row)) - (np.cumsum(count) - count)[row]
+    out[row, 1 + rank] = ids[np.asarray(idx.drop_null())]
+    return out
+
+
+def kernel_score_matrix(
+    batch: pa.RecordBatch, label_dict: dict[str, int], n_classes: int,
+    fill: bool = False,
+) -> np.ndarray:
+    """Per-class kernel scores from the parsed field-13 map.
+
+    ``fill=False`` reproduces the reference's active code — every score
+    pinned to -1.0 (rnn_process_onlyExtra.py:267-273), a no-op expert
+    after renormalization; ``fill=True`` enables the label-indexed fill
+    the same lines document in commented form (a label unknown with its
+    ``(e1,e2)``/``(e2,e1)`` suffix is tried without; a row's later entry
+    for a class wins)."""
+    out = np.full((batch.num_rows, n_classes), -1.0, dtype=np.float32)
+    if not fill:
+        return out
+    entries, off = _flat(batch.column("kernel_score"), "kernel_score")
+    labs, scores = entries.flatten()
+    base = pc.replace_substring(
+        pc.replace_substring(labs, "(e1,e2)", ""), "(e2,e1)", ""
+    )
+    value_set = pa.array(list(label_dict), pa.string())
+    idx = pc.coalesce(
+        pc.index_in(labs, value_set=value_set),
+        pc.index_in(base, value_set=value_set),
+    )
+    row = np.repeat(np.arange(batch.num_rows), np.diff(off))
+    hit = np.asarray(idx.is_valid())
+    ids = np.fromiter(label_dict.values(), np.int64, len(label_dict))
+    flat = row[hit] * n_classes + ids[np.asarray(idx.drop_null())]
+    scores = scores.to_numpy(zero_copy_only=False)[hit]
+    last = len(flat) - 1 - np.unique(flat[::-1], return_index=True)[1]
+    out.flat[flat[last]] = scores[last]
     return out

@@ -3,8 +3,8 @@
 
 Every relation classifier, the sparse log-linear expert (M18) included,
 runs through ``model.menu``: ``menu_forward`` on the driver and
-``classify_mentions_menu`` in ``mapInPandas``, which yields
-:data:`PRED_SCHEMA` rows.  The log-linear expert is the menu's
+``classify_mentions_menu``'s ``mapInArrow`` kernel, which yields
+:data:`PRED_SCHEMA` batches.  The log-linear expert is the menu's
 ``#MultiNN`` spec, and ``model.train`` trains its ``bin_W``/``bin_b``
 weights under those names.  :func:`triples_from_predictions` turns the
 predictions into directed triples.  The one-feature type-pair expert

@@ -12,16 +12,17 @@ kernel-score expert (:1135-1137).
 
 Here the same menu is a *spec*: a plain broadcastable dict resolved once
 on the driver (``make_spec``), a flat numpy weight dict
-(``init_menu_weights``), and one batched forward (``menu_forward``) that
-runs identically on the driver (golden) and inside ``mapInPandas``
+(``init_menu_weights``), and one forward over an Arrow mention batch
+(``batch_forward``) that runs identically on the driver (golden,
+``menu_forward`` of parsed records) and inside ``mapInArrow``
 (``classify_mentions_menu``) — the parity contract of the engine.
 ``_COMPONENTS`` is the engine's one table from model name to graph, and
-``menu_forward`` its one forward, neural and log-linear alike:
+``batch_forward`` its one forward, neural and log-linear alike:
 ``model.train_neural`` trains the weights of a ``convolute`` or
 ``rnnHead`` spec in place, ``model.train`` trains the log-linear expert
 as a ``#MultiNN`` weight dict (``bin_W``, ``bin_b``), and the same spec
 and weights run here at inference.  ``classify_mentions_menu`` is the
-engine's one ``mapInPandas`` relation classifier.
+engine's one relation classifier.
 
 Channel families:
 
@@ -48,14 +49,19 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from deepie_spark.model.encoder import (
+    ARROW_SCHEMA,
+    CHANNEL_DICT,
     binary_feature_rows,
-    encode_batch,
-    encode_dep_record,
+    encode_channels,
+    encoded_columns,
+    head_tokens,
+    kernel_score_matrix,
     one_hot_channel,
+    records_batch,
 )
 from deepie_spark.model.infer import PRED_SCHEMA
 from deepie_spark.model.zoo import (
@@ -227,16 +233,14 @@ def make_spec(
             {"fam": "f1", "component": "dynamicPooling", "seq": seq[0],
              "modes": m1}
         ]
+    # one-hot widths of the channels the families use; dist widths
+    # follow each family's sequence (family_widths)
+    fixed = {"order": 3, "indep": 2}
     widths = {
-        "type": dict_sizes["type"],
-        "subtype": dict_sizes["subtype"],
-        "order": 3,
-        "constit1": dict_sizes["constit"],
-        "constit2": dict_sizes["constit"],
-        "preter": dict_sizes["preter"],
-        "prepreter": dict_sizes["prepreter"],
-        "grammar": dict_sizes["deprel"],
-        "indep": 2,
+        ch: fixed[ch] if ch in fixed else dict_sizes[CHANNEL_DICT[ch]]
+        for f in families
+        for ch, m in f["modes"].items()
+        if m >= 0 and ch not in ("word", "gov", "dist1", "dist2")
     }
     return {
         "model": model,
@@ -328,9 +332,7 @@ def _component_out_dim(spec: dict, f: dict) -> int:
         "convThenGruBi": 2 * nh, "convThenGruBiDeep": 2 * nh,
         "convThenGruF": nh, "convThenGruB": nh,
     }[core]
-    if pool == "convpool":
-        return conv_out
-    if pool in ("convmean", "convdep"):
+    if pool in ("convpool", "convmean", "convdep"):
         return conv_out
     if pool == "head":
         return 2 * h_dim
@@ -375,16 +377,7 @@ def init_menu_weights(spec: dict, seed: int = 8989) -> dict[str, np.ndarray]:
     nc = spec["n_classes"]
     for f in spec["families"]:
         fam = f["fam"]
-        np_ = _fam_num_position(spec, f)
-        sizes = {
-            "word": ds["word"] + 1,
-            "dist1": np_ + 1, "dist2": np_ + 1,
-            "type": ds["type"] + 1, "subtype": ds["subtype"] + 1,
-            "order": 4,
-            "constit1": ds["constit"] + 1, "constit2": ds["constit"] + 1,
-            "preter": ds["preter"] + 1, "prepreter": ds["prepreter"] + 1,
-            "indep": 3,
-        }
+        widths = family_widths(spec, f)
         for ch in CHANNELS:
             if f["modes"].get(ch, -1) != 0 or ch in ("gov", "grammar"):
                 continue  # gov reads the word table; grammar is mode 1
@@ -395,8 +388,10 @@ def init_menu_weights(spec: dict, seed: int = 8989) -> dict[str, np.ndarray]:
             ):
                 w[key] = w["f1_T_word"]  # sharedEmbs['word'] default
                 continue
-            dim = spec["word_dim"] if ch == "word" else spec["feat_dim"]
-            w[key] = table(sizes[ch], dim)
+            if ch == "word":
+                w[key] = table(ds["word"] + 1, spec["word_dim"])
+            else:  # the one-hot width plus the pad row
+                w[key] = table(widths[ch] + 1, spec["feat_dim"])
         comp = f["component"]
         if comp == "dynamicPooling":
             continue  # pools raw x, no core params
@@ -462,21 +457,16 @@ def init_menu_weights(spec: dict, seed: int = 8989) -> dict[str, np.ndarray]:
     if spec["use_head_emb"] and "f1_T_word" not in w:
         w["f1_T_word"] = table(ds["word"] + 1, spec["word_dim"])
 
+    def layers(prefix: str, dims: list[int]) -> None:
+        for i, (nin, nout) in enumerate(zip(dims, dims[1:])):
+            w[f"{prefix}_W{i}"] = mat(nin, nout)
+            w[f"{prefix}_b{i}"] = np.zeros(nout, np.float32)
+
     kind = spec["kind"]
-    if kind == "dynpool":
-        f = spec["families"][0]
-        dims = [5 * family_in_dim(spec, f)] + spec["multilayer1"]
-        for i, (nin, nout) in enumerate(zip(dims, dims[1:])):
-            w[f"mlp1_W{i}"] = mat(nin, nout)
-            w[f"mlp1_b{i}"] = np.zeros(nout, np.float32)
-        w["cls_W"] = mat(dims[-1], nc)
-        w["cls_b"] = np.zeros(nc, np.float32)
-    elif kind == "main":
-        dim = sum(_component_out_dim(spec, f) for f in spec["families"])
-        dims = [dim] + spec["multilayer1"]
-        for i, (nin, nout) in enumerate(zip(dims, dims[1:])):
-            w[f"mlp1_W{i}"] = mat(nin, nout)
-            w[f"mlp1_b{i}"] = np.zeros(nout, np.float32)
+    if kind in ("main", "dynpool"):
+        out = sum(_component_out_dim(spec, f) for f in spec["families"])
+        dims = [out] + spec["multilayer1"]
+        layers("mlp1", dims)
         w["cls_W"] = mat(dims[-1], nc)
         w["cls_b"] = np.zeros(nc, np.float32)
     elif kind == "ensemble":
@@ -484,67 +474,81 @@ def init_menu_weights(spec: dict, seed: int = 8989) -> dict[str, np.ndarray]:
             d = _component_out_dim(spec, f)
             w[f"{f['fam']}_exp_W"] = mat(d, nc)
             w[f"{f['fam']}_exp_b"] = np.zeros(nc, np.float32)
-        if spec["ensemble_binary"]:
-            _init_multinn(w, spec, rng, mat)
     elif kind == "hybrid":
-        f = spec["families"][0]
-        dims = [_component_out_dim(spec, f)] + spec["multilayer2"]
-        for i, (nin, nout) in enumerate(zip(dims, dims[1:])):
-            w[f"mlp2_W{i}"] = mat(nin, nout)
-            w[f"mlp2_b{i}"] = np.zeros(nout, np.float32)
+        out = _component_out_dim(spec, spec["families"][0])
+        dims = [out] + spec["multilayer2"]
+        layers("mlp2", dims)
         w["model_fW"] = mat(dims[-1], nc)
         w["model_fb"] = np.zeros(nc, np.float32)
-        _init_multinn(w, spec, rng, mat)
-    elif kind == "multinn":
-        _init_multinn(w, spec, rng, mat)
+    if _bin_expert(spec):
+        # MultiNN expert params (rnnReModels.py:772-855, hids layout
+        # [binDim] + multilayerNN1 + [nc])
+        hids = [spec["bin_dim"]] + spec["multilayer1"] + [nc]
+        w["bin_W"] = mat(hids[0], hids[1])
+        w["bin_b"] = np.zeros(hids[1], np.float32)
+        if spec["use_head_emb"]:
+            w["binhead_W"] = mat(2 * spec["word_dim"], hids[1])
+            w["binhead_b"] = np.zeros(hids[1], np.float32)
+        if len(hids) > 2:
+            layers("binmlp", hids[1:-1])
+            w["bin_fW"] = mat(hids[-2], nc)
+            w["bin_fb"] = np.zeros(nc, np.float32)
     return w
 
 
-def _init_multinn(w: dict, spec: dict, rng, mat) -> None:
-    """MultiNN expert params (rnnReModels.py:772-855, hids layout
-    [binDim] + multilayerNN1 + [nc])."""
-    nc = spec["n_classes"]
-    hids = [spec["bin_dim"]] + spec["multilayer1"] + [nc]
-    w["bin_W"] = mat(hids[0], hids[1])
-    w["bin_b"] = np.zeros(hids[1], np.float32)
-    if spec["use_head_emb"]:
-        w["binhead_W"] = mat(2 * spec["word_dim"], hids[1])
-        w["binhead_b"] = np.zeros(hids[1], np.float32)
-    if len(hids) > 2:
-        inner = hids[1:-1]
-        for i, (nin, nout) in enumerate(zip(inner, inner[1:])):
-            w[f"binmlp_W{i}"] = mat(nin, nout)
-            w[f"binmlp_b{i}"] = np.zeros(nout, np.float32)
-        w["bin_fW"] = mat(inner[-1], nc)
-        w["bin_fb"] = np.zeros(nc, np.float32)
+def _bin_expert(spec: dict) -> bool:
+    """Whether the spec runs the MultiNN log-linear expert."""
+    kind = spec["kind"]
+    return kind in ("multinn", "hybrid") or (
+        kind == "ensemble" and spec["ensemble_binary"]
+    )
 
 
 # ---------------------------------------------------------------------------
 # forward
 
+def _family_channels(spec: dict, f: dict) -> list[str]:
+    """The encoder channels one family reads: its active channels, and
+    ``iidep`` under a dep-path-masked pool."""
+    chans = [ch for ch in CHANNELS if f["modes"].get(ch, -1) >= 0]
+    comp = f["component"]
+    if comp in _COMPONENTS and _COMPONENTS[comp][1] in ("depsum", "convdep"):
+        chans.append("iidep")
+    return chans
+
+
 def _family_encode(
-    records: list[dict], dicts: dict, spec: dict, f: dict
+    batch: pa.RecordBatch, dicts: dict, spec: dict, f: dict
 ) -> tuple[dict[str, np.ndarray], np.ndarray, np.ndarray]:
     """Encoded channels + head positions for one family."""
-    if f["seq"] == "dep":
-        encs = [
-            encode_dep_record(
-                r, dicts, spec["m_dep_len"], spec["num_dep_position"]
-            )
-            for r in records
-        ]
-        enc = {k: np.stack([e[k] for e in encs]) for k in encs[0]}
-        pos1 = np.zeros(len(records), dtype=np.int64)
-        pos2 = np.array(
-            [len(r["dep_tokens"]) - 1 for r in records], dtype=np.int64
-        )
-    else:
-        enc = encode_batch(
-            records, dicts, spec["m_len"], spec["num_position"]
-        )
-        pos1 = np.array([r["pos1"] for r in records])
-        pos2 = np.array([r["pos2"] for r in records])
-    return enc, pos1, pos2
+    dep = f["seq"] == "dep"
+    enc = encode_channels(
+        batch, dicts, spec["m_dep_len" if dep else "m_len"],
+        _fam_num_position(spec, f), _family_channels(spec, f), dep,
+    )
+    return enc, enc["pos1"], enc["pos2"]
+
+
+def _head_dep(spec: dict) -> bool:
+    """Whether the head embedding reads the dep path: it reads the
+    first family's sequence, the surface when there is none
+    (#MultiNN)."""
+    return bool(spec["families"]) and spec["families"][0]["seq"] == "dep"
+
+
+def spec_columns(spec: dict) -> set[str]:
+    """The mention columns :func:`batch_forward` reads for ``spec``."""
+    cols = set()
+    for f in spec["families"]:
+        cols |= encoded_columns(_family_channels(spec, f), f["seq"] == "dep")
+    if _bin_expert(spec):
+        cols.add("bin_feats")
+        if spec["use_head_emb"]:
+            cols |= encoded_columns(["word"], _head_dep(spec))
+    if spec["kind"] == "hybrid" and spec["kernel_score"]:
+        if spec["kernel_fill"]:  # an unfilled kernel expert reads nothing
+            cols.add("kernel_score")
+    return cols
 
 
 def _family_x(
@@ -703,27 +707,6 @@ def _multinn_logits(
     return h @ w["bin_fW"] + w["bin_fb"]
 
 
-def kernel_score_matrix(
-    records: list[dict], label_dict: dict[str, int], n_classes: int,
-    fill: bool = False,
-) -> np.ndarray:
-    """Per-class kernel scores from the parsed field-13 map.
-
-    ``fill=False`` reproduces the reference's active code — every score
-    pinned to -1.0 (rnn_process_onlyExtra.py:267-273), a no-op expert
-    after renormalization; ``fill=True`` enables the label-indexed fill
-    the same lines document in commented form."""
-    out = np.full((len(records), n_classes), -1.0, dtype=np.float32)
-    if fill:
-        for i, r in enumerate(records):
-            for lab, sc in (r.get("kernel_score") or {}).items():
-                base = lab.replace("(e1,e2)", "").replace("(e2,e1)", "")
-                key = lab if lab in label_dict else base
-                if key in label_dict:
-                    out[i, label_dict[key]] = sc
-    return out
-
-
 def menu_forward(
     records: list[dict],
     dicts: dict[str, dict[str, int]],
@@ -731,88 +714,77 @@ def menu_forward(
     spec: dict,
     bin_dict: dict[str, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Spec-driven forward pass → (pred ids, probability matrix).
+    """Spec-driven forward pass over parsed records → (pred ids,
+    probability matrix): :func:`batch_forward` of their Arrow batch,
+    the computation every ``classify_mentions_menu`` batch runs."""
+    return batch_forward(
+        records_batch(records), dicts, weights, spec, bin_dict
+    )
 
-    Runs on the driver (golden) and inside every Arrow batch
-    (classify_mentions_menu) — bitwise the same computation."""
+
+def batch_forward(
+    batch: pa.RecordBatch,
+    dicts: dict[str, dict[str, int]],
+    weights: dict[str, np.ndarray],
+    spec: dict,
+    bin_dict: dict[str, int] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Spec-driven forward pass over one mention batch (reading only
+    :func:`spec_columns`) → (pred ids, probability matrix)."""
     w = weights
     kind = spec["kind"]
-    drop = spec["dropout"]
-    scale = 1.0 - drop  # inference-side dropout scaling (M9)
-
-    def bin_rows():
-        return binary_feature_rows(records, bin_dict or {}, spec["max_bin"])
-
-    def head_emb():
-        if not spec["use_head_emb"]:
-            return None
-        f = spec["families"][0] if spec["families"] else {
-            "fam": "f1", "seq": "surface",
-            "modes": default_modes({"grammar": -1, "gov": -1}),
-            "component": "convolute",
-        }
-        enc, pos1, pos2 = _family_encode(records, dicts, spec, f)
-        tab = w["f1_T_word"]
-        b = np.arange(len(records))
-        return np.concatenate(
-            [tab[enc["word"][b, pos1]], tab[enc["word"][b, pos2]]], axis=1
-        )
-
-    if kind == "multinn":
-        logits = _multinn_logits(bin_rows(), w, spec, head_emb())
-        p = softmax(logits, axis=1)
-        return p.argmax(axis=1), p
-
+    scale = 1.0 - spec["dropout"]  # inference-side dropout scaling (M9)
     fams = []
     for f in spec["families"]:
-        enc, pos1, pos2 = _family_encode(records, dicts, spec, f)
+        enc, pos1, pos2 = _family_encode(batch, dicts, spec, f)
         x = _family_x(enc, w, spec, f)
-        feats = component_features(
-            f, x, w, spec, pos1, pos2, enc["iidep"]
+        fams.append(
+            component_features(f, x, w, spec, pos1, pos2, enc.get("iidep"))
         )
-        fams.append(feats)
 
+    logits = 0.0
     if kind in ("main", "dynpool"):
-        feats = fams[0] if len(fams) == 1 else np.concatenate(fams, axis=1)
+        feats = np.concatenate(fams, axis=1)
         h = _mlp_chain(feats, w, "mlp1", len(spec["multilayer1"]))
-        p = softmax(h @ (scale * w["cls_W"]) + w["cls_b"], axis=1)
-        return p.argmax(axis=1), p
-
-    if kind == "ensemble":
-        total = None
+        logits = h @ (scale * w["cls_W"]) + w["cls_b"]
+    elif kind == "ensemble":  # expert product = sum of logits
         for f, feats in zip(spec["families"], fams):
             fam = f["fam"]
-            logits = feats @ (scale * w[f"{fam}_exp_W"]) + w[f"{fam}_exp_b"]
-            total = logits if total is None else total + logits
-        if spec["ensemble_binary"]:
-            total = total + _multinn_logits(bin_rows(), w, spec, head_emb())
-        p = softmax(total, axis=1)
-        return p.argmax(axis=1), p
-
-    if kind == "hybrid":
+            logits = logits + (
+                feats @ (scale * w[f"{fam}_exp_W"]) + w[f"{fam}_exp_b"]
+            )
+    elif kind == "hybrid":
         h = _mlp_chain(fams[0], w, "mlp2", len(spec["multilayer2"]))
         logits = h @ (scale * w["model_fW"]) + w["model_fb"]
-        logits = logits + _multinn_logits(bin_rows(), w, spec, head_emb())
-        if spec["kernel_score"]:
-            logits = logits + kernel_score_matrix(
-                records, dicts["label"], spec["n_classes"],
-                spec["kernel_fill"],
+    if _bin_expert(spec):
+        rows = binary_feature_rows(batch, bin_dict or {}, spec["max_bin"])
+        head = None
+        if spec["use_head_emb"]:
+            dep = _head_dep(spec)
+            enc = encode_channels(
+                batch, dicts, spec["m_dep_len" if dep else "m_len"],
+                spec["num_dep_position" if dep else "num_position"],
+                ["word"], dep,
             )
-        p = softmax(logits, axis=1)
-        return p.argmax(axis=1), p
-
-    raise AssertionError(kind)
+            b, tab = np.arange(batch.num_rows), w["f1_T_word"]
+            head = np.concatenate(
+                [tab[enc["word"][b, enc[p]]] for p in ("pos1", "pos2")],
+                axis=1,
+            )
+        logits = logits + _multinn_logits(rows, w, spec, head)
+    if kind == "hybrid" and spec["kernel_score"]:
+        logits = logits + kernel_score_matrix(
+            batch, dicts["label"], spec["n_classes"], spec["kernel_fill"]
+        )
+    p = softmax(logits, axis=1)
+    return p.argmax(axis=1), p
 
 
 # ---------------------------------------------------------------------------
 # distributed wrapper
 
-_MENU_COLS = [
-    "rel_id", "corpus", "label", "tokens", "governors", "cons1", "cons2",
-    "preter", "prepreter", "dep_idx", "dep_tokens", "grammar", "type1",
-    "subtype1", "type2", "subtype2", "pos1", "pos2", "line_no",
-    "bin_feats", "kernel_score",
-]
+#: the columns every prediction row carries through from its mention
+_PASS_COLS = {"rel_id", "corpus", "label", "tokens", "pos1", "pos2", "line_no"}
 
 
 def classify_mentions_menu(
@@ -825,60 +797,42 @@ def classify_mentions_menu(
 ) -> DataFrame:
     """Distributed inference for ANY menu spec: one broadcast carries
     weights+spec+dicts, deserialized once per python worker; each Arrow
-    batch runs the same ``menu_forward`` as the driver golden.
+    batch runs the same ``batch_forward`` as the driver golden.
 
-    This is the engine's one ``mapInPandas`` relation classifier and the
-    Spark re-expression of ``predict()`` (rnnRE.py:512-562): the
-    reference pads corpora to batch multiples and recycles head rows
-    (:516-523); Arrow batches need no such padding."""
+    This is the engine's one relation classifier, a ``mapInArrow``
+    kernel over only the columns the spec reads, and the Spark
+    re-expression of ``predict()`` (rnnRE.py:512-562): the reference
+    pads corpora to batch multiples and recycles head rows (:516-523);
+    Arrow batches need no such padding."""
     spark = mentions.sparkSession
     bc = spark.sparkContext.broadcast(
         {"w": weights, "dicts": dicts, "spec": spec,
          "labels": label_names, "bin_dict": bin_dict}
     )
+    cols = _PASS_COLS | spec_columns(spec)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         v = bc.value
-        labels = v["labels"]
-        for pdf in batches:
-            if pdf.empty:
+        labels = pa.array(v["labels"], pa.string())
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            records = [
-                {
-                    "tokens": list(r.tokens),
-                    "governors": list(r.governors),
-                    "cons1": list(r.cons1),
-                    "cons2": list(r.cons2),
-                    "preter": list(r.preter),
-                    "prepreter": list(r.prepreter),
-                    "dep_idx": list(r.dep_idx),
-                    "dep_tokens": list(r.dep_tokens),
-                    "grammar": [list(g) for g in r.grammar],
-                    "type1": r.type1, "subtype1": r.subtype1,
-                    "type2": r.type2, "subtype2": r.subtype2,
-                    "pos1": int(r.pos1), "pos2": int(r.pos2),
-                    "bin_feats": list(r.bin_feats),
-                    "kernel_score": dict(r.kernel_score or {}),
-                }
-                for r in pdf.itertuples()
-            ]
-            pred_ids, p = menu_forward(
-                records, v["dicts"], v["w"], v["spec"], v["bin_dict"]
+            pred_ids, p = batch_forward(
+                rb, v["dicts"], v["w"], v["spec"], v["bin_dict"]
             )
-            probs = p[np.arange(len(pred_ids)), pred_ids]
-            yield pd.DataFrame(
-                {
-                    "rel_id": pdf["rel_id"],
-                    "corpus": pdf["corpus"],
-                    "gold": pdf["label"],
-                    "pred": [labels[i] for i in pred_ids],
-                    "prob": probs.astype(float),
-                    "pos1": pdf["pos1"],
-                    "pos2": pdf["pos2"],
-                    "subj": [r["tokens"][r["pos1"]] for r in records],
-                    "obj": [r["tokens"][r["pos2"]] for r in records],
-                    "line_no": pdf["line_no"],
-                }
+            probs = p[np.arange(len(pred_ids)), pred_ids].astype(float)
+            subj, obj = head_tokens(rb)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("rel_id"), rb.column("corpus"),
+                    rb.column("label"), labels.take(pred_ids),
+                    pa.array(probs), rb.column("pos1"), rb.column("pos2"),
+                    subj, obj, rb.column("line_no"),
+                ],
+                names=["rel_id", "corpus", "gold", "pred", "prob", "pos1",
+                       "pos2", "subj", "obj", "line_no"],
             )
 
-    return mentions.select(_MENU_COLS).mapInPandas(run, PRED_SCHEMA)
+    return mentions.select(
+        [f.name for f in ARROW_SCHEMA if f.name in cols]
+    ).mapInArrow(run, PRED_SCHEMA)

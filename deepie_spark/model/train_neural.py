@@ -26,8 +26,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from deepie_spark.model.encoder import encode_batch, one_hot_channel
-from deepie_spark.model.menu import CHANNELS, family_widths
+from deepie_spark.model.encoder import records_batch
+from deepie_spark.model.menu import (
+    CHANNELS,
+    _family_encode,
+    _family_x,
+    family_widths,
+)
 from deepie_spark.model.zoo import sigmoid, softmax
 
 # ---------------------------------------------------------------------------
@@ -60,22 +65,16 @@ def _embed_forward(enc, weights, spec, f):
     ``(table, ids, offset)`` slots of its embedding channels."""
     fam = f["fam"]
     widths = family_widths(spec, f)
-    parts, slots, off = [], [], 0
+    slots, off = [], 0
     for ch in CHANNELS:
         m = f["modes"].get(ch, -1)
-        if m < 0:
-            continue
         if m == 0:
             key = f"{fam}_T_word" if ch in ("word", "gov") else f"{fam}_T_{ch}"
-            part = weights[key][enc[ch]]
             slots.append((key, enc[ch], off))
-        elif ch == "grammar":
-            part = enc["grammar"]
-        else:
-            part = one_hot_channel(enc[ch], widths[ch])
-        parts.append(part.astype(np.float64))
-        off += part.shape[2]
-    return np.concatenate(parts, axis=2), slots
+            off += weights[key].shape[1]
+        elif m > 0:
+            off += enc[ch].shape[2] if ch == "grammar" else widths[ch]
+    return _family_x(enc, weights, spec, f).astype(np.float64), slots
 
 
 def _embed_backward(dx, slots, weights, grads):
@@ -199,7 +198,7 @@ def forward_backward(
     gradcheck); otherwise it is drawn from ``drop_rng``."""
     f = _trained_family(spec)
     fam = f["fam"]
-    enc = encode_batch(records, dicts, spec["m_len"], spec["num_position"])
+    enc, pos1, pos2 = _family_encode(records_batch(records), dicts, spec, f)
     x64, slots = _embed_forward(enc, weights, spec, f)
     B = len(records)
     grads: dict[str, np.ndarray] = {}
@@ -225,8 +224,6 @@ def forward_backward(
         h_b_rev, cache_b = _gru_forward(x64[:, ::-1], bwd)
         h_b = h_b_rev[:, ::-1]
         h = np.concatenate([h_f, h_b], axis=2)
-        pos1 = np.array([r["pos1"] for r in records])
-        pos2 = np.array([r["pos2"] for r in records])
         bi = np.arange(B)
         feats = np.concatenate([h[bi, pos1], h[bi, pos2]], axis=1)
 

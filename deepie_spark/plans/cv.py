@@ -22,10 +22,11 @@ tiny and the produced weights are broadcast artifacts.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepie_spark.model.encoder import binary_feature_rows
+from deepie_spark.model.encoder import binary_feature_rows, records_batch
 from deepie_spark.model.train import (
     predict_loglinear,
     score_py,
@@ -72,16 +73,16 @@ def cross_validate(
         for r in build_reference_dictionaries(mentions)["label"].collect()
     }
     needed = sorted({c for f in folds for c in fold_corpora(f)})
-    recs_by_corpus: dict[str, list[dict]] = {c: [] for c in needed}
-    pulled = (
+    pulled = sorted(
         mentions.filter(F.col("corpus").isin(needed))
         .select("corpus", "line_no", "rel_id", "label", "bin_feats")
-        .collect()
+        .collect(),
+        key=lambda r: (r["corpus"], r["line_no"]),
     )
-    for r in pulled:
-        recs_by_corpus[r["corpus"]].append(r.asDict())
-    for c in recs_by_corpus:
-        recs_by_corpus[c].sort(key=lambda d: d["line_no"])
+    batches = {  # one Arrow batch per corpus, in line order
+        c: records_batch([r.asDict() for r in pulled if r["corpus"] == c])
+        for c in needed
+    }
 
     out_rows = []
     for fold in folds:
@@ -93,21 +94,17 @@ def cross_validate(
             ).collect()
         }
         max_bin = max(
-            (
-                len(rec["bin_feats"] or [])
-                for c in (train_c, valid_c, test_c)
-                for rec in recs_by_corpus[c]
-            ),
-            default=1,
+            pc.max(pc.list_value_length(batches[c].column("bin_feats")))
+            .as_py() or 0
+            for c in (train_c, valid_c, test_c)
         ) or 1
         sets = {}
         for role, c in (
             ("train", train_c), ("valid", valid_c), ("test", test_c)
         ):
-            recs = recs_by_corpus[c]
-            rows = binary_feature_rows(recs, bin_dict, max_bin)
-            y = np.array([label_dict[rec["label"]] for rec in recs])
-            sets[role] = (c, rows, y)
+            labels = batches[c].column("label").to_pylist()
+            rows = binary_feature_rows(batches[c], bin_dict, max_bin)
+            sets[role] = (c, rows, np.array([label_dict[x] for x in labels]))
         n_feat = max(len(bin_dict), 1)
         best, history = train_loglinear_best_epoch(
             sets["train"][1], sets["train"][2],

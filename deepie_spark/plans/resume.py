@@ -45,11 +45,17 @@ MANIFEST_SCHEMA = pa.schema(
 
 
 def done_part_ids(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """part_ids recorded as done; empty DataFrame when no manifest yet."""
-    try:
-        m = spark.read.parquet(manifest_dir)
-    except Exception:
+    """part_ids recorded as done.  Only a missing manifest directory, or
+    one holding no parquet file Spark would read, means nothing is done
+    yet; any error reading a manifest that exists raises, so a damaged
+    manifest never silently reruns every bucket."""
+    if not any(
+        f.endswith(".parquet") and not f.startswith(("_", "."))
+        for f in (os.listdir(manifest_dir) if os.path.isdir(manifest_dir)
+                  else ())
+    ):
         return spark.createDataFrame([], "part_id int")
+    m = spark.read.parquet(manifest_dir)
     return (
         m.filter(F.col("status") == "done").select("part_id").distinct()
     )

@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from deepie_spark.model.encoder import norm
-
 TYPES = ("PER", "ORG", "GPE")
 SUBTYPES = ("Other", "Individual", "Nation")
 LABELS = {
@@ -121,7 +119,7 @@ def synthetic_records(
         ),
         "word": _first_encounter(
             (
-                norm(w) for r in records
+                w.replace("_", " ") for r in records
                 for w in r["tokens"] + r["dep_tokens"] + r["governors"]
             ),
             1,

@@ -82,7 +82,7 @@ def test_scorer_output_matches_spark_twin(cv, spark):
     """The driver-side score_py metrics equal the distributed A8 scorer
     (score_df) on the same (pred, gold) pairs — checked by re-deriving
     one fold's metrics through the Spark operator."""
-    from deepie_spark.model.encoder import binary_feature_rows
+    from deepie_spark.model.encoder import binary_feature_rows, records_batch
     from deepie_spark.model.train import (
         predict_loglinear,
         train_loglinear_best_epoch,
@@ -126,7 +126,7 @@ def test_scorer_output_matches_spark_twin(cv, spark):
 
     def xy(recs):
         return (
-            binary_feature_rows(recs, bin_dict, max_bin),
+            binary_feature_rows(records_batch(recs), bin_dict, max_bin),
             np.array([label_dict[r["label"]] for r in recs]),
         )
 

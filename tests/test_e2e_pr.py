@@ -24,7 +24,7 @@ the same gate on 200 seeded synthetic records
 import numpy as np
 import pytest
 
-from deepie_spark.model.encoder import binary_feature_rows
+from deepie_spark.model.encoder import binary_feature_rows, records_batch
 from deepie_spark.model.infer import triples_from_predictions
 from deepie_spark.model.menu import classify_mentions_menu, make_spec
 from deepie_spark.model.train import predict_loglinear, train_loglinear
@@ -52,7 +52,7 @@ def golden_predictions(records, weights, bin_dict, max_bin, label_names):
     """Sequential M18 + M20 + directed-triple emission:
     ``{"preds": {(corpus, rel_id): (label, prob)}, "triples": {(subj,
     pred, obj, corpus, rel_id)}}``."""
-    rows = binary_feature_rows(records, bin_dict, max_bin)
+    rows = binary_feature_rows(records_batch(records), bin_dict, max_bin)
     pred_ids, p = predict_loglinear(rows, weights)
     preds = {}
     triples = set()
@@ -156,7 +156,7 @@ def golden():
 
     # M18 training on the train corpus (driver-side, seeded)
     train_recs = [r for r in records if r["corpus"] == TRAIN_CORPUS]
-    rows = binary_feature_rows(train_recs, bin_dict, max_bin)
+    rows = binary_feature_rows(records_batch(train_recs), bin_dict, max_bin)
     labels = np.array([label_dict[r["label"]] for r in train_recs])
     weights = train_loglinear(
         rows, labels, len(label_dict), len(bin_dict)
@@ -249,7 +249,9 @@ def synthetic_run(spark):
     s = model_inputs(*synthetic_records(n=200, seed=3))
     max_bin = max(len(r["bin_feats"]) for r in s["records"])
     weights = train_loglinear(
-        binary_feature_rows(s["records"], s["bin_dict"], max_bin),
+        binary_feature_rows(
+            records_batch(s["records"]), s["bin_dict"], max_bin
+        ),
         s["y"], len(s["labels"]), len(s["bin_dict"]),
     )
     mentions = spark.createDataFrame(

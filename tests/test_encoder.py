@@ -1,7 +1,9 @@
-"""Feature-encoder (F1/F5/F6) tests.
+"""Feature-encoder (F1/F2/F5/F6) tests.
 
-Channel-exact checks of encode_record against hand-computed values on a
-constructed record, plus fixture-wide invariants (reference semantics:
+Channel-exact checks of the columnar encoder against hand-computed
+values on a constructed record, malformed rows that must raise rather
+than read a neighbouring row, plus fixture-wide invariants (reference
+semantics:
 _generatePartialDataInstance rnnRE.py:31-210, getBinaryVector
 rnnRE.py:484-510, order leak rnnRE.py:33-41 / SURVEY.md §7.4.2).
 """
@@ -11,8 +13,8 @@ import pytest
 
 from deepie_spark.model.encoder import (
     binary_feature_rows,
-    encode_batch,
-    encode_record,
+    encode_channels,
+    records_batch,
 )
 from deepie_spark.sources.tsv_corpus import parse_line
 from tests.test_parser import all_lines
@@ -53,9 +55,24 @@ M_LEN = 6
 NUM_POS = 10  # center = 5
 
 
+def encode_rows(recs, dicts, m_len, num_pos, **kw):
+    """Every channel of ``recs`` as ``(B, m_len[, k])`` arrays."""
+    return encode_channels(records_batch(recs), dicts, m_len, num_pos, **kw)
+
+
+def encode_one(rec, dicts, m_len, num_pos, **kw):
+    """One record's channels, the batch axis dropped."""
+    enc = encode_rows([rec], dicts, m_len, num_pos, **kw)
+    return {k: v[0] for k, v in enc.items()}
+
+
+def encode_one_dep(rec, dicts, m_dep_len, num_dep_pos):
+    return encode_one(rec, dicts, m_dep_len, num_dep_pos, dep=True)
+
+
 @pytest.fixture()
 def enc():
-    return encode_record(tiny_record(), DICTS, M_LEN, NUM_POS)
+    return encode_one(tiny_record(), DICTS, M_LEN, NUM_POS)
 
 
 def test_word_and_gov_ids_with_underscore_norm(enc):
@@ -79,7 +96,7 @@ def test_type_subtype_only_at_heads(enc):
 def test_order_channel_inference_override(enc):
     # F6: order_override=0 → pos1 gets 1, pos2 gets 2, others 3
     assert enc["order"].tolist() == [3, 1, 3, 2, 0, 0]
-    rev = encode_record(tiny_record(), DICTS, M_LEN, NUM_POS, order_override=1)
+    rev = encode_one(tiny_record(), DICTS, M_LEN, NUM_POS, order_override=1)
     assert rev["order"].tolist() == [3, 2, 3, 1, 0, 0]
 
 
@@ -113,7 +130,7 @@ def test_same_head_positions_pos1_wins():
     rec = tiny_record()
     rec["pos2"] = 1
     rec["dep_idx"] = [1]
-    e = encode_record(rec, DICTS, M_LEN, NUM_POS)
+    e = encode_one(rec, DICTS, M_LEN, NUM_POS)
     # reference's elif: when pos1 == pos2 the pos1 assignment stands
     assert e["type"][1] == DICTS["type"]["PER"]
     assert e["order"][1] == 1
@@ -123,17 +140,17 @@ def test_oov_hard_fails():
     rec = tiny_record()
     rec["tokens"][0] = "unseen"
     with pytest.raises(KeyError, match="unrecognized"):
-        encode_record(rec, DICTS, M_LEN, NUM_POS)
+        encode_one(rec, DICTS, M_LEN, NUM_POS)
 
 
 def test_too_long_fails():
     with pytest.raises(ValueError, match="mLen"):
-        encode_record(tiny_record(), DICTS, 3, NUM_POS)
+        encode_one(tiny_record(), DICTS, 3, NUM_POS)
 
 
 def test_encode_batch_stacks():
     recs = [tiny_record(), tiny_record()]
-    b = encode_batch(recs, DICTS, M_LEN, NUM_POS)
+    b = encode_rows(recs, DICTS, M_LEN, NUM_POS)
     assert b["word"].shape == (2, M_LEN)
     assert b["grammar"].shape == (2, M_LEN, 3)
     assert (b["word"][0] == b["word"][1]).all()
@@ -142,10 +159,10 @@ def test_encode_batch_stacks():
 def test_binary_feature_rows_layout():
     bd = {"f1": 0, "f2": 1, "f3": 2}
     rows = binary_feature_rows(
-        [
+        records_batch([
             {"bin_feats": ["f1", "f3", "unknown"]},
             {"bin_feats": []},
-        ],
+        ]),
         bd,
         max_len=4,
     )
@@ -157,11 +174,9 @@ def test_binary_feature_rows_layout():
 def test_dep_encoder_channels():
     """F2 hand-check: path [1,2,3] of tiny_record; heads at ends;
     gathered features; indep scalar 0 / iidep 1 quirks."""
-    from deepie_spark.model.encoder import encode_dep_record
-
     rec = tiny_record()
     rec["dep_tokens"] = ["cat", "sat_on", "mat"]
-    e = encode_dep_record(rec, DICTS, 5, 8)  # center = 4
+    e = encode_one_dep(rec, DICTS, 5, 8)  # center = 4
     assert e["word"].tolist() == [2, 3, 4, 0, 0]
     # governors gathered via dep_idx [1,2,3]
     assert e["gov"].tolist() == [3, 3, 3, 0, 0]
@@ -182,20 +197,17 @@ def test_dep_encoder_channels():
 
 
 def test_dep_encoder_single_token_path():
-    from deepie_spark.model.encoder import encode_dep_record
-
     rec = tiny_record()
     rec["pos1"] = rec["pos2"] = 1
     rec["dep_idx"] = [1]
     rec["dep_tokens"] = ["cat"]
-    e = encode_dep_record(rec, DICTS, 3, 4)
+    e = encode_one_dep(rec, DICTS, 3, 4)
     # length-1 path: pos1 == pos2 == 0 → pos1 wins (if/elif)
     assert e["type"][0] == DICTS["type"]["PER"]
     assert e["order"][0] == 1
 
 
 def test_dep_encoder_on_all_fixtures():
-    from deepie_spark.model.encoder import encode_dep_record
     from tests.test_dictionary import SEEDS, record_streams
 
     recs = [parse_line(c, l) for c, _, l in all_lines()]
@@ -210,7 +222,7 @@ def test_dep_encoder_on_all_fixtures():
                         nxt[name] += 1
     m_dep = max(len(r["dep_tokens"]) for r in recs)
     for r in recs:
-        e = encode_dep_record(r, dicts, m_dep, 2 * m_dep)
+        e = encode_one_dep(r, dicts, m_dep, 2 * m_dep)
         n = len(r["dep_tokens"])
         assert (e["word"][:n] > 0).all()
         assert e["type"][0] == dicts["type"][r["type1"]] or n == 1
@@ -235,7 +247,7 @@ def test_encoder_runs_on_all_fixtures():
                         nxt[name] += 1
     m_len = max(len(r["tokens"]) for r in recs)
     num_pos = 2 * m_len
-    b = encode_batch(recs, dicts, m_len, num_pos)
+    b = encode_rows(recs, dicts, m_len, num_pos)
     assert b["word"].shape == (150, m_len)
     for r, row_w, row_t in zip(recs, b["word"], b["type"]):
         n = len(r["tokens"])
@@ -250,7 +262,7 @@ def test_one_hot_mode_exact_channels():
     index quirks (rnnRE.py:96-170) and zero pad rows (:180-207)."""
     from deepie_spark.model.encoder import one_hot_channel
 
-    enc = encode_batch([tiny_record()], DICTS, M_LEN, NUM_POS)
+    enc = encode_rows([tiny_record()], DICTS, M_LEN, NUM_POS)
     # dist1: one-hot index = center + i - pos1 (no +1), width NUM_POS
     d1 = one_hot_channel(enc["dist1"], NUM_POS)[0]
     center = NUM_POS // 2
@@ -279,13 +291,141 @@ def test_one_hot_mode_dep_family():
     """Dep-path family one-hot quirk: the indep channel is ALL-ZERO on
     the dep sequence (indepFet stays untouched, rnnRE.py:268-271) —
     scalar 0 everywhere -> zero one-hot rows via the universal rule."""
-    from deepie_spark.model.encoder import encode_dep_record, one_hot_channel
+    from deepie_spark.model.encoder import one_hot_channel
 
     rec = tiny_record()
     rec["dep_tokens"] = [rec["tokens"][i] for i in rec["dep_idx"]]
-    e = encode_dep_record(rec, DICTS, M_LEN, NUM_POS)
+    e = encode_one_dep(rec, DICTS, M_LEN, NUM_POS)
     ind = one_hot_channel(e["indep"][None, :], 2)[0]
     assert not ind.any()
     # constit gathered through dep_idx then one-hot [c-1]=1
     c1 = one_hot_channel(e["constit1"][None, :], len(DICTS["constit"]))[0]
     assert np.array_equal(c1[0], [0, 1, 0])  # dep token 0 = cons1[1] = NP
+
+
+# ---------------------------------------------------------------------------
+# malformed rows raise: a gather over flattened values must never read a
+# neighbouring row's data
+
+
+def _dep_record():
+    rec = tiny_record()
+    rec["dep_tokens"] = [rec["tokens"][i] for i in rec["dep_idx"]]
+    return rec
+
+
+@pytest.mark.parametrize(
+    "name", ["governors", "cons1", "cons2", "preter", "prepreter", "grammar"]
+)
+@pytest.mark.parametrize("dep", [False, True], ids=["surface", "dep"])
+def test_token_aligned_length_mismatch_raises(name, dep):
+    short = _dep_record()
+    short[name] = short[name][:-1]
+    # the short row sits before a well-formed one, whose values a
+    # flattened gather would otherwise shift into it
+    with pytest.raises(ValueError, match=f"{name} length"):
+        encode_rows([short, _dep_record()], DICTS, M_LEN, NUM_POS, dep=dep)
+
+
+@pytest.mark.parametrize("key,value", [
+    ("pos1", -1), ("pos2", -1), ("pos1", 4), ("pos2", 7),
+])
+def test_head_outside_row_raises(key, value):
+    # a negative head used to wrap silently to the last token
+    rec = tiny_record()
+    rec[key] = value
+    with pytest.raises(ValueError, match="head position"):
+        encode_rows([rec, tiny_record()], DICTS, M_LEN, NUM_POS)
+    with pytest.raises(ValueError, match="head position"):
+        encode_rows(
+            [rec], DICTS, M_LEN, NUM_POS, channels=["word"]
+        )
+
+
+@pytest.mark.parametrize("bad", [[1, 2, 4], [-1, 2, 3]])
+@pytest.mark.parametrize("dep", [False, True], ids=["surface", "dep"])
+def test_dep_idx_outside_row_raises(bad, dep):
+    rec = _dep_record()
+    rec["dep_idx"] = bad
+    with pytest.raises(ValueError, match="dep_idx entry outside"):
+        encode_rows([rec, _dep_record()], DICTS, M_LEN, NUM_POS, dep=dep)
+
+
+def test_dep_idx_length_differs_from_dep_tokens_raises():
+    rec = _dep_record()
+    rec["dep_tokens"] = rec["dep_tokens"][:-1]
+    with pytest.raises(ValueError, match="dep_tokens"):
+        encode_rows([rec, _dep_record()], DICTS, M_LEN, NUM_POS, dep=True)
+
+
+def test_more_known_binary_features_than_max_bin_raises():
+    bd = {"f1": 0, "f2": 1, "f3": 2}
+    batch = records_batch([{"bin_feats": ["f1", "f2", "f3", "unknown"]}])
+    assert binary_feature_rows(batch, bd, 3)[0].tolist() == [3, 0, 1, 2]
+    with pytest.raises(ValueError, match="max_bin"):
+        binary_feature_rows(batch, bd, 2)
+
+
+@pytest.mark.parametrize("name,channels", [
+    ("governors", ["gov"]), ("cons1", ["constit1"]), ("grammar", ["grammar"]),
+    ("dep_idx", ["iidep"]), ("tokens", ["word"]),
+])
+def test_null_list_in_read_column_raises(name, channels):
+    rec = tiny_record()
+    rec[name] = None
+    with pytest.raises(ValueError, match=f"null {name}"):
+        encode_rows([tiny_record(), rec], DICTS, M_LEN, NUM_POS,
+                    channels=channels)
+    if name != "tokens":  # a column the channels do not read may be null
+        encode_rows([tiny_record(), rec], DICTS, M_LEN, NUM_POS,
+                    channels=["order"])
+
+
+def test_null_bin_feats_raises():
+    with pytest.raises(ValueError, match="null bin_feats"):
+        binary_feature_rows(records_batch([{"bin_feats": None}]), {}, 2)
+
+
+@pytest.mark.parametrize("key,value,what", [
+    ("tokens", ["the", "dog", "sat_on", "mat"], "word 'dog'"),
+    ("governors", ["cat", "dog", "sat_on", "sat_on"], "word 'dog'"),
+    ("cons1", ["NP", "NP", "ADJP", "NP"], "constit 'ADJP'"),
+    ("preter", ["DT", "NN", "JJ", "NN"], "preter 'JJ'"),
+    ("prepreter", ["X", "Y", "Other", "X"], "prepreter 'Y'"),
+    ("type2", "ORG", "type 'ORG'"),
+    ("subtype1", "NAM", "subtype 'NAM'"),
+    ("grammar", [["det"], ["amod"], ["Other"], ["nsubj"]], "deprel 'amod'"),
+])
+def test_unknown_value_keyerror_names_it(key, value, what):
+    rec = tiny_record()
+    rec[key] = value
+    with pytest.raises(KeyError, match=f"unrecognized {what}"):
+        encode_rows([rec], DICTS, M_LEN, NUM_POS)
+
+
+def test_sliced_batch_encodes_the_same_rows():
+    """A sliced batch (non-zero list offsets) encodes exactly the rows of
+    the same records batched on their own, on both sequences, and its
+    binary-feature rows match too."""
+    recs = []
+    for i in range(6):
+        r = _dep_record()
+        r["pos1"], r["pos2"] = i % 4, (i + 1) % 4
+        r["tokens"] = r["tokens"][: 4]
+        r["bin_feats"] = ["f1", "f2", "f3"][: i % 4]
+        recs.append(r)
+    recs[4]["dep_idx"] = [0, 3]
+    recs[4]["dep_tokens"] = ["the", "mat"]
+    batch = records_batch(recs)
+    for dep in (False, True):
+        got = encode_channels(batch.slice(3), DICTS, M_LEN, NUM_POS, dep=dep)
+        want = encode_rows(recs[3:], DICTS, M_LEN, NUM_POS, dep=dep)
+        assert sorted(got) == sorted(want)
+        for k in want:
+            assert got[k].dtype == want[k].dtype
+            assert np.array_equal(got[k], want[k]), (dep, k)
+    bd = {"f1": 0, "f2": 1, "f3": 2}
+    assert np.array_equal(
+        binary_feature_rows(batch.slice(3), bd, 3),
+        binary_feature_rows(records_batch(recs[3:]), bd, 3),
+    )

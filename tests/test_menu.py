@@ -18,7 +18,11 @@ Two layers:
 import numpy as np
 import pytest
 
-from deepie_spark.model.encoder import encode_batch, one_hot_channel
+from deepie_spark.model.encoder import (
+    encode_channels,
+    one_hot_channel,
+    records_batch,
+)
 from deepie_spark.model.menu import (
     _COMPONENTS,
     classify_mentions_menu,
@@ -114,8 +118,8 @@ def test_every_component_runs(synth, comp):
 def test_one_hot_channel_matches_reference_rule(setup):
     """Mode-1 encoding: vec[scalar-1]=1, pad scalar 0 → zero row —
     verified against a direct one-hot build (rnnRE.py:96-170)."""
-    enc = encode_batch(
-        setup["records"][:4], setup["dicts"], setup["m_len"],
+    enc = encode_channels(
+        records_batch(setup["records"][:4]), setup["dicts"], setup["m_len"],
         setup["num_position"],
     )
     for ch, width_key in [("type", "type"), ("preter", "preter")]:
@@ -174,10 +178,11 @@ def test_kernel_score_matrix_modes(setup):
     recs = setup["records"][:6]
     nc = len(setup["labels"])
     # active reference semantics: every score pinned to -1
-    m = kernel_score_matrix(recs, setup["dicts"]["label"], nc, fill=False)
+    batch = records_batch(recs)
+    m = kernel_score_matrix(batch, setup["dicts"]["label"], nc, fill=False)
     assert np.all(m == -1.0)
     # fill: label-indexed scores from the parsed field-13 map
-    mf = kernel_score_matrix(recs, setup["dicts"]["label"], nc, fill=True)
+    mf = kernel_score_matrix(batch, setup["dicts"]["label"], nc, fill=True)
     assert mf.shape == (len(recs), nc)
     any_filled = any(
         r["kernel_score"] for r in recs
@@ -211,7 +216,7 @@ def test_outer_representation_semantics(setup):
     w_c, w_o = init_menu_weights(spec_c), init_menu_weights(spec_o)
     assert np.array_equal(w_c["f1_T_word"], w_o["f1_T_word"])
     enc, _, _ = _family_encode(
-        setup["records"][:4], setup["dicts"], spec_o, f_o
+        records_batch(setup["records"][:4]), setup["dicts"], spec_o, f_o
     )
     x_c = _family_x(enc, w_c, spec_c, f_c)
     wb = x_c[..., :wd]  # word is first in CHANNELS order
@@ -306,6 +311,67 @@ def test_distributed_menu_on_created_dataframe(spark, synth, model, kw):
     _assert_distributed_matches_golden(synth, mentions, model, kw)
 
 
+@pytest.mark.parametrize(
+    "model,kw",
+    [("rnnHead-convolute", COMBO_DEP), ("#rnnHead", HYBRID_KERNEL),
+     ("#MultiNN", dict(multilayer1=[10], use_head_emb=True))],
+    ids=["rnnHead-convolute", "#rnnHead", "#MultiNN"],
+)
+def test_menu_rows_independent_of_arrow_batch_size(spark, synth, model, kw):
+    """Config differential: ``classify_mentions_menu`` gives the same
+    rows with 7-record Arrow batches (batch edges inside the kernel,
+    list offsets that do not start at 0) as with the default size."""
+    rows = [
+        {**r, "file_order": 0, "line_no": i}
+        for i, r in enumerate(synth["records"])
+    ]
+    mentions = spark.createDataFrame(rows, MENTION_SCHEMA).repartition(3)
+    spec = _spec(synth, model, **kw)
+    weights = init_menu_weights(spec)
+
+    def run():
+        return sorted(
+            classify_mentions_menu(
+                mentions, weights, synth["dicts"], spec, synth["labels"],
+                synth["bin_dict"],
+            ).collect()
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = run()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = run()
+    finally:
+        spark.conf.set(key, old)
+    assert len(default) == len(synth["records"])
+    assert small == default
+
+
+def test_multinn_spec_needs_only_the_word_dictionary(synth):
+    """``#MultiNN`` reads binary features and, with the head embedding,
+    the word table: ``make_spec``, ``init_menu_weights`` and
+    ``menu_forward`` need no other dictionary size."""
+    recs = synth["records"][:12]
+    max_bin = max(len(r["bin_feats"]) for r in recs)
+    for head in (False, True):
+        spec = make_spec(
+            "#MultiNN", {"word": max(synth["dicts"]["word"].values())},
+            0, 0, synth["m_len"], 0, len(synth["labels"]),
+            bin_dim=len(synth["bin_dict"]), max_bin=max_bin,
+            use_head_emb=head,
+        )
+        assert spec["widths"] == {}
+        w = init_menu_weights(spec)
+        assert ("f1_T_word" in w) == head
+        ids, p = menu_forward(
+            recs, synth["dicts"], w, spec, synth["bin_dict"]
+        )
+        assert p.shape == (12, len(synth["labels"]))
+        assert np.allclose(p.sum(axis=1), 1.0, atol=1e-5)
+
+
 def test_dropout_scaling_at_inference(setup):
     """Inference scales only the classifier weights by (1-p)
     (rnnReModels.py:768: dot(fetre, (1-dropout)*W) + b)."""
@@ -320,10 +386,10 @@ def test_dropout_scaling_at_inference(setup):
     from deepie_spark.model.menu import component_features, _family_encode, _family_x
     f = spec0["families"][0]
     enc, pos1, pos2 = _family_encode(
-        setup["records"][:4], setup["dicts"], spec0, f
+        records_batch(setup["records"][:4]), setup["dicts"], spec0, f
     )
     x = _family_x(enc, w, spec0, f)
-    feats = component_features(f, x, w, spec0, pos1, pos2, enc["iidep"])
+    feats = component_features(f, x, w, spec0, pos1, pos2, enc.get("iidep"))
     from deepie_spark.model.zoo import softmax
     want = softmax(feats @ (0.5 * w["cls_W"]) + w["cls_b"], axis=1)
     assert np.allclose(p5, want, atol=1e-6)

@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 
 from deepie_spark.model import zoo
+from deepie_spark.model.encoder import records_batch
 from deepie_spark.model.menu import (
     _COMPONENTS,
     _family_encode,
@@ -228,10 +229,12 @@ def _synth_forward(s, model, **kw):
     recs = s["records"][:6]
     feats = []
     for f in spec["families"]:
-        enc, pos1, pos2 = _family_encode(recs, s["dicts"], spec, f)
+        enc, pos1, pos2 = _family_encode(
+            records_batch(recs), s["dicts"], spec, f
+        )
         x = _family_x(enc, w, spec, f)
         feats.append(
-            component_features(f, x, w, spec, pos1, pos2, enc["iidep"])
+            component_features(f, x, w, spec, pos1, pos2, enc.get("iidep"))
         )
     return spec, w, feats, menu_forward(recs, s["dicts"], w, spec)
 

@@ -883,3 +883,47 @@ def test_tpch_q18_and_q21_shapes(spark):
     # plans; count scans in the final section only)
     final21 = p21.split("== Initial Plan ==")[0]
     assert final21.count("lineitem.parquet") == 1
+
+
+def test_menu_classifier_is_one_arrow_kernel_over_read_columns(spark):
+    """The relation classifier is one ``mapInArrow`` kernel (no
+    ``mapInPandas``), and for ``#MultiNN`` its input projection holds the
+    pass-through ids, ``bin_feats``, ``tokens``, ``pos1`` and ``pos2``
+    but none of the columns only neural specs read."""
+    from deepie_spark.model.menu import (
+        classify_mentions_menu,
+        init_menu_weights,
+        make_spec,
+    )
+    from deepie_spark.sources.tsv_corpus import MENTION_SCHEMA
+    from tests.synthetic_records import model_inputs, synthetic_records
+
+    s = model_inputs(*synthetic_records(n=30, seed=3))
+    mentions = spark.createDataFrame(
+        [{**r, "file_order": 0, "line_no": i}
+         for i, r in enumerate(s["records"])],
+        MENTION_SCHEMA,
+    )
+    spec = make_spec(
+        "#MultiNN", {"word": len(s["dicts"]["word"])}, 0, 0, 0, 0,
+        len(s["labels"]), bin_dim=len(s["bin_dict"]),
+        max_bin=max(len(r["bin_feats"]) for r in s["records"]),
+    )
+    preds = classify_mentions_menu(
+        mentions, init_menu_weights(spec), s["dicts"], spec, s["labels"],
+        s["bin_dict"],
+    )
+    plan = executed(preds)
+    final = plan.split("Initial Plan")[0]
+    nodes = re.findall(r"^[\s+\-:*()\d]*(\w+)", final, re.M)
+    assert sum(n in ("MapInArrow", "PythonMapInArrow") for n in nodes) == 1
+    assert "MapInPandas" not in nodes
+    (kernel,) = [ln for ln in final.splitlines() if "MapInArrow" in ln]
+    inputs = set(re.findall(r"(\w+)#\d+", kernel.split(")#")[0]))
+    assert inputs == {
+        "rel_id", "corpus", "label", "line_no", "bin_feats", "tokens",
+        "pos1", "pos2",
+    }
+    for col in ("grammar", "governors", "cons1", "dep_tokens",
+                "kernel_score"):
+        assert col not in inputs

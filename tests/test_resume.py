@@ -28,6 +28,35 @@ def test_done_part_ids_empty_when_no_manifest(spark, tmp_path):
     assert done.count() == 0
 
 
+def test_corrupt_manifest_raises_instead_of_redoing(spark, tmp_path):
+    """A manifest that exists but cannot be read is an error, not "no
+    bucket done": a corrupt footer makes ``resume_run`` raise before it
+    reruns anything."""
+    out, man = str(tmp_path / "t"), str(tmp_path / "m")
+    one = spark.createDataFrame(
+        [("s", "p", "o", 3)], "subj string, pred string, obj string,"
+        " part_id int"
+    )
+    write_triples_with_manifest(one, out, man)
+    (name,) = [f for f in os.listdir(man) if f.endswith(".parquet")]
+    path = os.path.join(man, name)
+    size = os.path.getsize(path)
+    with open(path, "r+b") as f:  # overwrite the footer, keep the magic
+        f.seek(size - 12)
+        f.write(b"\xff" * 8)
+
+    ran = []
+
+    def run(p):
+        ran.append(p)
+        return one
+
+    pages = spark.createDataFrame([(3,)], "part_id int")
+    with pytest.raises(Exception):
+        resume_run(spark, pages, out, man, run)
+    assert not ran
+
+
 def test_write_then_resume_skips_everything(spark, pages, tmp_path):
     out = str(tmp_path / "triples")
     manifest = str(tmp_path / "manifest")
