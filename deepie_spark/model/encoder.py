@@ -19,6 +19,8 @@ a row longer than ``mLen``, more known features than ``max_bin``.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -78,16 +80,47 @@ def _ints(arr: pa.Array, name: str) -> np.ndarray:
     return np.asarray(arr, np.int64)
 
 
-def _ids(values: pa.Array, d: dict[str, int], what: str) -> np.ndarray:
+class Lookup:
+    """A dictionary's keys as an ``index_in`` value set and its ids in
+    key order, each built on first use and then kept, so the batches of
+    one kernel share them (:func:`lookups`).  Reads ``d`` as it is when
+    first used: do not mutate it after."""
+
+    def __init__(self, d: dict[str, int]):
+        self.d = d
+
+    def __len__(self) -> int:
+        return len(self.d)
+
+    @cached_property
+    def value_set(self) -> pa.Array:
+        return pa.array(list(self.d), pa.string())
+
+    @cached_property
+    def ids(self) -> np.ndarray:
+        return np.fromiter(self.d.values(), np.int64, len(self.d))
+
+
+def lookup(d) -> Lookup:
+    """``d`` as a :class:`Lookup` (one already is comes back as is)."""
+    return d if isinstance(d, Lookup) else Lookup(d)
+
+
+def lookups(dicts: dict) -> dict[str, Lookup]:
+    """Every dictionary of ``dicts`` as a :class:`Lookup`."""
+    return {k: lookup(d) for k, d in dicts.items()}
+
+
+def _ids(values: pa.Array, d: Lookup, what: str) -> np.ndarray:
     """One ``index_in`` lookup of ``values`` in ``d`` → int64 ids."""
-    idx = pc.index_in(values, value_set=pa.array(list(d), pa.string()))
+    idx = pc.index_in(values, value_set=d.value_set)
     if idx.null_count:
         bad = values.filter(idx.is_null())[0].as_py()
         raise KeyError(f"unrecognized {what} {bad!r}")
-    return np.fromiter(d.values(), np.int64, len(d))[np.asarray(idx)]
+    return d.ids[np.asarray(idx)]
 
 
-def _words(values: pa.Array, d: dict[str, int]) -> np.ndarray:
+def _words(values: pa.Array, d: Lookup) -> np.ndarray:
     """Word ids of ``' '.join(w.split('_'))`` (rnnRE.py:74-75)."""
     return _ids(pc.replace_substring(values, "_", " "), d, "word")
 
@@ -119,7 +152,7 @@ def head_tokens(batch: pa.RecordBatch) -> tuple[pa.Array, pa.Array]:
 
 def encode_channels(
     batch: pa.RecordBatch,
-    dicts: dict[str, dict[str, int]],
+    dicts: dict[str, dict[str, int] | Lookup],
     m_len: int,
     num_position: int,
     channels=tuple(CHANNEL_COLUMNS),
@@ -134,7 +167,10 @@ def encode_channels(
     ``dep_tokens``, token-aligned features gathered through ``dep_idx``,
     heads at the path ends (dep_pos1=0, dep_pos2=len-1,
     rnn_process_onlyExtra.py:489).  Only the columns of
-    :func:`encoded_columns` are read."""
+    :func:`encoded_columns` are read.  ``dicts`` may hold
+    :class:`Lookup` objects (:func:`lookups`) to share the lookup arrays
+    across calls; a plain dictionary is wrapped once per call."""
+    dicts = lookups(dicts)
     b = np.arange(batch.num_rows)
     toks, tok_off = _flat(batch.column("tokens"), "tokens")
     n_tok = np.diff(tok_off)
@@ -233,28 +269,29 @@ def one_hot_channel(ids: np.ndarray, width: int) -> np.ndarray:
 
 
 def binary_feature_rows(
-    batch: pa.RecordBatch, bin_dict: dict[str, int], max_len: int
+    batch: pa.RecordBatch, bin_dict: dict[str, int] | Lookup, max_len: int
 ) -> np.ndarray:
     """F5: ``bin_feats`` strings → [count, id1, …, -1 pad] int rows
     (convertBinaryFeatures/getBinaryVector rnnRE.py:484-510).
     Unknown features (below cutoff / unseen) are skipped."""
+    bin_dict = lookup(bin_dict)
     feats, off = _flat(batch.column("bin_feats"), "bin_feats")
-    idx = pc.index_in(feats, value_set=pa.array(list(bin_dict), pa.string()))
+    idx = pc.index_in(feats, value_set=bin_dict.value_set)
     row = np.repeat(np.arange(batch.num_rows), np.diff(off))
     row = row[np.asarray(idx.is_valid())]
-    ids = np.fromiter(bin_dict.values(), np.int64, len(bin_dict))
     count = np.bincount(row, minlength=batch.num_rows)
     if (count > max_len).any():
         raise ValueError("more known binary features than max_bin")
     out = np.full((batch.num_rows, max_len + 1), -1, dtype=np.int64)
     out[:, 0] = count
     rank = np.arange(len(row)) - (np.cumsum(count) - count)[row]
-    out[row, 1 + rank] = ids[np.asarray(idx.drop_null())]
+    out[row, 1 + rank] = bin_dict.ids[np.asarray(idx.drop_null())]
     return out
 
 
 def kernel_score_matrix(
-    batch: pa.RecordBatch, label_dict: dict[str, int], n_classes: int,
+    batch: pa.RecordBatch, label_dict: dict[str, int] | Lookup,
+    n_classes: int,
     fill: bool = False,
 ) -> np.ndarray:
     """Per-class kernel scores from the parsed field-13 map.
@@ -273,15 +310,14 @@ def kernel_score_matrix(
     base = pc.replace_substring(
         pc.replace_substring(labs, "(e1,e2)", ""), "(e2,e1)", ""
     )
-    value_set = pa.array(list(label_dict), pa.string())
+    label_dict = lookup(label_dict)
     idx = pc.coalesce(
-        pc.index_in(labs, value_set=value_set),
-        pc.index_in(base, value_set=value_set),
+        pc.index_in(labs, value_set=label_dict.value_set),
+        pc.index_in(base, value_set=label_dict.value_set),
     )
     row = np.repeat(np.arange(batch.num_rows), np.diff(off))
     hit = np.asarray(idx.is_valid())
-    ids = np.fromiter(label_dict.values(), np.int64, len(label_dict))
-    flat = row[hit] * n_classes + ids[np.asarray(idx.drop_null())]
+    flat = row[hit] * n_classes + label_dict.ids[np.asarray(idx.drop_null())]
     scores = scores.to_numpy(zero_copy_only=False)[hit]
     last = len(flat) - 1 - np.unique(flat[::-1], return_index=True)[1]
     out.flat[flat[last]] = scores[last]

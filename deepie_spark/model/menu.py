@@ -60,6 +60,8 @@ from deepie_spark.model.encoder import (
     encoded_columns,
     head_tokens,
     kernel_score_matrix,
+    lookup,
+    lookups,
     one_hot_channel,
     records_batch,
 )
@@ -730,7 +732,10 @@ def batch_forward(
     bin_dict: dict[str, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Spec-driven forward pass over one mention batch (reading only
-    :func:`spec_columns`) → (pred ids, probability matrix)."""
+    :func:`spec_columns`) → (pred ids, probability matrix).  The
+    dictionaries' lookup arrays are built once per call, or once per
+    kernel when passed as :func:`~deepie_spark.model.encoder.lookups`."""
+    dicts, bin_dict = lookups(dicts), lookup(bin_dict or {})
     w = weights
     kind = spec["kind"]
     scale = 1.0 - spec["dropout"]  # inference-side dropout scaling (M9)
@@ -757,7 +762,7 @@ def batch_forward(
         h = _mlp_chain(fams[0], w, "mlp2", len(spec["multilayer2"]))
         logits = h @ (scale * w["model_fW"]) + w["model_fb"]
     if _bin_expert(spec):
-        rows = binary_feature_rows(batch, bin_dict or {}, spec["max_bin"])
+        rows = binary_feature_rows(batch, bin_dict, spec["max_bin"])
         head = None
         if spec["use_head_emb"]:
             dep = _head_dep(spec)
@@ -814,11 +819,13 @@ def classify_mentions_menu(
     def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         v = bc.value
         labels = pa.array(v["labels"], pa.string())
+        # one set of lookup arrays per kernel, shared by its batches
+        dicts, bin_dict = lookups(v["dicts"]), lookup(v["bin_dict"] or {})
         for rb in batches:
             if not rb.num_rows:
                 continue
             pred_ids, p = batch_forward(
-                rb, v["dicts"], v["w"], v["spec"], v["bin_dict"]
+                rb, dicts, v["w"], v["spec"], bin_dict
             )
             probs = p[np.arange(len(pred_ids)), pred_ids].astype(float)
             subj, obj = head_tokens(rb)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from deepie_spark.model.encoder import records_batch
+from deepie_spark.model.encoder import lookups, records_batch
 from deepie_spark.model.menu import (
     CHANNELS,
     _family_encode,
@@ -383,6 +383,7 @@ def train_neural(
     Best epoch = lowest training loss so far (this driver-side trainer
     has no held-out fold; the reference tracks best valid F1)."""
     _trained_family(spec)
+    dicts = lookups(dicts)  # lookup arrays built once, not per minibatch
     rng = np.random.RandomState(seed)
     drop_rng = np.random.RandomState(
         np.random.RandomState(seed).randint(999999)

@@ -11,6 +11,11 @@ same command resumes: completed buckets are anti-joined away.
 On a real cluster this is submitted with ``--master yarn|k8s://…`` and
 ``--num-executors N``; the code is identical — partitioning, broadcast
 sizes, and AQE settings do not assume local mode.
+
+Its workers fork from the stock ``pyspark.daemon``, not
+``deepie_spark.worker_daemon`` (``session.get_spark``): ``--py-files``
+join ``sys.path`` per task, after the daemon has started, so the daemon
+could not import a module shipped in them.
 """
 
 from __future__ import annotations
