@@ -21,6 +21,16 @@ Semantics: the classic damped update
 edges, without dangling-mass redistribution (dangling nodes keep only
 the teleport term) — the variant is pinned by the DuckDB oracle and the
 numpy power-iteration twin in tests.
+
+Undirected operators share three primitives and never re-derive them:
+``_sym_edges`` (the distinct both-direction edge set, no self-loops,
+checkpointed), ``_degrees`` (its ``(node, deg)`` table) and
+``_triangles`` (the degree-ordered orientation and the triangle
+listing).  ``_triangles`` orients each edge from the lower (deg, node)
+rank to the higher, which caps every out-degree at ⌊√(2m)⌋ under any
+head-entity skew (Cohen's bound), and lists each triangle once at its
+lowest-rank apex; the triangle, clique, truss, motif and embeddedness
+operators extend that listing.
 """
 
 from __future__ import annotations
@@ -278,6 +288,74 @@ def _canonical_edges(
     ).distinct()
 
 
+def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected graph as (a, b) rows in BOTH directions: distinct,
+    no self-loops, checkpointed (every caller joins it more than once).
+    ``a < b`` selects the canonical half; ``groupBy("a")`` counts
+    degrees."""
+    e = _canonical_edges(edges, src, dst)
+    return e.unionByName(
+        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).localCheckpoint()
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(node, deg)``: rows per ``a`` of a both-direction edge set."""
+    return und.groupBy(F.col("a").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+
+
+def _rank_below(d1, n1, d2, n2):
+    """``(d1, n1) < (d2, n2)`` in the (degree, node) total order."""
+    return (d1 < d2) | ((d1 == d2) & (n1 < n2))
+
+
+def _triangles(
+    und: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Degree-ordered triangle listing (Cohen's MapReduce algorithm,
+    Schank–Wagner forward counting) over a :func:`_sym_edges` set.
+
+    Returns ``(deg, oriented, tri)``:
+
+    - ``deg``: the :func:`_degrees` table;
+    - ``oriented``: ``(u, v, du, dv)``, each undirected edge once, from
+      the endpoint of lower (deg, node) rank to the higher, with both
+      degrees.  A node's out-neighbours all have degree ≥ its
+      out-degree k, so k² ≤ 2m: out-degree is at most ⌊√(2m)⌋ under
+      any skew, and the wedge stage is Θ(|E|^1.5) total, never the
+      Θ(deg²) of a hub's full neighbourhood;
+    - ``tri``: ``(u, v, w)``, every triangle exactly once, at its
+      lowest-rank apex ``u`` with ``rank(v) < rank(w)``.  ``oriented``
+      is checkpointed; ``tri`` is not.
+    """
+    deg = _degrees(und)
+    oriented = (
+        und.join(deg.toDF("a", "du"), "a")
+        .join(deg.toDF("b", "dv"), "b")
+        .filter(_rank_below(F.col("du"), F.col("a"), F.col("dv"), F.col("b")))
+        .select(F.col("a").alias("u"), F.col("b").alias("v"), "du", "dv")
+        .localCheckpoint()
+    )
+    wedges = oriented.select("u", "v", "dv").join(
+        oriented.select("u", F.col("v").alias("w"), F.col("dv").alias("dw")),
+        "u",
+    )
+    tri = (
+        wedges.filter(
+            _rank_below(F.col("dv"), F.col("v"), F.col("dw"), F.col("w"))
+        )
+        .join(
+            oriented.select(F.col("u").alias("v"), F.col("v").alias("w")),
+            ["v", "w"],
+            "left_semi",
+        )
+        .select("u", "v", "w")
+    )
+    return deg, oriented, tri
+
+
 def triangle_stats(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -290,56 +368,18 @@ def triangle_stats(
 
     Scale plan (the part that must survive 10^12 edges): the naive
     wedge join is Θ(Σ deg²) — a single head entity of degree 10^6
-    yields 10^12 wedge rows.  This implements the degree-ordered
-    orientation of Cohen's MapReduce triangle algorithm (also
-    Schank–Wagner forward counting): orient every edge from the
-    endpoint with the SMALLER (degree, node) rank to the larger, then
-    join oriented wedges (u→v, u→w) against oriented closing edges
-    (v→w).  Out-degree under this orientation is O(√|E|) regardless of
-    skew, so the wedge stage is bounded Θ(|E|^1.5) total — the
-    classic bound — instead of deg² on the hot node.  All stages are
-    hash joins/aggs on edge keys; nothing is collected.
+    yields 10^12 wedge rows.  :func:`_triangles` lists each triangle
+    once under the degree-ordered orientation, so the wedge stage is
+    Θ(|E|^1.5) under any skew.  All stages are hash joins/aggs on edge
+    keys; nothing is collected.
 
     The count is exact and orientation-independent (each triangle has
     exactly one source-of-two under a total order), so the DuckDB
     oracle can use the simpler a<b<c three-way join.
     """
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    # orient low-rank → high-rank under the total order (deg, node)
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select(F.col("u"), F.col("v").alias("p"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("q"))
-    # wedges at the LOW-rank apex; (p, q) normalized so the closing
-    # edge lookup is a single equi-join against the canonical edge set
-    wedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select(
-            F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")
-        )
-    )
-    tri = wedges.join(und, ["a", "b"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-    stats = und.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
+    deg, oriented, tri = _triangles(_sym_edges(edges, src, dst))
+    tri = tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    stats = oriented.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
         F.broadcast(
             deg.agg(
                 F.count(F.lit(1)).alias("n_nodes"),
@@ -374,50 +414,15 @@ def local_clustering(
     cliques show n_tri ≈ deg·(deg−1)/2 — the per-entity refinement of
     triangle_stats' global transitivity row.
 
-    Scale plan: same degree-ordered orientation as triangle_stats
-    (Cohen / Schank–Wagner — wedge stage bounded Θ(|E|^1.5) under any
-    skew); the only delta is keeping the wedge apex ``u`` through the
-    closing-edge join and exploding each found triangle to its three
-    vertices before ONE count agg.  Explode factor is exactly 3 —
+    Scale plan: the :func:`_triangles` listing (wedge stage bounded
+    Θ(|E|^1.5) under any skew), each found triangle exploded to its
+    three vertices before ONE count agg.  Explode factor is exactly 3 —
     never quadratic.  Isolated-from-triangles nodes still get a row
     via the left join against the degree table (n_tri = 0).
     """
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select("u", F.col("v").alias("p"))
-    w2 = oriented.select("u", F.col("v").alias("q"))
-    wedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select(
-            "u",
-            F.least("p", "q").alias("a"),
-            F.greatest("p", "q").alias("b"),
-        )
-    )
+    deg, _, tri = _triangles(_sym_edges(edges, src, dst))
     tri_nodes = (
-        wedges.join(und, ["a", "b"])
-        .select(
-            F.explode(F.array("u", "a", "b")).alias("node")
-        )
+        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
@@ -460,15 +465,12 @@ def neighborhood_jaccard(
     map-side combinable; degree tables are node-sized and join on the
     pair keys un-hinted (AQE decides).
     """
-    e = _canonical_edges(edges, src, dst)
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )  # (node=a, neighbor=b), both directions, distinct by construction
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    und = _sym_edges(edges, src, dst)  # (node=a, neighbor=b)
+    deg = _degrees(und)
     wed = und.select(F.col("b").alias("n"), F.col("a").alias("m"))
     if max_degree is not None:
         keep = deg.filter(F.col("deg") <= max_degree).select(
-            F.col("a").alias("n")
+            F.col("node").alias("n")
         )
         wed = wed.join(keep, "n")
     p1 = wed.select("n", F.col("m").alias("ent_a"))
@@ -480,12 +482,8 @@ def neighborhood_jaccard(
         .agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= min_common)
     )
-    out = common.join(
-        deg.select(F.col("a").alias("ent_a"), F.col("deg").alias("deg_a")),
-        "ent_a",
-    ).join(
-        deg.select(F.col("a").alias("ent_b"), F.col("deg").alias("deg_b")),
-        "ent_b",
+    out = common.join(deg.toDF("ent_a", "deg_a"), "ent_a").join(
+        deg.toDF("ent_b", "deg_b"), "ent_b"
     )
     jac = F.col("common") / (
         F.col("deg_a") + F.col("deg_b") - F.col("common")
@@ -538,13 +536,10 @@ def link_prediction(
     (degrees keep full counts); the adjacency test is one left_anti
     join on the canonical edge key, NOT a NOT-EXISTS per row.
     """
-    e = _canonical_edges(edges, src, dst).localCheckpoint()
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    und = _sym_edges(edges, src, dst)
+    deg = _degrees(und)
     wed = und.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    cdeg = deg.select(F.col("a").alias("n"), F.col("deg").alias("deg_n"))
+    cdeg = deg.toDF("n", "deg_n")
     if max_degree is not None:
         cdeg = cdeg.filter(F.col("deg_n") <= max_degree)
     wed = wed.join(cdeg, "n")
@@ -567,16 +562,10 @@ def link_prediction(
         .filter(F.col("common") >= min_common)
     )
     cand = pairs.join(
-        e.select(F.col("a").alias("ent_a"), F.col("b").alias("ent_b")),
-        ["ent_a", "ent_b"],
-        "left_anti",
+        und.toDF("ent_a", "ent_b"), ["ent_a", "ent_b"], "left_anti"
     )
-    out = cand.join(
-        deg.select(F.col("a").alias("ent_a"), F.col("deg").alias("deg_a")),
-        "ent_a",
-    ).join(
-        deg.select(F.col("a").alias("ent_b"), F.col("deg").alias("deg_b")),
-        "ent_b",
+    out = cand.join(deg.toDF("ent_a", "deg_a"), "ent_a").join(
+        deg.toDF("ent_b", "deg_b"), "ent_b"
     )
     jac = F.col("common") / (
         F.col("deg_a") + F.col("deg_b") - F.col("common")
@@ -622,14 +611,7 @@ def bfs_hops(
     ``localCheckpoint`` truncates lineage per round exactly like
     pagerank/cc (without it round k's plan would contain rounds
     0..k−1 and re-execute the upstream edge pipeline per round)."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    adj = _sym_edges(edges, src, dst)
     dist = seeds.select(
         F.col("node"), F.lit(0).cast("long").alias("hop")
     ).localCheckpoint(eager=True)
@@ -661,14 +643,10 @@ def degree_histogram(
     stage is a map-side-combinable hash aggregation; the head-entity
     skew all lands in per-degree counts of size ≤ n_nodes — no join at
     all, so nothing to salt."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
+    deg = _degrees(_sym_edges(edges, src, dst))
+    return deg.groupBy(F.col("deg").alias("degree")).agg(
+        F.count(F.lit(1)).alias("n_nodes")
     )
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
 def kcore(
@@ -694,18 +672,12 @@ def kcore(
 
     Output: (entity, degree) for every k-core member, degree counted
     within the core."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _sym_edges(edges, src, dst)
     n_prev = und.count()
     for _ in range(max_rounds):
-        deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("a")
+        keep = _degrees(und).filter(F.col("deg") >= k).select(
+            F.col("node").alias("a")
+        )
         und = (
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
@@ -715,11 +687,7 @@ def kcore(
         if n_now == n_prev:
             break
         n_prev = n_now
-    return (
-        und.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .select(F.col("a").alias("entity"), F.col("degree").cast("long"))
-    )
+    return _degrees(und).toDF("entity", "degree")
 
 
 def link_graph(
@@ -851,12 +819,8 @@ def node2vec_walks(
     """
     from deepie_spark.functions.text import char_poly_hash_str
 
-    e = _canonical_edges(edges, src, dst)
-    bidi = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint()
-    )
-    deg = bidi.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    bidi = _sym_edges(edges, src, dst)
+    deg = _degrees(bidi).toDF("a", "deg")
     wnd = W.partitionBy("a").orderBy("b")
     ranked = bidi.select(
         "a", "b", (F.row_number().over(wnd) - 1).alias("rk")
@@ -975,14 +939,7 @@ def label_propagation(
 
     Output: (entity, community) for every endpoint of the symmetrized
     distinct edge set."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _sym_edges(edges, src, dst)
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -1010,66 +967,21 @@ def label_propagation(
 
 
 def _edge_support(und_c: DataFrame) -> DataFrame:
-    """Per-edge triangle support of a canonical (a < b) edge set, via
-    the same degree-ordered orientation as :func:`triangle_stats`
-    (Cohen / Schank–Wagner forward counting): orient every edge from
-    the smaller (degree, node) rank to the larger, enumerate wedges
-    from each node's oriented out-neighborhood — bounded O(√|E|) per
-    node regardless of skew, Θ(|E|^1.5) total — and close them against
-    oriented edges.  Each triangle is produced exactly once and votes
-    for its three canonical edges; one count agg with map-side combine
-    yields (a, b, sup) for every edge in ≥1 triangle."""
-    deg = (
-        und_c.select(F.col("a").alias("n"))
-        .unionByName(und_c.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("deg").alias("dega"))
-    db = deg.select(F.col("n").alias("b"), F.col("deg").alias("degb"))
-    ka = F.struct(F.col("dega").alias("d"), F.col("a").alias("n"))
-    kb = F.struct(F.col("degb").alias("d"), F.col("b").alias("n"))
-    oriented = (
-        und_c.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(ka < kb, kb).otherwise(ka).alias("kv"),
-        )
-    )
-    w1 = oriented.select(
-        F.col("u"), F.col("v").alias("v1"), F.col("kv").alias("kv1")
-    )
-    w2 = oriented.select(
-        F.col("u"), F.col("v").alias("v2"), F.col("kv").alias("kv2")
-    )
-    closing = oriented.select(
-        F.col("u").alias("v1"), F.col("v").alias("v2")
-    )
-    tri = (
-        w1.join(w2, "u")
-        .filter(F.col("kv1") < F.col("kv2"))
-        .select("u", "v1", "v2")
-        .join(closing, ["v1", "v2"], "left_semi")
-    )
-    votes = (
-        tri.select(
-            F.least("u", "v1").alias("a"), F.greatest("u", "v1").alias("b")
-        )
-        .unionByName(
-            tri.select(
-                F.least("u", "v2").alias("a"),
-                F.greatest("u", "v2").alias("b"),
-            )
-        )
-        .unionByName(
-            tri.select(
-                F.least("v1", "v2").alias("a"),
-                F.greatest("v1", "v2").alias("b"),
-            )
-        )
-    )
+    """Per-edge triangle support of a canonical (a < b) edge set: each
+    :func:`_triangles` triangle (listed once, Θ(|E|^1.5) under skew)
+    votes for its three canonical edges, and one count agg with
+    map-side combine yields (a, b, sup) for every edge in ≥1
+    triangle."""
+    _, _, tri = _triangles(_sym_edges(und_c, "a", "b"))
+
+    def edge(x, y):
+        return F.struct(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
+
+    votes = tri.select(
+        F.explode(
+            F.array(edge("u", "v"), edge("u", "w"), edge("v", "w"))
+        ).alias("e")
+    ).select("e.a", "e.b")
     return votes.groupBy("a", "b").agg(F.count(F.lit(1)).alias("sup"))
 
 
@@ -1174,14 +1086,7 @@ def _pairwise_hops(
     """Shared per-source BFS of closeness_stats / harmonic_centrality:
     (s, node, hop) exact shortest-hop rows for every source in
     ``seeds`` (None = all nodes) up to ``max_hops``."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    adj = _sym_edges(edges, src, dst)
     if seeds is None:
         seeds = adj.select(F.col("a").alias("node")).distinct()
     dist = seeds.select(
@@ -1266,16 +1171,9 @@ def degree_assortativity(
     on the edge endpoints (entity-keyed, well-spread) → ONE global
     agg.  No window, no self-join beyond the degree lookups.
     """
-    und = _canonical_edges(edges, src, dst)
-    bidi = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = bidi.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("dg"))
-    ends = (
-        bidi.join(deg, "a")
-        .withColumnRenamed("dg", "x")
-        .join(deg.select(F.col("a").alias("b"), F.col("dg").alias("y")), "b")
-    )
+    bidi = _sym_edges(edges, src, dst)
+    deg = _degrees(bidi)
+    ends = bidi.join(deg.toDF("a", "x"), "a").join(deg.toDF("b", "y"), "b")
     m = ends.agg(
         F.count(F.lit(1)).cast("long").alias("n_ends"),
         F.sum("x").cast("long").alias("sum_x"),
@@ -1320,24 +1218,18 @@ def maximal_independent_set(
     action.  Returns (entity, mis_round) — the independent set with
     the round each member was claimed in.
     """
-    und = _canonical_edges(edges, src, dst)
+    active_e = _sym_edges(edges, src, dst)
     active_n = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
+        active_e.select(F.col("a").alias("v"))
         .distinct()
         .select("v", char_poly_hash_str(F.col("v")).alias("p"))
         .localCheckpoint()
     )
-    active_e = und.localCheckpoint()
     picked: DataFrame | None = None
     for rnd in range(1, int(max_rounds) + 1):
         if active_n.limit(1).count() == 0:
             break
-        bidi = active_e.select(
-            F.col("a").alias("v"), F.col("b").alias("u")
-        ).unionByName(
-            active_e.select(F.col("b").alias("v"), F.col("a").alias("u"))
-        )
+        bidi = active_e.toDF("v", "u")
         nb_min = (
             bidi.join(
                 active_n.select(
@@ -1588,14 +1480,13 @@ def wl_refinement(
     """
     from deepie_spark.functions.text import BASE, MOD
 
-    e = _canonical_edges(edges, src, dst)
-    bidi = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint()
-    )
+    bidi = _sym_edges(edges, src, dst)
     lbl = (
-        bidi.groupBy(F.col("a").alias("v"))
-        .agg((F.count(F.lit(1)) % MOD).cast("long").alias("lab"))
+        _degrees(bidi)
+        .select(
+            F.col("node").alias("v"),
+            (F.col("deg") % MOD).cast("long").alias("lab"),
+        )
         .localCheckpoint(eager=True)
     )
     for _ in range(int(rounds)):
@@ -1788,12 +1679,7 @@ def greedy_coloring(
     ``localCheckpoint`` per round, bounded 1-row probes.  Returns
     ``(entity, color)``.
     """
-    und = _canonical_edges(edges, src, dst)
-    bidi_all = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint()
-    )
+    bidi_all = _sym_edges(edges, src, dst).toDF("v", "u")
     unc = (
         bidi_all.select("v")
         .distinct()
@@ -2033,14 +1919,7 @@ def _sigma_paths(
     betweenness_centrality): (s, node, hop, sig) rows — hop the
     shortest distance, sig = σ(s, node) the exact-long number of
     shortest paths."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    adj = _sym_edges(edges, src, dst)
     if seeds is None:
         seeds = adj.select(F.col("a").alias("node")).distinct()
     paths = seeds.select(
@@ -2156,14 +2035,7 @@ def eccentricity_stats(
     schema is frozen.  Returns ``(entity, ecc, n_reached)``; isolated
     seeds (nothing reached) are absent.
     """
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    adj = _sym_edges(edges, src, dst)
     if seeds is None:
         seeds = adj.select(F.col("a").alias("node")).distinct()
     dist = seeds.select(
@@ -2220,7 +2092,8 @@ def modularity(
     community-keyed aggs, one 1-row full-outer combine — no window,
     no driver collect.
     """
-    e = _canonical_edges(edges, src, dst).localCheckpoint()
+    und = _sym_edges(edges, src, dst)
+    e = und.filter(F.col("a") < F.col("b"))
     lab = labels.select(
         F.col(node_col).alias("node"), F.col(label_col).alias("c")
     )
@@ -2234,12 +2107,8 @@ def modularity(
         .groupBy(F.col("ca").alias("c"))
         .agg(F.count(F.lit(1)).cast("long").alias("l_c"))
     )
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     d_c = (
-        deg.join(lab.withColumnRenamed("node", "a"), "a")
+        _degrees(und).join(lab, "node")
         .groupBy("c")
         .agg(F.sum("deg").cast("long").alias("d_c"))
     )
@@ -2292,10 +2161,7 @@ def attribute_assortativity(
     query expects strongly negative r).  Edges whose endpoint lacks an
     attribute row are dropped (inner joins) — counted in n_dropped.
     """
-    e = _canonical_edges(edges, src, dst)
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    und = _sym_edges(edges, src, dst)
     at = attrs.select(
         F.col(node_col).alias("node"), F.col(attr_col).alias("t")
     ).distinct()
@@ -2696,13 +2562,7 @@ def graph_summary(
     entity.  Every numerator/denominator is an exact long; the three
     ratios are single IEEE divides.  n must satisfy n³ < 2⁶³ (the
     rank-corr bound family)."""
-    und = _canonical_edges(edges, src, dst)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = _degrees(_sym_edges(edges, src, dst))
     a = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("deg").cast("long").alias("deg_sum"),
@@ -2764,14 +2624,7 @@ def densest_subgraph(
     ``(entity, degree, n_nodes, n_edges, density)`` with degree
     counted within the snapshot and density = |E|/|V| rounded to 6.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _sym_edges(edges, src, dst)
     thr = eps_den + eps_num  # peel iff deg * n * eps_den <= e_und * thr
     best = None  # (e_und, n_nodes, und_df) — exact longs
     for _ in range(max_rounds):
@@ -2781,29 +2634,24 @@ def densest_subgraph(
         e_und = und.count()
         if best is None or e_und * best[1] > best[0] * n_nodes:
             best = (e_und, n_nodes, und)
-        deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(
+        keep = _degrees(und).filter(
             F.col("deg") * F.lit(n_nodes) * F.lit(eps_den)
             > F.lit(e_und) * F.lit(thr)
-        ).select("a")
+        ).select(F.col("node").alias("a"))
         und = (
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
             .localCheckpoint(eager=True)
         )
     e_b, n_b, und_b = best
-    return (
-        und_b.groupBy("a")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .select(
-            F.col("a").alias("entity"),
-            "degree",
-            F.lit(n_b).cast("long").alias("n_nodes"),
-            F.lit(e_b // 2).cast("long").alias("n_edges"),
-            F.round(
-                F.lit(e_b).cast("double") / F.lit(2 * n_b).cast("double"), 6
-            ).alias("density"),
-        )
+    return _degrees(und_b).select(
+        F.col("node").alias("entity"),
+        F.col("deg").alias("degree"),
+        F.lit(n_b).cast("long").alias("n_nodes"),
+        F.lit(e_b // 2).cast("long").alias("n_edges"),
+        F.round(
+            F.lit(e_b).cast("double") / F.lit(2 * n_b).cast("double"), 6
+        ).alias("density"),
     )
 
 
@@ -2931,15 +2779,8 @@ def simrank_pairs(
     Θ(Σ_pair d_a·d_b); at web scale apply the standard hub-degree
     guard upstream (neighbor_jaccard precedent) and/or drop
     scale_bits (overflow bound: d_a·d_b·2^bits must fit int64)."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    adj = _sym_edges(edges, src, dst)
+    deg = _degrees(adj).toDF("a", "d")
     one = F.lit(1 << scale_bits).cast("long")
     cand = (
         adj.alias("x")
@@ -3060,19 +2901,7 @@ def degree_anonymity(
 
     Plan: degree agg → degree-histogram agg → 1-row broadcast — three
     map-side-combinable aggs, nothing else."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+    deg = _degrees(_sym_edges(edges, src, dst)).toDF("node", "degree")
     hist = deg.groupBy("degree").agg(
         F.count(F.lit(1)).cast("long").alias("class_n")
     )
@@ -3120,7 +2949,8 @@ def conductance(
     community-keyed aggs and a 1-row broadcast of m — the modularity
     plan shape, no window, no driver collect.
     """
-    e = _canonical_edges(edges, src, dst).localCheckpoint()
+    und = _sym_edges(edges, src, dst)
+    e = und.filter(F.col("a") < F.col("b"))
     lab = labels.select(
         F.col(node_col).alias("node"), F.col(label_col).alias("c")
     )
@@ -3139,12 +2969,8 @@ def conductance(
         .groupBy("c")
         .agg(F.count(F.lit(1)).cast("long").alias("cut"))
     )
-    und = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     vol = (
-        deg.join(lab.withColumnRenamed("node", "a"), "a")
+        _degrees(und).join(lab, "node")
         .groupBy("c")
         .agg(
             F.sum("deg").cast("long").alias("vol"),
@@ -3313,11 +3139,14 @@ def bowtie_decomposition(
     core = scc.join(F.broadcast(core_id), "scc_id").select(
         F.col("entity").alias("node")
     ).localCheckpoint(eager=True)
-    rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    und = e.unionByName(rev).distinct().localCheckpoint()
     fw = _reach_fixpoint(e, core).withColumnRenamed("node", "fw")
-    bw = _reach_fixpoint(rev, core).withColumnRenamed("node", "bw")
-    wk = _reach_fixpoint(und, core).withColumnRenamed("node", "wk")
+    # the same edges read backwards: nodes that reach the core
+    bw = _reach_fixpoint(e.toDF("b", "a"), core).withColumnRenamed(
+        "node", "bw"
+    )
+    wk = _reach_fixpoint(_sym_edges(e, "a", "b"), core).withColumnRenamed(
+        "node", "wk"
+    )
     return (
         nodes.join(
             core.select(F.col("node"), F.lit(1).alias("_c")), "node", "left"
@@ -3365,18 +3194,8 @@ def coreness(
 
     Output: (entity, coreness) exact longs, isolated-from-edges
     nodes absent (no edges → no core membership)."""
-    und0 = _canonical_edges(edges, src, dst)
-    adj = (
-        und0.unionByName(
-            und0.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .localCheckpoint()
-    )
-    val = (
-        adj.groupBy(F.col("a").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("v"))
-        .localCheckpoint(eager=True)
-    )
+    adj = _sym_edges(edges, src, dst)
+    val = _degrees(adj).toDF("node", "v").localCheckpoint(eager=True)
     for _ in range(max_rounds):
         nv = (
             adj.join(val, adj["b"] == val["node"])
@@ -3426,57 +3245,20 @@ def four_clique_count(
     clustering moves).
 
     Scale plan: the Chiba–Nishizeki / degree-ordered orientation
-    bound.  Orient every undirected edge from the endpoint with the
-    smaller (degree, node) rank to the larger — out-degree is then
-    O(√|E|) regardless of skew — and enumerate each clique exactly
-    once in rank order: an oriented triangle (u→v, u→w, v→w) joined
-    to a fourth vertex x through THREE oriented edges (u→x, v→x,
-    w→x), which forces rank(x) above the whole triangle, so no
-    deduplication pass is ever needed.  Every stage is an equi-join
-    on node keys; nothing is collected.
+    bound.  Each :func:`_triangles` triangle (u, v, w), listed once in
+    rank order, joins a fourth vertex x through THREE oriented edges
+    (u→x, v→x, w→x), which forces rank(x) above the whole triangle, so
+    every clique is enumerated exactly once and no deduplication pass
+    is ever needed.  Every stage is an equi-join on node keys; nothing
+    is collected.
 
     The count is orientation-independent, so the DuckDB oracle can
     use the naive a<b<c<d six-edge join.
 
     Output: one row (n_nodes, n_edges, n_triangles, n_4cliques).
     """
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    # (u, v, dv): oriented low-rank → high-rank; dv carried so the
-    # wedge stage can order out-neighbours by the SAME total order
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(low_first, F.col("deg_b"))
-            .otherwise(F.col("deg_a"))
-            .alias("dv"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select("u", F.col("v").alias("p"), F.col("dv").alias("dp"))
-    w2 = oriented.select("u", F.col("v").alias("q"), F.col("dv").alias("dq"))
-    wedges = w1.join(w2, "u").filter(
-        (F.col("dp") < F.col("dq"))
-        | ((F.col("dp") == F.col("dq")) & (F.col("p") < F.col("q")))
-    )
-    close = oriented.select(
-        F.col("u").alias("p"), F.col("v").alias("q")
-    )
-    tri = wedges.join(close, ["p", "q"]).select(
-        "u", F.col("p").alias("v"), F.col("q").alias("w")
-    ).localCheckpoint()
+    deg, oriented, tri = _triangles(_sym_edges(edges, src, dst))
+    tri = tri.localCheckpoint()
     n_tri = tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     ox = oriented.select("u", F.col("v").alias("x"))
     cand = tri.join(ox, "u")
@@ -3491,7 +3273,7 @@ def four_clique_count(
         "left_semi",
     )
     n_k4 = c2.agg(F.count(F.lit(1)).cast("long").alias("n_4cliques"))
-    stats = und.agg(
+    stats = oriented.agg(
         F.count(F.lit(1)).cast("long").alias("n_edges")
     ).crossJoin(
         F.broadcast(deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes")))
@@ -3518,16 +3300,12 @@ def avg_neighbor_degree(
     divide.  Two joins on node keys + two aggs; no window.
 
     Output: (deg, n_nodes, sum_nbr_deg, knn) per degree class."""
-    und = _canonical_edges(edges, src, dst)
-    nb = und.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-    deg = nb.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v"))
-    s = nb.join(dv, "v").groupBy("u").agg(
-        F.sum("deg_v").cast("long").alias("s_u")
-    )
-    per_node = deg.join(s, "u")
+    und = _sym_edges(edges, src, dst)
+    deg = _degrees(und)
+    s = und.join(deg.toDF("b", "deg_b"), "b").groupBy(
+        F.col("a").alias("node")
+    ).agg(F.sum("deg_b").cast("long").alias("s_u"))
+    per_node = deg.join(s, "node")
     return (
         per_node.groupBy("deg")
         .agg(
@@ -3559,51 +3337,19 @@ def kclique_communities3(
     bridge entity legitimately sits in several communities, which
     disjoint LPA/modularity clustering cannot express).
 
-    Construction: enumerate triangles (the degree-ordered-orientation
-    wedge join — Θ(|E|^1.5) under skew, the triangle_stats bound),
-    project each onto its three canonical edge KEYS, connect the
-    keys pairwise (triangles sharing an edge then share a key
-    vertex — the classic reduction of clique adjacency to the
-    edge-membership graph for k = 3), and run min-label propagation
-    on the key graph to the true fixpoint (exceptAll convergence
-    check, ``max_rounds`` backstop ≥ diameter).  Community label =
+    Construction: enumerate triangles (:func:`_triangles`,
+    Θ(|E|^1.5) under skew), project each onto its three canonical
+    edge KEYS, connect the keys pairwise (triangles sharing an edge
+    then share a key vertex — the classic reduction of clique
+    adjacency to the edge-membership graph for k = 3), and run
+    min-label propagation on the key graph to the true fixpoint
+    (exceptAll convergence check, ``max_rounds`` backstop ≥
+    diameter).  Community label =
     the lexicographically smallest member edge key; vertices inherit
     every community their triangle edges reach — OVERLAPPING rows.
 
     Output: (community, entity) distinct."""
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(low_first, F.col("deg_b"))
-            .otherwise(F.col("deg_a"))
-            .alias("dv"),
-        )
-    )
-    w1 = oriented.select("u", F.col("v").alias("p"), F.col("dv").alias("dp"))
-    w2 = oriented.select("u", F.col("v").alias("q"), F.col("dv").alias("dq"))
-    wedges = w1.join(w2, "u").filter(
-        (F.col("dp") < F.col("dq"))
-        | ((F.col("dp") == F.col("dq")) & (F.col("p") < F.col("q")))
-    )
-    close = oriented.select(F.col("u").alias("p"), F.col("v").alias("q"))
-    tri = wedges.join(close, ["p", "q"]).select(
-        "u", F.col("p").alias("v"), F.col("q").alias("w")
-    )
+    _, _, tri = _triangles(_sym_edges(edges, src, dst))
 
     def key(x, y):
         return F.concat_ws("|", F.least(x, y), F.greatest(x, y))
@@ -3611,16 +3357,12 @@ def kclique_communities3(
     k1 = key(F.col("u"), F.col("v"))
     k2 = key(F.col("u"), F.col("w"))
     k3 = key(F.col("v"), F.col("w"))
-    adj = (
+    shared = (
         tri.select(k1.alias("x"), k2.alias("y"))
         .unionByName(tri.select(k1.alias("x"), k3.alias("y")))
         .unionByName(tri.select(k2.alias("x"), k3.alias("y")))
-        .distinct()
-        .localCheckpoint()
     )
-    sym = adj.unionByName(
-        adj.select(F.col("y").alias("x"), F.col("x").alias("y"))
-    ).distinct()
+    sym = _sym_edges(shared, "x", "y").toDF("x", "y")
     labels = (
         sym.select(F.col("x").alias("k"))
         .distinct()
@@ -3659,16 +3401,12 @@ def kclique_communities3(
 def _min_label_cc(
     und: DataFrame, max_rounds: int = 30
 ) -> DataFrame:
-    """(node, component) over an undirected canonical edge set by
+    """(node, component) over a both-direction edge set by
     min-label propagation to the TRUE fixpoint (exceptAll check,
     ``max_rounds`` backstop ≥ diameter) — component = smallest member
     label, deterministic for any orderable node type (the cc.py
     star-contraction twin for non-integer labels)."""
-    sym = und.select(
-        F.col("a").alias("x"), F.col("b").alias("y")
-    ).unionByName(
-        und.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
+    sym = und.toDF("x", "y")
     labels = (
         sym.select(F.col("x").alias("node"))
         .distinct()
@@ -3715,20 +3453,15 @@ def attack_robustness(
     the KG-resilience audit that separates hub-and-spoke extraction
     artifacts (GCC collapses at k = 1) from genuinely dense graphs.
 
-    Per leg: filter the canonical edge set, min-label CC to the true
+    Per leg: filter the both-direction edge set, min-label CC to the true
     fixpoint, one max-size agg.  The hub list is a bounded-k driver
     collect (the rake stoplist rule); gcc_share is against the
     ORIGINAL node count so legs are comparable.
 
     Output: (k_removed, n_nodes_left, n_edges_left, gcc_size,
     gcc_share)."""
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    und = _sym_edges(edges, src, dst)
+    deg = _degrees(und)
     n0 = deg.count()
     kmax = max(ks)
     hubs = [
@@ -3754,7 +3487,7 @@ def attack_robustness(
             )
             .crossJoin(
                 F.broadcast(
-                    ek.agg(
+                    ek.filter(F.col("a") < F.col("b")).agg(
                         F.count(F.lit(1)).cast("long").alias(
                             "n_edges_left"
                         )
@@ -3797,10 +3530,11 @@ def motif_census(
 
     - wedges (P₃)   = Σ_v d(d−1) DIV 2          — one degree agg;
     - stars3 (K₁,₃) = Σ_v d(d−1)(d−2) DIV 6     — same agg;
-    - triangles     — the degree-ordered oriented wedge join
-      (Θ(|E|^1.5) under skew, the triangle_stats plan);
+    - triangles     — the :func:`_triangles` listing
+      (Θ(|E|^1.5) under skew);
     - paths3 (P₄)   = Σ_{(a,b)∈E}(d_a−1)(d_b−1) − 3·triangles
-      — two degree join-backs onto the edge list, no path explosion;
+      — summed over the oriented edges, which carry both degrees, so
+      there is no path explosion;
     - cycles4 (C₄)  = (Σ_{u<w} codeg(u,w)·(codeg−1)) DIV 4 — each
       4-cycle is counted exactly twice, once per diagonal pair, and
       the doubled pair sum is divisible by 4 in exact arithmetic.
@@ -3810,13 +3544,8 @@ def motif_census(
     one switches to a Chiba-Nishizeki / butterfly-style degree
     ordering (see bipartite_butterflies) or caps the wedge apex like
     neighborhood_jaccard's hub guard."""
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    und = _sym_edges(edges, src, dst)
+    deg, oriented, tri = _triangles(und)
     base = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum(F.expr("deg * (deg - 1) DIV 2")).cast("long").alias("wedges"),
@@ -3824,41 +3553,17 @@ def motif_census(
         .cast("long")
         .alias("stars3"),
     )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    ed = und.join(da, "a").join(db, "b")
-    epairs = ed.agg(
+    epairs = oriented.agg(
         F.count(F.lit(1)).cast("long").alias("n_edges"),
-        F.sum((F.col("deg_a") - 1) * (F.col("deg_b") - 1))
+        F.sum((F.col("du") - 1) * (F.col("dv") - 1))
         .cast("long")
         .alias("deg_pair_sum"),
     )
-    # triangles: orient low (deg, node) rank -> high, wedge at the apex
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ed.select(
-        F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
-    w1 = oriented.select("u", F.col("v").alias("p"))
-    w2 = oriented.select("u", F.col("v").alias("q"))
-    owedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
-    )
-    tri = owedges.join(und, ["a", "b"]).agg(
-        F.count(F.lit(1)).cast("long").alias("triangles")
-    )
+    tri = tri.agg(F.count(F.lit(1)).cast("long").alias("triangles"))
     # C4 via codegrees: all wedges (any apex), endpoint pair p < q
-    adj = und.select(F.col("a").alias("n"), F.col("b").alias("nb")).unionByName(
-        und.select(F.col("b").alias("n"), F.col("a").alias("nb"))
-    )
-    x1 = adj.select(F.col("n"), F.col("nb").alias("p"))
-    x2 = adj.select(F.col("n"), F.col("nb").alias("q"))
     codeg = (
-        x1.join(x2, "n")
+        und.toDF("n", "p")
+        .join(und.toDF("n", "q"), "n")
         .filter(F.col("p") < F.col("q"))
         .groupBy("p", "q")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -3896,44 +3601,16 @@ def balanced_triangles(
     contradiction-heavy KGs: low balance ⇒ antagonistic relation
     cliques.
 
-    Scale plan: the SAME degree-ordered orientation as
-    :func:`triangle_stats` (wedge stage Θ(|E|^1.5) under skew); the
-    three edge signs are PURE in-row hash expressions of the endpoint
-    strings — no sign table is joined, so the signed census costs the
-    unsigned census plus a projection.  The hash is reproducible in
-    ANSI SQL, so the DuckDB oracle signs the simpler a<b<c
-    enumeration identically.
+    Scale plan: the :func:`_triangles` listing (wedge stage
+    Θ(|E|^1.5) under skew); the three edge signs are PURE in-row hash
+    expressions of the endpoint strings — no sign table is joined, so
+    the signed census costs the unsigned census plus a projection.
+    The hash is reproducible in ANSI SQL, so the DuckDB oracle signs
+    the simpler a<b<c enumeration identically.
     """
     from deepie_spark.functions.text import char_poly_hash_str
 
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select(F.col("u"), F.col("v").alias("p"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("q"))
-    wedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select("u", F.col("p").alias("a"), F.col("q").alias("b"))
-    )
-    tri = wedges.join(und, ["a", "b"]).select("u", "a", "b")
+    _, oriented, tri = _triangles(_sym_edges(edges, src, dst))
 
     def neg(x, y):
         pair = F.concat_ws(
@@ -3943,13 +3620,13 @@ def balanced_triangles(
 
     signed = tri.select(
         (
-            neg(F.col("u"), F.col("a"))
-            + neg(F.col("u"), F.col("b"))
-            + neg(F.col("a"), F.col("b"))
+            neg(F.col("u"), F.col("v"))
+            + neg(F.col("u"), F.col("w"))
+            + neg(F.col("v"), F.col("w"))
         ).alias("n_neg")
     )
-    neg_edges = und.select(
-        neg(F.col("a"), F.col("b")).alias("ne")
+    neg_edges = oriented.select(
+        neg(F.col("u"), F.col("v")).alias("ne")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_edges"),
         F.sum("ne").cast("long").alias("n_neg_edges"),
@@ -3988,44 +3665,16 @@ def local_clustering_hist(
     (a KG whose global coefficient hides a bimodal local mix —
     cliquey rule clusters + star hubs — shows it here).
 
-    Scale plan: triangles come from the SAME degree-ordered wedge
-    orientation as :func:`triangle_stats` (Θ(|E|^1.5) bound), then
-    ONE explode charges each triangle to its 3 corners.  The bin and
-    the fixed-point lcc are INTEGER arithmetic — bin = min(9,
+    Scale plan: triangles come from :func:`_triangles` (Θ(|E|^1.5)
+    bound), then ONE explode charges each triangle to its 3 corners.
+    The bin and the fixed-point lcc are INTEGER arithmetic — bin = min(9,
     (2·t·10) div (d(d−1))), fp = (2·t·2²⁰) div (d(d−1)) — so the
     histogram and the order-free per-bin fp sums are exact longs
     (the integer-DIV rule: never float-divide-then-truncate).
     """
-    und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select(F.col("u"), F.col("v").alias("p"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("q"))
-    wedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select("u", F.col("p").alias("a"), F.col("q").alias("b"))
-    )
-    tri = wedges.join(und, ["a", "b"]).select("u", "a", "b")
+    deg, _, tri = _triangles(_sym_edges(edges, src, dst))
     per_node = (
-        tri.select(F.explode(F.array("u", "a", "b")).alias("node"))
+        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("t"))
     )
@@ -4061,67 +3710,16 @@ def edge_embeddedness_hist(
     """Histogram of EDGE EMBEDDEDNESS — the number of common
     neighbors of each edge's endpoints (Granovetter: embeddedness 0
     = a *local bridge*, the tie whose removal lengthens paths; high
-    embeddedness = a strongly embedded intra-community tie).  Each
-    triangle closes exactly one oriented wedge, so counting wedge
-    closures per canonical edge (the triangle_stats orientation,
-    Θ(|E|^1.5) under skew) gives every edge's common-neighbor count
-    without a neighborhood self-join; edges never closed LEFT-join
-    to 0.  Output: one row per embeddedness level with its edge
+    embeddedness = a strongly embedded intra-community tie).  An
+    edge's common neighbours are the triangles through it, so its
+    :func:`_edge_support` (Θ(|E|^1.5) under skew) is its embeddedness,
+    with no neighborhood self-join; edges in no triangle LEFT-join to
+    0.  Output: one row per embeddedness level with its edge
     count — level 0's count is the local-bridge census."""
     und = _canonical_edges(edges, src, dst).localCheckpoint()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
+    per_edge = und.join(_edge_support(und), ["a", "b"], "left").select(
+        F.coalesce("sup", F.lit(0)).cast("long").alias("emb")
     )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    low_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(low_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(low_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    ).localCheckpoint()
-    w1 = oriented.select(F.col("u"), F.col("v").alias("p"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("q"))
-    wedges = (
-        w1.join(w2, "u")
-        .filter(F.col("p") < F.col("q"))
-        .select("u", F.col("p").alias("a"), F.col("q").alias("b"))
-    )
-    tri = wedges.join(und, ["a", "b"]).select("u", "a", "b")
-    # each triangle (u,a,b) closes all three of its edges once
-    closed = (
-        tri.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("u", "a").alias("x"),
-                        F.greatest("u", "a").alias("y"),
-                    ),
-                    F.struct(
-                        F.least("u", "b").alias("x"),
-                        F.greatest("u", "b").alias("y"),
-                    ),
-                    F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
-                )
-            ).alias("e")
-        )
-        .select("e.x", "e.y")
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("emb"))
-    )
-    per_edge = und.join(
-        closed,
-        (und["a"] == closed["x"]) & (und["b"] == closed["y"]),
-        "left",
-    ).select(F.coalesce("emb", F.lit(0)).cast("long").alias("emb"))
     return (
         per_edge.groupBy("emb")
         .agg(F.count(F.lit(1)).cast("long").alias("n_edges"))

@@ -117,6 +117,14 @@ def write_triples_with_manifest(
     written on the driver without a second Spark job.
     """
     t0 = time.time()
+    counts = _write_parts(triples, out_dir)
+    _append_manifest(manifest_dir, stage, counts, t0, time.time())
+    return {"parts": len(counts), "n_triples": sum(counts.values())}
+
+
+def _write_parts(triples: DataFrame, out_dir: str) -> dict[int, int]:
+    """Append ``triples`` to the sink; ``{part_id: rows}`` of the files
+    this call wrote, from their footers."""
     before = part_files(out_dir)
     (
         sorted_for_write(triples)
@@ -124,11 +132,9 @@ def write_triples_with_manifest(
         .partitionBy("part_id")
         .parquet(out_dir)
     )
-    counts = _footer_counts(
+    return _footer_counts(
         {f: p for f, p in part_files(out_dir).items() if f not in before}
     )
-    _append_manifest(manifest_dir, stage, counts, t0, time.time())
-    return {"parts": len(counts), "n_triples": sum(counts.values())}
 
 
 def _append_manifest(
@@ -161,12 +167,23 @@ def resume_run(
     manifest_dir: str,
     pipeline_fn,
 ) -> dict:
-    """Run ``pipeline_fn`` only over buckets absent from the manifest."""
+    """Run ``pipeline_fn`` only over buckets absent from the manifest.
+
+    Every pending bucket is recorded as done, including one whose pages
+    yield no triples (``n_triples`` 0, no files): otherwise each rerun
+    would redo it and never report ``skipped``."""
     done = done_part_ids(spark, manifest_dir)
     todo = pending(pages_with_part, done)
-    if todo.isEmpty():
+    todo_ids = [r.part_id for r in todo.select("part_id").distinct().collect()]
+    if not todo_ids:
         return {"parts": 0, "n_triples": 0, "skipped": True}
-    triples = pipeline_fn(todo)
-    out = write_triples_with_manifest(triples, out_dir, manifest_dir)
-    out["skipped"] = False
-    return out
+    t0 = time.time()
+    counts = _write_parts(pipeline_fn(todo), out_dir)
+    _append_manifest(
+        manifest_dir, "triples", {**dict.fromkeys(todo_ids, 0), **counts},
+        t0, time.time(),
+    )
+    return {
+        "parts": len(counts), "n_triples": sum(counts.values()),
+        "skipped": False,
+    }

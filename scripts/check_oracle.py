@@ -6,7 +6,9 @@ row count / column names / order-insensitive value hash.  Prints one
 JSON object per query (``name``, ``status``, ``spark_rows``,
 ``oracle_rows``, ``cols_equal``, ``hash_equal``, ``spark_sec``,
 ``oracle_sec``, plus ``error`` or a diff sample when the check fails),
-then a final ``FAILURES: [...]`` or ``FAILURES: none`` line.
+then a final ``FAILURES: [...]`` or ``FAILURES: none`` line.  A named
+query that ``queries()`` does not hold is an ``UNKNOWN QUERY`` failure
+(exit 2) before Spark starts.
 
     python scripts/check_oracle.py [query ...]
 
@@ -135,7 +137,17 @@ def _check(name, fn, oracle, spark, con, sf_dir) -> dict:
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    """Print one JSON object per checked query, then ``FAILURES: ...``."""
+    """Print one JSON object per checked query, then ``FAILURES: ...``.
+
+    A name in ``only`` that ``queries()`` lacks fails the run before
+    Spark starts, so a misspelled query never reads as a pass."""
+    queries = entrymod.queries()
+    unknown = [n for n in dict.fromkeys(only or ()) if n not in queries]
+    if unknown:
+        for name in unknown:
+            print(json.dumps({"name": name, "status": "UNKNOWN QUERY"}))
+        print("FAILURES:", unknown)
+        return 2
     spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
@@ -144,7 +156,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
         )
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
         if only and name not in only:
             continue
         res = _check(name, fn, oracles.get(name), spark, con, sf_dir)

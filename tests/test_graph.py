@@ -2459,3 +2459,79 @@ def test_edge_embeddedness_k4_plus_pendant(spark):
     rows = {r.emb: r.n_edges for r in edge_embeddedness_hist(df).collect()}
     # K4 edges each share 2 common neighbors; the pendant shares none
     assert rows == {0: 1, 2: 6}
+
+
+def _skewed_graph():
+    """A hub with the smallest node id joined to 40 spokes, a K5 and a
+    K4 (equal degrees inside each), a triangle through the hub, seeded
+    random spoke-spoke edges, and a duplicate, a reversed duplicate and
+    a self-loop that the edge set must drop."""
+    from itertools import combinations
+
+    rng = np.random.RandomState(23)
+    spokes = [f"s{i:02d}" for i in range(40)]
+    edges = [("a00", s) for s in spokes]
+    edges += list(combinations([f"k{i}" for i in range(5)], 2))
+    edges += list(combinations([f"q{i}" for i in range(4)], 2))
+    edges += [("k0", "q0"), ("s00", "s01")]
+    edges += [
+        (spokes[i], spokes[j])
+        for i, j in rng.randint(0, 40, size=(30, 2))
+        if i != j
+    ]
+    return edges + [("s00", "a00"), ("a00", "s00"), ("k1", "k1")]
+
+
+@pytest.mark.parametrize("case", ["skewed", "empty", "self_loops"])
+def test_triangles_listing_orientation_and_bound(spark, case):
+    """``_triangles``: every triangle exactly once (as a sorted node set,
+    against brute force), at its lowest-rank apex; every oriented edge
+    from the lower (deg, node) rank to the higher, each undirected edge
+    once; out-degree at most ⌊√(2m)⌋ — the bound node-id orientation
+    breaks on a hub with the smallest id."""
+    from itertools import combinations
+    from math import isqrt
+
+    from deepie_spark.operators.graph import _sym_edges, _triangles
+
+    edges = {
+        "skewed": _skewed_graph(),
+        "empty": [],
+        "self_loops": [("x", "x"), ("y", "y")],
+    }[case]
+    nbrs: dict = {}
+    for s, d in edges:
+        if s != d:
+            nbrs.setdefault(s, set()).add(d)
+            nbrs.setdefault(d, set()).add(s)
+    und = {tuple(sorted((s, d))) for s, d in edges if s != d}
+    want_tri = {
+        t for t in combinations(sorted(nbrs), 3)
+        if t[1] in nbrs[t[0]] and t[2] in nbrs[t[0]] and t[2] in nbrs[t[1]]
+    }
+    rank = {n: (len(v), n) for n, v in nbrs.items()}
+
+    df = spark.createDataFrame(edges, "src string, dst string")
+    deg, oriented, tri = _triangles(_sym_edges(df, "src", "dst"))
+    assert {r.node: r.deg for r in deg.collect()} == {
+        n: len(v) for n, v in nbrs.items()
+    }
+    o = oriented.collect()
+    assert len(o) == len(und)
+    assert {tuple(sorted((r.u, r.v))) for r in o} == und
+    assert all(
+        (r.du, r.u) == rank[r.u] and (r.dv, r.v) == rank[r.v]
+        and rank[r.u] < rank[r.v]
+        for r in o
+    )
+    out_deg: dict = {}
+    for r in o:
+        out_deg[r.u] = out_deg.get(r.u, 0) + 1
+    assert max(out_deg.values(), default=0) <= isqrt(2 * len(und))
+    got = [(r.u, r.v, r.w) for r in tri.collect()]
+    assert len({tuple(sorted(t)) for t in got}) == len(got)
+    assert {tuple(sorted(t)) for t in got} == want_tri
+    assert all(rank[u] < rank[v] < rank[w] for u, v, w in got)
+    if case == "skewed":
+        assert len(nbrs["a00"]) == 40 > isqrt(2 * len(und))
+        assert len(want_tri) > 10 + 4 + 1

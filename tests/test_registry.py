@@ -137,6 +137,58 @@ def test_rule_triples_declared_once():
     assert re.findall(r'pos[12]?"?\)?\s*<=\s*\d', src) == []
 
 
+def test_graph_orientation_and_edge_symmetrization_declared_once():
+    """``operators.graph`` writes the (deg, node) orientation comparison
+    once, in ``_rank_below``, and the reverse-direction edge select once,
+    in ``_sym_edges``.  The patterns are the lexicographic tie-break
+    ``(x < y) | ((x == y) & (…))`` and a select swapping two columns'
+    names, whatever the column names."""
+    from deepie_spark.operators import graph
+
+    def flat(obj):
+        return re.sub(r"\s+", "", inspect.getsource(obj))
+
+    src = flat(graph)
+    tie = re.findall(r"\|\(\([^&|]*==[^&|]*\)&\(", src)
+    assert len(tie) == 1 and tie[0] in flat(graph._rank_below)
+    swap = re.findall(
+        r'F\.col\("(\w+)"\)\.alias\("(\w+)"\),'
+        r'F\.col\("\2"\)\.alias\("\1"\)',
+        src,
+    )
+    assert swap == [("b", "a")]
+    assert 'F.col("b").alias("a"),F.col("a").alias("b")' in flat(
+        graph._sym_edges
+    )
+
+
+def test_check_oracle_fails_unknown_names_before_spark(monkeypatch, capsys):
+    """``scripts/check_oracle.py`` with a name ``queries()`` lacks exits
+    nonzero and names it, without starting Spark: a misspelled query
+    must not read as a pass."""
+    import importlib.util
+    import json
+
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(entry.__file__)),
+        "scripts", "check_oracle.py",
+    )
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(mod, "get_spark", no_spark)
+    assert mod.main(only=["triangle_stat", "triangle_stats"]) == 2
+    lines = capsys.readouterr().out.splitlines()
+    assert json.loads(lines[0]) == {
+        "name": "triangle_stat", "status": "UNKNOWN QUERY",
+    }
+    assert lines[-1] == "FAILURES: ['triangle_stat']"
+
+
 def test_pred_schema_frames_come_from_the_menu_only():
     """``model.menu.classify_mentions_menu`` is the one relation
     classifier: no other function of the package passes ``PRED_SCHEMA``

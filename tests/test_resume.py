@@ -57,6 +57,34 @@ def test_corrupt_manifest_raises_instead_of_redoing(spark, tmp_path):
     assert not ran
 
 
+def test_resume_records_buckets_without_triples(spark, tmp_path):
+    """A pending bucket whose pages yield no triples is recorded as done
+    with ``n_triples`` 0: the next run skips it instead of redoing it."""
+    out, man = str(tmp_path / "t"), str(tmp_path / "m")
+    pages = spark.createDataFrame([(1,), (2,), (2,), (5,)], "part_id int")
+    ran = []
+
+    def run(p):
+        ran.append(sorted(r.part_id for r in p.select("part_id").collect()))
+        return p.filter(F.col("part_id") == 2).select(
+            F.lit("s").alias("subj"), F.lit("p").alias("pred"),
+            F.lit("o").alias("obj"), "part_id",
+        )
+
+    first = resume_run(spark, pages, out, man, run)
+    assert first == {"parts": 1, "n_triples": 2, "skipped": False}
+    for _ in range(2):
+        again = resume_run(spark, pages, out, man, run)
+        assert again == {"parts": 0, "n_triples": 0, "skipped": True}
+    assert ran == [[1, 2, 2, 5]]
+    rows = sorted(
+        (r.part_id, r.n_triples, r.status)
+        for r in spark.read.parquet(man).collect()
+    )
+    assert rows == [(1, 0, "done"), (2, 2, "done"), (5, 0, "done")]
+    assert spark.read.parquet(out).count() == 2
+
+
 def test_write_then_resume_skips_everything(spark, pages, tmp_path):
     out = str(tmp_path / "triples")
     manifest = str(tmp_path / "manifest")
