@@ -77,20 +77,22 @@ RELATION_RULES: dict[tuple[str, str], str] = {
 #: the reference's directed-label convention: one regex, one place
 #: (collapseTypes rnnRE.py:642-647 strips it; saving() keeps order)
 DIRECTION_SUFFIX_RE = r"\(e[12],e[21]\)$"
+#: the suffix of a label whose first argument is the object
+SWAP_SUFFIX = "(e2,e1)"
 
 
 def directed_triple_columns(label, alias1, alias2, type1=None, type2=None):
     """(subj, pred, obj[, subj_type, obj_type]) column list implementing
     the direction swap: an (e2,e1) label swaps the arguments and the
-    suffix is stripped from the predicate.  The single implementation
-    every triple emitter selects from: the rule pipeline
-    (plans.pipeline), the model path (q_pipeline_triples_model), the
-    classifier's predictions (model.infer.triples_from_predictions) and
-    the relational join twin (q_triples_rules).  The DuckDB oracles'
-    twin is ``__spark_entry__._RULE_TRIPLES_SQL``."""
+    suffix is stripped from the predicate.  The column form of the rule,
+    per row: the classifier's predictions
+    (model.infer.triples_from_predictions) and the relational join twin
+    (q_triples_rules) select from it.  The fused pair kernels apply the
+    array form, :func:`directed_label_arrays`, once per label.  The
+    DuckDB oracles' twin is ``__spark_entry__._RULE_TRIPLES_SQL``."""
     from pyspark.sql import functions as F
 
-    rev = label.endswith("(e2,e1)")
+    rev = label.endswith(SWAP_SUFFIX)
     cols = [
         F.when(rev, alias2).otherwise(alias1).alias("subj"),
         F.regexp_replace(label, DIRECTION_SUFFIX_RE, "").alias("pred"),
@@ -102,6 +104,22 @@ def directed_triple_columns(label, alias1, alias2, type1=None, type2=None):
             F.when(rev, type1).otherwise(type2).alias("obj_type"),
         ]
     return cols
+
+
+def directed_label_arrays(labels: list[str]):
+    """The array form of :func:`directed_triple_columns`' rule, per
+    label rather than per row: ``labels`` → ``(pred, swap)``, the
+    predicate with its direction suffix stripped (a string array) and
+    whether the label swaps subject and object (a bool array), both
+    indexed like ``labels``."""
+    import re
+
+    import numpy as np
+    import pyarrow as pa
+
+    pred = [re.sub(DIRECTION_SUFFIX_RE, "", lab) for lab in labels]
+    swap = [lab.endswith(SWAP_SUFFIX) for lab in labels]
+    return pa.array(pred, pa.string()), np.array(swap, bool)
 
 
 def catalog_df(spark: SparkSession) -> DataFrame:

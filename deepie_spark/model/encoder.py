@@ -26,6 +26,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from deepie_spark.datagen.catalog import DIRECTION_SUFFIX_RE
 from deepie_spark.sources.tsv_corpus import MENTION_SCHEMA
 
 #: ``MENTION_SCHEMA`` in the Arrow form Spark hands a ``mapInArrow``
@@ -307,9 +308,7 @@ def kernel_score_matrix(
         return out
     entries, off = _flat(batch.column("kernel_score"), "kernel_score")
     labs, scores = entries.flatten()
-    base = pc.replace_substring(
-        pc.replace_substring(labs, "(e1,e2)", ""), "(e2,e1)", ""
-    )
+    base = pc.replace_substring_regex(labs, DIRECTION_SUFFIX_RE, "")
     label_dict = lookup(label_dict)
     idx = pc.coalesce(
         pc.index_in(labs, value_set=label_dict.value_set),

@@ -63,7 +63,7 @@ def compile_type_pair_expert(
 def triples_from_predictions(preds: DataFrame) -> DataFrame:
     """Predictions → directed (subj, pred, obj) triples, NONE excluded.
 
-    Direction from the (e2,e1) suffix as in plans.pipeline
+    Direction from the (e2,e1) suffix by the column form of the rule
     (catalog.directed_triple_columns); subject/object are the entity
     head tokens (last-token rule positions)."""
     t = preds.filter(F.col("pred") != "NONE")

@@ -2027,35 +2027,14 @@ def eccentricity_stats(
     compactness row next to degree_histogram and closeness_stats.
     Exact longs only.
 
-    Same per-source BFS plan and bounded-``seeds`` contract as
-    closeness_stats (one frontier⋈adjacency join + (s, node) visited
-    anti-join per layer, ``localCheckpoint`` per round); the only
-    delta is the final agg taking max(hop) beside the count.  Kept
-    separate from closeness_stats because that query's gated output
-    schema is frozen.  Returns ``(entity, ecc, n_reached)``; isolated
-    seeds (nothing reached) are absent.
+    The per-source BFS is :func:`_pairwise_hops` (closeness_stats'
+    plan and bounded-``seeds`` contract); the only delta is the final
+    agg taking max(hop) beside the count.  Kept separate from
+    closeness_stats because that query's gated output schema is frozen.
+    Returns ``(entity, ecc, n_reached)``; isolated seeds (nothing
+    reached) are absent.
     """
-    adj = _sym_edges(edges, src, dst)
-    if seeds is None:
-        seeds = adj.select(F.col("a").alias("node")).distinct()
-    dist = seeds.select(
-        F.col("node").alias("s"),
-        F.col("node"),
-        F.lit(0).cast("long").alias("hop"),
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("s", "node")
-    for h in range(1, int(max_hops) + 1):
-        nxt = (
-            frontier.join(adj, frontier["node"] == adj["a"])
-            .select("s", F.col("b").alias("node"))
-            .distinct()
-            .join(dist, ["s", "node"], "left_anti")
-            .select("s", "node", F.lit(h).cast("long").alias("hop"))
-        )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("hop") == h).select("s", "node")
-        if not frontier.take(1):
-            break
+    dist = _pairwise_hops(edges, seeds, int(max_hops), src, dst)
     return (
         dist.filter(F.col("hop") > 0)
         .groupBy("s")

@@ -19,12 +19,17 @@ Pairing is numpy inside an Arrow ``mapInArrow`` kernel, shuffle-free:
 * :func:`label_table` — a rule table as direct addressing: a type code
   per entity type indexes a ``(K+1)²`` label array; no string key, no
   hash probe (PAPERS, "Analyzing Vectorized Hash Tables Across CPU
-  Architectures", VLDB 2023, on small dense key domains).
-* :func:`detect_mention_pairs` — text → labelled pairs in the mentions
-  kernel itself (operators.mentions.trie_matcher, one int-coded trie
-  walk for every alias length), the pipeline path:
+  Architectures", VLDB 2023, on small dense key domains).  Each label
+  also carries its stripped predicate and swap flag
+  (catalog.directed_label_arrays), so a labelled pair leaves the kernel
+  as a finished directed triple: the direction rule runs once per
+  label on the driver, not once per row in the JVM.
+* :func:`detect_mention_pairs` — text → directed triples in the
+  mentions kernel itself (operators.mentions.trie_matcher, one
+  int-coded trie walk for every alias length), the pipeline path:
   the mention arrays never leave Python, and no interpreted JVM
-  higher-order function or ``explode`` runs per candidate.
+  higher-order function, ``explode`` or string match runs per
+  candidate.
 * :func:`mention_pairs` — the same core over existing mention arrays
   (e.g. the tagger's), and the composed reference the fused path is
   tested against.
@@ -32,10 +37,9 @@ Pairing is numpy inside an Arrow ``mapInArrow`` kernel, shuffle-free:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
+from deepie_spark.datagen.catalog import directed_label_arrays
 from deepie_spark.operators.mentions import trie_matcher
 
 #: the pair window in tokens (the reference's maximumDistance)
@@ -107,21 +111,31 @@ def type_codes(entity_type, types):
 
 def _pair_kernel(max_distance: int, rules):
     """The per-batch pair emitter both operators share, and its Spark
-    schema: ``emit(url, row, pos, ref, values)`` → one ``RecordBatch``
-    of pairs.  Mention k has its row, its position and ``ref[k]``, an
-    index into ``values`` (a struct array with ``alias`` and
-    ``entity_type``).  With ``rules``, pairs no rule labels are dropped
-    and the rest carry ``label``."""
+    schema after ``url``: ``emit(url, row, pos, ref, values)`` → one
+    ``RecordBatch`` of pairs.  Mention k has its row, its position and
+    ``ref[k]``, an index into ``values`` (a struct array with ``alias``
+    and ``entity_type``); ``url`` passes through as it comes, whatever
+    its type.
+
+    Without ``rules`` a pair is ``(url, pos1, pos2, alias1, alias2,
+    type1, type2)``.  With ``rules``, pairs no rule labels are dropped
+    and the rest come out as finished directed triples, ``(url, pos1,
+    pos2, subj, pred, obj, subj_type, obj_type)``: the label table also
+    carries each label's stripped predicate and swap flag
+    (catalog.directed_label_arrays), so the direction rule is one
+    lookup per pair, not a per-row string match."""
     import numpy as np
     import pyarrow as pa
 
-    schema = (
-        "url string, pos1 int, pos2 int, alias1 string, alias2 string,"
-        " type1 string, type2 string" + ("" if rules is None else ", label string")
-    )
-    names = [col.split()[0] for col in schema.split(",")]
-    if rules is not None:
+    if rules is None:
+        schema = ("pos1 int, pos2 int, alias1 string, alias2 string,"
+                  " type1 string, type2 string")
+    else:
+        schema = ("pos1 int, pos2 int, subj string, pred string, obj string,"
+                  " subj_type string, obj_type string")
         types, labels, table = label_table(rules)
+        pred, swap = directed_label_arrays(labels.to_pylist())
+    names = ["url"] + [col.split()[0] for col in schema.split(",")]
 
     def emit(url, row, pos, ref, values):
         i, j = pair_index(row, pos, max_distance)
@@ -132,21 +146,36 @@ def _pair_kernel(max_distance: int, rules):
             lab = table[codes[a], codes[b]]
             keep = lab >= 0
             i, j, a, b, lab = i[keep], j[keep], a[keep], b[keep], lab[keep]
+            s = swap[lab]
+            a, b = np.where(s, b, a), np.where(s, a, b)  # subject, object
         a, b = pa.array(a), pa.array(b)
         cols = [
             url.take(pa.array(row[i])),
             pa.array(pos[i].astype(np.int32)),
             pa.array(pos[j].astype(np.int32)),
             alias.take(a),
+            *([] if rules is None else [pred.take(pa.array(lab))]),
             alias.take(b),
             etype.take(a),
             etype.take(b),
         ]
-        if rules is not None:
-            cols.append(labels.take(pa.array(lab)))
         return pa.RecordBatch.from_arrays(cols, names=names)
 
     return emit, schema
+
+
+def _map_pairs(frame: DataFrame, column: str, mentions_of, max_distance, rules):
+    """``frame(url, column)`` → the pairs of ``mentions_of(batch
+    column)``'s ``(row, pos, ref, values)``, one ``mapInArrow`` pass;
+    ``url`` keeps the frame's type."""
+    emit, schema = _pair_kernel(max_distance, rules)
+
+    def run(batches):
+        for rb in batches:
+            yield emit(rb.column("url"), *mentions_of(rb.column(column)))
+
+    url = frame.schema["url"].dataType.simpleString()
+    return frame.select("url", column).mapInArrow(run, f"url {url}, {schema}")
 
 
 def mention_pairs(
@@ -155,7 +184,9 @@ def mention_pairs(
     rules: dict[tuple[str, str], str] | None = None,
 ) -> DataFrame:
     """(url, mentions[], …) → one row per ordered mention pair:
-    ``(url, pos1, pos2, alias1, alias2, type1, type2[, label])``.
+    ``(url, pos1, pos2, alias1, alias2, type1, type2)``; with ``rules``,
+    one directed triple per labelled pair: ``(url, pos1, pos2, subj,
+    pred, obj, subj_type, obj_type)``.  ``url`` keeps its type.
 
     Pairs are ordered left-to-right (pos1 < pos2 ≤ pos1 + max_distance,
     positions being the last-token rule positions); both directions of a
@@ -167,32 +198,28 @@ def mention_pairs(
     trained type-pair expert compiled by
     model.infer.compile_type_pair_expert) labels each pair from the
     direct-addressed :func:`label_table`; pairs no rule names are
-    dropped.  Each row's mention array must be sorted by
-    ``pos`` with distinct, non-null positions (what both mention
-    detectors emit); otherwise the task fails with ``ValueError``.
+    dropped, and an (e2,e1) label swaps subject and object and loses
+    its suffix (catalog.directed_triple_columns' rule).  Each row's
+    mention array must be sorted by ``pos`` with distinct, non-null
+    positions (what both mention detectors emit); otherwise the task
+    fails with ``ValueError``.
     """
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    emit, schema = _pair_kernel(max_distance, rules)
+    def mentions_of(lists):
+        values = lists.flatten()
+        pos = values.field("pos")
+        if values.null_count or pos.null_count:
+            raise ValueError("mention arrays must not hold null positions")
+        return (
+            np.asarray(pc.list_parent_indices(lists)),
+            np.asarray(pos),
+            np.arange(len(values)),
+            values,
+        )
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            lists = rb.column("mentions")
-            values = lists.flatten()
-            pos = values.field("pos")
-            if values.null_count or pos.null_count:
-                raise ValueError("mention arrays must not hold null positions")
-            yield emit(
-                rb.column("url"),
-                np.asarray(pc.list_parent_indices(lists)),
-                np.asarray(pos),
-                np.arange(len(values)),
-                values,
-            )
-
-    return mentions.select("url", "mentions").mapInArrow(run, schema)
+    return _map_pairs(mentions, "mentions", mentions_of, max_distance, rules)
 
 
 def detect_mention_pairs(
@@ -201,27 +228,24 @@ def detect_mention_pairs(
     max_distance: int = MAX_DISTANCE,
     rules: dict[tuple[str, str], str] | None = None,
 ) -> DataFrame:
-    """pages(url, text, …) → the pairs :func:`mention_pairs` would give
-    over ``detect_mentions(pages, trie)``, in one ``mapInArrow`` pass.
+    """pages(url, text, …) → the pairs (with ``rules``, the directed
+    triples) :func:`mention_pairs` would give over
+    ``detect_mentions(pages, trie)``, in one ``mapInArrow`` pass.
 
     The kernel matches the text with the same compiled trie walk
     (operators.mentions.trie_matcher: the token stream coded once, every
     alias length walked in lockstep), whose mentions come out in ``(row,
     start)`` order, and pairs and labels them in place: a mention is its
     payload index, so a pair's aliases and types are ``take``s on the
-    catalog's payload and its label one lookup in the label table by the
-    payload's type code.  ``rules`` is RELATION_RULES on the rule pipeline and the
-    compiled type-pair expert on the model path, as in
-    :func:`mention_pairs`.
+    catalog's payload and its label, predicate and direction one lookup
+    in the label table by the payload's type code.  ``rules`` is
+    RELATION_RULES on the rule pipeline and the compiled type-pair
+    expert on the model path, as in :func:`mention_pairs`.
     """
-    import pyarrow as pa
-
     match, payload = trie_matcher(trie)
-    emit, schema = _pair_kernel(max_distance, rules)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            rows, _, pos, pidx = match(rb.column("text"))
-            yield emit(rb.column("url"), rows, pos, pidx, payload)
+    def mentions_of(text):
+        rows, _, pos, pidx = match(text)
+        return rows, pos, pidx, payload
 
-    return pages.select("url", "text").mapInArrow(run, schema)
+    return _map_pairs(pages, "text", mentions_of, max_distance, rules)

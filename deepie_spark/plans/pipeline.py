@@ -12,13 +12,15 @@ Plan shape at scale (the thing the judge grades):
   scanned it.  The kernel matches mentions, pairs them in a banded
   numpy scan and labels each pair by direct addressing on entity-type
   codes, so only rule-labelled pairs ever reach the JVM, already as
-  rows: no join, no ``explode``.  The model path
+  finished directed triples (the label table carries each label's
+  stripped predicate and swap flag): no join, no ``explode``, no
+  per-row string match.  The model path
   (``__spark_entry__.q_pipeline_triples_model``) runs the same kernel
   with the trained type-pair expert compiled to a rule dict
   (deepie_spark.model.infer.compile_type_pair_expert) in place of the
   rule table.
-* **triples** — direction-swap projection plus ``part_id``, JVM
-  codegen; the only shuffle in the whole pipeline is the final write's
+* **triples** — the constant ``prob`` plus ``part_id``, JVM codegen;
+  the only shuffle in the whole pipeline is the final write's
   ``repartition`` by partition key (and any downstream
   canonicalization).
 
@@ -31,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepie_spark.datagen.catalog import (
-    RELATION_RULES,
-    build_alias_trie,
-    directed_triple_columns,
-)
+from deepie_spark.datagen.catalog import RELATION_RULES, build_alias_trie
 from deepie_spark.functions.text import extract_text
 from deepie_spark.operators.pairs import MAX_DISTANCE, detect_mention_pairs
 
@@ -53,21 +51,23 @@ def extract_stage(pages: DataFrame) -> DataFrame:
 
 
 def _fused_triples(pages: DataFrame, trie: dict, max_distance: int) -> DataFrame:
-    """Mentions, pairs and rule labels in ONE Arrow kernel, then the
-    triple projection in the JVM.
+    """Mentions, pairs, rule labels and the direction swap in ONE Arrow
+    kernel, then ``prob`` and ``part_id`` in the JVM.
 
     Labelling inside the kernel means only rule-labelled (non-NONE)
     pairs ever become rows — at sf0.1 that is 13.5M narrow rows instead
     of 39.4M.  The 13-entry rule table is a direct-addressed label array
-    in the task closure, so the stage has no join and no shuffle; the
-    direction swap and ``part_id`` stay JVM column expressions.
+    in the task closure, so the stage has no join and no shuffle; it
+    emits finished triples, and ``part_id`` stays a JVM column
+    expression.
     """
-    pairs = detect_mention_pairs(pages, trie, max_distance, RELATION_RULES)
-    return pairs.select(
-        *directed_triple_columns(
-            F.col("label"), F.col("alias1"), F.col("alias2"),
-            F.col("type1"), F.col("type2"),
-        ),
+    triples = detect_mention_pairs(pages, trie, max_distance, RELATION_RULES)
+    return triples.select(
+        "subj",
+        "pred",
+        "obj",
+        "subj_type",
+        "obj_type",
         F.lit(0.9).alias("prob"),
         "url",
         "pos1",

@@ -84,6 +84,42 @@ def test_model_pipeline_has_no_shuffle_or_join(spark, sf_dir):
     assert "Generate" not in nodes
 
 
+def _exprs_above_kernel(df) -> list:
+    """Every expression of the optimized plan's nodes above its
+    ``MapInArrow``, each of which must have one child."""
+    def seq(s):
+        return [s.apply(k) for k in range(s.size())]
+
+    node, exprs = df._jdf.queryExecution().optimizedPlan(), []
+    while node.nodeName() != "MapInArrow":
+        (child,) = seq(node.children())
+        stack = seq(node.expressions())
+        while stack:
+            e = stack.pop()
+            exprs.append(e)
+            stack += seq(e.children())
+        node = child
+    return exprs
+
+
+def test_pipeline_triples_leave_the_kernel_finished(spark, sf_dir):
+    """The fused rule path and the model path apply the direction rule
+    per label inside the pair kernel, and the model path's ``doc_id``
+    stays bigint: above the ``MapInArrow`` no ``regexp_replace``, no
+    ``EndsWith`` and no string → bigint cast runs per row.
+    (extract_text's regexes sit below the kernel.)"""
+    for name in ("pipeline_triples_gated", "pipeline_triples_model"):
+        exprs = _exprs_above_kernel(entry.queries()[name](spark, sf_dir))
+        kinds = {e.nodeName() for e in exprs}
+        assert not kinds & {"RegExpReplace", "EndsWith"}, (name, kinds)
+        casts = {
+            (e.child().dataType().typeName(), e.dataType().typeName())
+            for e in exprs
+            if e.nodeName() == "Cast"
+        }
+        assert ("string", "long") not in casts, (name, casts)
+
+
 def test_whole_stage_codegen_on_scan_side(spark, sf_dir):
     # aggregation path runs inside whole-stage codegen ('*(n)' spans)
     agg_plan = executed(entry.q_tpch_pricing(spark, sf_dir))

@@ -207,6 +207,85 @@ def test_pair_index_and_label_table_match_brute_force():
             )
 
 
+def test_pair_kernel_emits_directed_triples():
+    """With rules, the pair kernel emits finished directed triples equal
+    to the per-row rule (an (e2,e1) label swaps subject and object; the
+    direction suffix is stripped with DIRECTION_SUFFIX_RE) over an
+    O(m²) pair scan, on seeded random rule dicts whose labels mix
+    (e1,e2), (e2,e1) and suffix-free ones.  The id column is int64 and
+    comes out unchanged."""
+    import re
+
+    import pyarrow as pa
+
+    from deepie_spark.datagen.catalog import DIRECTION_SUFFIX_RE
+    from deepie_spark.operators.pairs import _pair_kernel
+
+    label_pool = ["ORG-AFF(e1,e2)", "ORG-AFF(e2,e1)", "PART-WHOLE(e2,e1)",
+                  "ART(e1,e2)", "PER-SOC", "PHYS"]
+    rule_types = ["PER", "ORG", "GPE", "FAC", "VEH"]
+    type_pool = rule_types + ["LOC", None]
+    rng = np.random.default_rng(20261020)
+    seen = set()
+    for max_distance in (1, 3, 10):
+        for _ in range(10):
+            rules = {
+                (t1, t2): label_pool[rng.integers(len(label_pool))]
+                for t1 in rule_types for t2 in rule_types
+                if rng.random() < 0.6
+            }
+            n_payload = int(rng.integers(1, 12))
+            alias = [f"a{k}" for k in range(n_payload)]
+            etype = [type_pool[rng.integers(len(type_pool))]
+                     for _ in range(n_payload)]
+            values = pa.StructArray.from_arrays(
+                [pa.array(alias, pa.string()), pa.array(etype, pa.string())],
+                names=["alias", "entity_type"],
+            )
+            n_rows = int(rng.integers(1, 8))
+            counts = rng.integers(0, 15, n_rows)
+            row = np.repeat(np.arange(n_rows), counts)
+            pos = np.concatenate(
+                [np.cumsum(rng.integers(1, 5, c)) for c in counts]
+            ).astype(np.int64)
+            ref = rng.integers(0, n_payload, len(pos))
+            ids = (2**40 + 7 * np.arange(n_rows)).astype(np.int64)
+
+            emit, schema = _pair_kernel(max_distance, rules)
+            batch = emit(pa.array(ids), row, pos, ref, values)
+            assert batch.schema.names == [
+                "url", "pos1", "pos2", "subj", "pred", "obj",
+                "subj_type", "obj_type",
+            ]
+            assert [c.split()[0] for c in schema.split(",")] == (
+                batch.schema.names[1:]
+            )
+            assert batch.schema.field("url").type == pa.int64()
+
+            want = []
+            for i in range(len(pos)):
+                for j in range(i + 1, len(pos)):
+                    if row[j] != row[i] or pos[j] - pos[i] > max_distance:
+                        continue
+                    a, b = ref[i], ref[j]
+                    label = rules.get((etype[a], etype[b]))
+                    if label is None:
+                        continue
+                    swap = label.endswith("(e2,e1)")
+                    pred = re.sub(DIRECTION_SUFFIX_RE, "", label)
+                    seen.add((swap, pred != label))
+                    s, o = (b, a) if swap else (a, b)
+                    want.append({
+                        "url": int(ids[row[i]]), "pos1": int(pos[i]),
+                        "pos2": int(pos[j]), "subj": alias[s], "pred": pred,
+                        "obj": alias[o], "subj_type": etype[s],
+                        "obj_type": etype[o],
+                    })
+            assert batch.to_pylist() == want, (max_distance, rules)
+    # swapped, unswapped-with-suffix and suffix-free labels all occurred
+    assert seen == {(True, True), (False, True), (False, False)}
+
+
 def test_compiled_type_pair_expert_equals_forward_pass():
     """The compiled type-pair expert, addressed through label_table,
     labels every (K+1)² type-code pair as the expert's vectorized per-row

@@ -137,6 +137,26 @@ def test_rule_triples_declared_once():
     assert re.findall(r'pos[12]?"?\)?\s*<=\s*\d', src) == []
 
 
+def test_direction_suffix_declared_once():
+    """The swap suffix ``"(e2,e1)"`` is one string constant in the
+    package, in ``datagen/catalog.py``: the column form
+    (directed_triple_columns) and the array form (directed_label_arrays)
+    of the direction rule both read it."""
+    import ast
+    import pathlib
+
+    from deepie_spark.datagen import catalog
+
+    pkg = pathlib.Path(catalog.__file__).parent.parent
+    found = [
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value == "(e2,e1)"
+    ]
+    assert found == ["datagen/catalog.py"]
+
+
 def test_graph_orientation_and_edge_symmetrization_declared_once():
     """``operators.graph`` writes the (deg, node) orientation comparison
     once, in ``_rank_below``, and the reverse-direction edge select once,
